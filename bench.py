@@ -229,8 +229,7 @@ def main() -> None:
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
 
     headline = build_headline(spark)
-    from ds_jedai_spark.plans import giant
-    from ds_jedai_spark.plans import pipeline_plans as pl
+    from ds_jedai_spark import pins
     # Best-of-2 per query: single-shot timings on a shared box swing
     # +-40% with ambient load; the minimum of two runs tracks the plan's
     # actual cost round-over-round far more stably.
@@ -273,31 +272,17 @@ def main() -> None:
         """One full rep: clear the cross-query caches, probe the box
         (JVM + Python worker), time the query. Returns
         (jvm_probe_sec, py_probe_sec, query_sec, rows)."""
-        # Drop the engine's explicit cross-query caches so every rep
-        # pays the full pipeline (JVM warm-up is the only thing
-        # min-of-reps is meant to exclude): the pinned shingle table
-        # and the sampled theta the spatial queries share. The ONE
-        # allowed cached input is the pinned ANN index — training it
-        # is the separately-timed ann_train line (which clears and
-        # retrains per rep), so the search lines measure search.
-        pl._SHINGLE_PIN.clear()
-        pl._ER_PIN.clear()
-        giant._THETA_CACHE.clear()
-        if name == "ann_train":
-            pl._ANN_PIN.clear()
-        # Release the cleared pins' checkpoint blocks NOW (r17): a
-        # cleared localCheckpoint frees its executor blocks only after
-        # a JVM GC lets the ContextCleaner see the dropped reference,
-        # and a 48g heap can go the whole run without one — measured:
-        # repeated re-pinning reps drifted 2.8 s -> 38 s as dead blocks
-        # accumulated, and a forced GC pins them at steady state. Runs
-        # OUTSIDE the timed region (before the probes), so the timing
-        # protocol is unchanged — reps just stop inheriting the
-        # previous reps' garbage.
-        import gc as _gc
-
-        _gc.collect()
-        spark.sparkContext._jvm.System.gc()
+        # Drop the engine's cross-query caches so every rep pays the
+        # full pipeline (JVM warm-up is the only thing min-of-reps is
+        # meant to exclude): the pinned shingle table, the ER graph and
+        # the sampled theta the spatial queries share. The ONE allowed
+        # cached input is the pinned ANN index — training it is the
+        # separately-timed ann_train line (which clears and retrains
+        # per rep), so the search lines measure search. pins.clear also
+        # forces the GC that frees the dropped checkpoint blocks; it
+        # runs OUTSIDE the timed region (before the probes), so the
+        # timing protocol is unchanged.
+        pins.clear(keep=() if name == "ann_train" else ("ann",))
         p = _probe()
         pp_ = _py_probe()
         t0 = time.perf_counter()

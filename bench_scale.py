@@ -719,7 +719,7 @@ def giant_skew_x10(hot: bool):
                 f"z-score did not fire on the hot cell ({n_skew} skew "
                 "targets) — the soak would time the plain join"
             )
-        bal = well_balanced_candidates(cand, skew_parts=32, pinned=True)
+        bal = well_balanced_candidates(cand, skew_parts=32)
         out = counts_agg(with_relations(bal))
         if hot:
             plan = out._jdf.queryExecution().executedPlan().toString()

@@ -244,6 +244,11 @@ def _grid_pid_sql(prefix: str, theta: tuple[float, float]) -> str:
     )
 
 
+def _wf_key(wf: str) -> str:
+    """Config weighting-function name -> ``weight_exprs`` key."""
+    return wf.lower().replace("pearson_x2", "x2")
+
+
 def _schedule(
     cand: DataFrame,
     cfg: JedaiConfig,
@@ -251,12 +256,8 @@ def _schedule(
     source: DataFrame,
     theta: tuple[float, float],
 ) -> DataFrame:
-    main = wexpr[cfg.main_wf.lower().replace("pearson_x2", "x2")]
-    sec = (
-        wexpr[cfg.secondary_wf.lower().replace("pearson_x2", "x2")]
-        if cfg.secondary_wf
-        else None
-    )
+    main = wexpr[_wf_key(cfg.main_wf)]
+    sec = wexpr[_wf_key(cfg.secondary_wf)] if cfg.secondary_wf else None
     budget = cfg.budget or 3000  # reference defaultBudget
     alg = cfg.progressive_algorithm
     if alg == "RANDOM":
@@ -363,46 +364,41 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
         # The reference's spatio-temporal qualifier: |days between| < 2
         cand = cand.where(F.abs(F.datediff(F.col("s_ts"), F.col("t_ts"))) < 2)
 
-    stateful = cfg.progressive_algorithm in (
-        "DYNAMIC_PROGRESSIVE_GIANT", "EARLY_STOPPING"
-    )
-    if cfg.progressive_algorithm and not stateful:
+    if cfg.progressive_algorithm:
         wexpr = weight_exprs(
             "s_", "t_", theta[0], theta[1], _total_blocks(source, theta)
         )
-        pair_keys = _schedule(cand, cfg, wexpr, source, theta)
-        cand = cand.join(pair_keys, on=["s_id", "t_id"], how="left_semi")
-
-    if stateful:
-        # These algorithms interleave verification with scheduling (the PQ
-        # reorders / the scan stops based on hits). Verification happens
-        # INSIDE the scan, lazily per dequeued pair, so the budget bounds
-        # the number of exact relate_pair calls (reference
-        # ProgressiveLinkerT.scala:47-63); the full relation flags are then
-        # computed only for the scheduled (budget-bounded) subset.
-        from ds_jedai_spark.operators.progressive_state import (
-            dynamic_progressive,
-            early_stopping,
-        )
-
-        wexpr = weight_exprs(
-            "s_", "t_", theta[0], theta[1], _total_blocks(source, theta)
-        )
-        main = wexpr[cfg.main_wf.lower().replace("pearson_x2", "x2")]
-        qrel = (
-            "intersects" if cfg.relation == "DE9IM" else cfg.relation.lower()
-        )
-        if cfg.progressive_algorithm == "DYNAMIC_PROGRESSIVE_GIANT":
-            sched = dynamic_progressive(
-                cand, main, None, cfg.budget or 3000, relation=qrel
+        if cfg.progressive_algorithm in (
+            "DYNAMIC_PROGRESSIVE_GIANT", "EARLY_STOPPING"
+        ):
+            # These algorithms interleave verification with scheduling
+            # (the PQ reorders / the scan stops based on hits).
+            # Verification happens INSIDE the scan, lazily per dequeued
+            # pair, so the budget bounds the number of exact relate_pair
+            # calls (reference ProgressiveLinkerT.scala:47-63); the full
+            # relation flags are then computed only for the scheduled
+            # (budget-bounded) subset.
+            from ds_jedai_spark.operators.progressive_state import (
+                dynamic_progressive,
+                early_stopping,
             )
-        else:
-            sched = early_stopping(cand, main, None, relation=qrel)
-        cand = cand.join(
-            sched.select("s_id", "t_id"), on=["s_id", "t_id"], how="left_semi"
-        )
 
-    if not cfg.progressive_algorithm:
+            main = wexpr[_wf_key(cfg.main_wf)]
+            qrel = (
+                "intersects" if cfg.relation == "DE9IM"
+                else cfg.relation.lower()
+            )
+            if cfg.progressive_algorithm == "DYNAMIC_PROGRESSIVE_GIANT":
+                sched = dynamic_progressive(
+                    cand, main, None, cfg.budget or 3000, relation=qrel
+                )
+            else:
+                sched = early_stopping(cand, main, None, relation=qrel)
+            pair_keys = sched.select("s_id", "t_id")
+        else:
+            pair_keys = _schedule(cand, cfg, wexpr, source, theta)
+        cand = cand.join(pair_keys, on=["s_id", "t_id"], how="left_semi")
+    else:
         # Full-verification path: auto-engage the skew-split join when
         # per-pair verification is expensive (progressive paths are
         # budget-bounded, so the split never pays there). YAML override:

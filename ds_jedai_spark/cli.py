@@ -727,7 +727,7 @@ def _run_op(args) -> int:
             )
         elif args.op == "dedup-build":
             # Persist the standing corpus' shingle table BUCKETED by the
-            # join key (pin_shingles mode="bucketed") — the multi-job
+            # join key (pin_shingles with a table) — the multi-job
             # index a daily incremental dedup joins against with no
             # Exchange on the index side. Search with
             # `-op dedup -right corpus.parquet -index TBL`.
@@ -738,7 +738,7 @@ def _run_op(args) -> int:
                       "TABLE", file=sys.stderr)
                 return 2
             docs = _docs_frame(_read(args.left, ()), args)
-            sh = pin_shingles(docs, mode="bucketed", table=args.index)
+            sh = pin_shingles(docs, table=args.index)
             from pyspark.sql import functions as F
 
             df = sh.agg(
@@ -864,20 +864,13 @@ def _run_op(args) -> int:
             dim = len(corpus.select("embedding").first()["embedding"])
             p = args.index
             cells_n = auto_ivf_cells(n_corpus)
-            cent = pin_centroids(
-                corpus, k=cells_n, mode="table", table=f"{p}_cent"
-            )
-            pin_cells(corpus, cent, mode="table", table=f"{p}_cells")
+            cent = pin_centroids(corpus, k=cells_n, table=f"{p}_cent")
+            pin_cells(corpus, cent, table=f"{p}_cells")
             m, kk = auto_pq_params(n_corpus, dim)
-            books = pin_codebooks(
-                corpus, k=kk, m=m, mode="table", table=f"{p}_books"
-            )
-            pin_codes(corpus, books, mode="table", table=f"{p}_codes")
+            books = pin_codebooks(corpus, k=kk, m=m, table=f"{p}_books")
+            pin_codes(corpus, books, table=f"{p}_codes")
             bands, bits = auto_lsh_params(n_corpus, args.tau or 0.9)
-            pin_bands(
-                corpus, mode="table", table=f"{p}_bands",
-                bands=bands, bits=bits,
-            )
+            pin_bands(corpus, table=f"{p}_bands", bands=bands, bits=bits)
             df = spark.createDataFrame(
                 [(n_corpus, dim, cells_n, m, kk, bands, bits)],
                 "n_vectors long, dim int, ivf_cells int, pq_m int, "

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ds_jedai_spark.model.tiles import with_tiles
+from ds_jedai_spark.pins import pin
 
 
 def drop_table_and_location(spark: SparkSession, table: str) -> None:
@@ -25,8 +26,8 @@ def drop_table_and_location(spark: SparkSession, table: str) -> None:
     location. A managed table written by a previous session survives on
     disk after the in-memory catalog forgets it, and ``saveAsTable``
     then fails with LOCATION_ALREADY_EXISTS even under
-    mode("overwrite") — every table-mode pin calls this first so
-    artifact rebuilds are idempotent across sessions."""
+    mode("overwrite") — ``pins.pin`` calls this before every table
+    write so artifact rebuilds are idempotent across sessions."""
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     import os
     import shutil
@@ -52,14 +53,7 @@ def persist_tiled(
     buckets: int = 32,
 ) -> None:
     """Explode to tiles and save bucketed+sorted by (tx, ty)."""
-    drop_table_and_location(df.sparkSession, table)
-    tiled = with_tiles(df, theta)
-    (
-        tiled.write.mode("overwrite")
-        .bucketBy(buckets, "tx", "ty")
-        .sortBy("tx", "ty")
-        .saveAsTable(table)
-    )
+    pin(with_tiles(df, theta), table, bucket_by=("tx", "ty"), buckets=buckets)
 
 
 def persist_tiled_many(

@@ -82,7 +82,7 @@ def star_forest(
     35.5 s -> 19.8 s)."""
     from pyspark.sql import Window
 
-    from ds_jedai_spark.iterative import fresh_stats_checkpoint
+    from ds_jedai_spark.pins import fresh_stats_checkpoint
 
     e = edges if _pinned else fresh_stats_checkpoint(
         _canonical_edges(edges)
@@ -155,7 +155,7 @@ def connected_components_star(
     dedup.duplicate_clusters) should use ``star_forest`` directly —
     the centers anti-join below is redundant under a coalesce, since a
     center's label is its own id."""
-    from ds_jedai_spark.iterative import fresh_stats_checkpoint
+    from ds_jedai_spark.pins import fresh_stats_checkpoint
 
     e0 = fresh_stats_checkpoint(_canonical_edges(edges))
     e = star_forest(e0, max_iter=max_iter, _pinned=True)
@@ -212,8 +212,8 @@ def dbscan(
     same instance in 8 rounds and is O(log^2 n) on any topology —
     that bound, not the diameter, is what survives a 100 TB cluster
     with continent-spanning components. Rounds stay flat-cost
-    regardless of count thanks to iterative.fresh_stats_checkpoint
-    (see iterative.py for the exponential Catalyst-stats stall that
+    regardless of count thanks to pins.fresh_stats_checkpoint
+    (see its docstring for the exponential Catalyst-stats stall that
     plain localCheckpoint causes in self-joining loops).
     """
     from ds_jedai_spark.operators.spatial_join import (
@@ -230,7 +230,7 @@ def dbscan(
 
     from pyspark.sql import Window
 
-    from ds_jedai_spark.iterative import fresh_stats_checkpoint
+    from ds_jedai_spark.pins import fresh_stats_checkpoint
 
     # symmetric eps-neighbor pairs, self-pairs included. The pin carries
     # each source's DEGREE (one window pass inside the pin job, r18):

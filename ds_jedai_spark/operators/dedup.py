@@ -21,59 +21,29 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ds_jedai_spark.operators.textops import shingles, vocab
+from ds_jedai_spark.pins import pin
 
 MINHASH_P = 1000003
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    """Materialize a multi-use intermediate (eager localCheckpoint).
-
-    Every self-join or fan-out below would otherwise recompute its full
-    upstream per branch — the LSH plan references the shingle table four
-    times and the candidate set twice (measured ~3x end-to-end). Plain
-    ``persist()`` is not enough: cache substitution matches analyzed
-    subtrees, and the self-union / self-join consumers here fail the
-    lookup (observed: zero InMemoryTableScan in the candidate plan), so
-    the checkpoint's lineage truncation is what guarantees reuse. At
-    100 TB the equivalent is writing the intermediate to a bucketed
-    table; executor-local blocks are the single-job form (same recovery
-    tradeoff as the reference's persisted RDDs)."""
-    return df.localCheckpoint()
-
-
 def pin_shingles(
     docs: DataFrame,
-    mode: str = "local",
-    table: str = "shingles_pinned",
+    table: str | None = None,
     buckets: int = 32,
 ) -> DataFrame:
     """Materialize the shared (doc_id, shingle) table for a dedup run.
 
-    ``mode="local"`` is the single-job form (eager localCheckpoint, see
-    ``_pin``). ``mode="bucketed"`` is the multi-job form named in
-    ``_pin``'s docstring: the shingle table is written bucketed+sorted by
-    the join key, so every later run — the inverted-index self-join in
-    ``_overlap``, candidate verification, other dedup schemes sharing the
-    corpus — re-joins on ``shingle`` with NO Exchange on the bucketed
-    sides (Catalyst proves co-partitioning from the bucket spec; pinned
-    by tests/test_bucketed.py). At 100 TB this is the layout a corpus
-    that outlives one job should persist: the shingle explode and its
+    ``table=None`` is the single-job form (eager localCheckpoint, see
+    ``pins.pin``). A ``table`` name is the multi-job form: the shingle
+    table is written bucketed+sorted by the join key, so every later
+    run — the inverted-index self-join in ``_overlap``, candidate
+    verification, other dedup schemes sharing the corpus — re-joins on
+    ``shingle`` with NO Exchange on the bucketed sides (Catalyst proves
+    co-partitioning from the bucket spec; pinned by
+    tests/test_bucketed.py). At 100 TB this is the layout a corpus that
+    outlives one job should persist: the shingle explode and its
     shuffle are paid once, not per scheme per run."""
-    sh = shingles(docs)
-    if mode == "local":
-        return _pin(sh)
-    if mode != "bucketed":
-        raise ValueError(f"unknown pin mode: {mode!r}")
-    from ds_jedai_spark.io.bucketed import drop_table_and_location
-
-    drop_table_and_location(docs.sparkSession, table)
-    (
-        sh.write.mode("overwrite")
-        .bucketBy(buckets, "shingle")
-        .sortBy("shingle")
-        .saveAsTable(table)
-    )
-    return docs.sparkSession.table(table)
+    return pin(shingles(docs), table, bucket_by=("shingle",), buckets=buckets)
 
 
 def exact_duplicates(docs: DataFrame) -> DataFrame:
@@ -184,7 +154,7 @@ def ngram_jaccard_pairs(
     the LSH variants are verified against). ``sh`` supplies an already
     pinned (doc_id, shingle) table so co-running schemes share one
     materialization."""
-    d = sh if sh is not None else _pin(shingles(docs))
+    d = sh if sh is not None else pin(shingles(docs))
     return (
         _with_jaccard(_overlap(d), d)
         .where(F.col("jaccard") >= tau)
@@ -205,7 +175,7 @@ def containment_pairs(
     ~1. Same inverted-index equi-join machinery as the Jaccard path, so
     the 100 TB shape (blocked join, candidates-only arithmetic) is
     unchanged."""
-    d = sh if sh is not None else _pin(shingles(docs))
+    d = sh if sh is not None else pin(shingles(docs))
     return (
         _with_jaccard(_overlap(d), d)
         .withColumn(
@@ -366,8 +336,8 @@ def duplicate_clusters(
     Self-paired rows (id1 == id2) still yield singleton clusters, as
     before. Raises if the round budget is exhausted before the
     fixpoint — a wrong clustering must never be returned quietly.
-    Round frames are pinned with iterative.fresh_stats_checkpoint
-    inside the backbone (see iterative.py for the Catalyst-stats
+    Round frames are pinned with pins.fresh_stats_checkpoint
+    inside the backbone (see its docstring for the Catalyst-stats
     squaring stall that plain localCheckpoint causes in self-joining
     loops).
     """
@@ -509,8 +479,8 @@ def minhash_lsh_pairs(
     = sum of position-weighted hashes) → bucket equi-join → verify true
     Jaccard on candidates only.
     """
-    d = sh if sh is not None else _pin(shingles(docs))
-    band = _pin(_band_table(d, k, rows_per_band))
+    d = sh if sh is not None else pin(shingles(docs))
+    band = pin(_band_table(d, k, rows_per_band))
     a = band.select(F.col("doc_id").alias("d1"), "band", "bkey")
     b = band.select(F.col("doc_id").alias("d2"), "band", "bkey")
     # The candidate set has exactly ONE consumer (_pair_common), so it
@@ -569,8 +539,8 @@ def minhash_progressive_pairs(
     for scheduled pairs that share at least one shingle (a scheduled
     pair with none has Jaccard 0 and drops out, matching the exact
     join's domain)."""
-    d = sh if sh is not None else _pin(shingles(docs))
-    sig = _pin(minhash_signature_arrays(d, k))
+    d = sh if sh is not None else pin(shingles(docs))
+    sig = pin(minhash_signature_arrays(d, k))
     # band keys are a closed-form projection of the pinned signatures
     # (band_table_from_sigs) — no second corpus aggregation, no separate
     # band pin (r17 optimization round)
@@ -687,7 +657,7 @@ def simhash_pairs(
     strictly finer similarity test at the same threshold."""
     if words not in (1, 2):
         raise ValueError(f"words must be 1 or 2: {words!r}")
-    d = sh if sh is not None else _pin(shingles(docs))
+    d = sh if sh is not None else pin(shingles(docs))
     fp = simhash_fingerprints(d).withColumnRenamed("fp", "fp0")
     if words == 2:
         fp = fp.join(
@@ -700,7 +670,7 @@ def simhash_pairs(
         else "CASE WHEN k < 2 THEN shiftright(fp0, k * 16) % 65536 "
              "ELSE shiftright(fp1, (k - 2) * 16) % 65536 END"
     )
-    nib = _pin(
+    nib = pin(
         fp.withColumn("k", F.explode(F.sequence(F.lit(0), F.lit(3)))).withColumn(
             "nibble", F.expr(nibble)
         )
@@ -748,14 +718,14 @@ def minhash_lsh_pairs_cross(
     paying b x b again.
 
     100 TB shape: ``b``'s shingle table and band keys are the standing
-    index — pin them bucketed (``pin_shingles(mode="bucketed")``) and
+    index — pin them bucketed (``pin_shingles(docs, table=...)``) and
     only ``a``'s signatures are computed per batch; the collision join,
     candidate dedup and verification join are all equi-joins carrying
     ids, and no a x a or b x b pair is ever generated. Output:
     (d1 from a, d2 from b, jaccard >= tau).
     """
-    da = sh_a if sh_a is not None else _pin(shingles(docs_a))
-    db = sh_b if sh_b is not None else _pin(shingles(docs_b))
+    da = sh_a if sh_a is not None else pin(shingles(docs_a))
+    db = sh_b if sh_b is not None else pin(shingles(docs_b))
     band_a = _band_table(da, k, rows_per_band).select(
         F.col("doc_id").alias("d1"), "band", "bkey"
     )
@@ -821,8 +791,8 @@ def minhash_estimate_pairs(
     Scale shape: band equi-join carries ids only; signatures rejoin for
     deduplicated candidates (broadcast at dimension size, hash join
     beyond). Output: (d1, d2, est >= tau)."""
-    d = sh if sh is not None else _pin(shingles(docs))
-    sig = _pin(minhash_signature_arrays(d, k))
+    d = sh if sh is not None else pin(shingles(docs))
+    sig = pin(minhash_signature_arrays(d, k))
     # closed-form band projection of the pinned signatures (see
     # minhash_progressive_pairs)
     band = band_table_from_sigs(sig, k, rows_per_band)

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ds_jedai_spark.pins import pin
+
 Z_SCORE = 3.0
 
 # Sample stddev from exact integer sums; sqrt is correctly rounded IEEE so
@@ -174,23 +176,18 @@ def auto_balance(
 
 def well_balanced_candidates(
     cand: DataFrame, z: float = Z_SCORE, skew_parts: int | None = None,
-    pinned: bool = False,
 ) -> DataFrame:
     """Split candidates into cheap / skew branches and reunite them.
 
     The skew branch is round-robin repartitioned (reference :58-92 uses a
     HashPartitioner over a fresh key) so its verification work spreads
     evenly; the cheap branch keeps its partitioning. Same rows out.
-    Pass ``pinned=True`` when the caller already materialized ``cand``
-    (localCheckpoint / table) — re-pinning here would copy every
-    candidate partition a second time for nothing.
     """
     # Eager localCheckpoint, not persist(): cand feeds a self-referential
     # consumer pair (joins against an aggregate of itself), where cache
     # substitution misses and silently recomputes per branch — see
-    # dedup._pin for the measured evidence.
-    if not pinned:
-        cand = cand.localCheckpoint()
+    # pins.pin for the measured evidence.
+    cand = pin(cand)
     ids = F.broadcast(skew_targets(cand, z).select("t_id"))
     cheap = cand.join(ids, on="t_id", how="left_anti")
     skew = cand.join(ids, on="t_id", how="left_semi")

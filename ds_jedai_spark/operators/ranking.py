@@ -18,7 +18,7 @@ The ranked frame is pinned with an eager localCheckpoint: it feeds both
 the offset aggregate and the final join, and repartitionByRange samples
 its boundaries nondeterministically — unpinned recomputation could assign
 different (part, rn) per consumer (see also the persist() cache-miss note
-in dedup._pin).
+in pins.pin).
 """
 
 from __future__ import annotations

@@ -18,6 +18,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ds_jedai_spark.pins import pin
+
 QUANT = 1000
 
 
@@ -235,34 +237,23 @@ def pin_centroids(
     emb: DataFrame,
     k: int = KMEANS_K,
     iters: int = KMEANS_ITERS,
-    mode: str = "local",
-    table: str = "ivf_centroids_pinned",
+    table: str | None = None,
 ) -> DataFrame:
     """Train the IVF coarse centroids ONCE and materialize the artifact —
     the ANN analogue of ``dedup.pin_shingles``. A real index is trained
     once and reused across every query; without the pin each search
-    replays the full Lloyd lineage per plan branch. ``mode="local"`` is
+    replays the full Lloyd lineage per plan branch. ``table=None`` is
     the single-job form (eager localCheckpoint: lineage truncation
-    guarantees reuse where cache substitution fails, see dedup._pin);
-    ``mode="table"`` persists across jobs. No bucketing — centroids are
+    guarantees reuse where cache substitution fails, see pins.pin); a
+    ``table`` name persists across jobs. No bucketing — centroids are
     broadcast-sized (k rows) and never meet a shuffle join."""
-    cent = train_centroids(emb, k, iters)
-    if mode == "local":
-        return cent.localCheckpoint()
-    if mode != "table":
-        raise ValueError(f"unknown pin mode: {mode!r}")
-    from ds_jedai_spark.io.bucketed import drop_table_and_location
-
-    drop_table_and_location(emb.sparkSession, table)
-    cent.write.mode("overwrite").saveAsTable(table)
-    return emb.sparkSession.table(table)
+    return pin(train_centroids(emb, k, iters), table)
 
 
 def pin_cells(
     emb: DataFrame,
     cent: DataFrame,
-    mode: str = "local",
-    table: str = "ivf_cells_pinned",
+    table: str | None = None,
 ) -> DataFrame:
     """Materialize the IVF CELL ASSIGNMENTS (vec_id, cid) — the inverted
     lists of the index. Centroids alone are not the index: without
@@ -272,15 +263,7 @@ def pin_cells(
     cells = _kmeans_assign(
         quantized(emb).select("vec_id", "qv"), cent
     ).select("vec_id", "cid")
-    if mode == "local":
-        return cells.localCheckpoint()
-    if mode != "table":
-        raise ValueError(f"unknown pin mode: {mode!r}")
-    from ds_jedai_spark.io.bucketed import drop_table_and_location
-
-    drop_table_and_location(emb.sparkSession, table)
-    cells.write.mode("overwrite").saveAsTable(table)
-    return emb.sparkSession.table(table)
+    return pin(cells, table)
 
 
 def kmeans_assignments(
@@ -468,18 +451,17 @@ def lsh_band_table(
 
 def pin_bands(
     emb: DataFrame,
-    mode: str = "local",
-    table: str = "lsh_bands_pinned",
+    table: str | None = None,
     bands: int = LSH_BANDS,
     bits: int = LSH_BITS,
 ) -> DataFrame:
     """Materialize the LSH BAND TABLE once — the index payload of the
     hyperplane-LSH family (the pin_codes analogue). Two reasons to pin:
     the collision self-join consumes the table twice and cache
-    substitution fails for self-join consumers (see dedup._pin), so
+    substitution fails for self-join consumers (see pins.pin), so
     unpinned the hyperplane dot products per vector compute twice; and
     a standing corpus computes its band keys once at ingest, not per
-    search batch. ``mode="table"`` persists across jobs.
+    search batch. A ``table`` name persists across jobs.
 
     The pin is stamped with its own (bands, bits) as the literal
     columns ``lsh_bands`` / ``lsh_bits``: a batch joined against a pin
@@ -491,7 +473,7 @@ def pin_bands(
     bb = lsh_band_table(emb, bands, bits).withColumn(
         "lsh_bands", F.lit(int(bands))
     ).withColumn("lsh_bits", F.lit(int(bits)))
-    if mode == "local":
+    if table is None:
         # Spread the pinned payload across DATA-PROPORTIONAL
         # parallelism: the band table reads as ONE partition otherwise
         # (a map-only plan over a small scan), and every downstream
@@ -517,14 +499,8 @@ def pin_bands(
             shuffle_parts(bb),
             max(1, -(-rows // PIN_BAND_ROWS_PER_PART)),
         )
-        return bb.repartition(parts).localCheckpoint()
-    if mode != "table":
-        raise ValueError(f"unknown pin mode: {mode!r}")
-    from ds_jedai_spark.io.bucketed import drop_table_and_location
-
-    drop_table_and_location(emb.sparkSession, table)
-    bb.write.mode("overwrite").saveAsTable(table)
-    return emb.sparkSession.table(table)
+        bb = bb.repartition(parts)
+    return pin(bb, table)
 
 
 # Corpus-row cap for the broadcast-gather verification tier below: the
@@ -551,13 +527,12 @@ _GATHER_UNSET = object()  # sentinel: no pre-gathered corpus supplied
 
 
 def gather_quantized(qe: DataFrame):
-    """Collect + broadcast the quantized corpus ONCE for the verify
-    tier — the index-build-time form of _cosine_verify_pairs' probe
-    (r18): a standing index gathers its matrix when it is built, not
-    per search. Returns a Broadcast of the (ids, mat, norm2) arrays
-    (sorted by id), or None when the corpus exceeds
-    VERIFY_BROADCAST_CAP — and probes with a COUNT first, so the
-    over-cap (join-tier) case never hauls vectors to the driver."""
+    """Collect + broadcast the quantized corpus for the verify tier —
+    _cosine_verify_pairs' probe, which a standing index runs ONCE at
+    build time (r18) instead of per search. Returns a Broadcast of the
+    (ids, mat, norm2) arrays (sorted by id), or None when the corpus
+    exceeds VERIFY_BROADCAST_CAP — and probes with a COUNT first, so
+    the over-cap (join-tier) case never hauls vectors to the driver."""
     import numpy as np
 
     base = qe.select("vec_id", "qv", "norm2")
@@ -616,29 +591,15 @@ def _cosine_verify_pairs(
       vectors onto the pairs, HOF dot in the JVM. No driver collect,
       no worker matrix; the 100 TB default.
 
-    The tier probe is ``limit(cap + 1).collect()`` — bounded driver
-    memory, the same cost class as building any broadcast hash
-    relation. Callers holding a STANDING index pass ``gathered``
-    (gather_quantized's result — a Broadcast below the cap, None above
-    it) so searches skip the probe job entirely (r18); the default
-    keeps the per-call probe for ad-hoc corpora."""
+    The tier probe is gather_quantized: a ``limit(cap + 1).count()``
+    first, so an over-cap corpus never reaches the driver, then the
+    collect below the cap — the same cost class as building any
+    broadcast hash relation. Callers holding a STANDING index pass
+    ``gathered`` (gather_quantized's result — a Broadcast below the
+    cap, None above it) so searches skip the probe jobs entirely; the
+    default probes per call for ad-hoc corpora."""
     if gathered is _GATHER_UNSET:
-        probe = qe.select("vec_id", "qv", "norm2") \
-            .limit(VERIFY_BROADCAST_CAP + 1).collect()
-        if len(probe) <= VERIFY_BROADCAST_CAP:
-            import numpy as np
-
-            ids = np.fromiter((r[0] for r in probe), dtype=np.int64,
-                              count=len(probe))
-            mat = np.array([r[1] for r in probe], dtype=np.int64)
-            nn = np.fromiter((r[2] for r in probe), dtype=np.int64,
-                             count=len(probe))
-            order = np.argsort(ids)
-            gathered = cand.sparkSession.sparkContext.broadcast(
-                (ids[order], mat[order], nn[order])
-            )
-        else:
-            gathered = None
+        gathered = gather_quantized(qe)
     if gathered is not None:
         bc = gathered
         tau_f = float(tau)
@@ -750,7 +711,7 @@ def lsh_neardup_pairs_cross(
     generated.
 
     100 TB shape: the index side's band keys are the standing artifact
-    — pass pinned ``index_bands`` (pin_bands; ``mode="table"`` across
+    — pass pinned ``index_bands`` (pin_bands; pass ``table`` across
     jobs) so only the batch's hyperplane dots are computed per ingest.
     The collision join, candidate dedup and the two verification joins
     are all equi-joins carrying ids; exact cosine >= tau verifies.
@@ -1154,8 +1115,7 @@ def pin_codebooks(
     emb: DataFrame,
     k: int = KMEANS_K,
     iters: int = KMEANS_ITERS,
-    mode: str = "local",
-    table: str = "pq_codebooks_pinned",
+    table: str | None = None,
     m: int = PQ_M,
 ) -> list:
     """Train the PQ codebooks ONCE and materialize the artifact (the
@@ -1166,18 +1126,7 @@ def pin_codebooks(
     or one saved table), then sliced per m — not one materialization per
     sub-block. Codebooks are broadcast-sized (M x k codewords) — no
     bucketing needed."""
-    if mode == "local":
-        stacked = pq_codebooks_stacked(emb, k, iters, m).localCheckpoint()
-    elif mode == "table":
-        from ds_jedai_spark.io.bucketed import drop_table_and_location
-
-        drop_table_and_location(emb.sparkSession, table)
-        pq_codebooks_stacked(emb, k, iters, m).write.mode(
-            "overwrite"
-        ).saveAsTable(table)
-        stacked = emb.sparkSession.table(table)
-    else:
-        raise ValueError(f"unknown pin mode: {mode!r}")
+    stacked = pin(pq_codebooks_stacked(emb, k, iters, m), table)
     return [
         stacked.where(F.col("m") == mi).select("cid", "cv")
         for mi in range(m)
@@ -1207,24 +1156,14 @@ def pq_codes(emb: DataFrame, books: list) -> DataFrame:
 def pin_codes(
     emb: DataFrame,
     books: list,
-    mode: str = "local",
-    table: str = "pq_codes_pinned",
+    table: str | None = None,
 ) -> DataFrame:
     """Materialize the PQ CODE TABLE (vec_id, m, cid) — the index
     payload. Codebooks alone are not the index: without pinned codes
     every ADC query re-encodes the entire corpus (a full corpus scan +
     argmin per query); a real deployment encodes once at build time and
     queries read M one-byte codes per vector."""
-    c = pq_codes(emb, books)
-    if mode == "local":
-        return c.localCheckpoint()
-    if mode != "table":
-        raise ValueError(f"unknown pin mode: {mode!r}")
-    from ds_jedai_spark.io.bucketed import drop_table_and_location
-
-    drop_table_and_location(emb.sparkSession, table)
-    c.write.mode("overwrite").saveAsTable(table)
-    return emb.sparkSession.table(table)
+    return pin(pq_codes(emb, books), table)
 
 
 def pq_adc_topk(

@@ -485,7 +485,7 @@ def contamination(
     """
     # The train gram table feeds BOTH the totals and the hit branch;
     # pin it so the explode+distinct runs once (same cache-miss pitfall
-    # as the LSH shingle table, operators/dedup.py _pin).
+    # as the LSH shingle table, pins.pin).
     tg = shingles(train, n).localCheckpoint()
     bg = shingles(bench, n).select("shingle").distinct()
     totals = tg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))

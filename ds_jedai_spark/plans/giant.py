@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ds_jedai_spark import pins
 from ds_jedai_spark.io.synthetic import (
     line_sql,
     load_sql,
@@ -32,16 +33,12 @@ COUNT_RELATIONS = [r for r in RELATIONS if r != "disjoint"]
 
 # Theta is a deterministic scalar per (session, sf_dir, dataset); computing
 # it is a full source scan, so repeat queries reuse the cached value.
-_THETA_CACHE: dict[tuple[str, str, str], tuple[float, float]] = {}
-
-
 def cached_theta(spark: SparkSession, sf_dir: str, tag: str, source: DataFrame):
     from ds_jedai_spark.model.tiles import compute_theta
 
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    if key not in _THETA_CACHE:
-        _THETA_CACHE[key] = compute_theta(source)
-    return _THETA_CACHE[key]
+    return pins.cached(
+        spark, f"theta:{tag}", sf_dir, lambda: compute_theta(source)
+    )
 
 
 def _candidates(spark: SparkSession, sf_dir: str) -> DataFrame:

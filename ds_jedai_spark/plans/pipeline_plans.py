@@ -15,6 +15,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ds_jedai_spark import pins
 from ds_jedai_spark.io.synthetic import load_sql, register_views
 from ds_jedai_spark.operators import dedup, multimodal, similarity, textops
 
@@ -42,16 +43,8 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # shingle-based dedup schemes and the cluster pass run back-to-back in
 # the composite gate, and each would otherwise localCheckpoint an
 # identical table.
-_SHINGLE_PIN: dict[tuple[str, str], DataFrame] = {}
-
-
 def _pinned_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SHINGLE_PIN:
-        # Bound the cache to the current key: checkpoint blocks pinned
-        # for a stale (session, sf_dir) would otherwise accumulate for
-        # the application's lifetime.
-        _SHINGLE_PIN.clear()
+    def build():
         from ds_jedai_spark.operators.ranking import shuffle_parts
 
         # Spread the compact doc rows before the shingle explode: the
@@ -69,14 +62,15 @@ def _pinned_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
         # md5-derived shingle id — hoisting it into the pinned table
         # computes the hash once per (doc, shingle) row instead of once
         # per consumer pass (r17 optimization round)
-        _SHINGLE_PIN[key] = dedup._pin(
+        return pins.pin(
             dedup._with_wid(
                 textops.shingles(
                     corpus.repartition(max(8, shuffle_parts(corpus) // 4))
                 )
             )
         )
-    return _SHINGLE_PIN[key]
+
+    return pins.cached(spark, "shingles", sf_dir, build)
 
 
 # One trained-artifact pin per (session, sf_dir): a real ANN index is
@@ -84,14 +78,8 @@ def _pinned_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
 # otherwise replay the full Lloyd lineage per plan branch — and the
 # ann_topk gate composite runs the ADC and rerank parts back-to-back, so
 # without the pin the same 4 codebooks train twice in one gate query.
-# Mirrors _SHINGLE_PIN (and dedup.pin_shingles' local/table modes).
-_ANN_PIN: dict[tuple[str, str], dict] = {}
-
-
 def _pinned_ann(spark: SparkSession, sf_dir: str) -> dict:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ANN_PIN:
-        _ANN_PIN.clear()
+    def build():
         emb = _emb(spark, sf_dir)
         # Three independent build chains — (codebooks -> codes),
         # (centroids -> cells), (bands) — submitted concurrently so the
@@ -122,7 +110,7 @@ def _pinned_ann(spark: SparkSession, sf_dir: str) -> dict:
             cent, cells = f_ivf.result()
             bands = f_bands.result()
             qgather = f_gather.result()
-        _ANN_PIN[key] = {
+        return {
             "books": books,
             "cent": cent,
             # the index PAYLOADS: corpus encoded/assigned once at build
@@ -138,7 +126,8 @@ def _pinned_ann(spark: SparkSession, sf_dir: str) -> dict:
             # _cosine_verify_pairs instead of re-collecting per call
             "qgather": qgather,
         }
-    return _ANN_PIN[key]
+
+    return pins.cached(spark, "ann", sf_dir, build)
 
 
 # ------------------------------------------------------------- queries
@@ -1785,23 +1774,17 @@ ORACLES["text_bm25"] = text_bm25_oracle()
 # -------------------------------- entity-resolution meta-blocking (r17)
 
 # One pinned meta-blocking pair graph per (session, sf_dir): the three
-# pruning-scheme gate tags share it (mirrors _SHINGLE_PIN).
-_ER_PIN: dict[tuple[str, str], DataFrame] = {}
-
-
+# pruning-scheme gate tags share it.
 def _er_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ds_jedai_spark.operators import blocking
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _ER_PIN:
-        _ER_PIN.clear()
+    def build():
         bi = _pinned_shingles(spark, sf_dir).select(
             "doc_id", F.col("shingle").alias("key")
         )
-        _ER_PIN[key] = dedup._pin(
-            blocking.weighted_pairs(blocking.purge_blocks(bi))
-        )
-    return _ER_PIN[key]
+        return pins.pin(blocking.weighted_pairs(blocking.purge_blocks(bi)))
+
+    return pins.cached(spark, "er", sf_dir, build)
 
 
 def er_wep_pairs(spark, sf_dir):

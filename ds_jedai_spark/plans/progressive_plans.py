@@ -220,7 +220,7 @@ def progressive_eval_js_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     within budget / all qualifying pairs, precision = found / verified."""
     # Eager localCheckpoint, not persist(): the totals aggregate and the
     # schedule both re-consume cand, and cache substitution misses
-    # self-referential consumers (see dedup._pin).
+    # self-referential consumers (see pins.pin).
     cand = with_relations(_cand(spark, sf_dir)).localCheckpoint()
     totals = cand.agg(
         F.sum(F.col("r_overlaps").cast("long")).alias("total_qp")

@@ -529,7 +529,7 @@ def stream_incremental_dedup(
     construction), so the appended union is invariant to how the stream
     splits into micro-batches (pytest-pinned with maxFilesPerTrigger=1).
     At 100 TB: the index side is the bucketed standing shingle table
-    (pin_shingles mode="bucketed"), each day's crawl streams through,
+    (pin_shingles with a table), each day's crawl streams through,
     and state is zero — no watermark, no state store.
 
     Delivery guarantee: the default blind append is AT-LEAST-ONCE, not

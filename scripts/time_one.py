@@ -22,22 +22,13 @@ def main():
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
 
     import bench
-    from ds_jedai_spark.plans import giant
-    from ds_jedai_spark.plans import pipeline_plans as pl
+    from ds_jedai_spark import pins
 
     headline = dict(bench.build_headline(spark))
     fn = headline[name]
     for i in range(n_reps):
-        pl._SHINGLE_PIN.clear()
-        pl._ER_PIN.clear()
-        giant._THETA_CACHE.clear()
-        if name == "ann_train":
-            pl._ANN_PIN.clear()
-        # free the cleared pins' checkpoint blocks (see bench.py):
-        # without this, reps drift upward as dead blocks accumulate
-        import gc
-        gc.collect()
-        spark.sparkContext._jvm.System.gc()
+        # same cache protocol as bench.py, outside the timed region
+        pins.clear(keep=() if name == "ann_train" else ("ann",))
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         n = df.count()

@@ -48,39 +48,64 @@ _FULL_TIER = {
     # balancer_dispatch, stateful/topk algs, single_relation,
     # decomposed_entity, op_convert, grid_and_entity, ...); these are
     # their deeper parameter/format variants:
-    "test_load_balancer_auto_plan_shapes",
-    "test_cli_op_relate_parquet_and_dates",
-    "test_cli_op_ann_offset_ids",
-    "test_cli_op_dedup_surface",
-    "test_cli_op_relate_plain_wkt_parquet",
-    "test_de9im_run_matches_brute_force",
-    "test_cli_ann_build_then_search_index",
-    "test_cli_dedup_build_then_incremental",
-    "test_kdbtree_grid_and_theta_modes_match_default",
-    "test_cli_op_relate_progressive",
+    "test_api_cli.py::test_load_balancer_auto_plan_shapes",
+    "test_api_cli.py::test_cli_op_relate_parquet_and_dates",
+    "test_api_cli.py::test_cli_op_ann_offset_ids",
+    "test_api_cli.py::test_cli_op_dedup_surface",
+    "test_api_cli.py::test_cli_op_relate_plain_wkt_parquet",
+    "test_api_cli.py::test_de9im_run_matches_brute_force",
+    "test_api_cli.py::test_cli_ann_build_then_search_index",
+    "test_api_cli.py::test_cli_dedup_build_then_incremental",
+    "test_api_cli.py::test_kdbtree_grid_and_theta_modes_match_default",
+    "test_api_cli.py::test_cli_op_relate_progressive",
     # streaming: invariant_to_batching + kill_and_restart keep the
     # incremental-dedup and exactly-once surfaces on:
-    "test_stream_stream_pairs_match_batch_across_microbatches",
-    "test_stream_incremental_dedup_idempotent_mode_matches_append",
+    "test_streaming.py::test_stream_stream_pairs_match_batch_across_microbatches",
+    "test_streaming.py::test_stream_incremental_dedup_idempotent_mode_matches_append",
     # pipeline_new deep variants (local-mode pin equivalents stay on):
-    "test_ann_pin_table_mode_matches_local",
-    "test_duplicate_clusters_long_chain",
+    "test_pipeline_new.py::test_ann_pin_table_mode_matches_local",
+    "test_pipeline_new.py::test_duplicate_clusters_long_chain",
     # blocking: the cross-ER CLI test keeps the surface on:
-    "test_er_cross_never_pairs_within_a_dataset",
+    "test_blocking.py::test_er_cross_never_pairs_within_a_dataset",
     # semantic_lsh: the unscaled clone-completeness test stays on:
-    "test_lsh_scaled_params_exact_clones_complete",
+    "test_semantic_lsh.py::test_lsh_scaled_params_exact_clones_complete",
 }
 
 
+def _tier_key(item) -> str:
+    """``file::name`` for a collected item, parameters stripped. Keyed
+    on the file's basename so the match does not depend on the rootdir
+    pytest picks for the invocation."""
+    base = getattr(item, "originalname", None) or item.name
+    return f"{item.path.name}::{base}"
+
+
 def pytest_collection_modifyitems(config, items):
+    # A _FULL_TIER entry whose file was collected must still name a test
+    # in it: a rename or typo would otherwise silently move a deep test
+    # back into (or out of) the default tier. Checked against the module,
+    # not the selected items, so a narrowed selection (-k, ::name) does
+    # not trip it.
+    modules = {
+        item.path.name: item.module
+        for item in items if getattr(item, "module", None) is not None
+    }
+    stale = []
+    for entry in sorted(_FULL_TIER):
+        fname, name = entry.split("::")
+        if fname in modules and not hasattr(modules[fname], name):
+            stale.append(entry)
+    if stale:
+        raise pytest.UsageError(
+            f"tests/conftest.py _FULL_TIER names no such test: {stale}"
+        )
     if FULL_SUITE:
         return
     skip = pytest.mark.skip(
         reason="full-tier deep variant; DSJ_FULL_SUITE=1 restores"
     )
     for item in items:
-        base = getattr(item, "originalname", None) or item.name
-        if base in _FULL_TIER or item.name in _FULL_TIER:
+        if _tier_key(item) in _FULL_TIER:
             item.add_marker(skip)
 
 

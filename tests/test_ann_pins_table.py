@@ -27,14 +27,11 @@ def test_table_mode_pins_match_local_mode(spark):
     cells_l = similarity.pin_cells(emb, cent_l)
     bands_l = similarity.pin_bands(emb)
 
-    books_t = similarity.pin_codebooks(emb, mode="table",
-                                       table="t_pq_books")
-    cent_t = similarity.pin_centroids(emb, mode="table", table="t_ivf_cent")
-    codes_t = similarity.pin_codes(emb, books_t, mode="table",
-                                   table="t_pq_codes")
-    cells_t = similarity.pin_cells(emb, cent_t, mode="table",
-                                   table="t_ivf_cells")
-    bands_t = similarity.pin_bands(emb, mode="table", table="t_lsh_bands")
+    books_t = similarity.pin_codebooks(emb, table="t_pq_books")
+    cent_t = similarity.pin_centroids(emb, table="t_ivf_cent")
+    codes_t = similarity.pin_codes(emb, books_t, table="t_pq_codes")
+    cells_t = similarity.pin_cells(emb, cent_t, table="t_ivf_cells")
+    bands_t = similarity.pin_bands(emb, table="t_lsh_bands")
 
     # Fresh frames read FROM the tables (not the build lineage): searches
     # over them must match the local-mode searches bit-for-bit.

@@ -53,7 +53,7 @@ def test_bucketed_join_plan_has_no_exchange(spark, tables):
 
 
 def test_bucketed_shingle_pin_rejoins_without_shuffle(spark):
-    """pin_shingles(mode="bucketed"): the inverted-index self-join on the
+    """pin_shingles(table=...): the inverted-index self-join on the
     shingle key must plan with no Exchange on the shingle key (both sides
     read the same co-bucketed scan), and produce the identical pair set
     as the localCheckpoint pin."""
@@ -66,7 +66,7 @@ def test_bucketed_shingle_pin_rejoins_without_shuffle(spark):
     )
     try:
         bucketed = dedup.pin_shingles(
-            docs, mode="bucketed", table="sh_pin_test", buckets=8
+            docs, table="sh_pin_test", buckets=8
         )
         old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760b")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -77,18 +77,8 @@ def test_bucketed_shingle_pin_rejoins_without_shuffle(spark):
             got = {(r.d1, r.d2, r.common) for r in ov.collect()}
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        local = dedup.pin_shingles(docs, mode="local")
+        local = dedup.pin_shingles(docs)
         want = {(r.d1, r.d2, r.common) for r in dedup._overlap(local).collect()}
         assert got == want and len(want) > 0
     finally:
         spark.sql("DROP TABLE IF EXISTS sh_pin_test")
-
-
-def test_pin_shingles_rejects_unknown_mode(spark):
-    import pytest as _pytest
-
-    from ds_jedai_spark.operators import dedup
-
-    docs = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
-    with _pytest.raises(ValueError):
-        dedup.pin_shingles(docs, mode="nope")

@@ -161,15 +161,41 @@ def test_cli_op_dbscan(spark, tmp_path, capsys, monkeypatch):
     assert back["3"] == "-1"
 
 
+def _assert_each_direction_once(nbr):
+    """dbscan keeps a core-core edge iff its canonical form is counted
+    exactly twice (c2 == 2), which is right only if the eps self-join
+    emits every ordered pair once and every off-diagonal pair in both
+    directions."""
+    pairs = [(r.s_id, r.t_id) for r in nbr.select("s_id", "t_id").collect()]
+    seen = set(pairs)
+    assert len(pairs) == len(seen), "duplicate (s_id, t_id) in eps join"
+    off = {(s, t) for s, t in seen if s != t}
+    assert off, "expected off-diagonal neighbor pairs"
+    assert all((t, s) in seen for s, t in off), "eps join is not symmetric"
+
+
 def test_dbscan_plan_shape(spark):
     """The eps-graph stage keeps the tile join's scale contract: no
-    cartesian product, no Python in the neighbor-join plan."""
+    cartesian product, no Python in the neighbor-join plan. Both eps
+    self-joins dbscan uses emit each direction of a neighbor pair
+    exactly once."""
     rows = [(i, float(i % 17), float(i % 13)) for i in range(150)]
-    from ds_jedai_spark.operators.spatial_join import distance_join
+    from ds_jedai_spark.operators.spatial_join import (
+        distance_join,
+        geodesic_distance_join,
+    )
 
     nbr = distance_join(_pts(spark, rows), _pts(spark, rows), 1.5)
     plan = nbr._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan and "Python" not in plan
+    _assert_each_direction_once(nbr)
+
+    # the same lattice at 0.01-degree spacing near the equator, where
+    # 1.7 km reaches the diagonal neighbors (~1.57 km) only
+    geo = [(i, x * 0.01, y * 0.01) for i, x, y in rows]
+    _assert_each_direction_once(
+        geodesic_distance_join(_pts(spark, geo), _pts(spark, geo), 1700.0)
+    )
 
 
 def test_dbscan_geodesic_vs_reference(spark):

@@ -1,6 +1,6 @@
-"""iterative.fresh_stats_checkpoint: the Catalyst-stats reset that keeps
-iterative self-join loops flat-cost (see iterative.py's docstring for
-the measured exponential stall it prevents)."""
+"""pins.fresh_stats_checkpoint: the Catalyst-stats reset that keeps
+iterative self-join loops flat-cost (see its docstring for the
+measured exponential stall it prevents)."""
 
 from __future__ import annotations
 
@@ -11,7 +11,7 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from pyspark.sql import functions as F
 
-from ds_jedai_spark.iterative import fresh_stats_checkpoint
+from ds_jedai_spark.pins import fresh_stats_checkpoint
 
 
 def _digits(df) -> int:

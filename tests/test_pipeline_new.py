@@ -174,9 +174,10 @@ def test_ann_pin_trains_once_and_truncates_lineage(spark):
     """One training per run: the second query's artifact lookup is a
     cache hit, and every pinned frame's plan is a checkpoint scan
     (LogicalRDD) — reusing it CANNOT replay the Lloyd training lineage."""
+    from ds_jedai_spark import pins
     from ds_jedai_spark.plans import pipeline_plans as pl
 
-    pl._ANN_PIN.clear()
+    pins.clear()
     a1 = pl._pinned_ann(spark, SF)
     a2 = pl._pinned_ann(spark, SF)
     assert a1 is a2
@@ -205,7 +206,7 @@ def test_pq_adc_pinned_books_match_retrained(spark):
 
 
 def test_ann_pin_table_mode_matches_local(spark):
-    """mode="table" (the multi-job artifact form) must produce the same
+    """A table pin (the multi-job artifact form) must produce the same
     trained centroids/codebooks as the localCheckpoint form, and search
     over either must agree."""
     from ds_jedai_spark.operators import similarity
@@ -214,7 +215,7 @@ def test_ann_pin_table_mode_matches_local(spark):
     emb = _emb(spark, SF)
     try:
         cent_t = similarity.pin_centroids(
-            emb, mode="table", table="cent_pin_test"
+            emb, table="cent_pin_test"
         )
         cent_l = similarity.pin_centroids(emb)
         as_set = lambda df: {
@@ -223,7 +224,7 @@ def test_ann_pin_table_mode_matches_local(spark):
         assert as_set(cent_t) == as_set(cent_l)
 
         books_t = similarity.pin_codebooks(
-            emb, mode="table", table="books_pin_test"
+            emb, table="books_pin_test"
         )
         got = sorted(
             similarity.pq_adc_topk(emb, books=books_t).collect(),
@@ -250,19 +251,6 @@ def test_ann_pin_table_mode_matches_local(spark):
     finally:
         spark.sql("DROP TABLE IF EXISTS cent_pin_test")
         spark.sql("DROP TABLE IF EXISTS books_pin_test")
-
-
-def test_ann_pin_rejects_unknown_mode(spark):
-    from ds_jedai_spark.operators import similarity
-    from ds_jedai_spark.plans.pipeline_plans import _emb
-
-    import pytest as _pytest
-
-    emb = _emb(spark, SF)
-    with _pytest.raises(ValueError):
-        similarity.pin_centroids(emb, mode="nope")
-    with _pytest.raises(ValueError):
-        similarity.pin_codebooks(emb, mode="nope")
 
 
 def test_chunk_documents_invariants(spark):

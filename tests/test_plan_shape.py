@@ -164,12 +164,13 @@ def test_progressive_dedup_plan_is_take_ordered(spark):
     """The budgeted schedule must be a TakeOrderedAndProject (global
     top-k merge of `budget` rows), not a full sort."""
     from ds_jedai_spark.operators import dedup
+    from ds_jedai_spark.pins import pin
     from ds_jedai_spark.plans.pipeline_plans import _corpus
 
     corpus = _corpus(spark, "/root/testdata/sf0.001")
     sh = dedup.pin_shingles(corpus)
-    sig = dedup._pin(dedup.minhash_signature_arrays(sh, 32))
-    band = dedup._pin(dedup._band_table(sh, 32, 4))
+    sig = pin(dedup.minhash_signature_arrays(sh, 32))
+    band = pin(dedup._band_table(sh, 32, 4))
     from pyspark.sql import functions as F
 
     a = band.select(F.col("doc_id").alias("d1"), "band", "bkey")

@@ -77,6 +77,36 @@ def test_lsh_recall_vs_allpairs(spark):
     assert recall >= 0.8, f"LSH recall collapsed: {recall:.3f}"
 
 
+def test_verify_join_tier_matches_broadcast_tier(spark, monkeypatch):
+    """Exact-cosine verification has two tiers: a broadcast gather below
+    VERIFY_BROADCAST_CAP and an equi-join above it. Lowering the cap
+    below the corpus size forces the join tier, whose rows must equal
+    the broadcast tier's, and the over-cap probe must not gather."""
+    emb = _emb(spark)
+    qe = similarity.quantized(emb)
+    n = emb.count()
+    cand = similarity.lsh_band_table(emb).alias("a").join(
+        similarity.lsh_band_table(emb).alias("b"), ["band", "bucket"]
+    ).where("a.vec_id < b.vec_id").selectExpr(
+        "a.vec_id AS d1", "b.vec_id AS d2"
+    )
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select("d1", "d2", "cos")
+                      .collect())
+
+    assert similarity.gather_quantized(qe) is not None
+    bc_pairs = rows(similarity.lsh_neardup_pairs(emb, pl.TAU_COS))
+    bc_dup = rows(similarity._cosine_verify_pairs(cand, qe, pl.TAU_COS))
+    monkeypatch.setattr(similarity, "VERIFY_BROADCAST_CAP", n - 1)
+    assert similarity.gather_quantized(qe) is None
+    assert rows(similarity.lsh_neardup_pairs(emb, pl.TAU_COS)) == bc_pairs
+    assert rows(
+        similarity._cosine_verify_pairs(cand, qe, pl.TAU_COS)
+    ) == bc_dup
+    assert bc_pairs and bc_dup
+
+
 def test_cross_pairs_read_index_from_pin_not_reencode(spark):
     """lsh_neardup_pairs_cross must take index candidates from the
     provided band table: removing a vector's bands from the pin removes
