@@ -108,12 +108,11 @@ def segment_group_units(seg_cand: DataFrame) -> DataFrame:
 VERTEX_COST_THRESHOLD = 64.0
 
 
-def estimate_pair_cost(source: DataFrame, target: DataFrame,
-                       sample: int = 50_000) -> float:
-    """Average per-pair verification cost proxy: the product of the two
-    inputs' mean vertex counts, each from a bounded LIMIT sample (reads a
-    handful of files at 100 TB — never a full scan, and never an action
-    over the exploded candidate set).
+def sample_mean_verts(df: DataFrame, sample: int = 50_000) -> DataFrame:
+    """One-row DataFrame ``(m)``: the mean vertex count per geometry of
+    ``df``, over a bounded LIMIT sample (reads a handful of files at
+    100 TB — never a full scan). Envelope-only input (no ``coords``) is
+    all boxes, so ``m`` is 5.
 
     Determinism: the averaged rows are the ``sample/10`` SMALLEST
     xxhash64(id) rows within the LIMIT-bounded superset (the same
@@ -123,23 +122,31 @@ def estimate_pair_cost(source: DataFrame, target: DataFrame,
     the smallest-hash subset overlaps heavily — so the AUTO dispatch
     does not flip plan shape run-to-run on corpora near the threshold,
     without paying a full scan for an exact deterministic sample."""
+    if "coords" not in df.columns:
+        return df.sparkSession.range(1).select(F.lit(5.0).alias("m"))
+    sub = df.select(
+        F.xxhash64(F.col("id").cast("string")).alias("h"),
+        F.expr("aggregate(coords, 0, (a, p) -> a + size(p))").alias("v"),
+    ).limit(sample)
+    return (
+        sub.orderBy("h")
+        .limit(max(1, sample // 10))
+        .agg(F.avg("v").alias("m"))
+    )
 
-    def mean_verts(df: DataFrame) -> float:
-        if "coords" not in df.columns:
-            return 5.0  # envelope-only input: every geometry is a box
-        sub = df.select(
-            F.xxhash64(F.col("id").cast("string")).alias("h"),
-            F.expr("aggregate(coords, 0, (a, p) -> a + size(p))").alias("v"),
-        ).limit(sample)
-        row = (
-            sub.orderBy("h")
-            .limit(max(1, sample // 10))
-            .agg(F.avg("v").alias("m"))
-            .first()
-        )
-        return float(row["m"] or 0.0)
 
-    return mean_verts(source) * mean_verts(target)
+def estimate_pair_cost(source: DataFrame, target: DataFrame,
+                       sample: int = 50_000) -> float:
+    """Average per-pair verification cost proxy: the product of the two
+    inputs' sample mean vertex counts (``sample_mean_verts``), never an
+    action over the exploded candidate set. The two one-row samples are
+    cross-joined, so the estimate is one driver action, not two."""
+    row = (
+        sample_mean_verts(source, sample)
+        .crossJoin(sample_mean_verts(target, sample).withColumnRenamed("m", "mt"))
+        .first()
+    )
+    return float(row["m"] or 0.0) * float(row["mt"] or 0.0)
 
 
 def auto_balance(

@@ -69,6 +69,23 @@ def _side_cols(p: str, pts: Pts, other: Pts) -> dict[str, str]:
     ]
     allpos = " AND ".join(f"({c}) > 0" for c in conv)
     allneg = " AND ".join(f"({c}) < 0" for c in conv)
+    if k > 3:
+        # ...and winding once, as relate_fast._dense_ring_checks: the
+        # edge direction passes +x (-x when clockwise) exactly once. A
+        # triangle with same-sign turns is always simple, so the
+        # triangle plans keep their expression size.
+        dy = [f"(({pts[(i + 1) % k][1]}) - ({pts[i][1]}))" for i in range(k)]
+
+        def once(lt: str, ge: str) -> str:
+            hits = " + ".join(
+                f"CASE WHEN {dy[i]} {lt} 0 AND {dy[(i + 1) % k]} {ge} 0 "
+                "THEN 1 ELSE 0 END"
+                for i in range(k)
+            )
+            return f"({hits}) = 1"
+
+        allpos += f" AND {once('<', '>=')}"
+        allneg += f" AND {once('>', '<=')}"
     cols[f"s{p}"] = f"CASE WHEN {allpos} THEN 1.0 WHEN {allneg} THEN -1.0 ELSE 0.0 END"
     for i in range(k):
         e0, e1 = pts[i], pts[(i + 1) % k]

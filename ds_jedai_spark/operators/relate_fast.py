@@ -1,28 +1,37 @@
-"""Vectorized exact pre-classifier for convex single-ring polygon pairs.
+"""Vectorized exact pre-classifier for the general DE-9IM verifier.
 
-Scale-hardening of the Python exact-relate path: the general verifier
-(`relate_general.with_general_relations`) calls `relate_pair` once per
-candidate row — exact, but ~100 us/pair of interpreter work dominated by
-`relate_poly.classify_boundary`. At tile-join candidate mixes the
-overwhelming majority of polygon pairs are either cleanly disjoint or
-cleanly nested/overlapping with NO boundary contact, and for convex
-polygons those cases are decidable from one orientation-sign tensor —
-a handful of numpy einsum-sized products over the whole Arrow batch,
-~100x less interpreter work per pair.
+The general verifier (`relate_general.with_general_relations`) calls
+`relate_pair` once per candidate row: exact, but ~100-300 us of
+interpreter work per pair. Most candidate pairs of a tile join are either
+cleanly separated or cleanly nested, overlapping or crossing, with no
+boundary contact. Against a convex polygon those cases are decided by one
+orientation-sign tensor over a whole bucket of rows. The verifier buckets
+a batch by (kind, arity) per side, so every kernel here sees one shared
+vertex count per side and nothing is padded:
+
+* convex ring x convex ring, 3..MAX_DENSE_VERTS vertices each
+  (``preclassify_dense``);
+* vertex set (point, multipoint, polyline) x convex ring
+  (``preclassify_points_vs_poly``);
+* point set x point set, point set x polyline, polyline x polyline
+  (set algebra and proven-disjoint tests).
+
+Every kernel runs in row chunks of at most CHUNK_ELEMS orientation
+entries, so memory stays bounded for any batch size or arity.
 
 Exactness argument (no epsilons anywhere):
 - Eligible coordinates must be integers after scaling by 512 (covers the
   testdata 1/16-dyadic contract and the 1/512 decomposition lattice) and
   bounded by 2^24. Then every cross product used here is a difference of
-  products of integers bounded by 2^25, i.e. < 2^51 — exactly
-  representable in float64, so every sign this module reads is the true
-  integer sign. Anything that fails the integrality/bound probe falls
-  back to the scaled-integer exact path (`relate_poly`), which handles
-  arbitrary dyadic floats.
-- Separating-axis reasoning is only applied to pairs verified strictly
-  convex (all consecutive-edge cross signs identical and nonzero), where
-  SAT over edge normals is an exact theorem, and only STRICT sign
-  configurations are classified:
+  products of integers bounded by 2^25, i.e. < 2^51, whatever the arity:
+  exactly representable in float64, so every sign this module reads is
+  the true integer sign. Anything that fails the integrality/bound probe
+  falls back to the scaled-integer exact path (`relate_poly`), which
+  handles arbitrary dyadic floats.
+- Separating-axis reasoning is only applied to rings verified strictly
+  convex (all consecutive-edge cross signs identical and nonzero, and
+  the edge direction winding once), where SAT over edge normals is an
+  exact theorem, and only STRICT sign configurations are classified:
     * strict separation on some edge axis        -> DISJOINT
     * every B vertex strictly inside every A half-plane -> B in interior(A)
     * symmetric                                  -> A in interior(B)
@@ -31,27 +40,41 @@ Exactness argument (no epsilons anywhere):
   If interiors were disjoint a weak separating axis parallel to an edge
   of A or B would exist (the extreme line of the separating cone lies
   along an adjacent edge), so "no weak axis" proves interiors intersect.
-  Every configuration involving a zero sign that matters (boundary
-  contact, touches, covers-with-contact, equals) returns UNDECIDED and
-  takes the per-pair exact path. The two paths therefore never disagree;
-  the fast path only skips work, never changes a flag.
-
-At 100 TB this is the difference between the verifier being a Python
-loop and being a batched Arrow kernel for ~90% of candidates; the
-remaining contact cases stay O(|A|.|B|) per pair but are a small
-minority of any tile-join candidate stream (measured below in
-tests/test_relate_fast.py and PLANS.md round-4 notes).
+- A vertex set A (dimension 0 or 1) against a convex polygon B is
+  CROSSES when one vertex of A lies strictly inside every edge
+  half-plane of B and another lies strictly outside one edge. B's
+  interior and exterior are open sets, so each of those vertices has
+  interior points of A next to it in the same set: I(A) meets I(B) and
+  E(B), which is the crosses pattern for dim 0/1 against dim 2 (and
+  rules out within, touches and disjoint). The claim is symmetric, so
+  the swapped orientation keeps it as is.
+Every configuration involving a zero sign that matters (boundary
+contact, touches, covers-with-contact, equals) returns UNDECIDED and
+takes the per-pair exact path. The two paths therefore never disagree;
+the fast path only skips work, never changes a flag
+(tests/test_relate_fast.py cross-checks every decided row).
 """
 
 from __future__ import annotations
+
+import functools
 
 import numpy as np
 
 SCALE = 512.0
 MAX_SCALED = float(1 << 24)
-MAX_VERTS = 8  # padded ring size (without closure); larger rings -> slow path
+# Largest ring (vertices, without closure) or vertex set the exact-arity
+# dense kernels take; larger geometries go to the per-pair exact path.
+MAX_DENSE_VERTS = 64
+# Ring cap of the padded fallback (preclassify_batch / _extract_ring)
+# only: that layout pads every row to the batch maximum, so one large
+# ring would inflate the tensor of every row in the batch.
+MAX_VERTS = 8
+# Row chunks keep rows * ka * kb (entries of one orientation tensor)
+# within this budget: 16 MB of float64, whatever the batch size.
+CHUNK_ELEMS = 1 << 21
 
-UNDECIDED, DISJOINT, A_IN_B, B_IN_A, OVERLAP = 0, 1, 2, 3, 4
+UNDECIDED, DISJOINT, A_IN_B, B_IN_A, OVERLAP, CROSSES = 0, 1, 2, 3, 4, 5
 
 _ALL = (
     "intersects", "contains", "within", "covers", "coveredby",
@@ -70,16 +93,33 @@ CODE_DICTS = {
     A_IN_B: _code_dict(intersects=True, within=True, coveredby=True),
     B_IN_A: _code_dict(intersects=True, contains=True, covers=True),
     OVERLAP: _code_dict(intersects=True, overlaps=True),
+    CROSSES: _code_dict(intersects=True, crosses=True),
 }
 
 # CODE_FLAGS[rel][code] -> bool; lets the verifier assemble whole result
 # columns as one numpy gather per relation instead of per-row appends
 CODE_FLAGS = {
-    rel: np.array(
-        [False] + [CODE_DICTS[c][rel] for c in (DISJOINT, A_IN_B, B_IN_A, OVERLAP)]
-    )
+    rel: np.array([False] + [CODE_DICTS[c][rel] for c in sorted(CODE_DICTS)])
     for rel in _ALL
 }
+
+
+def _row_chunked(kernel):
+    """Run a kernel over ``(n, Ka, 2)`` x ``(n, Kb, 2)`` operands in row
+    slices of at most CHUNK_ELEMS // (Ka * Kb) rows and concatenate the
+    codes. A kernel's None (shared shape outside its envelope) depends
+    on the shapes only, so every slice returns it at once."""
+
+    @functools.wraps(kernel)
+    def run(a, b):
+        n = a.shape[0]
+        step = max(1, CHUNK_ELEMS // (a.shape[1] * b.shape[1]))
+        if n <= step:
+            return kernel(a, b)
+        parts = [kernel(a[i:i + step], b[i:i + step]) for i in range(0, n, step)]
+        return None if parts[0] is None else np.concatenate(parts)
+
+    return run
 
 
 def _extract_ring(gtype, parts):
@@ -105,8 +145,9 @@ def _extract_ring(gtype, parts):
                 or y > MAX_SCALED or y < -MAX_SCALED:
             return None
         out.append((x, y))
-    # strict convexity + consistent orientation (zero cross -> slow path)
-    sign = 0
+    # strict convexity + consistent orientation (zero cross -> slow path),
+    # winding once (see _dense_ring_checks)
+    sign = wraps = 0
     for i in range(k):
         ax, ay = out[i]
         bx, by = out[i + 1 - k * (i + 1 == k)]
@@ -122,6 +163,10 @@ def _extract_ring(gtype, parts):
             sign = s
         elif s != sign:
             return None
+        if (by - ay) * s < 0 <= (cy - by) * s:
+            wraps += 1
+    if wraps != 1:
+        return None
     return out, k, float(sign)
 
 
@@ -141,14 +186,14 @@ def _orient_tensor(A, ka, sa, B, kmax):
     return O, edge_valid
 
 
-def _dense_ring_checks(ring):
+def _dense_ring_checks(ring, max_k=MAX_DENSE_VERTS):
     """Scaling / integrality / convexity / closure checks over a dense
     batch of closed rings ``ring[n, P, 2]`` (first vertex repeated
     last). Returns (verts[n,k,2], k, sign[n], valid[n]) or None when the
-    shared arity is outside the fast-path envelope; rows failing any
-    PER-ROW probe (closure included) come back invalid, not batch-fatal."""
+    shared arity is outside 3..max_k; rows failing any PER-ROW probe
+    (closure included) come back invalid, not batch-fatal."""
     k = ring.shape[1] - 1  # vertices sans closure
-    if not 3 <= k <= MAX_VERTS:
+    if not 3 <= k <= max_k:
         return None
     r = ring[:, :-1] * SCALE
     valid = (
@@ -162,16 +207,33 @@ def _dense_ring_checks(ring):
     sign = np.where(
         np.all(cr > 0, axis=1), 1.0, np.where(np.all(cr < 0, axis=1), -1.0, 0.0)
     )
-    return r, k, sign, valid & (sign != 0.0)
+    # Same-sign turns alone also admit stars that wind more than once (a
+    # pentagram turns left at every vertex); the edge direction of a
+    # simple convex ring passes +x exactly once per traversal.
+    ys = e[:, :, 1] * sign[:, None]
+    once = np.sum((ys < 0) & (np.roll(ys, -1, axis=1) >= 0), axis=1) == 1
+    return r, k, sign, valid & (sign != 0.0) & once
 
 
+def _scaled_points(pts):
+    """(scaled points, per-row lattice-validity) for a (n, K, 2) batch."""
+    ps = pts * SCALE
+    valid = (
+        np.all(np.abs(ps) <= MAX_SCALED, axis=(1, 2))
+        & np.all(ps == np.rint(ps), axis=(1, 2))
+    )
+    return ps, valid
+
+
+@_row_chunked
 def preclassify_dense(ring_a, ring_b) -> np.ndarray | None:
     """Codes for a dense pair batch: ``ring_a``/``ring_b`` are float64
-    arrays of shape (n, P, 2) holding CLOSED single rings (the layout the
-    Arrow-native verifier gathers straight from the list-array buffers —
-    no per-row objects anywhere). Rows failing the integrality/convexity
-    probe come back UNDECIDED; a shared shape outside the envelope
-    returns None (caller takes the ragged path)."""
+    arrays of shape (n, P, 2) holding CLOSED single rings of 3 to
+    MAX_DENSE_VERTS vertices (the layout the Arrow-native verifier
+    gathers straight from the list-array buffers — no per-row objects
+    anywhere). Rows failing the integrality/convexity probe come back
+    UNDECIDED; a shared shape outside the envelope returns None (caller
+    takes the ragged path)."""
     ha = _dense_ring_checks(ring_a)
     if ha is None:
         return None
@@ -188,6 +250,7 @@ def preclassify_dense(ring_a, ring_b) -> np.ndarray | None:
     return out
 
 
+@_row_chunked
 def preclassify_points_vs_poly(pts, ring) -> np.ndarray | None:
     """Codes for point-set/polyline A vs convex single-ring polygon B.
 
@@ -200,41 +263,34 @@ def preclassify_points_vs_poly(pts, ring) -> np.ndarray | None:
       * every vertex strictly inside every edge half-plane -> A_IN_B
         (intersects + within + coveredby; no boundary contact possible)
       * some edge axis with every vertex strictly outside -> DISJOINT
+      * some vertex strictly inside every edge half-plane and some
+        vertex strictly outside one edge -> CROSSES (intersects +
+        crosses; other vertices may touch the boundary, see the module
+        docstring for why that cannot change the flags)
       * anything else (contact, degenerate, off-lattice) -> UNDECIDED.
     Exactness: same scaled-integer float64 argument as the polygon pair
-    path. Swapped callers map A_IN_B -> B_IN_A themselves."""
+    path. Swapped callers map A_IN_B -> B_IN_A themselves; DISJOINT and
+    CROSSES are symmetric."""
     hb = _dense_ring_checks(ring)
     if hb is None:
         return None
     B, kb, sb, vb = hb
-    ps = pts * SCALE
-    va = (
-        np.all(np.abs(ps) <= MAX_SCALED, axis=(1, 2))
-        & np.all(ps == np.rint(ps), axis=(1, 2))
-    )
+    ps, va = _scaled_points(pts)
     n = ring.shape[0]
     OB, evb = _orient_tensor(B, np.full(n, kb), sb, ps, kb)
-    allj_pos = np.all(OB > 0, axis=2)
-    allj_neg = np.all(OB < 0, axis=2)
-    inside = np.all(allj_pos | ~evb, axis=1)
-    sep = np.any(allj_neg & evb, axis=1)
+    ev = evb[:, :, None]
+    vert_in = np.all((OB > 0) | ~ev, axis=1)     # (n, K): strictly interior
+    vert_out = np.any((OB < 0) & ev, axis=1)     # (n, K): strictly exterior
+    sep = np.any(np.all(OB < 0, axis=2) & evb, axis=1)
     out = np.zeros(n, dtype=np.int8)
     out[sep] = DISJOINT
-    out[inside] = A_IN_B
+    out[vert_in.all(axis=1)] = A_IN_B
+    out[vert_in.any(axis=1) & vert_out.any(axis=1)] = CROSSES
     out[~(va & vb)] = UNDECIDED
     return out
 
 
-def _scaled_points(pts):
-    """(scaled points, per-row lattice-validity) for a (n, K, 2) batch."""
-    ps = pts * SCALE
-    valid = (
-        np.all(np.abs(ps) <= MAX_SCALED, axis=(1, 2))
-        & np.all(ps == np.rint(ps), axis=(1, 2))
-    )
-    return ps, valid
-
-
+@_row_chunked
 def preclassify_pts_vs_pts(A, B) -> np.ndarray:
     """Codes for point-set x point-set (POINT/MULTIPOINT both sides —
     the vertex set IS the geometry). Pure set algebra on the equality
@@ -256,6 +312,7 @@ def preclassify_pts_vs_pts(A, B) -> np.ndarray:
     return out
 
 
+@_row_chunked
 def preclassify_pts_vs_line(P, L) -> np.ndarray:
     """Codes for point-set vs polyline: DISJOINT iff no point is
     incident to any segment of the vertex chain (orientation zero AND
@@ -283,6 +340,7 @@ def preclassify_pts_vs_line(P, L) -> np.ndarray:
     return out
 
 
+@_row_chunked
 def preclassify_line_vs_line(A, B) -> np.ndarray:
     """Codes for polyline vs polyline: DISJOINT iff every segment pair
     exhibits a strict straddle separation (one segment's endpoints
@@ -330,7 +388,7 @@ def _extract_homogeneous(gtypes, coords):
         return None
     if arr.ndim != 4 or arr.shape[1] != 1:
         return None
-    return _dense_ring_checks(arr[:, 0])
+    return _dense_ring_checks(arr[:, 0], MAX_VERTS)
 
 
 def _decide(OA, eva, OB, evb):

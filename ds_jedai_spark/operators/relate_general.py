@@ -9,8 +9,11 @@ linkers/GIAnt.scala:32-37):
 
 1. Arrow-native batch entry (``with_general_relations`` -> ``mapInArrow``):
    coords read zero-copy from the list-array buffers; rows bucket by
-   (kind, arity) into dense numpy tensors (convex SAT, point-in-convex,
-   point-set algebra, proven-disjoint line tests — relate_fast.py);
+   (kind, arity) into dense numpy tensors (relate_fast.py), each run in
+   bounded row chunks: convex SAT for polygon pairs of 3-64 vertices a
+   side; a point set or polyline of up to 64 vertices against a convex
+   3-64-gon, decided as inside, disjoint or crossing; point-set
+   algebra; proven-disjoint line tests;
 2. per-pair exact predicates below for whatever the tensors leave
    UNDECIDED (boundary contact, non-convex, holes, off-lattice);
 3. optional shapely 2.x vectorized dispatch when the library exists
@@ -515,11 +518,12 @@ def _ragged_preclassify(fs, ft, kind_a, kind_b, n):
     loop measured ~15us per row, dominating mixed-corpus batches).
     ``kind_*`` is int8 per row: 0 = other, 1 = polygon, 2 = point set
     (POINT/MULTIPOINT), 3 = line (LINESTRING/MULTILINESTRING). Bucket
-    families: polygon x polygon (full SAT codes), any dim<2 vertex set x
-    polygon and its swap (strict inside/disjoint), point-set x point-set
-    (full set algebra sans equals), point-set x line and line x line
-    (proven-disjoint only). Everything else stays UNDECIDED for the
-    per-pair exact path.
+    families: polygon x polygon (full SAT codes, convex rings of 3 to
+    MAX_DENSE_VERTS vertices), any dim<2 vertex set x polygon and its
+    swap (strict inside, disjoint, or crossing: a vertex strictly inside
+    and one strictly outside), point-set x point-set (full set algebra
+    sans equals), point-set x line and line x line (proven-disjoint
+    only). Everything else stays UNDECIDED for the per-pair exact path.
     Returns an int8 code array, or None when the batch violates the
     leaves-are-[x,y] invariant."""
     import numpy as np
@@ -527,7 +531,7 @@ def _ragged_preclassify(fs, ft, kind_a, kind_b, n):
     from ds_jedai_spark.operators.relate_fast import (
         A_IN_B,
         B_IN_A,
-        MAX_VERTS,
+        MAX_DENSE_VERTS as MAXP,
         UNDECIDED,
         preclassify_dense,
         preclassify_line_vs_line,
@@ -560,11 +564,10 @@ def _ragged_preclassify(fs, ft, kind_a, kind_b, n):
 
     single_a, ring_a, pts_a = shape_info(o1a, o2a)
     single_b, ring_b, pts_b = shape_info(o1b, o2b)
-    poly_a = (kind_a == 1) & single_a & (ring_a - 1 >= 3) & (ring_a - 1 <= MAX_VERTS)
-    poly_b = (kind_b == 1) & single_b & (ring_b - 1 >= 3) & (ring_b - 1 <= MAX_VERTS)
-    # Arity caps bound the per-bucket tensors (bigger rows go exact);
-    # the quadratic families get tighter caps than the vs-polygon ones.
-    MAXP = 64
+    # Arity caps bound the per-bucket work (bigger rows go exact); the
+    # quadratic families get tighter caps than the vs-polygon ones.
+    poly_a = (kind_a == 1) & single_a & (ring_a - 1 >= 3) & (ring_a - 1 <= MAXP)
+    poly_b = (kind_b == 1) & single_b & (ring_b - 1 >= 3) & (ring_b - 1 <= MAXP)
     vset_a = (kind_a >= 2) & (pts_a >= 1) & (pts_a <= MAXP)
     vset_b = (kind_b >= 2) & (pts_b >= 1) & (pts_b <= MAXP)
     pp_a, pp_b = vset_a & (kind_a == 2), vset_b & (kind_b == 2)
@@ -604,7 +607,7 @@ def _ragged_preclassify(fs, ft, kind_a, kind_b, n):
         )
         if got is None:
             return None
-        out = got.copy()
+        out = got.copy()  # DISJOINT and CROSSES are symmetric
         out[got == A_IN_B] = B_IN_A
         return out
 

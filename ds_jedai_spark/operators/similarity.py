@@ -454,6 +454,7 @@ def pin_bands(
     table: str | None = None,
     bands: int = LSH_BANDS,
     bits: int = LSH_BITS,
+    n_rows: int | None = None,
 ) -> DataFrame:
     """Materialize the LSH BAND TABLE once — the index payload of the
     hyperplane-LSH family (the pin_codes analogue). Two reasons to pin:
@@ -469,7 +470,10 @@ def pin_bands(
     silently finds near-zero candidates, so the parameters travel WITH
     the artifact (they RLE-compress to nothing in parquet) and
     ``lsh_neardup_pairs_cross`` recovers or cross-checks them instead
-    of trusting the caller's defaults."""
+    of trusting the caller's defaults.
+
+    ``n_rows`` is ``emb``'s row count when the caller already has it;
+    the partition sizing below then skips its own count."""
     bb = lsh_band_table(emb, bands, bits).withColumn(
         "lsh_bands", F.lit(int(bands))
     ).withColumn("lsh_bits", F.lit(int(bits)))
@@ -494,7 +498,7 @@ def pin_bands(
         # count + shuffle are noise in the build.
         from ds_jedai_spark.operators.ranking import shuffle_parts
 
-        rows = emb.count() * int(bands)
+        rows = (emb.count() if n_rows is None else n_rows) * int(bands)
         parts = min(
             shuffle_parts(bb),
             max(1, -(-rows // PIN_BAND_ROWS_PER_PART)),
@@ -670,9 +674,11 @@ def lsh_neardup_pairs(
     Pass pinned ``bands`` (pin_bands) to reuse a standing band table
     instead of recomputing the hyperplane dots per query; pass
     ``n_bands="auto"`` to size (bands, bits) to the corpus with
-    auto_lsh_params (one count on the input)."""
+    auto_lsh_params (one count on the input, reused by pin_bands)."""
+    n_rows = None
     if bands is None and n_bands == "auto":
-        n_bands, n_bits = auto_lsh_params(emb.count(), tau)
+        n_rows = emb.count()
+        n_bands, n_bits = auto_lsh_params(n_rows, tau)
     qe = quantized(emb)
     # Collision discovery carries IDS ONLY: the exploded band rows, the
     # equi-join and the (d1, d2) dedup shuffle all move 3 integers per
@@ -682,7 +688,7 @@ def lsh_neardup_pairs(
     # the vector width for rows about to be collapsed (measured 11.7s ->
     # 4.7s warm on the sf0.1 corpus).
     bb = bands if bands is not None else pin_bands(
-        emb, bands=n_bands, bits=n_bits
+        emb, bands=n_bands, bits=n_bits, n_rows=n_rows
     )
     cand = (
         bb.selectExpr("vec_id AS d1", "band", "bucket")
@@ -716,8 +722,10 @@ def lsh_neardup_pairs_cross(
     The collision join, candidate dedup and the two verification joins
     are all equi-joins carrying ids; exact cosine >= tau verifies.
     Output: (d1 from batch, d2 from index, cos)."""
+    n_rows = None
     if index_bands is None and n_bands == "auto":
-        n_bands, n_bits = auto_lsh_params(index_emb.count(), tau)
+        n_rows = index_emb.count()
+        n_bands, n_bits = auto_lsh_params(n_rows, tau)
     elif index_bands is not None:
         # A pinned index fixes the hyperplane parameters: the batch side
         # MUST hash with the pin's (bands, bits) or the collision join
@@ -753,7 +761,7 @@ def lsh_neardup_pairs_cross(
         F.col("vec_id").alias("d1"), "band", "bucket"
     )
     bb = index_bands if index_bands is not None else pin_bands(
-        index_emb, bands=n_bands, bits=n_bits
+        index_emb, bands=n_bands, bits=n_bits, n_rows=n_rows
     )
     band_b = bb.select(F.col("vec_id").alias("d2"), "band", "bucket")
     cand = (

@@ -109,6 +109,25 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+@pytest.hookimpl(wrapper=True, tryfirst=True)
+def pytest_terminal_summary(terminalreporter):
+    """Name the tier that ran on the line just above the pass/skip
+    totals, so a saved tail of the output tells a default-tier green
+    from a full-tier one. Every tier-gated skip (the _FULL_TIER marks
+    and the in-test oracle-duplicate skips) names DSJ_FULL_SUITE=1 in
+    its reason; that is what is counted."""
+    result = yield
+    tier = "full (DSJ_FULL_SUITE=1)" if FULL_SUITE else "default"
+    gated = sum(
+        1 for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple) and "DSJ_FULL_SUITE=1" in rep.longrepr[2]
+    )
+    terminalreporter.write_line(
+        f"dsj test tier: {tier}; {gated} gated items skipped"
+    )
+    return result
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("ds_jedai_spark_tests")

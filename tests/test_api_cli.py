@@ -744,6 +744,9 @@ def test_load_balancer_dispatch_routes_and_matches(spark, conf_path):
     tgt = api.read_dataset(spark, cfg.target)
     est = lb.estimate_pair_cost(src, tgt)
     assert 0 < est < lb.VERTEX_COST_THRESHOLD
+    # One cross-joined action, same value as the two per-side means.
+    assert est == (lb.sample_mean_verts(src).first()["m"]
+                   * lb.sample_mean_verts(tgt).first()["m"])
     # A 16-gon-ish corpus must estimate above threshold.
     many = spark.createDataFrame(
         [(1, [[[float(i), float(i % 3)] for i in range(17)]])],

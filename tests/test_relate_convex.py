@@ -112,3 +112,29 @@ def test_plan_is_jvm_side_for_decided_rows(spark):
     plan = decided._jdf.queryExecution().executedPlan().toString()
     assert "EvalPython" not in plan and "MapInArrow" not in plan
     assert "mapInPandas" not in plan
+
+
+def test_sql_star_ring_is_undecided(spark):
+    """A pentagram turns the same way at every vertex but winds twice:
+    the SQL classifier leaves it UNDECIDED in either orientation, as the
+    numpy one does, while the convex pentagon on the same vertices is
+    still decided."""
+    pent = [(0.0, 16.0), (15.0, 5.0), (9.0, -13.0), (-9.0, -13.0), (-15.0, 5.0)]
+    star = [pent[(2 * i) % 5] for i in range(5)]
+    tri = [(-1.0, -1.0), (1.0, -1.0), (0.0, 1.0)]
+
+    def code(ring):
+        s_pts = [(repr(x), repr(y)) for x, y in ring]
+        t_pts = [(repr(x), repr(y)) for x, y in tri]
+        df = with_convex_code(spark.range(1), s_pts, t_pts, spread=False)
+        got = int(df.first()["fast_code"])
+        closed = [[list(p) for p in ring + [ring[0]]]]
+        tri_c = [[list(p) for p in tri + [tri[0]]]]
+        assert got == int(
+            preclassify_batch(["POLYGON"], [closed], ["POLYGON"], [tri_c])[0]
+        )
+        return got
+
+    assert code(star) == UNDECIDED
+    assert code(star[::-1]) == UNDECIDED
+    assert code(pent) != UNDECIDED

@@ -31,21 +31,27 @@ def _convex_poly(rng, maxr=48):
                     cy + rng.randint(-maxr, maxr) / 16,
                 )
             )
-        pts = sorted(pts)
-        lower = []
-        for p in pts:
-            while len(lower) >= 2 and _cross(lower[-2], lower[-1], p) <= 0:
-                lower.pop()
-            lower.append(p)
-        upper = []
-        for p in reversed(pts):
-            while len(upper) >= 2 and _cross(upper[-2], upper[-1], p) <= 0:
-                upper.pop()
-            upper.append(p)
-        hull = lower[:-1] + upper[:-1]
+        hull = _hull(pts)
         if len(hull) >= 3:
             hull.append(hull[0])
             return [[list(p) for p in hull]]
+
+
+def _hull(pts):
+    """Strict convex hull (collinear points dropped), counter-clockwise,
+    not closed."""
+    pts = sorted(pts)
+    lower = []
+    for p in pts:
+        while len(lower) >= 2 and _cross(lower[-2], lower[-1], p) <= 0:
+            lower.pop()
+        lower.append(p)
+    upper = []
+    for p in reversed(pts):
+        while len(upper) >= 2 and _cross(upper[-2], upper[-1], p) <= 0:
+            upper.pop()
+        upper.append(p)
+    return lower[:-1] + upper[:-1]
 
 
 def _check_agreement(ca, cb):
@@ -117,6 +123,30 @@ def test_nonconvex_and_general_fall_back():
     # non-dyadic-on-the-512-lattice coordinates -> slow path
     off = [[[0.001, 0], [2, 0], [1, 2], [0.001, 0]]]
     assert preclassify_batch(["POLYGON"], [off], ["POLYGON"], [tri])[0] == UNDECIDED
+
+
+@pytest.mark.parametrize("clockwise", [False, True])
+def test_star_rings_fall_back(clockwise):
+    """A pentagram turns the same way at every vertex but winds twice:
+    its centre is exterior under the even-odd rule, so no convex claim
+    may be made about it, on any layout."""
+    star = [[0.0, 16.0], [-9.0, -13.0], [15.0, 5.0], [-15.0, 5.0],
+            [9.0, -13.0], [0.0, 16.0]]
+    if clockwise:
+        star = star[::-1]
+    tri = [[-1.0, -1.0], [1.0, -1.0], [0.0, 1.0], [-1.0, -1.0]]
+    assert relate_pair("POLYGON", [star], "POLYGON", [tri])["disjoint"]
+    assert preclassify_batch(["POLYGON"], [[star]], ["POLYGON"], [[tri]])[0] == UNDECIDED
+    assert preclassify_batch(
+        ["POLYGON"] * 2, [[star], [tri]], ["POLYGON"] * 2, [[tri], [star]]
+    ).tolist() == [UNDECIDED, UNDECIDED]
+    codes = _ragged_codes(
+        ["POLYGON", "POINT", "LINESTRING"],
+        [[star], [[[0.0, 0.0]]], [[[0.0, 0.0], [30.0, 0.0]]]],
+        ["POLYGON", "POLYGON", "POLYGON"],
+        [[tri], [star], [star]],
+    )
+    assert codes.tolist() == [UNDECIDED] * 3
 
 
 def test_clean_cases_decide():
@@ -290,3 +320,185 @@ def test_pts_line_and_line_line_classifiers_agree_with_exact_path():
             want = CODE_DICTS[int(codes[i])]
             assert {k: exact[k] for k in want} == want, (LA[i], LB[i], exact)
     assert decided > 500
+
+
+# --- exact-arity ragged path (the Arrow verifier's bucketed kernels) ---
+
+_KINDS = {"POLYGON": 1, "POINT": 2, "MULTIPOINT": 2, "LINESTRING": 3,
+          "MULTILINESTRING": 3}
+
+
+def _ragged_codes(ga, ca, gb, cb):
+    """Codes of relate_general._ragged_preclassify on Arrow columns built
+    from per-row (gtype, parts) lists: the verifier's real entry."""
+    import pyarrow as pa
+
+    from ds_jedai_spark.operators.relate_general import (
+        _flatten3,
+        _ragged_preclassify,
+    )
+
+    typ = pa.list_(pa.list_(pa.list_(pa.float64())))
+
+    def kinds(gl):
+        return np.array([_KINDS.get(g, 0) for g in gl], dtype=np.int8)
+
+    return _ragged_preclassify(
+        _flatten3(pa.array(ca, typ)), _flatten3(pa.array(cb, typ)),
+        kinds(ga), kinds(gb), len(ga),
+    )
+
+
+def _assert_decided_rows_exact(ga, ca, gb, cb, codes):
+    """Every decided row's code flags equal relate_pair's; returns the
+    decided row indices."""
+    decided = np.nonzero(codes != UNDECIDED)[0]
+    for i in decided:
+        exact = relate_pair(ga[i], ca[i], gb[i], cb[i])
+        fast = CODE_DICTS[int(codes[i])]
+        assert fast == {k: exact[k] for k in fast}, (
+            f"row {i}: {ga[i]} {ca[i]} x {gb[i]} {cb[i]}: "
+            f"fast={fast} exact={exact}"
+        )
+    return decided
+
+
+def _lattice_convex(rng, lo, hi, r_lo, r_hi, center):
+    """Closed ring of a strictly convex polygon with lo..hi vertices on
+    the 1/16 lattice, around ``center`` (lattice units); clockwise about
+    a third of the time."""
+    while True:
+        k = int(rng.integers(lo, hi + 1))
+        r = int(rng.integers(r_lo, r_hi + 1))
+        ang = np.sort(rng.random(k)) * 2 * np.pi
+        pts = np.rint(center + r * np.stack([np.cos(ang), np.sin(ang)], 1))
+        hull = _hull([tuple(int(v) for v in p) for p in pts])
+        if lo <= len(hull) <= hi:
+            if rng.random() < 0.33:
+                hull = hull[::-1]
+            ring = [[x / 16, y / 16] for x, y in hull]
+            return [ring + [ring[0]]]
+
+
+def test_large_convex_polygons_agree_with_exact_path():
+    """9-64-gons against points, multipoints, linestrings and 3-16-gons,
+    in both orientations, through the bucketed verifier kernels: every
+    decided row equals relate_pair, large rings are actually decided,
+    and the CROSSES code shows up with the polygon on either side."""
+    from ds_jedai_spark.operators.relate_fast import CROSSES
+
+    rng = np.random.default_rng(2024)
+    rows, other_kind, big_is_a = [], [], []
+    for i in range(480):
+        c = rng.integers(-2000, 2000, 2)
+        big = _lattice_convex(rng, 9, 64, 80, 400, c)
+        ring = big[0]
+        r = max(abs(ring[0][0] - c[0] / 16), abs(ring[0][1] - c[1] / 16))
+
+        def near():
+            # a polygon vertex (boundary contact) now and then, else a
+            # lattice point around the polygon
+            if rng.random() < 0.1:
+                return list(ring[int(rng.integers(len(ring) - 1))])
+            d = rng.integers(-int(24 * r), int(24 * r) + 1, 2) / 16
+            return [c[0] / 16 + d[0], c[1] / 16 + d[1]]
+
+        kind = ("POINT", "MULTIPOINT", "LINESTRING", "POLYGON")[i % 4]
+        other_kind.append(kind)
+        if kind == "POINT":
+            other = [[near()]]
+        elif kind == "MULTIPOINT":
+            other = [[near()] for _ in range(int(rng.integers(2, 6)))]
+        elif kind == "LINESTRING":
+            other = [[near() for _ in range(int(rng.integers(2, 7)))]]
+        else:
+            q = np.rint(np.array(near()) * 16)
+            other = _lattice_convex(rng, 3, 16, 8, 160, q)
+        big_is_a.append(i // 4 % 2 == 1)
+        pair = [("POLYGON", big), (kind, other)]
+        rows.append(pair if big_is_a[-1] else pair[::-1])
+    ga, ca = zip(*(a for a, _ in rows))
+    gb, cb = zip(*(b for _, b in rows))
+    codes = _ragged_codes(ga, ca, gb, cb)
+    decided = _assert_decided_rows_exact(ga, ca, gb, cb, codes)
+    assert len(decided) > 0.8 * len(ga)
+    other_kind = np.array(other_kind)
+    for kind in ("POINT", "MULTIPOINT", "LINESTRING", "POLYGON"):
+        assert (codes[other_kind == kind] != UNDECIDED).mean() > 0.5, kind
+    big_is_a = np.array(big_is_a)
+    crosses = codes == CROSSES
+    assert crosses[big_is_a].any() and crosses[~big_is_a].any()
+
+
+def _mixed_candidates(seed, n_src=400, n_tgt=400, domain=486):
+    """Envelope-overlap candidates shaped like the GIA.nt mixed WKT
+    benchmark: convex 5-16-gon sources against points, linestrings and
+    convex 3-8-gons, every coordinate on the 1/16 lattice."""
+    rng = np.random.default_rng(seed)
+
+    def convex(lo, hi, r_lo, r_hi):
+        r = int(rng.integers(r_lo, r_hi + 1))
+        return _lattice_convex(
+            rng, lo, hi, r_lo, r_hi, rng.integers(r + 1, domain - r - 1, 2)
+        )
+
+    src = [convex(5, 16, 10, 48) for _ in range(n_src)]
+    tgt = []
+    for kind in rng.choice(["POINT", "LINESTRING", "POLYGON"], n_tgt):
+        if kind == "POINT":
+            tgt.append(("POINT", [[list(rng.integers(0, domain, 2) / 16)]]))
+        elif kind == "LINESTRING":
+            start = rng.integers(40, domain - 40, 2)
+            steps = rng.integers(-16, 17, (int(rng.integers(1, 6)), 2))
+            chain = np.vstack([start, start + np.cumsum(steps, axis=0)])
+            tgt.append(("LINESTRING", [(chain / 16).tolist()]))
+        else:
+            tgt.append(("POLYGON", convex(3, 8, 3, 24)))
+
+    def env(parts):
+        xy = np.array([p for part in parts for p in part])
+        return np.r_[xy.min(0), xy.max(0)]
+
+    se = np.array([env(p) for p in src])
+    te = np.array([env(p) for _, p in tgt])
+    si, ti = np.nonzero(
+        (se[:, None, 0] <= te[None, :, 2]) & (te[None, :, 0] <= se[:, None, 2])
+        & (se[:, None, 1] <= te[None, :, 3]) & (te[None, :, 1] <= se[:, None, 3])
+    )
+    return (
+        ["POLYGON"] * len(si), [src[i] for i in si],
+        [tgt[j][0] for j in ti], [tgt[j][1] for j in ti],
+    )
+
+
+def test_mixed_batch_is_decided_by_the_dense_kernels():
+    """On a candidate batch shaped like the mixed WKT benchmark at least
+    95% of rows are decided without relate_pair, and every decided row
+    is exact."""
+    ga, ca, gb, cb = _mixed_candidates(7)
+    assert len(ga) > 1000
+    codes = _ragged_codes(ga, ca, gb, cb)
+    decided = _assert_decided_rows_exact(ga, ca, gb, cb, codes)
+    assert len(decided) >= 0.95 * len(ga)
+
+
+def test_row_chunks_give_identical_codes(monkeypatch):
+    """A tiny element budget splits every bucket into many row chunks;
+    the codes must not change, on the ragged path and on one
+    homogeneous 20-gon x 12-gon batch."""
+    from ds_jedai_spark.operators import relate_fast
+
+    ga, ca, gb, cb = _mixed_candidates(11, n_src=200, n_tgt=200, domain=344)
+    rng = np.random.default_rng(5)
+    ra, rb = [], []
+    for _ in range(203):
+        c = rng.integers(0, 600, 2)
+        ra.append(_lattice_convex(rng, 20, 20, 60, 120, c)[0])
+        rb.append(_lattice_convex(rng, 12, 12, 20, 80, c + rng.integers(-90, 91, 2))[0])
+    ra, rb = np.array(ra), np.array(rb)
+    whole = _ragged_codes(ga, ca, gb, cb)
+    whole_dense = relate_fast.preclassify_dense(ra, rb)
+    monkeypatch.setattr(relate_fast, "CHUNK_ELEMS", 13 * 21 * 7)
+    np.testing.assert_array_equal(_ragged_codes(ga, ca, gb, cb), whole)
+    np.testing.assert_array_equal(relate_fast.preclassify_dense(ra, rb), whole_dense)
+    assert (whole_dense != UNDECIDED).sum() > 100

@@ -196,6 +196,26 @@ def test_auto_lsh_params_policy():
     assert auto_lsh_params(10, 0.9)[1] == 2
 
 
+def test_lsh_auto_params_count_the_corpus_once(spark, monkeypatch):
+    """n_bands='auto' counts the corpus for auto_lsh_params and passes
+    that count on to pin_bands, so the corpus is counted once, not
+    twice. A pin_bands given n_rows counts nothing."""
+    emb = _emb(spark)
+    counted = []
+    real = type(emb).count
+
+    def counting(self):
+        counted.append(self is emb)
+        return real(self)
+
+    monkeypatch.setattr(type(emb), "count", counting)
+    similarity.lsh_neardup_pairs(emb, pl.TAU_COS, n_bands="auto")
+    assert counted.count(True) == 1
+    counted.clear()
+    similarity.pin_bands(emb, n_rows=10)
+    assert counted.count(True) == 0
+
+
 def test_lsh_scaled_params_exact_clones_complete(spark):
     """With corpus-scaled parameters, exact clones (cos = 1.0) are
     always found — identical vectors share every band bucket no matter
