@@ -34,7 +34,9 @@ from ds_jedai_spark.operators.relate_fast import (
     B_IN_A,
     CODE_DICTS,
     DISJOINT,
+    MAX_SCALED,
     OVERLAP,
+    SCALE,
     UNDECIDED,
 )
 
@@ -53,7 +55,8 @@ def _eligible(pts: Pts) -> str:
     for x, y in pts:
         for v in (x, y):
             probes.append(
-                f"(abs({v}) <= 32768.0 AND ({v}) * 512.0 = floor(({v}) * 512.0))"
+                f"(abs({v}) <= {MAX_SCALED / SCALE} AND "
+                f"({v}) * {SCALE} = floor(({v}) * {SCALE}))"
             )
     return "(" + " AND ".join(probes) + ")"
 

@@ -5,9 +5,10 @@ The general verifier (`relate_general.with_general_relations`) calls
 interpreter work per pair. Most candidate pairs of a tile join are either
 cleanly separated or cleanly nested, overlapping or crossing, with no
 boundary contact. Against a convex polygon those cases are decided by one
-orientation-sign tensor over a whole bucket of rows. The verifier buckets
-a batch by (kind, arity) per side, so every kernel here sees one shared
-vertex count per side and nothing is padded:
+orientation-sign tensor over a whole bucket of rows. ``preclassify``, the
+verifier's one entry, buckets an Arrow batch by (kind, arity) per side
+and gathers each bucket straight from the coords buffers, so every kernel
+here sees one shared vertex count per side:
 
 * convex ring x convex ring, 3..MAX_DENSE_VERTS vertices each
   (``preclassify_dense``);
@@ -17,7 +18,9 @@ vertex count per side and nothing is padded:
   (set algebra and proven-disjoint tests).
 
 Every kernel runs in row chunks of at most CHUNK_ELEMS orientation
-entries, so memory stays bounded for any batch size or arity.
+entries, so memory stays bounded for any batch size or arity. Rows of
+any other shape (holes, multipolygons, larger rings or vertex sets,
+other kinds) stay UNDECIDED.
 
 Exactness argument (no epsilons anywhere):
 - Eligible coordinates must be integers after scaling by 512 (covers the
@@ -60,16 +63,14 @@ from __future__ import annotations
 import functools
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 
 SCALE = 512.0
 MAX_SCALED = float(1 << 24)
-# Largest ring (vertices, without closure) or vertex set the exact-arity
-# dense kernels take; larger geometries go to the per-pair exact path.
+# Largest ring (vertices, without closure) or vertex set the dense
+# kernels take; larger geometries go to the per-pair exact path.
 MAX_DENSE_VERTS = 64
-# Ring cap of the padded fallback (preclassify_batch / _extract_ring)
-# only: that layout pads every row to the batch maximum, so one large
-# ring would inflate the tensor of every row in the batch.
-MAX_VERTS = 8
 # Row chunks keep rows * ka * kb (entries of one orientation tensor)
 # within this budget: 16 MB of float64, whatever the batch size.
 CHUNK_ELEMS = 1 << 21
@@ -97,7 +98,9 @@ CODE_DICTS = {
 }
 
 # CODE_FLAGS[rel][code] -> bool; lets the verifier assemble whole result
-# columns as one numpy gather per relation instead of per-row appends
+# columns as one numpy gather per relation instead of per-row appends.
+# The gather indexes by code value, so the codes must be 1..len.
+assert sorted(CODE_DICTS) == list(range(1, len(CODE_DICTS) + 1))
 CODE_FLAGS = {
     rel: np.array([False] + [CODE_DICTS[c][rel] for c in sorted(CODE_DICTS)])
     for rel in _ALL
@@ -107,8 +110,7 @@ CODE_FLAGS = {
 def _row_chunked(kernel):
     """Run a kernel over ``(n, Ka, 2)`` x ``(n, Kb, 2)`` operands in row
     slices of at most CHUNK_ELEMS // (Ka * Kb) rows and concatenate the
-    codes. A kernel's None (shared shape outside its envelope) depends
-    on the shapes only, so every slice returns it at once."""
+    codes."""
 
     @functools.wraps(kernel)
     def run(a, b):
@@ -116,85 +118,31 @@ def _row_chunked(kernel):
         step = max(1, CHUNK_ELEMS // (a.shape[1] * b.shape[1]))
         if n <= step:
             return kernel(a, b)
-        parts = [kernel(a[i:i + step], b[i:i + step]) for i in range(0, n, step)]
-        return None if parts[0] is None else np.concatenate(parts)
+        return np.concatenate(
+            [kernel(a[i:i + step], b[i:i + step]) for i in range(0, n, step)]
+        )
 
     return run
 
 
-def _extract_ring(gtype, parts):
-    """Scaled integer ring (list of (x, y) float-int tuples), vertex
-    count and orientation sign, or None when this geometry is ineligible
-    for the fast path. Pure Python on purpose: per-row numpy calls cost
-    more than the whole decision tensor (measured 94 us/pair -> 6 us)."""
-    if gtype != "POLYGON" or len(parts) != 1:
-        return None
-    ring = parts[0]
-    k = len(ring)
-    p0, plast = ring[0], ring[-1]
-    if k >= 2 and p0[0] == plast[0] and p0[1] == plast[1]:
-        k -= 1
-    if not 3 <= k <= MAX_VERTS:
-        return None
-    out = []
-    for idx in range(k):
-        p = ring[idx]
-        x = float(p[0]) * SCALE
-        y = float(p[1]) * SCALE
-        if x % 1.0 or y % 1.0 or x > MAX_SCALED or x < -MAX_SCALED \
-                or y > MAX_SCALED or y < -MAX_SCALED:
-            return None
-        out.append((x, y))
-    # strict convexity + consistent orientation (zero cross -> slow path),
-    # winding once (see _dense_ring_checks)
-    sign = wraps = 0
-    for i in range(k):
-        ax, ay = out[i]
-        bx, by = out[i + 1 - k * (i + 1 == k)]
-        cx, cy = out[i + 2 - k * (i + 2 >= k)]
-        cr = (bx - ax) * (cy - ay) - (by - ay) * (cx - ax)
-        if cr > 0:
-            s = 1
-        elif cr < 0:
-            s = -1
-        else:
-            return None
-        if sign == 0:
-            sign = s
-        elif s != sign:
-            return None
-        if (by - ay) * s < 0 <= (cy - by) * s:
-            wraps += 1
-    if wraps != 1:
-        return None
-    return out, k, float(sign)
-
-
-def _orient_tensor(A, ka, sa, B, kmax):
-    """OA[n, i, j]: sign of orient(a_i, a_{i+1}, b_j) normalized so that
-    positive means 'strictly inside edge i's half-plane', with padded
-    edges masked out via edge_valid."""
-    nxt = np.roll(A, -1, axis=1)
-    E = nxt - A                                     # [n, K, 2]
-    rel = B[:, None, :, :] - A[:, :, None, :]       # [n, K(edges), K(verts), 2]
+def _orient_tensor(A, sa, B):
+    """O[n, i, j]: sign of orient(a_i, a_{i+1}, b_j) normalized so that
+    positive means 'strictly inside edge i's half-plane'."""
+    E = np.roll(A, -1, axis=1) - A                  # [n, Ka(edges), 2]
+    rel = B[:, None, :, :] - A[:, :, None, :]       # [n, Ka, Kb(verts), 2]
     O = E[:, :, None, 0] * rel[:, :, :, 1] - E[:, :, None, 1] * rel[:, :, :, 0]
     O *= sa[:, None, None]
-    idx = np.arange(kmax)[None, :]
-    # padding repeats the last real vertex: edges k-1..K-2 are zero-length,
-    # edge K-1 (pad -> vertex 0) duplicates the closing edge k-1 -> 0.
-    edge_valid = (idx < ka[:, None] - 1) | (idx == kmax - 1)
-    return O, edge_valid
+    return O
 
 
-def _dense_ring_checks(ring, max_k=MAX_DENSE_VERTS):
+def _dense_ring_checks(ring):
     """Scaling / integrality / convexity / closure checks over a dense
     batch of closed rings ``ring[n, P, 2]`` (first vertex repeated
-    last). Returns (verts[n,k,2], k, sign[n], valid[n]) or None when the
-    shared arity is outside 3..max_k; rows failing any PER-ROW probe
-    (closure included) come back invalid, not batch-fatal."""
+    last, 3..MAX_DENSE_VERTS vertices). Returns (verts[n,k,2], sign[n],
+    valid[n]); rows failing any probe (closure included) come back
+    invalid."""
     k = ring.shape[1] - 1  # vertices sans closure
-    if not 3 <= k <= max_k:
-        return None
+    assert 3 <= k <= MAX_DENSE_VERTS, k
     r = ring[:, :-1] * SCALE
     valid = (
         np.all(ring[:, 0] == ring[:, -1], axis=1)
@@ -212,7 +160,7 @@ def _dense_ring_checks(ring, max_k=MAX_DENSE_VERTS):
     # simple convex ring passes +x exactly once per traversal.
     ys = e[:, :, 1] * sign[:, None]
     once = np.sum((ys < 0) & (np.roll(ys, -1, axis=1) >= 0), axis=1) == 1
-    return r, k, sign, valid & (sign != 0.0) & once
+    return r, sign, valid & (sign != 0.0) & once
 
 
 def _scaled_points(pts):
@@ -226,32 +174,39 @@ def _scaled_points(pts):
 
 
 @_row_chunked
-def preclassify_dense(ring_a, ring_b) -> np.ndarray | None:
+def preclassify_dense(ring_a, ring_b) -> np.ndarray:
     """Codes for a dense pair batch: ``ring_a``/``ring_b`` are float64
     arrays of shape (n, P, 2) holding CLOSED single rings of 3 to
-    MAX_DENSE_VERTS vertices (the layout the Arrow-native verifier
-    gathers straight from the list-array buffers — no per-row objects
-    anywhere). Rows failing the integrality/convexity probe come back
-    UNDECIDED; a shared shape outside the envelope returns None (caller
-    takes the ragged path)."""
-    ha = _dense_ring_checks(ring_a)
-    if ha is None:
-        return None
-    hb = _dense_ring_checks(ring_b)
-    if hb is None:
-        return None
-    n = ring_a.shape[0]
-    A, ka, sa, va = ha
-    B, kb, sb, vb = hb
-    OA, eva = _orient_tensor(A, np.full(n, ka), sa, B, ka)
-    OB, evb = _orient_tensor(B, np.full(n, kb), sb, A, kb)
-    out = _decide(OA, eva, OB, evb)
+    MAX_DENSE_VERTS vertices. Rows failing the integrality/convexity
+    probe come back UNDECIDED."""
+    A, sa, va = _dense_ring_checks(ring_a)
+    B, sb, vb = _dense_ring_checks(ring_b)
+    OA = _orient_tensor(A, sa, B)   # A's edge axes vs B's vertices
+    OB = _orient_tensor(B, sb, A)   # B's edge axes vs A's vertices
+    pos_a, neg_a = OA > 0, OA < 0
+    pos_b, neg_b = OB > 0, OB < 0
+    sep = np.any(neg_a.all(axis=2), axis=1) | np.any(neg_b.all(axis=2), axis=1)
+    b_in_a = pos_a.all(axis=(1, 2))
+    a_in_b = pos_b.all(axis=(1, 2))
+    # no weak separating axis anywhere -> interiors intersect
+    no_weak_axis = np.all(pos_a.any(axis=2), axis=1) & np.all(
+        pos_b.any(axis=2), axis=1
+    )
+    b_out = neg_a.any(axis=(1, 2))   # some B vertex strictly outside A
+    a_out = neg_b.any(axis=(1, 2))
+    overlap = no_weak_axis & b_out & a_out & ~b_in_a & ~a_in_b
+
+    out = np.zeros(OA.shape[0], dtype=np.int8)
+    out[sep] = DISJOINT
+    out[b_in_a] = B_IN_A
+    out[a_in_b] = A_IN_B
+    out[overlap] = OVERLAP
     out[~(va & vb)] = UNDECIDED
     return out
 
 
 @_row_chunked
-def preclassify_points_vs_poly(pts, ring) -> np.ndarray | None:
+def preclassify_points_vs_poly(pts, ring) -> np.ndarray:
     """Codes for point-set/polyline A vs convex single-ring polygon B.
 
     ``pts[n, K, 2]`` holds EVERY vertex of A (POINT / MULTIPOINT /
@@ -271,18 +226,13 @@ def preclassify_points_vs_poly(pts, ring) -> np.ndarray | None:
     Exactness: same scaled-integer float64 argument as the polygon pair
     path. Swapped callers map A_IN_B -> B_IN_A themselves; DISJOINT and
     CROSSES are symmetric."""
-    hb = _dense_ring_checks(ring)
-    if hb is None:
-        return None
-    B, kb, sb, vb = hb
+    B, sb, vb = _dense_ring_checks(ring)
     ps, va = _scaled_points(pts)
-    n = ring.shape[0]
-    OB, evb = _orient_tensor(B, np.full(n, kb), sb, ps, kb)
-    ev = evb[:, :, None]
-    vert_in = np.all((OB > 0) | ~ev, axis=1)     # (n, K): strictly interior
-    vert_out = np.any((OB < 0) & ev, axis=1)     # (n, K): strictly exterior
-    sep = np.any(np.all(OB < 0, axis=2) & evb, axis=1)
-    out = np.zeros(n, dtype=np.int8)
+    OB = _orient_tensor(B, sb, ps)
+    vert_in = np.all(OB > 0, axis=1)      # (n, K): strictly interior
+    vert_out = np.any(OB < 0, axis=1)     # (n, K): strictly exterior
+    sep = np.any(np.all(OB < 0, axis=2), axis=1)
+    out = np.zeros(ring.shape[0], dtype=np.int8)
     out[sep] = DISJOINT
     out[vert_in.all(axis=1)] = A_IN_B
     out[vert_in.any(axis=1) & vert_out.any(axis=1)] = CROSSES
@@ -373,113 +323,150 @@ def preclassify_line_vs_line(A, B) -> np.ndarray:
     return out
 
 
-def _extract_homogeneous(gtypes, coords):
-    """Batch extraction when every row is a single closed ring of the
-    same vertex count (the shape every tile-join candidate batch has):
-    one np.asarray for the whole column, then scaling / integrality /
-    convexity as batched array ops. Returns (verts[n,k,2], k, sign[n],
-    valid[n]) or None when the batch is not homogeneous."""
-    for g in gtypes:
-        if g != "POLYGON":
-            return None
-    try:
-        arr = np.asarray(coords, dtype=np.float64)
-    except (ValueError, TypeError):
-        return None
-    if arr.ndim != 4 or arr.shape[1] != 1:
-        return None
-    return _dense_ring_checks(arr[:, 0], MAX_VERTS)
+# preclassify's kind per gtype: 1 polygon, 2 point set, 3 polyline, 0 other
+_KIND_OF = ("POLYGON", "POINT", "MULTIPOINT", "LINESTRING", "MULTILINESTRING")
+_KIND_CODE = np.array([1, 2, 2, 3, 3, 0], dtype=np.int8)
 
 
-def _decide(OA, eva, OB, evb):
-    """The strict-sign decision logic shared by both batch layouts."""
-    allj_neg_A = np.all(OA < 0, axis=2)
-    allj_pos_A = np.all(OA > 0, axis=2)
-    anyj_pos_A = np.any(OA > 0, axis=2)
-    anyj_neg_A = np.any(OA < 0, axis=2)
-    allj_neg_B = np.all(OB < 0, axis=2)
-    allj_pos_B = np.all(OB > 0, axis=2)
-    anyj_pos_B = np.any(OB > 0, axis=2)
-    anyj_neg_B = np.any(OB < 0, axis=2)
-
-    def any_axis(per_axis, ev):
-        return np.any(per_axis & ev, axis=1)
-
-    def all_axes(per_axis, ev):
-        return np.all(per_axis | ~ev, axis=1)
-
-    sep = any_axis(allj_neg_A, eva) | any_axis(allj_neg_B, evb)
-    b_in_a = all_axes(allj_pos_A, eva)
-    a_in_b = all_axes(allj_pos_B, evb)
-    # no weak separating axis anywhere -> interiors intersect
-    no_weak_axis = all_axes(anyj_pos_A, eva) & all_axes(anyj_pos_B, evb)
-    b_out = any_axis(anyj_neg_A, eva)   # some B vertex strictly outside A
-    a_out = any_axis(anyj_neg_B, evb)
-    overlap = no_weak_axis & b_out & a_out & ~b_in_a & ~a_in_b
-
-    out = np.zeros(OA.shape[0], dtype=np.int8)
-    out[sep] = DISJOINT
-    out[b_in_a] = B_IN_A
-    out[a_in_b] = A_IN_B
-    out[overlap] = OVERLAP
-    return out
+def _kinds(gtype) -> np.ndarray:
+    """int8 kind per row of an Arrow string column, in one vectorized
+    lookup (gtypes outside _KIND_OF map to 0)."""
+    idx = pc.index_in(gtype, value_set=pa.array(_KIND_OF))
+    return _KIND_CODE[idx.fill_null(len(_KIND_OF)).to_numpy()]
 
 
-def preclassify_batch(gta, ca, gtb, cb) -> np.ndarray:
-    """Return an int8 code per row: UNDECIDED (use relate_pair) or one of
-    DISJOINT / A_IN_B / B_IN_A / OVERLAP (look up CODE_DICTS)."""
-    n = len(gta)
+def _dense_subset(f, rows, P):
+    """(len(rows), P, 2) gather of single-part rows with P points each."""
+    o1, o2, o3, vals = f
+    pp = o2[o1[rows]][:, None] + np.arange(P)[None, :]
+    return vals[o3[pp][..., None] + np.arange(2)]
+
+
+def _dense_points_subset(f, rows, P):
+    """(len(rows), P, 2) gather of ALL points of each row (across parts)
+    — valid because a row's points are contiguous in the flat buffer."""
+    o1, o2, o3, vals = f
+    starts = o3[o2[o1[rows]]]
+    return vals[starts[:, None] + np.arange(2 * P)].reshape(len(rows), P, 2)
+
+
+def _shape_info(f):
+    """Per row: single part?, points of that single part (0 otherwise),
+    points across all parts."""
+    o1, o2 = f[0], f[1]
+    single = np.diff(o1) == 1
+    ring_pts = np.where(
+        single,
+        o2[np.minimum(o1[:-1] + 1, len(o2) - 1)]
+        - o2[np.minimum(o1[:-1], len(o2) - 2)],
+        0,
+    )
+    return single, ring_pts, o2[o1[1:]] - o2[o1[:-1]]
+
+
+def preclassify(gtype_a, fs, gtype_b, ft) -> np.ndarray:
+    """An int8 code per row of an Arrow pair batch: UNDECIDED (take
+    relate_pair) or a CODE_DICTS key.
+
+    ``gtype_*`` are the Arrow string columns; ``fs``/``ft`` are the
+    ``relate_general._flatten3`` views of the coords columns, whose
+    leaves must all be [x, y] pairs (the caller validates that). Rows
+    are bucketed by their (kind, arity) pair and each bucket is gathered
+    straight from the value buffer into one dense tensor. Bucket
+    families: polygon x polygon (full SAT codes, convex rings of 3 to
+    MAX_DENSE_VERTS vertices), any dim<2 vertex set x polygon and its
+    swap (strict inside, disjoint, or crossing: a vertex strictly inside
+    and one strictly outside), point-set x point-set (full set algebra
+    sans equals), point-set x line and line x line (proven-disjoint
+    only). Everything else stays UNDECIDED."""
+    n = len(gtype_a)
     codes = np.zeros(n, dtype=np.int8)
     if n == 0:
         return codes
+    kind_a, kind_b = _kinds(gtype_a), _kinds(gtype_b)
+    single_a, ring_a, pts_a = _shape_info(fs)
+    single_b, ring_b, pts_b = _shape_info(ft)
+    # Arity caps bound the per-bucket work (bigger rows go exact); the
+    # quadratic families get tighter caps than the vs-polygon ones.
+    maxp = MAX_DENSE_VERTS
+    poly_a = (kind_a == 1) & single_a & (ring_a - 1 >= 3) & (ring_a - 1 <= maxp)
+    poly_b = (kind_b == 1) & single_b & (ring_b - 1 >= 3) & (ring_b - 1 <= maxp)
+    vset_a = (kind_a >= 2) & (pts_a >= 1) & (pts_a <= maxp)
+    vset_b = (kind_b >= 2) & (pts_b >= 1) & (pts_b <= maxp)
+    pp_a, pp_b = vset_a & (kind_a == 2), vset_b & (kind_b == 2)
+    ln_a = (kind_a == 3) & (pts_a >= 2) & (pts_a <= maxp)
+    ln_b = (kind_b == 3) & (pts_b >= 2) & (pts_b <= maxp)
 
-    ha = _extract_homogeneous(gta, ca)
-    hb = _extract_homogeneous(gtb, cb) if ha is not None else None
-    if ha is not None and hb is not None:
-        A, ka, sa, va = ha
-        B, kb, sb, vb = hb
-        kan = np.full(n, ka)
-        kbn = np.full(n, kb)
-        OA, eva = _orient_tensor(A, kan, sa, B, ka)
-        OB, evb = _orient_tensor(B, kbn, sb, A, kb)
-        out = _decide(OA, eva, OB, evb)
-        out[~(va & vb)] = UNDECIDED
+    def buckets(mask, na, nb, runner, cap_a=maxp, cap_b=maxp):
+        mask = mask & (na <= cap_a) & (nb <= cap_b)
+        if not mask.any():
+            return
+        key = na * (maxp + 2) + nb
+        for k in np.unique(key[mask]):
+            rows = np.nonzero(mask & (key == k))[0]
+            codes[rows] = runner(rows, int(na[rows[0]]), int(nb[rows[0]]))
+
+    buckets(
+        poly_a & poly_b,
+        ring_a,
+        ring_b,
+        lambda rows, pa, pb: preclassify_dense(
+            _dense_subset(fs, rows, pa), _dense_subset(ft, rows, pb)
+        ),
+    )
+    buckets(
+        vset_a & poly_b,
+        pts_a,
+        ring_b,
+        lambda rows, pa, pb: preclassify_points_vs_poly(
+            _dense_points_subset(fs, rows, pa), _dense_subset(ft, rows, pb)
+        ),
+    )
+
+    def swapped(rows, pa, pb):
+        got = preclassify_points_vs_poly(
+            _dense_points_subset(ft, rows, pb), _dense_subset(fs, rows, pa)
+        )
+        out = got.copy()  # DISJOINT and CROSSES are symmetric
+        out[got == A_IN_B] = B_IN_A
         return out
-    rows, As, Bs, kas, kbs, sas, sbs = [], [], [], [], [], [], []
-    for i in range(n):
-        ga = _extract_ring(gta[i], ca[i])
-        if ga is None:
-            continue
-        gb = _extract_ring(gtb[i], cb[i])
-        if gb is None:
-            continue
-        ra, ka, sa = ga
-        rb, kb, sb = gb
-        rows.append(i)
-        As.append(ra)
-        Bs.append(rb)
-        kas.append(ka)
-        kbs.append(kb)
-        sas.append(sa)
-        sbs.append(sb)
-    if not rows:
-        return codes
 
-    # pad to the batch's max ring size, not MAX_VERTS: a triangle batch
-    # then runs a 4x4 tensor instead of 8x8 (4x less arithmetic)
-    kmax = max(max(kas), max(kbs))
-    A = np.asarray(
-        [r + [r[-1]] * (kmax - k) for r, k in zip(As, kas)], dtype=np.float64
+    buckets(poly_a & vset_b, ring_a, pts_b, swapped)
+    buckets(
+        pp_a & pp_b,
+        pts_a,
+        pts_b,
+        lambda rows, pa, pb: preclassify_pts_vs_pts(
+            _dense_points_subset(fs, rows, pa), _dense_points_subset(ft, rows, pb)
+        ),
     )
-    B = np.asarray(
-        [r + [r[-1]] * (kmax - k) for r, k in zip(Bs, kbs)], dtype=np.float64
+    buckets(
+        pp_a & ln_b,
+        pts_a,
+        pts_b,
+        lambda rows, pa, pb: preclassify_pts_vs_line(
+            _dense_points_subset(fs, rows, pa), _dense_points_subset(ft, rows, pb)
+        ),
+        cap_b=32,
     )
-    ka = np.asarray(kas)
-    kb = np.asarray(kbs)
-    sa = np.asarray(sas)
-    sb = np.asarray(sbs)
-
-    OA, eva = _orient_tensor(A, ka, sa, B, kmax)   # A's axes vs B's vertices
-    OB, evb = _orient_tensor(B, kb, sb, A, kmax)   # B's axes vs A's vertices
-    codes[np.asarray(rows)] = _decide(OA, eva, OB, evb)
+    buckets(
+        ln_a & pp_b,
+        pts_a,
+        pts_b,
+        # DISJOINT is symmetric and it is this classifier's only claim.
+        lambda rows, pa, pb: preclassify_pts_vs_line(
+            _dense_points_subset(ft, rows, pb), _dense_points_subset(fs, rows, pa)
+        ),
+        cap_a=32,
+    )
+    buckets(
+        ln_a & ln_b,
+        pts_a,
+        pts_b,
+        lambda rows, pa, pb: preclassify_line_vs_line(
+            _dense_points_subset(fs, rows, pa), _dense_points_subset(ft, rows, pb)
+        ),
+        cap_a=16,
+        cap_b=16,
+    )
     return codes

@@ -8,10 +8,12 @@ pairs exactly, tiered by how much of the work can stay vectorized
 linkers/GIAnt.scala:32-37):
 
 1. Arrow-native batch entry (``with_general_relations`` -> ``mapInArrow``):
-   coords read zero-copy from the list-array buffers; rows bucket by
-   (kind, arity) into dense numpy tensors (relate_fast.py), each run in
-   bounded row chunks: convex SAT for polygon pairs of 3-64 vertices a
-   side; a point set or polyline of up to 64 vertices against a convex
+   each batch is checked (no null gtype/coords, every coords leaf an
+   [x, y] pair, else ValueError), its coords are read zero-copy from the
+   list-array buffers, and one pre-classifier (relate_fast.preclassify)
+   buckets the rows by (kind, arity) into dense numpy tensors, each run
+   in bounded row chunks: convex SAT for polygon pairs of 3-64 vertices
+   a side; a point set or polyline of up to 64 vertices against a convex
    3-64-gon, decided as inside, disjoint or crossing; point-set
    algebra; proven-disjoint line tests;
 2. per-pair exact predicates below for whatever the tensors leave
@@ -490,194 +492,35 @@ def _row_parts(f, i):
     ]
 
 
-def _dense_subset(f, rows, P):
-    """(len(rows), P, 2) gather of single-part rows with P points each.
-    Requires the column-wide leaves-are-[x,y] invariant (checked once per
-    batch by the caller)."""
+def _checked_flat(batch, i_g, i_c, names):
+    """``_flatten3`` of one side's coords column, after checking the
+    verifier's input contract: no null gtype or coords value, and every
+    coords leaf an [x, y] pair. Raises ValueError naming the column."""
     import numpy as np
 
-    o1, o2, o3, vals = f
-    pp = o2[o1[rows]][:, None] + np.arange(P)[None, :]
-    return vals[o3[pp][..., None] + np.arange(2)]
-
-
-def _dense_points_subset(f, rows, P):
-    """(len(rows), P, 2) gather of ALL points of each row (across parts)
-    — valid because a row's points are contiguous in the flat buffer."""
-    import numpy as np
-
-    o1, o2, o3, vals = f
-    starts = o3[o2[o1[rows]]]
-    return vals[starts[:, None] + np.arange(2 * P)].reshape(len(rows), P, 2)
-
-
-def _ragged_preclassify(fs, ft, kind_a, kind_b, n):
-    """Grouped dense pre-classification of a RAGGED batch: rows are
-    bucketed by their (kind, arity) pairs and each bucket runs a dense
-    tensor — no per-row Python extraction (the former ``_extract_ring``
-    loop measured ~15us per row, dominating mixed-corpus batches).
-    ``kind_*`` is int8 per row: 0 = other, 1 = polygon, 2 = point set
-    (POINT/MULTIPOINT), 3 = line (LINESTRING/MULTILINESTRING). Bucket
-    families: polygon x polygon (full SAT codes, convex rings of 3 to
-    MAX_DENSE_VERTS vertices), any dim<2 vertex set x polygon and its
-    swap (strict inside, disjoint, or crossing: a vertex strictly inside
-    and one strictly outside), point-set x point-set (full set algebra
-    sans equals), point-set x line and line x line (proven-disjoint
-    only). Everything else stays UNDECIDED for the per-pair exact path.
-    Returns an int8 code array, or None when the batch violates the
-    leaves-are-[x,y] invariant."""
-    import numpy as np
-
-    from ds_jedai_spark.operators.relate_fast import (
-        A_IN_B,
-        B_IN_A,
-        MAX_DENSE_VERTS as MAXP,
-        UNDECIDED,
-        preclassify_dense,
-        preclassify_line_vs_line,
-        preclassify_points_vs_poly,
-        preclassify_pts_vs_line,
-        preclassify_pts_vs_pts,
-    )
-
-    o1a, o2a, o3a, _ = fs
-    o1b, o2b, o3b, _ = ft
-    if not (
-        bool(np.all(np.diff(o3a) == 2)) and bool(np.all(np.diff(o3b) == 2))
-    ):
-        return None
-    codes = np.zeros(n, dtype=np.int8)
-    if n == 0:
-        return codes
-
-    def shape_info(o1, o2):
-        single = np.diff(o1) == 1
-        ring_pts = np.where(
-            single,
-            o2[np.minimum(o1[:-1] + 1, len(o2) - 1)]
-            - o2[np.minimum(o1[:-1], len(o2) - 2)],
-            0,
+    for j in (i_g, i_c):
+        if batch.column(j).null_count:
+            raise ValueError(
+                f"general verifier: column {names[j]!r} holds nulls; every "
+                "row needs a gtype and coords of [x, y] leaves"
+            )
+    f = _flatten3(batch.column(i_c))
+    if not bool(np.all(np.diff(f[2]) == 2)):
+        raise ValueError(
+            f"general verifier: column {names[i_c]!r} has coords leaves "
+            "that are not [x, y] pairs; only 2-D coordinates are supported"
         )
-        # total points across all parts (any part structure)
-        all_pts = o2[o1[1:]] - o2[o1[:-1]]
-        return single, ring_pts, all_pts
-
-    single_a, ring_a, pts_a = shape_info(o1a, o2a)
-    single_b, ring_b, pts_b = shape_info(o1b, o2b)
-    # Arity caps bound the per-bucket work (bigger rows go exact); the
-    # quadratic families get tighter caps than the vs-polygon ones.
-    poly_a = (kind_a == 1) & single_a & (ring_a - 1 >= 3) & (ring_a - 1 <= MAXP)
-    poly_b = (kind_b == 1) & single_b & (ring_b - 1 >= 3) & (ring_b - 1 <= MAXP)
-    vset_a = (kind_a >= 2) & (pts_a >= 1) & (pts_a <= MAXP)
-    vset_b = (kind_b >= 2) & (pts_b >= 1) & (pts_b <= MAXP)
-    pp_a, pp_b = vset_a & (kind_a == 2), vset_b & (kind_b == 2)
-    ln_a = (kind_a == 3) & (pts_a >= 2) & (pts_a <= MAXP)
-    ln_b = (kind_b == 3) & (pts_b >= 2) & (pts_b <= MAXP)
-
-    def buckets(mask, na, nb, runner, cap_a=MAXP, cap_b=MAXP):
-        mask = mask & (na <= cap_a) & (nb <= cap_b)
-        if not mask.any():
-            return
-        key = na * (MAXP + 2) + nb
-        for k in np.unique(key[mask]):
-            rows = np.nonzero(mask & (key == k))[0]
-            got = runner(rows, int(na[rows[0]]), int(nb[rows[0]]))
-            codes[rows] = got if got is not None else UNDECIDED
-
-    buckets(
-        poly_a & poly_b,
-        ring_a,
-        ring_b,
-        lambda rows, pa, pb: preclassify_dense(
-            _dense_subset(fs, rows, pa), _dense_subset(ft, rows, pb)
-        ),
-    )
-    buckets(
-        vset_a & poly_b,
-        pts_a,
-        ring_b,
-        lambda rows, pa, pb: preclassify_points_vs_poly(
-            _dense_points_subset(fs, rows, pa), _dense_subset(ft, rows, pb)
-        ),
-    )
-
-    def swapped(rows, pa, pb):
-        got = preclassify_points_vs_poly(
-            _dense_points_subset(ft, rows, pb), _dense_subset(fs, rows, pa)
-        )
-        if got is None:
-            return None
-        out = got.copy()  # DISJOINT and CROSSES are symmetric
-        out[got == A_IN_B] = B_IN_A
-        return out
-
-    buckets(poly_a & vset_b, ring_a, pts_b, swapped)
-    buckets(
-        pp_a & pp_b,
-        pts_a,
-        pts_b,
-        lambda rows, pa, pb: preclassify_pts_vs_pts(
-            _dense_points_subset(fs, rows, pa), _dense_points_subset(ft, rows, pb)
-        ),
-    )
-    buckets(
-        pp_a & ln_b,
-        pts_a,
-        pts_b,
-        lambda rows, pa, pb: preclassify_pts_vs_line(
-            _dense_points_subset(fs, rows, pa), _dense_points_subset(ft, rows, pb)
-        ),
-        cap_b=32,
-    )
-    buckets(
-        ln_a & pp_b,
-        pts_a,
-        pts_b,
-        # DISJOINT is symmetric and it is this classifier's only claim.
-        lambda rows, pa, pb: preclassify_pts_vs_line(
-            _dense_points_subset(ft, rows, pb), _dense_points_subset(fs, rows, pa)
-        ),
-        cap_a=32,
-    )
-    buckets(
-        ln_a & ln_b,
-        pts_a,
-        pts_b,
-        lambda rows, pa, pb: preclassify_line_vs_line(
-            _dense_points_subset(fs, rows, pa), _dense_points_subset(ft, rows, pb)
-        ),
-        cap_a=16,
-        cap_b=16,
-    )
-    return codes
-
-
-def _try_dense(f, n):
-    """(n, P, 2) closed-ring gather when every row is exactly one part of
-    a shared point count with [x, y] leaves — one fancy-index over the
-    flat value buffer, zero per-row work. None when ragged."""
-    import numpy as np
-
-    o1, o2, o3, vals = f
-    if not bool(np.all(np.diff(o1) == 1)):
-        return None
-    part_idx = o1[:-1]
-    npts = o2[part_idx + 1] - o2[part_idx]
-    if n == 0 or not bool(np.all(npts == npts[0])):
-        return None
-    P = int(npts[0])
-    pp = o2[part_idx][:, None] + np.arange(P)[None, :]
-    starts = o3[pp]
-    if not bool(np.all(o3[pp + 1] - starts == 2)):
-        return None
-    return vals[starts[..., None] + np.arange(2)]
+    return f
 
 
 def with_general_relations(
     pairs: DataFrame, s: str = "s_", t: str = "t_", spread: bool = True
 ) -> DataFrame:
     """Append r_<relation> booleans computed by the general-path verifier.
-    Requires {s}gtype/{s}coords and {t}gtype/{t}coords columns.
+    Requires {s}gtype/{s}coords and {t}gtype/{t}coords columns. Every
+    gtype and coords value must be non-null and every coords leaf an
+    [x, y] pair; a batch that breaks this raises ValueError naming the
+    column.
 
     Arrow-native (``mapInArrow``): the verifier reads the nested coords
     columns through their raw offset/value buffers and passes every input
@@ -685,10 +528,10 @@ def with_general_relations(
     arrays ever happens. This is the dominant cost at scale, not the
     geometry math: on the sf0.1 triangle soak (31.4M pairs) an identity
     ``mapInPandas`` round-trip alone measures 319s on local[32] — 70% of
-    the old 453s wall — while the plain JVM count is 19.5s. Fixed-shape
-    batches (every tile-join candidate stream) gather straight into a
-    dense (n, P, 2) tensor for the exact convex pre-classifier
-    (relate_fast.preclassify_dense); only contact/degenerate rows pay the
+    the old 453s wall — while the plain JVM count is 19.5s. Each batch
+    takes one path: ``relate_fast.preclassify`` buckets its rows by
+    (kind, arity) and decides each bucket with one dense tensor gathered
+    straight from the buffers; only the rows it leaves UNDECIDED pay the
     per-pair exact path, fed by zero-copy row views.
 
     ``spread`` round-robin-repartitions the candidate stream first: a
@@ -717,13 +560,11 @@ def with_general_relations(
     def run(batches):
         import numpy as np
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         from ds_jedai_spark.operators.relate_fast import (
             CODE_FLAGS,
             UNDECIDED,
-            preclassify_batch,
-            preclassify_dense,
+            preclassify,
         )
         from ds_jedai_spark.operators.relate_shapely import (
             have_geometry_lib,
@@ -737,78 +578,22 @@ def with_general_relations(
         # no-dependency exact path below stays the verifier of record.
         use_lib = have_geometry_lib()
         for batch in batches:
-            n = batch.num_rows
-            sc_col, tc_col = batch.column(i_sc), batch.column(i_tc)
             sg_col, tg_col = batch.column(i_sg), batch.column(i_tg)
-            clean = (
-                sc_col.null_count == 0
-                and tc_col.null_count == 0
-                and sg_col.null_count == 0
-                and tg_col.null_count == 0
-            )
-            ga_l = gb_l = fs = ft = ca_l = cb_l = None
-            codes = None
-            if clean and not use_lib:
-                fs, ft = _flatten3(sc_col), _flatten3(tc_col)
-                all_poly = bool(
-                    pc.all(pc.equal(sg_col, "POLYGON")).as_py()
-                ) and bool(pc.all(pc.equal(tg_col, "POLYGON")).as_py())
-                if all_poly and n:
-                    da = _try_dense(fs, n)
-                    db = _try_dense(ft, n) if da is not None else None
-                    if da is not None and db is not None:
-                        codes = preclassify_dense(da, db)
-                if codes is None:
-                    # Ragged batch: bucket by (kind, arity), dense
-                    # tensor per bucket — no per-row extraction.
-                    ga_l = sg_col.to_pylist()
-                    gb_l = tg_col.to_pylist()
-
-                    def kinds(gl):
-                        return np.fromiter(
-                            (1 if g == "POLYGON"
-                             else 2 if g in ("POINT", "MULTIPOINT")
-                             else 3 if g in ("LINESTRING", "MULTILINESTRING")
-                             else 0
-                             for g in gl),
-                            dtype=np.int8,
-                            count=n,
-                        )
-
-                    codes = _ragged_preclassify(
-                        fs, ft, kinds(ga_l), kinds(gb_l), n
-                    )
-            if codes is None:
-                if ga_l is None:
-                    ga_l, gb_l = sg_col.to_pylist(), tg_col.to_pylist()
-                leaves_xy = (
-                    fs is not None
-                    and bool(np.all(np.diff(fs[2]) == 2))
-                    and bool(np.all(np.diff(ft[2]) == 2))
+            fs = _checked_flat(batch, i_sg, i_sc, names)
+            ft = _checked_flat(batch, i_tg, i_tc, names)
+            if use_lib:
+                res = relate_batch(
+                    sg_col.to_pylist(), batch.column(i_sc).to_pylist(),
+                    tg_col.to_pylist(), batch.column(i_tc).to_pylist(),
                 )
-                if use_lib or not clean or not leaves_xy:
-                    # The not-leaves_xy arm matters: _ragged_preclassify
-                    # returned None because coords leaves are NOT [x,y]
-                    # pairs, so _row_parts' reshape(-1, 2) would garble
-                    # (or raise on odd length) exactly those rows.
-                    ca_l, cb_l = sc_col.to_pylist(), tc_col.to_pylist()
-                    fs = ft = None
-                else:
-                    ca_l = [_row_parts(fs, i) for i in range(n)]
-                    cb_l = [_row_parts(ft, i) for i in range(n)]
-                if use_lib:
-                    res = relate_batch(ga_l, ca_l, gb_l, cb_l)
-                else:
-                    codes = preclassify_batch(ga_l, ca_l, gb_l, cb_l)
-            if codes is not None:
+            else:
+                codes = preclassify(sg_col, fs, tg_col, ft)
                 res = {r: CODE_FLAGS[r][codes] for r in RELATIONS}
                 und = np.nonzero(codes == UNDECIDED)[0]
-                if len(und) and ga_l is None:
-                    ga_l, gb_l = sg_col.to_pylist(), tg_col.to_pylist()
-                for i in und:
-                    pa_i = _row_parts(fs, i) if fs is not None else ca_l[i]
-                    pb_i = _row_parts(ft, i) if ft is not None else cb_l[i]
-                    d = relate_pair(ga_l[i], pa_i, gb_l[i], pb_i)
+                ga_u = sg_col.take(und).to_pylist()
+                gb_u = tg_col.take(und).to_pylist()
+                for i, ga, gb in zip(und, ga_u, gb_u):
+                    d = relate_pair(ga, _row_parts(fs, i), gb, _row_parts(ft, i))
                     for r in RELATIONS:
                         res[r][i] = d[r]
             yield pa.RecordBatch.from_arrays(

@@ -12,10 +12,10 @@ from ds_jedai_spark.operators.relate_convex import (
     with_convex_code,
     with_relations_convex_fast,
 )
-from ds_jedai_spark.operators.relate_fast import UNDECIDED, preclassify_batch
+from ds_jedai_spark.operators.relate_fast import UNDECIDED
 from ds_jedai_spark.operators.relate_general import relate_pair
 
-from tests.test_relate_fast import _convex_poly
+from tests.test_relate_fast import _codes, _convex_poly
 
 
 def _mixed_pairs(n, seed, contact_frac=0.25):
@@ -70,12 +70,14 @@ def test_sql_codes_match_numpy_preclassifier(spark):
         .select("s_coords", "t_coords", "fast_code")
         .collect()
     )
+    n = len(got)
+    codes = _codes(
+        ["POLYGON"] * n, [r["s_coords"] for r in got],
+        ["POLYGON"] * n, [r["t_coords"] for r in got],
+    )
     n_decided = 0
-    for r in got:
-        codes = preclassify_batch(
-            ["POLYGON"], [r["s_coords"]], ["POLYGON"], [r["t_coords"]]
-        )
-        assert int(r["fast_code"]) == int(codes[0])
+    for r, code in zip(got, codes):
+        assert int(r["fast_code"]) == int(code)
         n_decided += int(r["fast_code"]) != UNDECIDED
     assert n_decided > len(got) // 2  # the fast path must actually decide
 
@@ -130,9 +132,7 @@ def test_sql_star_ring_is_undecided(spark):
         got = int(df.first()["fast_code"])
         closed = [[list(p) for p in ring + [ring[0]]]]
         tri_c = [[list(p) for p in tri + [tri[0]]]]
-        assert got == int(
-            preclassify_batch(["POLYGON"], [closed], ["POLYGON"], [tri_c])[0]
-        )
+        assert got == int(_codes(["POLYGON"], [closed], ["POLYGON"], [tri_c])[0])
         return got
 
     assert code(star) == UNDECIDED

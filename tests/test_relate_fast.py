@@ -6,14 +6,30 @@ and every boundary-contact configuration must come back UNDECIDED-or-right
 import random
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from ds_jedai_spark.operators.relate_fast import (
+    A_IN_B,
+    B_IN_A,
     CODE_DICTS,
+    DISJOINT,
+    OVERLAP,
     UNDECIDED,
-    preclassify_batch,
+    preclassify,
 )
-from ds_jedai_spark.operators.relate_general import relate_pair
+from ds_jedai_spark.operators.relate_general import _flatten3, relate_pair
+
+_COORDS = pa.list_(pa.list_(pa.list_(pa.float64())))
+
+
+def _codes(ga, ca, gb, cb):
+    """Codes of relate_fast.preclassify on Arrow columns built from
+    per-row (gtype, parts) lists: the verifier's real entry."""
+    return preclassify(
+        pa.array(ga, pa.string()), _flatten3(pa.array(ca, _COORDS)),
+        pa.array(gb, pa.string()), _flatten3(pa.array(cb, _COORDS)),
+    )
 
 
 def _cross(o, a, b):
@@ -56,7 +72,7 @@ def _hull(pts):
 
 def _check_agreement(ca, cb):
     n = len(ca)
-    codes = preclassify_batch(["POLYGON"] * n, ca, ["POLYGON"] * n, cb)
+    codes = _codes(["POLYGON"] * n, ca, ["POLYGON"] * n, cb)
     decided = 0
     for i in range(n):
         if codes[i] == UNDECIDED:
@@ -105,42 +121,94 @@ def test_random_convex_pairs_agree_with_exact_path():
     ],
 )
 def test_contact_cases_fall_back(a, b):
-    codes = preclassify_batch(["POLYGON"], [a], ["POLYGON"], [b])
+    codes = _codes(["POLYGON"], [a], ["POLYGON"], [b])
     assert codes[0] == UNDECIDED
+
+
+def test_box_batch_is_decided_without_contact():
+    """A homogeneous batch of closed rectangles on the 1/16 lattice (the
+    progressive workload's shape), with edge-sharing and corner-touching
+    neighbours and both ring orientations: every pair without boundary
+    contact is decided, and every decided row equals relate_pair."""
+    rng = np.random.default_rng(17)
+
+    def box(x0, y0, x1, y1):
+        ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1]]
+        if rng.random() < 0.5:
+            ring = ring[::-1]
+        ring = [[x / 16, y / 16] for x, y in ring]
+        return [ring + [ring[0]]]
+
+    env_a, env_b = [], []
+    for i in range(1200):
+        x0, y0 = (int(v) for v in rng.integers(-400, 400, 2))
+        x1, y1 = x0 + int(rng.integers(1, 40)), y0 + int(rng.integers(1, 40))
+        if i % 4 == 0:    # edge-sharing neighbour, right or above
+            w, h = (int(v) for v in rng.integers(1, 40, 2))
+            nb = (x1, y0, x1 + w, y1) if i % 8 == 0 else (x0, y1, x1, y1 + h)
+        elif i % 4 == 1:  # corner-touching neighbour
+            nb = (x1, y1, x1 + int(rng.integers(1, 40)),
+                  y1 + int(rng.integers(1, 40)))
+        else:             # anything near: disjoint, nested, overlapping
+            bx, by = x0 + int(rng.integers(-40, 40)), y0 + int(rng.integers(-40, 40))
+            nb = (bx, by, bx + int(rng.integers(1, 60)), by + int(rng.integers(1, 60)))
+        env_a.append((x0, y0, x1, y1))
+        env_b.append(nb)
+    ea, eb = np.array(env_a), np.array(env_b)
+    ca = [box(*e) for e in env_a]
+    cb = [box(*e) for e in env_b]
+    n = len(ca)
+    codes = _codes(["POLYGON"] * n, ca, ["POLYGON"] * n, cb)
+    decided = _assert_decided_rows_exact(
+        ["POLYGON"] * n, ca, ["POLYGON"] * n, cb, codes
+    )
+    # boundary contact: the closed boxes meet and share an edge line
+    meet = np.all(ea[:, :2] <= eb[:, 2:], axis=1) & np.all(eb[:, :2] <= ea[:, 2:], axis=1)
+    shared = (
+        (ea[:, [0, 2]][:, :, None] == eb[:, [0, 2]][:, None, :]).any(axis=(1, 2))
+        | (ea[:, [1, 3]][:, :, None] == eb[:, [1, 3]][:, None, :]).any(axis=(1, 2))
+    )
+    contact = meet & shared
+    assert np.all(codes[~contact] != UNDECIDED)
+    # the neighbours touch, and touches has no code
+    touching = np.arange(n) % 4 < 2
+    assert contact[touching].all() and np.all(codes[touching] == UNDECIDED)
+    assert set(codes[decided].tolist()) == {DISJOINT, A_IN_B, B_IN_A, OVERLAP}
+    assert len(decided) > 0.4 * n
 
 
 def test_nonconvex_and_general_fall_back():
     # nonconvex quad -> slow path
     nc = [[[0, 0], [4, 0], [1, 1], [0, 4], [0, 0]]]
     tri = [[[10, 10], [12, 10], [11, 12], [10, 10]]]
-    assert preclassify_batch(["POLYGON"], [nc], ["POLYGON"], [tri])[0] == UNDECIDED
+    assert _codes(["POLYGON"], [nc], ["POLYGON"], [tri])[0] == UNDECIDED
     # polygon with hole -> slow path
     holed = [
         [[0, 0], [10, 0], [10, 10], [0, 10], [0, 0]],
         [[4, 4], [6, 4], [6, 6], [4, 6], [4, 4]],
     ]
-    assert preclassify_batch(["POLYGON"], [holed], ["POLYGON"], [tri])[0] == UNDECIDED
+    assert _codes(["POLYGON"], [holed], ["POLYGON"], [tri])[0] == UNDECIDED
     # non-dyadic-on-the-512-lattice coordinates -> slow path
     off = [[[0.001, 0], [2, 0], [1, 2], [0.001, 0]]]
-    assert preclassify_batch(["POLYGON"], [off], ["POLYGON"], [tri])[0] == UNDECIDED
+    assert _codes(["POLYGON"], [off], ["POLYGON"], [tri])[0] == UNDECIDED
 
 
 @pytest.mark.parametrize("clockwise", [False, True])
 def test_star_rings_fall_back(clockwise):
     """A pentagram turns the same way at every vertex but winds twice:
     its centre is exterior under the even-odd rule, so no convex claim
-    may be made about it, on any layout."""
+    may be made about it, against a polygon, a point or a line."""
     star = [[0.0, 16.0], [-9.0, -13.0], [15.0, 5.0], [-15.0, 5.0],
             [9.0, -13.0], [0.0, 16.0]]
     if clockwise:
         star = star[::-1]
     tri = [[-1.0, -1.0], [1.0, -1.0], [0.0, 1.0], [-1.0, -1.0]]
     assert relate_pair("POLYGON", [star], "POLYGON", [tri])["disjoint"]
-    assert preclassify_batch(["POLYGON"], [[star]], ["POLYGON"], [[tri]])[0] == UNDECIDED
-    assert preclassify_batch(
+    assert _codes(["POLYGON"], [[star]], ["POLYGON"], [[tri]])[0] == UNDECIDED
+    assert _codes(
         ["POLYGON"] * 2, [[star], [tri]], ["POLYGON"] * 2, [[tri], [star]]
     ).tolist() == [UNDECIDED, UNDECIDED]
-    codes = _ragged_codes(
+    codes = _codes(
         ["POLYGON", "POINT", "LINESTRING"],
         [[star], [[[0.0, 0.0]]], [[[0.0, 0.0], [30.0, 0.0]]]],
         ["POLYGON", "POLYGON", "POLYGON"],
@@ -155,7 +223,7 @@ def test_clean_cases_decide():
     inner = [[[0.75, 0.25], [1.25, 0.25], [1.0, 0.75], [0.75, 0.25]]]
     outer = [[[-10.0, -10.0], [20.0, -10.0], [1.0, 20.0], [-10.0, -10.0]]]
     overlap = [[[1.0, -1.0], [3.0, -1.0], [1.0, 1.5], [1.0, -1.0]]]
-    codes = preclassify_batch(
+    codes = _codes(
         ["POLYGON"] * 4,
         [tri_a, tri_a, tri_a, tri_a],
         ["POLYGON"] * 4,
@@ -166,16 +234,6 @@ def test_clean_cases_decide():
         exact = relate_pair("POLYGON", tri_a, "POLYGON", b)
         fast = CODE_DICTS[int(code)]
         assert fast == {k: exact[k] for k in fast}
-
-
-def test_numpy_object_input_shape():
-    # mapInPandas hands coords as numpy object arrays of ndarrays
-    tri = np.array([np.array([[0.0, 0.0], [2.0, 0.0], [1.0, 2.0], [0.0, 0.0]])],
-                   dtype=object)
-    far = np.array([np.array([[50.0, 50.0], [52.0, 50.0], [51.0, 52.0],
-                              [50.0, 50.0]])], dtype=object)
-    codes = preclassify_batch(["POLYGON"], [tri], ["POLYGON"], [far])
-    assert codes[0] == 1
 
 
 def test_points_vs_poly_preclassifier_agrees_with_exact_path():
@@ -322,31 +380,7 @@ def test_pts_line_and_line_line_classifiers_agree_with_exact_path():
     assert decided > 500
 
 
-# --- exact-arity ragged path (the Arrow verifier's bucketed kernels) ---
-
-_KINDS = {"POLYGON": 1, "POINT": 2, "MULTIPOINT": 2, "LINESTRING": 3,
-          "MULTILINESTRING": 3}
-
-
-def _ragged_codes(ga, ca, gb, cb):
-    """Codes of relate_general._ragged_preclassify on Arrow columns built
-    from per-row (gtype, parts) lists: the verifier's real entry."""
-    import pyarrow as pa
-
-    from ds_jedai_spark.operators.relate_general import (
-        _flatten3,
-        _ragged_preclassify,
-    )
-
-    typ = pa.list_(pa.list_(pa.list_(pa.float64())))
-
-    def kinds(gl):
-        return np.array([_KINDS.get(g, 0) for g in gl], dtype=np.int8)
-
-    return _ragged_preclassify(
-        _flatten3(pa.array(ca, typ)), _flatten3(pa.array(cb, typ)),
-        kinds(ga), kinds(gb), len(ga),
-    )
+# --- mixed kinds and large rings through the bucketed kernels ---
 
 
 def _assert_decided_rows_exact(ga, ca, gb, cb, codes):
@@ -419,7 +453,7 @@ def test_large_convex_polygons_agree_with_exact_path():
         rows.append(pair if big_is_a[-1] else pair[::-1])
     ga, ca = zip(*(a for a, _ in rows))
     gb, cb = zip(*(b for _, b in rows))
-    codes = _ragged_codes(ga, ca, gb, cb)
+    codes = _codes(ga, ca, gb, cb)
     decided = _assert_decided_rows_exact(ga, ca, gb, cb, codes)
     assert len(decided) > 0.8 * len(ga)
     other_kind = np.array(other_kind)
@@ -477,14 +511,14 @@ def test_mixed_batch_is_decided_by_the_dense_kernels():
     is exact."""
     ga, ca, gb, cb = _mixed_candidates(7)
     assert len(ga) > 1000
-    codes = _ragged_codes(ga, ca, gb, cb)
+    codes = _codes(ga, ca, gb, cb)
     decided = _assert_decided_rows_exact(ga, ca, gb, cb, codes)
     assert len(decided) >= 0.95 * len(ga)
 
 
 def test_row_chunks_give_identical_codes(monkeypatch):
     """A tiny element budget splits every bucket into many row chunks;
-    the codes must not change, on the ragged path and on one
+    the codes must not change, on a mixed batch and on one
     homogeneous 20-gon x 12-gon batch."""
     from ds_jedai_spark.operators import relate_fast
 
@@ -496,9 +530,9 @@ def test_row_chunks_give_identical_codes(monkeypatch):
         ra.append(_lattice_convex(rng, 20, 20, 60, 120, c)[0])
         rb.append(_lattice_convex(rng, 12, 12, 20, 80, c + rng.integers(-90, 91, 2))[0])
     ra, rb = np.array(ra), np.array(rb)
-    whole = _ragged_codes(ga, ca, gb, cb)
+    whole = _codes(ga, ca, gb, cb)
     whole_dense = relate_fast.preclassify_dense(ra, rb)
     monkeypatch.setattr(relate_fast, "CHUNK_ELEMS", 13 * 21 * 7)
-    np.testing.assert_array_equal(_ragged_codes(ga, ca, gb, cb), whole)
+    np.testing.assert_array_equal(_codes(ga, ca, gb, cb), whole)
     np.testing.assert_array_equal(relate_fast.preclassify_dense(ra, rb), whole_dense)
     assert (whole_dense != UNDECIDED).sum() > 100

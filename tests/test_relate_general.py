@@ -255,3 +255,27 @@ def test_point_on_cancelled_seam_is_interior():
     mixed = relate_pair("MULTIPOLYGON", two, "MULTIPOINT",
                         [[(1.0, 0.5)], [(5.0, 5.0)]])
     assert mixed["intersects"] and mixed["crosses"] and not mixed["touches"]
+
+
+def test_malformed_batches_raise_value_error(spark):
+    """The verifier reads coords leaves as [x, y] pairs. XYZ leaves (here
+    two points equal in x, y but not z) and a null gtype fail the batch
+    with a ValueError naming the column, not a silent 2-D answer or an
+    AssertionError from the dispatch."""
+    import pytest
+
+    schema = (
+        "s_gtype string, s_coords array<array<array<double>>>, "
+        "t_gtype string, t_coords array<array<array<double>>>"
+    )
+    xyz = spark.createDataFrame(
+        [("POINT", [[[1.0, 2.0, 5.0]]], "POINT", [[[1.0, 2.0, 7.0]]])], schema
+    )
+    null_gtype = spark.createDataFrame(
+        [("POINT", [[[1.0, 2.0]]], None, [[[1.0, 2.0]]])], schema
+    )
+    for df, column in ((xyz, "s_coords"), (null_gtype, "t_gtype")):
+        with pytest.raises(Exception) as err:
+            with_general_relations(df, spread=False).collect()
+        msg = str(err.value)
+        assert "ValueError" in msg and repr(column) in msg and "[x, y]" in msg
