@@ -21,7 +21,11 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ds_jedai_spark.config import JedaiConfig
 from ds_jedai_spark.io import readers, writers
-from ds_jedai_spark.model.tiles import compute_theta
+from ds_jedai_spark.model.tiles import (  # noqa: F401 (compute_theta: api surface)
+    compute_theta,
+    grid_blocks,
+    theta_and_extent,
+)
 from ds_jedai_spark.operators import progressive as prog
 from ds_jedai_spark.operators.relate import RELATIONS as REL_ORDER
 from ds_jedai_spark.operators.relate_general import with_general_relations
@@ -209,21 +213,14 @@ def _check_crs(source: DataFrame, target: DataFrame, strict: bool) -> None:
 
 
 def _total_blocks(df: DataFrame, theta: tuple[float, float]) -> int:
-    """Grid-cell count of the global extent under theta (reference
-    GridPartitioner.computeTotalBlocks, utils/readers/
-    GridPartitioner.scala:85-93)."""
-    tx, ty = theta
+    """Grid-cell count of df's extent under theta, from its own min/max
+    aggregate (``run`` takes the source extent from the theta aggregate
+    instead, ``tiles.theta_and_extent``)."""
     r = df.agg(
         F.min("minx").alias("a"), F.max("maxx").alias("b"),
         F.min("miny").alias("c"), F.max("maxy").alias("d"),
     ).first()
-    if r.a is None:  # empty input: no extent, one (vacuous) block
-        return 1
-    import math
-
-    nx = math.floor(r.b / tx) - math.floor(r.a / tx) + 1
-    ny = math.floor(r.d / ty) - math.floor(r.c / ty) + 1
-    return max(1, nx * ny)
+    return grid_blocks(None if r.a is None else (r.a, r.c, r.b, r.d), theta)
 
 
 # Above this budget, TakeOrderedAndProject's driver-side merge of `budget`
@@ -333,9 +330,10 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
     # granularity for targets spanning a real domain.
     from ds_jedai_spark.model.tiles import floor_theta
 
-    theta = floor_theta(
-        compute_theta(source, cfg.theta_granularity), target
+    source_theta, source_extent = theta_and_extent(
+        source, cfg.theta_granularity
     )
+    theta = floor_theta(source_theta, target)
     fine = ("fine_envs",) if decomposed else ()
     extras = ("gtype", "coords") + fine + (("ts",) if cfg.source.date_field else ())
     textras = ("gtype", "coords") + fine + (("ts",) if cfg.target.date_field else ())
@@ -366,38 +364,36 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
 
     if cfg.progressive_algorithm:
         wexpr = weight_exprs(
-            "s_", "t_", theta[0], theta[1], _total_blocks(source, theta)
+            "s_", "t_", theta[0], theta[1], grid_blocks(source_extent, theta)
         )
-        if cfg.progressive_algorithm in (
-            "DYNAMIC_PROGRESSIVE_GIANT", "EARLY_STOPPING"
-        ):
-            # These algorithms interleave verification with scheduling
-            # (the PQ reorders / the scan stops based on hits).
-            # Verification happens INSIDE the scan, lazily per dequeued
-            # pair, so the budget bounds the number of exact relate_pair
-            # calls (reference ProgressiveLinkerT.scala:47-63); the full
-            # relation flags are then computed only for the scheduled
-            # (budget-bounded) subset.
-            from ds_jedai_spark.operators.progressive_state import (
-                dynamic_progressive,
-                early_stopping,
-            )
+    if cfg.progressive_algorithm in (
+        "DYNAMIC_PROGRESSIVE_GIANT", "EARLY_STOPPING"
+    ):
+        # These algorithms interleave verification with scheduling (the
+        # PQ reorders / the scan stops based on hits), so the scan IS the
+        # verifier (reference ProgressiveLinkerT.scala:47-63): one Arrow
+        # scan per group pre-classifies its pairs once, calls relate_pair
+        # only for the undecided pairs it dequeues (so the budget bounds
+        # the exact calls) and emits the r_* flags of every pair it
+        # verified. Its output is `verified`: no semi-join back onto the
+        # candidates and no second verification pass.
+        from ds_jedai_spark.operators.progressive_state import (
+            dynamic_progressive,
+            early_stopping,
+        )
 
-            main = wexpr[_wf_key(cfg.main_wf)]
-            qrel = (
-                "intersects" if cfg.relation == "DE9IM"
-                else cfg.relation.lower()
+        main = wexpr[_wf_key(cfg.main_wf)]
+        qrel = "intersects" if cfg.relation == "DE9IM" else cfg.relation.lower()
+        if cfg.progressive_algorithm == "DYNAMIC_PROGRESSIVE_GIANT":
+            verified = dynamic_progressive(
+                cand, main, None, cfg.budget or 3000, relation=qrel
             )
-            if cfg.progressive_algorithm == "DYNAMIC_PROGRESSIVE_GIANT":
-                sched = dynamic_progressive(
-                    cand, main, None, cfg.budget or 3000, relation=qrel
-                )
-            else:
-                sched = early_stopping(cand, main, None, relation=qrel)
-            pair_keys = sched.select("s_id", "t_id")
         else:
-            pair_keys = _schedule(cand, cfg, wexpr, source, theta)
+            verified = early_stopping(cand, main, None, relation=qrel)
+    elif cfg.progressive_algorithm:
+        pair_keys = _schedule(cand, cfg, wexpr, source, theta)
         cand = cand.join(pair_keys, on=["s_id", "t_id"], how="left_semi")
+        verified = with_general_relations(cand)
     else:
         # Full-verification path: auto-engage the skew-split join when
         # per-pair verification is expensive (progressive paths are
@@ -409,8 +405,7 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
             cand, source, target,
             mode=str(cfg.extra.get("loadBalancer", "AUTO")),
         )
-
-    verified = with_general_relations(cand)
+        verified = with_general_relations(cand)
 
     if cfg.relation == "DE9IM":
         aggs = [

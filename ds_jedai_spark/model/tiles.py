@@ -22,6 +22,8 @@ projection or reuse a stored stats row instead.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
 MIN_THETA = 1e-9
@@ -46,20 +48,46 @@ def compute_theta(source: DataFrame, mode: str = "avg") -> tuple[float, float]:
     avg (recommended), min, max, avg2 (avg x 0.5) — floored at
     domain_extent/GRID_CAP (see the guard note above; one pass, the
     domain min/max ride in the same aggregate)."""
+    return theta_and_extent(source, mode)[0]
+
+
+def theta_and_extent(
+    source: DataFrame, mode: str = "avg"
+) -> tuple[tuple[float, float], tuple[float, float, float, float] | None]:
+    """``compute_theta``'s theta plus the source's (minx, miny, maxx,
+    maxy) extent, both from ONE aggregate; the extent is None on an empty
+    source. Callers that also need the grid-cell count (``grid_blocks``)
+    take both here instead of aggregating the source twice."""
     w, h = F.col("maxx") - F.col("minx"), F.col("maxy") - F.col("miny")
     agg = {"avg": F.avg, "avg2": F.avg, "min": F.min, "max": F.max}[mode]
     row = source.agg(
         agg(w).alias("tx"), agg(h).alias("ty"),
-        (F.max("maxx") - F.min("minx")).alias("dw"),
-        (F.max("maxy") - F.min("miny")).alias("dh"),
+        F.min("minx").alias("x0"), F.min("miny").alias("y0"),
+        F.max("maxx").alias("x1"), F.max("maxy").alias("y1"),
     ).collect()[0]
+    extent = None if row["x0"] is None else (
+        row["x0"], row["y0"], row["x1"], row["y1"])
+    dw, dh = (0.0, 0.0) if extent is None else (
+        extent[2] - extent[0], extent[3] - extent[1])
     scale = 0.5 if mode == "avg2" else 1.0
-    return (
-        max((row["tx"] or MIN_THETA) * scale, (row["dw"] or 0.0) / GRID_CAP,
-            MIN_THETA),
-        max((row["ty"] or MIN_THETA) * scale, (row["dh"] or 0.0) / GRID_CAP,
-            MIN_THETA),
+    theta = (
+        max((row["tx"] or MIN_THETA) * scale, dw / GRID_CAP, MIN_THETA),
+        max((row["ty"] or MIN_THETA) * scale, dh / GRID_CAP, MIN_THETA),
     )
+    return theta, extent
+
+
+def grid_blocks(extent, theta: tuple[float, float]) -> int:
+    """Grid-cell count of an extent (``theta_and_extent``) under theta
+    (reference GridPartitioner.computeTotalBlocks, utils/readers/
+    GridPartitioner.scala:85-93); an empty input (extent None) has one
+    vacuous block."""
+    if extent is None:
+        return 1
+    (x0, y0, x1, y1), (tx, ty) = extent, theta
+    nx = math.floor(x1 / tx) - math.floor(x0 / tx) + 1
+    ny = math.floor(y1 / ty) - math.floor(y0 / ty) + 1
+    return max(1, nx * ny)
 
 
 def floor_theta(theta: tuple[float, float], other: DataFrame) -> tuple[float, float]:

@@ -542,12 +542,14 @@ def with_general_relations(
     magnitude; pass spread=False only when the input is already
     well-partitioned (e.g. straight after a shuffling equi-join).
 
-    Caller audit (round 4): every production call site — the five
-    tile-join composites in plans/giant.py and the progressive path in
-    api.py — was plan-checked at gate scale; all feed from
-    BroadcastHashJoin (tile join, and the budget semi-join also
-    broadcasts), which preserves the scan's single input partition, so
-    each one needs the spread. No caller's input comes out of an
+    Caller audit: every production call site — the five tile-join
+    composites in plans/giant.py, api.run's full-verification path and
+    its top-budget progressive paths — feeds from BroadcastHashJoin (the
+    tile join, and on the top-budget paths the budget semi-join, which
+    also broadcasts), which preserves the scan's single input partition,
+    so each one needs the spread. DYNAMIC_PROGRESSIVE_GIANT and
+    EARLY_STOPPING do not call it: their Arrow scan verifies in place
+    (operators/progressive_state.py). No caller's input comes out of an
     exchange today. Do NOT gate this on a static
     ``rdd.getNumPartitions()`` probe: under AQE the static count can
     read spark.sql.shuffle.partitions while the runtime-coalesced

@@ -5,7 +5,7 @@ relationally-expressible forms: PROGRESSIVE_GIANT, TOPK, RECIPROCAL_TOPK,
 RANDOM, plus the PGR evaluation metric and the supporting aggregate
 queries (theta stats, per-target skew cost). The stateful variants
 (DYNAMIC_PROGRESSIVE_GIANT, EARLY_STOPPING) live in
-operators/progressive_state.py (applyInPandas; rows-only checks).
+operators/progressive_state.py (applyInArrow; rows-only checks).
 
 All weight queries pin theta to exact literals (1.0) and the contingency
 universe to a constant so Spark and DuckDB evaluate identical IEEE
@@ -493,7 +493,7 @@ def dynamic_progressive_js_oracle() -> str:
     group per recursion level): among pending pairs pick the (eff DESC,
     s_id, t_id) minimum-rank pair, then boost every pending pair sharing an
     endpoint with a qualifying choice to ``w0 * (1 + relatedMatches)`` —
-    byte-identical to operators/progressive_state._dynamic_scan (reference
+    byte-identical to operators/progressive_state._dynamic_order (reference
     DynamicProgressiveGIAnt.scala:25-88)."""
     from ds_jedai_spark.operators.relate import relation_predicates
 

@@ -253,3 +253,39 @@ def test_wkb_scan_prunes_to_id_and_geometry(spark):
     df = read_parquet_dataset(spark, WKB_FIXTURE)
     plan = plan_of(df)
     assert "ReadSchema: struct<id:bigint,geometry:binary>" in plan
+
+
+@pytest.mark.parametrize("alg", ["DYNAMIC_PROGRESSIVE_GIANT", "EARLY_STOPPING"])
+def test_stateful_progressive_plan_verifies_inside_one_scan(spark, tmp_path, alg):
+    """api.run's stateful progressive jobs verify inside their Arrow scan:
+    exactly one FlatMapGroupsInArrow, no semi-join of the schedule back
+    onto the candidates and no second (MapInArrow) verification pass."""
+    import re
+
+    from ds_jedai_spark import api
+    from ds_jedai_spark.config import parse_config
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    # Row-format parquet loads without a parse pass, so every Arrow node
+    # left in the plan belongs to the progressive job itself.
+    side = {}
+    for name, (x0, y0, x1, y1) in (("s", (0.0, 0.0, 4.0, 4.0)),
+                                   ("t", (1.0, 1.0, 2.0, 2.0))):
+        path = str(tmp_path / f"{name}.parquet")
+        ring = [[x0, y0], [x1, y0], [x1, y1], [x0, y1], [x0, y0]]
+        pq.write_table(pa.table({
+            "id": pa.array([1], pa.int64()), "gtype": ["POLYGON"],
+            "coords": [[ring]], "minx": [x0], "miny": [y0],
+            "maxx": [x1], "maxy": [y1],
+        }), path)
+        side[name] = {"path": path, "realIdField": "id"}
+    cfg = parse_config({
+        "source": side["s"], "target": side["t"], "relation": "DE9IM",
+        "configurations": {"progressiveAlgorithm": alg, "budget": 10},
+    })
+    plan = plan_of(api.run(spark, cfg))
+    assert "LeftSemi" not in plan
+    assert "MapInArrow" not in plan
+    assert len(re.findall(r"\bFlatMapGroupsInArrow\b", plan)) == 1
