@@ -1,23 +1,35 @@
 """Command-line entry point mirroring the reference's spark-submit UX.
 
-    python -m ds_jedai_spark.cli -conf conf.yaml [-export PATH]
+    python -m ds_jedai_spark.cli -conf conf.yaml [-export PATH] [-budget N]
     python -m ds_jedai_spark.cli -pipeline <query|list> [-data DIR] [-limit N]
-    python -m ds_jedai_spark.cli -op asof|interval|chunk -left L.parquet \
-        [-right R.parquet] [-key k1,k2] [-direction nearest] \
-        [-tolerance-us N] [-bucket-us auto|none|N] [-out OUT.parquet] ...
-    python -m ds_jedai_spark.cli -op relate -left s.tsv -right t.tsv \
-        [-relation DE9IM|intersects|...] [-id-col id] [-geom-col wkt]
+    python -m ds_jedai_spark.cli -op OP -left L [-right R] [op flags] \
+        [-out OUT.parquet] [-limit N]
 
 The first form prints the same summary the reference logs (reference:
 experiments/GiantExp.scala:104-127 — verifications, qualifying pairs, the
 9 relation counts, total time). The second runs any named engine query
 (the driver-gate surface: spatial, progressive, dedup/ANN/text/media,
-streaming) against a testdata directory. The third runs the temporal /
-pipeline OPERATORS on arbitrary user parquet with user-chosen keys,
-directions, tolerances, thresholds and chunk sizes — as-of enrichment,
-interval joins, RAG chunking, MinHash near-dup dedup (self or
-batch-vs-corpus incremental) and embedding near-dup (corpus-scaled LSH
-parameters) from the shell, writing parquet with -out.
+streaming) against a testdata directory. The third runs one operator of
+the ``OPS`` table on the user's own data and prints its first rows, or
+writes them as parquet with -out:
+
+- spatial ops read any supported geometry dataset through
+  ``api.read_dataset`` (WKT tsv/csv, GeoJSON, N-Triples, Shapefile,
+  GeoPackage, FlatGeobuf, GeoParquet/WKB, engine parquet), take the id
+  column ``id`` and honour -bbox: relate, convert, perturb, reproject,
+  measures, density, dbscan, geohash, hull, knn, distance, zorder, zonal;
+- the rest read user parquet with id column ``doc_id``: as-of and
+  interval joins (asof, interval), text (chunk, shuffle, dupspans,
+  scrub), near-dup dedup (dedup, dedup-build, dedup-apply, editdist,
+  emb-dedup), ANN (ann, ann-build, quantize), entity resolution (er) and
+  table statistics (quantiles, validate, profile).
+
+The flagship without a YAML: `-op relate` runs the full tile join +
+exact DE-9IM verification (api.run — theta sampling, ref-point dedup,
+the auto skew dispatcher) on two datasets; its flags build the document
+a YAML would give and go through ``config.parse_config``. `-relation
+DE9IM` prints the GiantExp counts row, a single predicate prints the
+qualifying (s_id, t_id) pairs.
 
 Build-once / query-many: `-op ann-build -index P` persists the full
 auto-sized ANN index (IVF centroids+cells, PQ codebooks+codes, stamped
@@ -25,16 +37,7 @@ LSH bands) as tables; `-op ann -method brute|ivf|pq [-nprobe N]
 [-index P]` searches it without retraining. `-op dedup-build -index T`
 persists the bucketed shingle index; `-op dedup|dedup-apply -index T` /
 `-op emb-dedup -index P` run the incremental / end-to-end dedup paths
-against the standing artifacts. `-op dedup-apply` writes the
-DEDUPLICATED corpus itself (pairs -> connected components -> one
-survivor per cluster); `-op quantize` emits exact int8 quantization
-stats per vector.
-
-The flagship without a YAML: `-op relate` runs the full tile join +
-exact DE-9IM verification (api.run — theta sampling, ref-point dedup,
-the auto skew dispatcher) on two arbitrary WKT/parquet datasets;
-`-relation DE9IM` prints the GiantExp counts row, a single predicate
-prints the qualifying (s_id, t_id) pairs.
+against the standing artifacts.
 """
 
 from __future__ import annotations
@@ -43,6 +46,14 @@ import argparse
 import os
 import sys
 import time
+from dataclasses import dataclass
+from typing import Callable
+
+from ds_jedai_spark.config import ConfigError
+
+
+class _Usage(Exception):
+    """A flag value an op cannot run with: printed, exit status 2."""
 
 
 def _run_pipeline(name: str, data_dir: str, limit: int) -> int:
@@ -62,29 +73,18 @@ def _run_pipeline(name: str, data_dir: str, limit: int) -> int:
 
     spark = get_spark("ds_jedai_spark_cli")
     t0 = time.perf_counter()
-    df = gate.QUERIES[name](spark, data_dir)
-    # take/count instead of collect: a pair query at scale would ship
-    # millions of rows to the driver just to print `limit` of them.
-    rows = df.take(limit + 1)
-    total = len(rows) if len(rows) <= limit else df.count()
-    dt = time.perf_counter() - t0
-    print("\t".join(df.columns))
-    for row in rows[:limit]:
-        print("\t".join(str(v) for v in row))
-    if total > limit:
-        print(f"... ({total} rows total)")
-    print(f"TOTAL TIME: {dt:.2f}s")
+    _print_or_write(gate.QUERIES[name](spark, data_dir), None, limit)
+    print(f"TOTAL TIME: {time.perf_counter() - t0:.2f}s")
     spark.stop()
     return 0
 
 
-def _print_or_write(df, out: str | None, limit: int, t0: float) -> int:
+def _print_or_write(df, out: str | None, limit: int) -> None:
     if out:
-        df.write.mode("overwrite").parquet(out)
-        n = df.sparkSession.read.parquet(out).count()
-        print(f"wrote {n} rows to {out}")
-        print(f"TOTAL TIME: {time.perf_counter() - t0:.2f}s")
-        return 0
+        _write_parquet(df, out)
+        return
+    # take/count instead of collect: a pair query at scale would ship
+    # millions of rows to the driver just to print `limit` of them.
     rows = df.take(limit + 1)
     total = len(rows) if len(rows) <= limit else df.count()
     print("\t".join(df.columns))
@@ -92,8 +92,17 @@ def _print_or_write(df, out: str | None, limit: int, t0: float) -> int:
         print("\t".join(str(v) for v in row))
     if total > limit:
         print(f"... ({total} rows total)")
-    print(f"TOTAL TIME: {time.perf_counter() - t0:.2f}s")
-    return 0
+
+
+def _report(back, out: str, msg: str) -> None:
+    """Print ``msg`` with {n} = the rows of ``back`` (what an op wrote,
+    read back from disk) and {out} = the path it wrote."""
+    print(msg.format(n=back.count(), out=out))
+
+
+def _write_parquet(df, out: str, msg: str = "wrote {n} rows to {out}") -> None:
+    df.write.mode("overwrite").parquet(out)
+    _report(df.sparkSession.read.parquet(out), out, msg)
 
 
 def _guard_rename(df, src: str, dst: str):
@@ -141,19 +150,61 @@ def _ann_query_pred(corpus, n: int):
     return F.col("vec_id").isin(ids)
 
 
-def _docs_frame(df, args):
-    """Normalize a user document frame to (doc_id, text)."""
+def _read(spark, path: str, ts_cols: tuple[str, ...] = ()):
+    """Read user parquet for the non-spatial ops."""
+    # Mirror io.synthetic.register_views' TIMESTAMP(NANOS) handling:
+    # nanosAsLong is harmless for normal files; a named timestamp
+    # column that comes back as long is restored ONLY when the
+    # parquet footer really says timestamp[ns] — a plain BIGINT
+    # column (epoch micros/millis, a common layout) must not be
+    # silently divided by 1000, so it errors with guidance instead.
+    from pyspark.sql import functions as F, types as T
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.parquet(path)
+    long_ts = [
+        c for c in ts_cols
+        if c in df.columns and isinstance(df.schema[c].dataType, T.LongType)
+    ]
+    if long_ts:
+        import glob
+
+        import pyarrow.parquet as pq
+
+        f = path
+        if os.path.isdir(path):
+            parts = sorted(glob.glob(os.path.join(path, "*.parquet")))
+            f = parts[0] if parts else path
+        arrow = pq.read_schema(f)
+        for c in long_ts:
+            t = arrow.field(c).type if c in arrow.names else None
+            if str(t) == "timestamp[ns]":
+                df = df.withColumn(
+                    c, F.timestamp_micros(F.expr(f"{c} div 1000"))
+                )
+            else:
+                raise SystemExit(
+                    f"column {c!r} in {path} is {t} (plain integer?) — "
+                    "cast it to a parquet timestamp, or add a derived "
+                    "timestamp column; refusing to guess the epoch unit"
+                )
+    return df
+
+
+def _docs(spark, args, path: str):
+    """User parquet normalized to (doc_id, text) per -id-col/-text-col."""
     from pyspark.sql import functions as F
 
-    df = _guard_rename(df, args.id_col, "doc_id")
+    df = _guard_rename(_read(spark, path), args.id_col, "doc_id")
     df = _guard_rename(df, args.text_col, "text")
     return df.select("doc_id", F.col("text").cast("string"))
 
 
-def _emb_frame(df, args):
-    """Normalize a user embedding frame to (vec_id, label, embedding)."""
+def _vectors(spark, args, path: str):
+    """User parquet normalized to (vec_id, label, embedding)."""
     from pyspark.sql import functions as F
 
+    df = _read(spark, path)
     if "vec_id" not in df.columns:
         # -id-col names the id column (its default "doc_id" applies to
         # document frames; embeddings accept it or any explicit name)
@@ -169,1051 +220,772 @@ def _emb_frame(df, args):
     return df.select("vec_id", "label", "embedding")
 
 
-def _run_op(args) -> int:
-    """User-parquet temporal/pipeline operators: asof | interval | chunk.
+def _dataset(spark, args, path: str, dated: bool = True):
+    """Any supported spatial dataset, read with -id-col/-geom-col/-bbox
+    (and -date-col unless ``dated`` is False)."""
+    from ds_jedai_spark import api
+    from ds_jedai_spark.config import DatasetSpec
 
-    The -pipeline surface runs the NAMED gate queries on testdata; this
-    runs the operators themselves on arbitrary parquet with user-chosen
-    keys/directions/tolerances — the shell surface for as-of
-    enrichment, interval joins, and RAG chunking."""
+    return api.read_dataset(spark, DatasetSpec(
+        path=path, id_field=args.id_col, geom_field=args.geom_col,
+        date_field=args.date_col if dated else None,
+    ), bbox=args.bbox)
+
+
+def _gtype_meta(src) -> dict:
+    """The CRS metadata readers carry on the gtype column."""
+    return (src.schema["gtype"].metadata
+            if "gtype" in src.columns else None) or {}
+
+
+def _crs_id(src) -> tuple[str, int] | None:
+    """('ORG', code) from an 'ORG:code' CRS, the form the GeoPackage and
+    FlatGeobuf sinks write."""
+    org, _, code = (_gtype_meta(src).get("crs") or "").partition(":")
+    return (org, int(code)) if code.isdigit() else None
+
+
+def _op_relate(spark, args):
+    # Flagship convenience: tile join + exact relate on arbitrary user
+    # WKT (tsv/csv/geojson/nt/shapefile) or engine parquet, no YAML —
+    # `-op relate -left s.tsv -right t.tsv -relation intersects`. The
+    # flags fill the document a YAML would give, so parse_config is the
+    # one validation path, as the reference's ConfigurationParser reads
+    # flags and YAML alike (ConfigurationParser.scala:107-160).
+    from ds_jedai_spark import api
+    from ds_jedai_spark.config import parse_config
+
+    def given(**kw):
+        return {k: v for k, v in kw.items() if v is not None}
+
+    def side(path):
+        return given(path=path, realIdField=args.id_col,
+                     geometryField=args.geom_col, dateField=args.date_col)
+
+    return api.run(spark, parse_config({
+        "source": side(args.left),
+        "target": side(args.right),
+        "relation": args.relation,
+        "configurations": given(
+            progressiveAlgorithm=args.algorithm,
+            budget=args.budget,
+            mainWF=args.main_wf,
+            gridType=args.grid_type,
+            partitions=args.partitions,
+            entityType=args.entity_type,
+            # -export works like the -conf form: RDF flags for DE9IM,
+            # CSV pairs for a single predicate
+            exportPath=args.export,
+            bbox=args.bbox,
+            autoReproject=args.auto_reproject or None,
+        ),
+    }))
+
+
+_CONVERT_TO = ("rowparquet", "geoparquet", "geojson", "shapefile",
+               "geopackage", "flatgeobuf")
+
+
+def _op_convert(spark, args):
+    # Format conversion through the full reader/writer surface: any
+    # supported geometry dataset -> the engine row format, written as
+    # row-format parquet (zero-parse re-reads), GeoParquet/WKB, NDJSON
+    # GeoJSON, Shapefile, GeoPackage or FlatGeobuf. The ingest-side
+    # converter a user runs ONCE so every later job takes the parquet
+    # fast path.
+    from ds_jedai_spark.io import writers
+
+    if args.to not in _CONVERT_TO:
+        raise _Usage(f"unknown -to {args.to!r}; choose from "
+                     f"{'/'.join(_CONVERT_TO)}")
+    src, out = _dataset(spark, args, args.left), args.out
+    if args.to == "rowparquet":
+        src.write.mode("overwrite").parquet(out)
+        back = spark.read.parquet(out)
+    elif args.to == "geoparquet":
+        # Propagate the input's CRS (GeoParquet footer PROJJSON the
+        # reader carried as gtype column metadata) into the output
+        # footer, so convert round-trips CRS declarations.
+        import json
+
+        projjson = _gtype_meta(src).get("crs_projjson")
+        writers.export_geoparquet(
+            src, out, crs=json.loads(projjson) if projjson else None)
+        back = spark.read.parquet(out)
+    elif args.to == "geopackage":
+        # -out ending in .gpkg: single-file interop sink (driver-side
+        # assembly — SQLite is single-writer per file); anything else: a
+        # DIRECTORY of per-partition .gpkg shards assembled by the
+        # executors in parallel (the scale path, mirroring the fgb
+        # dispatch). CRS from the input's metadata lands in
+        # gpkg_spatial_ref_sys either way.
+        from ds_jedai_spark.io.geopackage import (
+            export_geopackage,
+            export_geopackage_sharded,
+            read_geopackage,
+        )
+
+        sink = (export_geopackage if out.lower().endswith(".gpkg")
+                else export_geopackage_sharded)
+        sink(src, out, crs_id=_crs_id(src))
+        back = read_geopackage(spark, out)
+    elif args.to == "flatgeobuf":
+        # -out ending in .fgb: single-file interop sink (driver-side
+        # assembly); anything else: a DIRECTORY of per-partition .fgb
+        # shards written by the executors in parallel — the corpus
+        # layout the reader consumes as one DataFrame. Both
+        # Hilbert-sorted behind a packed R-tree; CRS from the input's
+        # metadata lands in each header's Crs table.
+        from ds_jedai_spark.io.flatgeobuf import (
+            export_flatgeobuf,
+            export_flatgeobuf_sharded,
+            read_flatgeobuf,
+        )
+
+        sink = (export_flatgeobuf if out.lower().endswith(".fgb")
+                else export_flatgeobuf_sharded)
+        sink(src, out, crs_id=_crs_id(src))
+        back = read_flatgeobuf(spark, out)
+    elif args.to == "shapefile":
+        # directory-of-shapefiles sink (one spec-conformant .shp/.shx/
+        # .dbf triple per partition x shape kind; known CRS becomes a
+        # .prj) — count via the reader
+        from ds_jedai_spark.io.shapefile import (
+            export_shapefile,
+            read_shapefile,
+        )
+
+        export_shapefile(src, out)
+        back = read_shapefile(spark, out)
+    else:
+        writers.export_geojson(src, out)
+        back = spark.read.text(out)
+    _report(back, out, f"wrote {{n}} entities to {{out}} ({args.to})")
+
+
+def _op_perturb(spark, args):
+    # the reference's GeometryTransformer experiment tool
+    # (experiments/GeometryTransformer.scala:66-91) as an engine op:
+    # read any supported dataset, perturb, write row-format parquet
+    # (deterministic: same -seed -> same output)
+    from ds_jedai_spark.io.synthetic import perturb_geometries
+
+    _write_parquet(
+        perturb_geometries(_dataset(spark, args, args.left),
+                           eps_steps=args.eps_steps, seed=args.seed),
+        args.out,
+        "wrote {n} perturbed entities to {out} "
+        f"(eps={args.eps_steps}/16, seed={args.seed})",
+    )
+
+
+def _op_reproject(spark, args):
+    # Closed-form CRS reprojection (EPSG:4326 <-> EPSG:3857): the
+    # in-engine remedy for the CRS-mismatch warning. Reads any supported
+    # dataset, rewrites coordinates JVM-side (operators/crs.py), writes
+    # row-format parquet carrying the new CRS in the gtype metadata.
+    from ds_jedai_spark.operators.crs import reproject
+
+    src = _dataset(spark, args, args.left)
+    src_crs = args.from_crs or _gtype_meta(src).get("crs")
+    _write_parquet(reproject(src, args.to_crs, from_crs=args.from_crs),
+                   args.out,
+                   f"wrote {{n}} entities to {{out}} "
+                   f"({src_crs} -> {args.to_crs})")
+
+
+def _op_measures(spark, args):
+    # Per-entity geometry measures (ST_NPoints/Length/Perimeter/Area/
+    # Centroid equivalents) — operators/measures.py; npoints/length/
+    # perimeter are pure JVM expressions, area/centroid ride the Arrow
+    # batch path.
+    from ds_jedai_spark.operators.measures import with_measures
+
+    cols = ["id", "gtype", "npoints", "length", "perimeter", "area",
+            "centroid_x", "centroid_y", "unit"]
+    if args.geodesic:
+        cols += ["length_m", "perimeter_m", "area_m2"]
+    return with_measures(_dataset(spark, args, args.left),
+                         geodesic=args.geodesic, seam=args.seam).select(*cols)
+
+
+def _op_density(spark, args):
+    # Grid-cell density (heatmap aggregation) — operators/spatial_agg:
+    # one pure-JVM groupBy on floor-snapped envelope centers.
+    from ds_jedai_spark.operators.spatial_agg import grid_density
+
+    return grid_density(
+        _dataset(spark, args, args.left), cell=args.cell,
+        weight_col=args.weight_col, coverage=args.coverage,
+    ).orderBy("cell_x", "cell_y")
+
+
+def _op_dbscan(spark, args):
+    # Density-based clustering — operators/clustering.dbscan (tile-join
+    # eps-graph + large-star/small-star contraction; deterministic
+    # labels). eps comes from -tau.
+    from ds_jedai_spark.operators.clustering import dbscan
+
+    return dbscan(_dataset(spark, args, args.left), eps=args.tau,
+                  min_pts=args.minpts, geodesic=args.geodesic,
+                  use_center=args.center).orderBy("id")
+
+
+def _op_geohash(spark, args):
+    # Geohash cell keys — operators/geohash: pure-JVM closed-form
+    # projection (no shuffle), keyed on the envelope center; -cover
+    # emits every overlapped cell instead.
+    from ds_jedai_spark.operators.geohash import geohash_cover, with_geohash
+
+    src = _dataset(spark, args, args.left)
+    if args.cover:
+        return geohash_cover(src, precision=args.precision).select(
+            "id", "geohash").orderBy("id", "geohash")
+    return with_geohash(src, precision=args.precision).select(
+        "id", "geohash").orderBy("id")
+
+
+def _op_hull(spark, args):
+    # Convex hull corners of a dataset's points/envelope corners —
+    # operators/hull.convex_hull (per-partition monotone chain, one-task
+    # final merge).
+    from ds_jedai_spark.operators.hull import convex_hull
+
+    return convex_hull(_dataset(spark, args, args.left), by=args.by)
+
+
+def _points(spark, args):
+    """-left and -right as point datasets, CRS-checked like -op relate.
+    The distance/kNN joins are point-to-point by contract
+    (expanded-MBR tile join / iterative radius expansion,
+    operators/spatial_join.py); non-point input errors with guidance."""
+    from ds_jedai_spark import api
+
+    def read(path):
+        df = _dataset(spark, args, path, dated=False)
+        if df.where("minx != maxx OR miny != maxy").limit(1).count():
+            raise SystemExit(
+                f"-op {args.op}: {path} contains non-point geometries; "
+                "the distance/kNN joins are point-to-point (reduce to "
+                "centroids upstream, or use -op relate for region "
+                "predicates)"
+            )
+        return df
+
+    s, t = read(args.left), read(args.right)
+    # same CRS-mismatch warning the relate path gives (api.run)
+    api._check_crs(s, t, strict=False)
+    return s, t
+
+
+def _op_distance(spark, args):
+    from ds_jedai_spark.operators import spatial_join as sj
+
+    s, t = _points(spark, args)
+    if args.geodesic:
+        # -tau in METERS over lon/lat input (great-circle)
+        return sj.geodesic_distance_join(s, t, radius_m=float(args.tau))
+    return sj.distance_join(s, t, radius=float(args.tau))
+
+
+def _op_knn(spark, args):
+    from pyspark.sql import functions as F
+
+    from ds_jedai_spark.operators import spatial_join as sj
+
+    s, t = _points(spark, args)
+    # Same-id exclusion is a self-join convention only: two independent
+    # datasets with overlapping id spaces keep same-id pairs (consistent
+    # with -op distance).
+    same = os.path.realpath(args.left) == os.path.realpath(args.right)
+    if args.geodesic:
+        # great-circle exact kNN over lon/lat points (meters;
+        # antimeridian-correct per round)
+        return sj.knn_join_exact_geodesic(
+            s, t, k=args.k, self_join=same).drop("dist_mm")
+    # exact kNN: the final round's radius must reach the whole domain,
+    # so derive it from the joint extent (one cheap 4-column aggregate)
+    env = ("minx", "miny", "maxx", "maxy")
+    r = (
+        s.select(*env).unionByName(t.select(*env))
+        .agg(F.min("minx").alias("a"), F.max("maxx").alias("b"),
+             F.min("miny").alias("c"), F.max("maxy").alias("d"))
+        .first()
+    )
+    diam = (max(r.b - r.a, r.d - r.c, 0.0) * 1.415 + 1.0
+            if r.a is not None else 1.0)  # empty input
+    return sj.knn_join_exact(s, t, k=args.k, rmax=max(256.0, diam),
+                             self_join=same)
+
+
+def _op_asof(spark, args):
+    from ds_jedai_spark.operators.temporal import asof_join
+
+    return asof_join(
+        _read(spark, args.left, (args.ts,)),
+        _read(spark, args.right, (args.ts,)),
+        key=args.key.split(","),
+        ts=args.ts,
+        right_attrs=tuple(a for a in (args.right_attrs or "").split(",") if a),
+        bucket_us=("auto" if args.bucket_us == "auto"
+                   else int(args.bucket_us) if args.bucket_us else None),
+        direction=args.direction,
+        tolerance_us=args.tolerance_us,
+        allow_exact_matches=not args.no_exact_matches,
+    )
+
+
+def _op_interval(spark, args):
+    from ds_jedai_spark.operators.temporal import interval_join
+
+    if args.bucket_us is None:
+        raise _Usage("needs a bucket width (-bucket-us N or the default "
+                     "'auto', which derives it from the p95 interval "
+                     "length); 'none' only applies to asof")
+    keys = [tuple(p.split("=", 1))
+            for p in (args.keys.split(",") if args.keys else [])]
+    ldf = _read(spark, args.left, (args.ts,))
+    rdf = _read(spark, args.right, (args.right_start, args.right_end))
+    # interval_join needs disjoint column names: prefix colliding right
+    # columns (r_<name>) and remap the right-side refs.
+    ren = {c: f"r_{c}" for c in rdf.columns if c in ldf.columns}
+    for old, new in ren.items():
+        rdf = rdf.withColumnRenamed(old, new)
+    return interval_join(
+        ldf,
+        rdf,
+        left_ts=args.ts,
+        right_start=ren.get(args.right_start, args.right_start),
+        right_end=ren.get(args.right_end, args.right_end),
+        bucket_us=(int(args.bucket_us) if args.bucket_us != "auto"
+                   else "auto"),
+        keys=[(lk, ren.get(rk, rk)) for lk, rk in keys] or None,
+        how=args.how,
+    )
+
+
+def _op_chunk(spark, args):
+    from ds_jedai_spark.operators.textops import chunk_documents
+
+    return chunk_documents(_docs(spark, args, args.left),
+                           chunk_tokens=args.chunk_tokens,
+                           overlap=args.overlap)
+
+
+def _op_dedup(spark, args):
+    from ds_jedai_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        minhash_lsh_pairs_cross,
+    )
+
+    left = _docs(spark, args, args.left)
+    tau = args.tau if args.tau is not None else 0.8
+    if args.index:
+        # incremental vs the PERSISTED bucketed shingle table
+        # (dedup-build): the shingle index carries everything the cross
+        # path needs (band keys, verification sets, sizes), so only the
+        # batch side shingles per ingest and no -right re-read of the
+        # corpus is required
+        return minhash_lsh_pairs_cross(left, None, tau=tau,
+                                       sh_b=spark.table(args.index))
+    if args.right:
+        # incremental: batch (left) vs standing corpus (right)
+        return minhash_lsh_pairs_cross(
+            left, _docs(spark, args, args.right), tau=tau)
+    return minhash_lsh_pairs(left, tau=tau)
+
+
+def _op_dedup_build(spark, args):
+    # Persist the standing corpus' shingle table BUCKETED by the join
+    # key (pin_shingles with a table) — the multi-job index a daily
+    # incremental dedup joins against with no Exchange on the index
+    # side. Search with `-op dedup -right corpus.parquet -index TBL`.
+    from pyspark.sql import functions as F
+
+    from ds_jedai_spark.operators.dedup import pin_shingles
+
+    sh = pin_shingles(_docs(spark, args, args.left), table=args.index)
+    return sh.agg(
+        F.count(F.lit(1)).alias("n_shingles"),
+        F.countDistinct("doc_id").alias("n_docs"),
+    ).withColumn("index_table", F.lit(args.index))
+
+
+def _op_dedup_apply(spark, args):
+    # The full dedup pipeline in one command: MinHash-LSH pair discovery
+    # -> connected-component clustering (pointer doubling) ->
+    # materialize the SURVIVING corpus (one representative per cluster +
+    # all unclustered docs, cluster_id = -1 for the latter). The output
+    # is the deduplicated corpus itself, not pair diagnostics.
+    from ds_jedai_spark.operators.dedup import (
+        dedup_apply,
+        duplicate_clusters,
+        minhash_lsh_pairs,
+    )
+
+    docs = _docs(spark, args, args.left)
+    # -index: reuse the persisted bucketed shingle table (dedup-build
+    # over the same corpus) instead of re-shingling
+    sh = spark.table(args.index) if args.index else None
+    pairs = minhash_lsh_pairs(
+        docs, tau=args.tau if args.tau is not None else 0.8, sh=sh)
+    return dedup_apply(docs, duplicate_clusters(pairs))
+
+
+def _op_emb_dedup(spark, args):
+    from ds_jedai_spark.operators.similarity import (
+        lsh_neardup_pairs,
+        lsh_neardup_pairs_cross,
+    )
+
+    left = _vectors(spark, args, args.left)
+    tau = args.tau if args.tau is not None else 0.9
+    if args.right:
+        # -index reuses the ann-build band table; its (lsh_bands,
+        # lsh_bits) stamp fixes the batch side's hyperplane parameters
+        # (n_bands='auto' reads it)
+        bands = spark.table(f"{args.index}_bands") if args.index else None
+        return lsh_neardup_pairs_cross(
+            left, _vectors(spark, args, args.right), tau,
+            index_bands=bands, n_bands="auto",
+        )
+    if args.index:
+        # self-dedup over the PERSISTED band table (-left must be the
+        # corpus the index was built from): collisions come from the
+        # pin, exact-cosine verification from -left
+        return lsh_neardup_pairs(
+            left, tau, bands=spark.table(f"{args.index}_bands"))
+    return lsh_neardup_pairs(left, tau, n_bands="auto")
+
+
+def _op_ann_build(spark, args):
+    # Build the FULL ANN index ONCE and persist every artifact as a
+    # table under -index PREFIX — the deployment shape the API's pin_*
+    # table modes support (train once, query many): IVF centroids + cell
+    # assignments, PQ codebooks + codes (auto-sized to the corpus), and
+    # the stamped LSH band table. `-op ann -index PREFIX` then searches
+    # without retraining.
+    from pyspark.sql import functions as F
+
+    from ds_jedai_spark.operators import similarity as sim
+
+    corpus = _vectors(spark, args, args.left)
+    n_corpus = corpus.count()
+    if n_corpus == 0:
+        raise SystemExit(
+            "-op ann-build: input has no vectors; check -left/-id-col")
+    dim = len(corpus.select("embedding").first()["embedding"])
+    p = args.index
+    cells_n = sim.auto_ivf_cells(n_corpus)
+    cent = sim.pin_centroids(corpus, k=cells_n, table=f"{p}_cent")
+    sim.pin_cells(corpus, cent, table=f"{p}_cells")
+    m, kk = sim.auto_pq_params(n_corpus, dim)
+    books = sim.pin_codebooks(corpus, k=kk, m=m, table=f"{p}_books")
+    sim.pin_codes(corpus, books, table=f"{p}_codes")
+    bands, bits = sim.auto_lsh_params(n_corpus, args.tau or 0.9)
+    sim.pin_bands(corpus, table=f"{p}_bands", bands=bands, bits=bits)
+    return spark.createDataFrame(
+        [(n_corpus, dim, cells_n, m, kk, bands, bits)],
+        "n_vectors long, dim int, ivf_cells int, pq_m int, "
+        "pq_k int, lsh_bands int, lsh_bits int",
+    ).withColumn("index_prefix", F.lit(p))
+
+
+def _op_ann(spark, args):
+    from pyspark.sql import functions as F
+
+    from ds_jedai_spark.operators import similarity as sim
+    from ds_jedai_spark.pins import pin
+
+    if args.index and args.method == "brute":
+        raise _Usage("-method brute does not use an index; drop -index")
+    corpus = _vectors(spark, args, args.left)
+    k = args.k
+    # id-space-safe query set: the n smallest ids PRESENT (raises on an
+    # empty corpus instead of writing 0 rows) — all methods; the gate's
+    # literal vec_id < n is the dense-id testdata convention only.
+    pred = _ann_query_pred(corpus, args.n_queries)
+    if args.method == "brute":
+        return sim.brute_topk(corpus, k=k, query_pred=pred)
+    if args.method == "pq":
+        if args.index:
+            stacked = spark.table(f"{args.index}_books")
+            n_m = stacked.agg(F.countDistinct("m").alias("m")).first()["m"]
+            books = [stacked.where(F.col("m") == mi).select("cid", "cv")
+                     for mi in range(n_m)]
+            codes = spark.table(f"{args.index}_codes")
+        else:
+            n_corpus = corpus.count()
+            dim = len(corpus.select("embedding").first()["embedding"])
+            m, kk = sim.auto_pq_params(n_corpus, dim)
+            books = sim.pin_codebooks(corpus, k=kk, m=m)
+            codes = sim.pin_codes(corpus, books)
+        return sim.pq_rerank_topk(
+            corpus, k=k, shortlist=max(20, 10 * k),
+            books=books, codes=codes, query_pred=pred,
+        )
+    if args.index:
+        cent = spark.table(f"{args.index}_cent")
+        cells = spark.table(f"{args.index}_cells")
+    else:
+        n_corpus = corpus.count()
+        cent = pin(sim.train_centroids(
+            corpus, k=sim.auto_ivf_cells(n_corpus)))
+        if not cent.take(1):
+            raise SystemExit(
+                "-op ann: IVF centroid training produced no seeds "
+                f"(corpus rows: {n_corpus}); check -left/-id-col"
+            )
+        cells = pin(sim.kmeans_assignments(corpus, cent=cent).select(
+            "vec_id", "cid"))
+    if args.nprobe > 1:
+        # recall/latency knob: scan the nprobe nearest cells
+        return sim.ivf_multiprobe_topk(
+            corpus, k=k, nprobe=args.nprobe,
+            cent=cent, cells=cells, query_pred=pred,
+        )
+    return sim.ivf_trained_topk(corpus, k=k, cent=cent, cells=cells,
+                                query_pred=pred)
+
+
+def _op_quantize(spark, args):
+    # symmetric int8 quantization stats per vector — the 4x
+    # memory-reduction pre-pass of a vector corpus (exact integer error
+    # metric; see int8_quantize_stats)
+    from ds_jedai_spark.operators.similarity import int8_quantize_stats
+
+    return int8_quantize_stats(_vectors(spark, args, args.left))
+
+
+def _op_shuffle(spark, args):
+    from ds_jedai_spark.operators.textops import (
+        SHUFFLE_SHARDS,
+        corpus_shuffle_positions,
+    )
+
+    docs = _guard_rename(_read(spark, args.left), args.id_col, "doc_id")
+    return corpus_shuffle_positions(docs.select("doc_id"),
+                                    shards=args.shards or SHUFFLE_SHARDS)
+
+
+def _op_dupspans(spark, args):
+    from ds_jedai_spark.operators.textops import duplicated_spans
+
+    return duplicated_spans(_docs(spark, args, args.left), k=args.span_words)
+
+
+def _op_scrub(spark, args):
+    from ds_jedai_spark.operators.textops import scrubbed_corpus
+
+    return scrubbed_corpus(_docs(spark, args, args.left), k=args.span_words)
+
+
+def _op_er(spark, args):
+    from ds_jedai_spark.operators import blocking
+
+    fr = None
+    if args.blocker == "meta" and args.filter_ratio:
+        try:
+            pn, qn = args.filter_ratio.split("/")
+            fr = (int(pn), int(qn))
+        except ValueError:
+            raise _Usage(f"-filter-ratio expects p/q (e.g. 4/5), got "
+                         f"{args.filter_ratio!r}") from None
+    left = _docs(spark, args, args.left)
+    right = _docs(spark, args, args.right) if args.right else None
+    if args.blocker == "snb":
+        w = args.window if args.window is not None else blocking.SNB_WINDOW
+        df = (blocking.sorted_neighborhood(left, window=w) if right is None
+              else blocking.sorted_neighborhood_cross(left, right, window=w))
+    else:
+        kw = dict(prune=args.prune, k=args.er_k, filter_ratio=fr,
+                  max_block=(args.max_block if args.max_block is not None
+                             else blocking.PURGE_MAX))
+        # with -right, clean-clean: candidates only ACROSS -left/-right
+        # (ids must be disjoint between the two datasets)
+        df = (blocking.er_pairs(left, **kw) if right is None
+              else blocking.er_pairs_cross(left, right, **kw))
+    if not args.cluster:
+        return df
+    # end-to-end ER output: candidate pairs -> connected components
+    # (star contraction) -> entity clusters
+    from pyspark.sql import functions as F
+
+    from ds_jedai_spark.operators.clustering import connected_components_star
+
+    return connected_components_star(df.select("d1", "d2")).select(
+        F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
+
+
+def _op_editdist(spark, args):
+    from ds_jedai_spark.operators.dedup import edit_distance_pairs
+
+    return edit_distance_pairs(_docs(spark, args, args.left), d=args.edit_d)
+
+
+def _op_zorder(spark, args):
+    # Rewrite any reader-supported dataset as z-ordered parquet
+    # (Morton-key layout over the envelope centers) so later -bbox scans
+    # prune files/row groups instead of reading the corpus —
+    # io/layout.py.
+    from pyspark.sql import functions as F
+
+    from ds_jedai_spark.io import layout
+
+    src = _dataset(spark, args, args.left)
+    ext = src.agg(
+        F.min("minx"), F.min("miny"), F.max("maxx"), F.max("maxy")
+    ).first()
+    if ext[0] is None:
+        raise _Usage("empty input")
+    pad = 1e-9  # keep the max corner inside the half-open domain
+    zf = layout.zorder_frame(
+        src.withColumn("__cx", (F.col("minx") + F.col("maxx")) / 2)
+        .withColumn("__cy", (F.col("miny") + F.col("maxy")) / 2),
+        x_col="__cx", y_col="__cy",
+        bounds=(float(ext[0]), float(ext[1]),
+                float(ext[2]) + pad, float(ext[3]) + pad),
+        files=args.files,
+    ).drop("__cx", "__cy")
+    _write_parquet(zf, args.out, "z-ordered {n} rows -> {out}")
+
+
+def _op_zonal(spark, args):
+    # Zonal statistics: per-zone point count (+ -value-col sum) through
+    # tile join + exact relate + rollup.
+    from ds_jedai_spark.operators.spatial_agg import zonal_stats
+
+    zones = _dataset(spark, args, args.left, dated=False)
+    pts = _dataset(spark, args, args.right, dated=False)
+    return zonal_stats(zones, pts, value_col=args.value_col).orderBy("zone_id")
+
+
+def _op_validate(spark, args):
+    # Declarative expectation checks (operators/validate.py): one
+    # aggregate pass, exact violation counts per rule.
+    from ds_jedai_spark.operators.validate import validate
+
+    rules = {}
+    for part in args.rules.split(";"):
+        name, sep, pred = part.partition(":")
+        if not sep or not name.strip() or not pred.strip():
+            raise _Usage(f"bad -rules entry {part!r}; expected "
+                         "name:predicate")
+        rules[name.strip()] = pred.strip()
+    return validate(_read(spark, args.left), rules)
+
+
+def _op_profile(spark, args):
+    # Per-column discovery profile (nulls / distinct / extrema) —
+    # operators/validate.profile; one aggregate pass.
+    from ds_jedai_spark.operators.validate import profile
+
+    cols = args.cols.split(",") if args.cols else None
+    return profile(_read(spark, args.left), cols).orderBy("column")
+
+
+def _op_quantiles(spark, args):
+    # Exact distributed quantiles (type-1 rank selection, integer rank
+    # arithmetic) — operators/ranking.py; -by switches to the per-group
+    # window variant.
+    from ds_jedai_spark.operators.ranking import (
+        exact_quantiles,
+        exact_quantiles_by,
+    )
+
+    try:
+        ps = tuple(int(p) for p in args.permille.split(","))
+    except ValueError:
+        raise _Usage(f"-permille expects comma-separated integers, got "
+                     f"{args.permille!r}") from None
+    src = _read(spark, args.left)
+    if args.by:
+        return exact_quantiles_by(src, args.value_col, args.by, ps).orderBy(
+            args.by, "permille")
+    return exact_quantiles(src, args.value_col, ps).orderBy("permille")
+
+
+@dataclass(frozen=True)
+class Op:
+    """One -op. ``body(spark, args)`` returns the frame to print or
+    write, or None when it wrote and reported its own output. ``needs``
+    names the argparse dests that must be set. ``spatial`` ops read
+    datasets through api.read_dataset, default -id-col to ``id`` and
+    accept -bbox; the others read user parquet with -id-col ``doc_id``."""
+
+    body: Callable
+    needs: tuple[str, ...] = ("left",)
+    spatial: bool = False
+
+
+OPS: dict[str, Op] = {
+    "relate": Op(_op_relate, ("left", "right"), spatial=True),
+    "convert": Op(_op_convert, ("left", "out"), spatial=True),
+    "perturb": Op(_op_perturb, ("left", "out"), spatial=True),
+    "reproject": Op(_op_reproject, ("left", "out", "to_crs"), spatial=True),
+    "measures": Op(_op_measures, spatial=True),
+    "density": Op(_op_density, spatial=True),
+    "dbscan": Op(_op_dbscan, ("left", "tau"), spatial=True),
+    "geohash": Op(_op_geohash, spatial=True),
+    "hull": Op(_op_hull, spatial=True),
+    "knn": Op(_op_knn, ("left", "right"), spatial=True),
+    "distance": Op(_op_distance, ("left", "right", "tau"), spatial=True),
+    "asof": Op(_op_asof, ("left", "right")),
+    "interval": Op(_op_interval, ("left", "right")),
+    "chunk": Op(_op_chunk),
+    "dedup": Op(_op_dedup),
+    "dedup-build": Op(_op_dedup_build, ("left", "index")),
+    "dedup-apply": Op(_op_dedup_apply),
+    "emb-dedup": Op(_op_emb_dedup),
+    "ann": Op(_op_ann),
+    "ann-build": Op(_op_ann_build, ("left", "index")),
+    "quantize": Op(_op_quantize),
+    "shuffle": Op(_op_shuffle),
+    "dupspans": Op(_op_dupspans),
+    "scrub": Op(_op_scrub),
+    "er": Op(_op_er),
+    "editdist": Op(_op_editdist),
+    "zorder": Op(_op_zorder, ("left", "out"), spatial=True),
+    "quantiles": Op(_op_quantiles, ("left", "value_col")),
+    "validate": Op(_op_validate, ("left", "rules")),
+    "profile": Op(_op_profile),
+    "zonal": Op(_op_zonal, ("left", "right"), spatial=True),
+}
+BBOX_OPS = tuple(name for name, op in OPS.items() if op.spatial)
+
+
+def _flag(dest: str) -> str:
+    return "-" + dest.replace("_", "-")
+
+
+def _run_op(args) -> int:
+    """Run one ``OPS`` entry: refuse before Spark starts if a needed
+    flag is missing, run the body, print or write what it returns."""
+    op = OPS[args.op]
+    missing = [_flag(d) for d in op.needs if getattr(args, d) in (None, "")]
+    if missing:
+        print(f"-op {args.op} needs {' and '.join(map(_flag, op.needs))}; "
+              f"missing {' and '.join(missing)}", file=sys.stderr)
+        return 2
+
     from ds_jedai_spark.session import get_spark
 
     spark = get_spark("ds_jedai_spark_cli")
-
-    def _read(path: str, ts_cols: tuple[str, ...]) -> object:
-        # Mirror io.synthetic.register_views' TIMESTAMP(NANOS) handling:
-        # nanosAsLong is harmless for normal files; a named timestamp
-        # column that comes back as long is restored ONLY when the
-        # parquet footer really says timestamp[ns] — a plain BIGINT
-        # column (epoch micros/millis, a common layout) must not be
-        # silently divided by 1000, so it errors with guidance instead.
-        from pyspark.sql import functions as F, types as T
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        long_ts = [
-            c for c in ts_cols
-            if c in df.columns and isinstance(df.schema[c].dataType, T.LongType)
-        ]
-        if long_ts:
-            import glob as _glob
-            import os as _os
-
-            import pyarrow.parquet as pq
-
-            f = path
-            if _os.path.isdir(path):
-                parts = sorted(_glob.glob(_os.path.join(path, "*.parquet")))
-                f = parts[0] if parts else path
-            arrow = pq.read_schema(f)
-            for c in long_ts:
-                t = arrow.field(c).type if c in arrow.names else None
-                if str(t) == "timestamp[ns]":
-                    df = df.withColumn(
-                        c, F.timestamp_micros(F.expr(f"{c} div 1000"))
-                    )
-                else:
-                    raise SystemExit(
-                        f"column {c!r} in {path} is {t} (plain integer?) — "
-                        "cast it to a parquet timestamp, or add a derived "
-                        "timestamp column; refusing to guess the epoch unit"
-                    )
-        return df
-
     t0 = time.perf_counter()
     try:
-        if args.op == "relate":
-            # Flagship convenience: tile join + exact relate on arbitrary
-            # user WKT (tsv/csv/geojson/nt) or engine parquet, no YAML —
-            # `-op relate -left s.tsv -right t.tsv -relation intersects`.
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import (
-                PROGRESSIVE_ALGS,
-                RELATIONS,
-                WEIGHT_FUNCS,
-                DatasetSpec,
-                JedaiConfig,
-            )
-
-            if not (args.left and args.right):
-                print("-op relate needs -left and -right (WKT tsv/csv/"
-                      "geojson/nt/shapefile or engine parquet)", file=sys.stderr)
-                return 2
-            rel = args.relation.upper()
-            if rel not in RELATIONS:
-                print(f"-op relate: unknown relation {rel!r}; choose "
-                      f"from {sorted(RELATIONS)}", file=sys.stderr)
-                return 2
-            # -algorithm/-budget: the six progressive algorithms through
-            # the YAML-free path (the reference exposes these via
-            # ConfigurationParser.scala:107-160)
-            alg = args.algorithm.upper() if args.algorithm else None
-            if alg is not None and alg not in PROGRESSIVE_ALGS:
-                print(f"-op relate: unknown -algorithm {alg!r}; choose "
-                      f"from {sorted(PROGRESSIVE_ALGS)}", file=sys.stderr)
-                return 2
-            wf = args.main_wf.upper()
-            if wf not in WEIGHT_FUNCS:
-                print(f"-op relate: unknown -main-wf {wf!r}; choose "
-                      f"from {sorted(WEIGHT_FUNCS)}", file=sys.stderr)
-                return 2
-            from ds_jedai_spark.config import ENTITY_TYPES, GRID_TYPES
-
-            grid = args.grid_type.upper()
-            if grid not in GRID_TYPES:
-                print(f"-op relate: unknown -grid-type {grid!r}; choose "
-                      f"from {sorted(GRID_TYPES)}", file=sys.stderr)
-                return 2
-            etype = args.entity_type.upper()
-            if etype not in ENTITY_TYPES:
-                print(f"-op relate: unknown -entity-type {etype!r}; "
-                      f"choose from {sorted(ENTITY_TYPES)}",
-                      file=sys.stderr)
-                return 2
-            cfg = JedaiConfig(
-                source=DatasetSpec(path=args.left, id_field=args.id_col,
-                                   geom_field=args.geom_col,
-                                   date_field=args.date_col),
-                target=DatasetSpec(path=args.right, id_field=args.id_col,
-                                   geom_field=args.geom_col,
-                                   date_field=args.date_col),
-                relation=rel,
-                progressive_algorithm=alg,
-                budget=args.budget,
-                main_wf=wf,
-                grid_type=grid,
-                partitions=args.partitions,
-                entity_type=etype,
-                # -export works like the -conf form: RDF flags for
-                # DE9IM, CSV pairs for a single predicate
-                export_path=args.export,
-                extra={
-                    **({"bbox": args.bbox} if args.bbox else {}),
-                    **({"autoReproject": True}
-                       if args.auto_reproject else {}),
-                },
-            )
-            df = api.run(spark, cfg)
-        elif args.op == "convert":
-            # Format conversion through the full reader/writer surface:
-            # any supported geometry dataset (WKT tsv/csv, GeoJSON,
-            # N-Triples, ESRI Shapefile, GeoPackage, engine row-format parquet,
-            # GeoParquet/WKB, WKT-column parquet) -> the engine row format, written as
-            # row-format parquet (zero-parse re-reads), GeoParquet/WKB,
-            # or NDJSON GeoJSON. The ingest-side converter a user runs
-            # ONCE so every later job takes the parquet fast path.
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.io import writers
-
-            if not (args.left and args.out):
-                print("-op convert needs -left (input dataset) and -out",
-                      file=sys.stderr)
-                return 2
-            if args.to not in ("rowparquet", "geoparquet", "geojson",
-                               "shapefile", "geopackage", "flatgeobuf"):
-                print(f"-op convert: unknown -to {args.to!r}; choose "
-                      "from rowparquet/geoparquet/geojson/shapefile/"
-                      "geopackage/flatgeobuf", file=sys.stderr)
-                return 2
-            src = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=args.date_col,
-            ), bbox=args.bbox)
-            if args.to == "rowparquet":
-                src.write.mode("overwrite").parquet(args.out)
-                back = spark.read.parquet(args.out)
-            elif args.to == "geoparquet":
-                # Propagate the input's CRS (GeoParquet footer PROJJSON
-                # the reader carried as gtype column metadata) into the
-                # output footer, so convert round-trips CRS declarations.
-                import json as _json
-
-                meta = (src.schema["gtype"].metadata
-                        if "gtype" in src.columns else None) or {}
-                crs = (_json.loads(meta["crs_projjson"])
-                       if meta.get("crs_projjson") else None)
-                writers.export_geoparquet(src, args.out, crs=crs)
-                back = spark.read.parquet(args.out)
-            elif args.to == "geopackage":
-                # -out ending in .gpkg: single-file interop sink
-                # (driver-side assembly — SQLite is single-writer per
-                # file); anything else: a DIRECTORY of per-partition
-                # .gpkg shards assembled by the executors in parallel
-                # (the scale path, mirroring the fgb dispatch). CRS
-                # from the input's metadata lands in
-                # gpkg_spatial_ref_sys either way.
-                from ds_jedai_spark.io.geopackage import (
-                    export_geopackage,
-                    export_geopackage_sharded,
-                    read_geopackage,
-                )
-
-                meta = (src.schema["gtype"].metadata
-                        if "gtype" in src.columns else None) or {}
-                crs_id = None
-                if ":" in (meta.get("crs") or ""):
-                    org, code = meta["crs"].split(":", 1)
-                    if code.isdigit():
-                        crs_id = (org, int(code))
-                sink = (export_geopackage
-                        if args.out.lower().endswith(".gpkg")
-                        else export_geopackage_sharded)
-                sink(src, args.out, crs_id=crs_id)
-                back = read_geopackage(spark, args.out)
-            elif args.to == "flatgeobuf":
-                # -out ending in .fgb: single-file interop sink
-                # (driver-side assembly); anything else: a DIRECTORY of
-                # per-partition .fgb shards written by the executors in
-                # parallel — the corpus layout the reader consumes as
-                # one DataFrame. Both Hilbert-sorted behind a packed
-                # R-tree; CRS from the input's metadata lands in each
-                # header's Crs table.
-                from ds_jedai_spark.io.flatgeobuf import (
-                    export_flatgeobuf,
-                    export_flatgeobuf_sharded,
-                    read_flatgeobuf,
-                )
-
-                meta = (src.schema["gtype"].metadata
-                        if "gtype" in src.columns else None) or {}
-                crs_id = None
-                if ":" in (meta.get("crs") or ""):
-                    org, code = meta["crs"].split(":", 1)
-                    if code.isdigit():
-                        crs_id = (org, int(code))
-                sink = (export_flatgeobuf
-                        if args.out.lower().endswith(".fgb")
-                        else export_flatgeobuf_sharded)
-                sink(src, args.out, crs_id=crs_id)
-                back = read_flatgeobuf(spark, args.out)
-            elif args.to == "shapefile":
-                # directory-of-shapefiles sink (one spec-conformant
-                # .shp/.shx/.dbf triple per partition x shape kind;
-                # known CRS becomes a .prj) — count via the reader
-                from ds_jedai_spark.io.shapefile import (
-                    export_shapefile,
-                    read_shapefile,
-                )
-
-                export_shapefile(src, args.out)
-                back = read_shapefile(spark, args.out)
-            else:
-                writers.export_geojson(src, args.out)
-                back = spark.read.text(args.out)
-            print(f"wrote {back.count()} entities to {args.out} "
-                  f"({args.to})")
-            print(f"TOTAL TIME: {time.perf_counter() - t0:.2f}s")
-            return 0
-        elif args.op == "perturb":
-            # the reference's GeometryTransformer experiment tool
-            # (experiments/GeometryTransformer.scala:66-91) as an engine
-            # op: read any supported dataset, perturb, write row-format
-            # parquet (deterministic: same -seed -> same output)
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.io.synthetic import perturb_geometries
-
-            if not (args.left and args.out):
-                print("-op perturb needs -left (input dataset) and -out",
-                      file=sys.stderr)
-                return 2
-            src = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=args.date_col,
-            ), bbox=args.bbox)
-            perturb_geometries(
-                src, eps_steps=args.eps_steps, seed=args.seed
-            ).write.mode("overwrite").parquet(args.out)
-            n = spark.read.parquet(args.out).count()
-            print(f"wrote {n} perturbed entities to {args.out} "
-                  f"(eps={args.eps_steps}/16, seed={args.seed})")
-            print(f"TOTAL TIME: {time.perf_counter() - t0:.2f}s")
-            return 0
-        elif args.op == "density":
-            # Grid-cell density (heatmap aggregation) over any reader
-            # format — operators/spatial_agg.grid_density: one pure-JVM
-            # groupBy on floor-snapped envelope centers.
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.operators.spatial_agg import grid_density
-
-            if not args.left:
-                print("-op density needs -left (input dataset)",
-                      file=sys.stderr)
-                return 2
-            src = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=args.date_col,
-            ), bbox=args.bbox)
-            out = grid_density(
-                src, cell=args.cell, weight_col=args.weight_col,
-                coverage=args.coverage,
-            ).orderBy("cell_x", "cell_y")
-            return _print_or_write(out, args.out, args.limit, t0)
-        elif args.op == "geohash":
-            # Geohash cell keys over any reader format —
-            # operators/geohash.with_geohash: pure-JVM closed-form
-            # projection (no shuffle), keyed on the envelope center.
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.operators.geohash import with_geohash
-
-            if not args.left:
-                print("-op geohash needs -left (input dataset)",
-                      file=sys.stderr)
-                return 2
-            src = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=args.date_col,
-            ), bbox=args.bbox)
-            if args.cover:
-                from ds_jedai_spark.operators.geohash import (
-                    geohash_cover,
-                )
-
-                out = geohash_cover(
-                    src, precision=args.precision).select("id", "geohash")
-                return _print_or_write(out.orderBy("id", "geohash"),
-                                       args.out, args.limit, t0)
-            out = with_geohash(src, precision=args.precision).select(
-                "id", "geohash")
-            return _print_or_write(out.orderBy("id"), args.out,
-                                   args.limit, t0)
-        elif args.op == "hull":
-            # Convex hull corners of a dataset's points/envelope
-            # corners — operators/hull.convex_hull (per-partition
-            # monotone chain, one-task final merge).
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.operators.hull import convex_hull
-
-            if not args.left:
-                print("-op hull needs -left (input dataset)",
-                      file=sys.stderr)
-                return 2
-            src = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=args.date_col,
-            ), bbox=args.bbox)
-            return _print_or_write(convex_hull(src, by=args.by),
-                                   args.out, args.limit, t0)
-        elif args.op == "dbscan":
-            # Density-based clustering over any reader format —
-            # operators/clustering.dbscan (tile-join eps-graph +
-            # large-star/small-star contraction; deterministic labels).
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.operators.clustering import dbscan
-
-            if not args.left or args.tau is None:
-                print("-op dbscan needs -left (point dataset) and -tau "
-                      "(eps distance); -minpts defaults to 4",
-                      file=sys.stderr)
-                return 2
-            src = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=args.date_col,
-            ), bbox=args.bbox)
-            out = dbscan(src, eps=args.tau, min_pts=args.minpts,
-                         geodesic=args.geodesic, use_center=args.center)
-            return _print_or_write(out.orderBy("id"), args.out,
-                                   args.limit, t0)
-        elif args.op == "measures":
-            # Per-entity geometry measures (ST_NPoints/Length/Perimeter/
-            # Area/Centroid equivalents) over any reader format —
-            # operators/measures.py; npoints/length/perimeter are pure
-            # JVM expressions, area/centroid ride the Arrow batch path.
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.operators.measures import with_measures
-
-            if not args.left:
-                print("-op measures needs -left (input dataset)",
-                      file=sys.stderr)
-                return 2
-            src = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=args.date_col,
-            ), bbox=args.bbox)
-            cols = ["id", "gtype", "npoints", "length", "perimeter",
-                    "area", "centroid_x", "centroid_y", "unit"]
-            if args.geodesic:
-                cols += ["length_m", "perimeter_m", "area_m2"]
-            out = with_measures(src, geodesic=args.geodesic,
-                                seam=args.seam).select(*cols)
-            return _print_or_write(out, args.out, args.limit, t0)
-        elif args.op == "reproject":
-            # Closed-form CRS reprojection (EPSG:4326 <-> EPSG:3857):
-            # the in-engine remedy for the CRS-mismatch warning. Reads
-            # any supported dataset, rewrites coordinates JVM-side
-            # (operators/crs.py), writes row-format parquet carrying the
-            # new CRS in the gtype metadata.
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.operators.crs import reproject
-
-            if not (args.left and args.out and args.to_crs):
-                print("-op reproject needs -left, -out and -to-crs",
-                      file=sys.stderr)
-                return 2
-            src = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=args.date_col,
-            ), bbox=args.bbox)
-            out = reproject(src, args.to_crs, from_crs=args.from_crs)
-            out.write.mode("overwrite").parquet(args.out)
-            n = spark.read.parquet(args.out).count()
-            src_crs = args.from_crs or (
-                (src.schema["gtype"].metadata or {}).get("crs"))
-            print(f"wrote {n} entities to {args.out} "
-                  f"({src_crs} -> {args.to_crs})")
-            print(f"TOTAL TIME: {time.perf_counter() - t0:.2f}s")
-            return 0
-        elif args.op in ("knn", "distance"):
-            # Spatial distance / exact-kNN joins on arbitrary point
-            # datasets (any reader format), completing the YAML-free
-            # spatial surface next to -op relate. Both operators are
-            # point-to-point by contract (expanded-MBR tile join /
-            # iterative radius expansion, operators/spatial_join.py);
-            # non-point input errors with guidance.
-            from pyspark.sql import functions as F
-
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.operators.spatial_join import (
-                distance_join,
-                knn_join_exact,
-            )
-
-            if not (args.left and args.right):
-                print(f"-op {args.op} needs -left and -right point "
-                      "datasets", file=sys.stderr)
-                return 2
-            if args.op == "distance" and args.tau is None:
-                print("-op distance needs -tau <radius>", file=sys.stderr)
-                return 2
-
-            def _read_points(path: str):
-                df = api.read_dataset(spark, DatasetSpec(
-                    path=path, id_field=args.id_col,
-                    geom_field=args.geom_col,
-                ), bbox=args.bbox)
-                bad = df.where(
-                    "minx != maxx OR miny != maxy"
-                ).limit(1).count()
-                if bad:
-                    raise SystemExit(
-                        f"-op {args.op}: {path} contains non-point "
-                        "geometries; the distance/kNN joins are "
-                        "point-to-point (reduce to centroids upstream, "
-                        "or use -op relate for region predicates)"
-                    )
-                return df
-
-            s, t = _read_points(args.left), _read_points(args.right)
-            # same CRS-mismatch warning the relate path gives (api.run)
-            api._check_crs(s, t, strict=False)
-            if args.op == "distance" and args.geodesic:
-                # -tau in METERS over lon/lat input (great-circle)
-                from ds_jedai_spark.operators.spatial_join import (
-                    geodesic_distance_join,
-                )
-
-                df = geodesic_distance_join(s, t,
-                                            radius_m=float(args.tau))
-            elif args.op == "distance":
-                df = distance_join(s, t, radius=float(args.tau))
-            elif args.geodesic:
-                # -op knn -geodesic: great-circle exact kNN over lon/lat
-                # points (meters; antimeridian-correct per round)
-                from ds_jedai_spark.operators.spatial_join import (
-                    knn_join_exact_geodesic,
-                )
-
-                same = os.path.realpath(args.left) == os.path.realpath(
-                    args.right
-                )
-                df = knn_join_exact_geodesic(
-                    s, t, k=args.k, self_join=same
-                ).drop("dist_mm")
-            else:
-                # exact kNN: the final round's radius must reach the
-                # whole domain, so derive it from the joint extent (one
-                # cheap 4-column aggregate)
-                env = ("minx", "miny", "maxx", "maxy")
-                r = (
-                    s.select(*env).unionByName(t.select(*env))
-                    .agg(F.min("minx").alias("a"), F.max("maxx").alias("b"),
-                         F.min("miny").alias("c"), F.max("maxy").alias("d"))
-                    .first()
-                )
-                diam = (max(r.b - r.a, r.d - r.c, 0.0) * 1.415 + 1.0
-                        if r.a is not None else 1.0)  # empty input
-                # Same-id exclusion is a self-join convention only: two
-                # independent datasets with overlapping id spaces keep
-                # same-id pairs (consistent with -op distance).
-                same = os.path.realpath(args.left) == os.path.realpath(
-                    args.right
-                )
-                df = knn_join_exact(
-                    s, t, k=args.k, rmax=max(256.0, diam), self_join=same
-                )
-        elif args.op == "asof":
-            from ds_jedai_spark.operators.temporal import asof_join
-
-            if not (args.left and args.right):
-                print("-op asof needs -left and -right parquet paths",
-                      file=sys.stderr)
-                return 2
-            bucket: int | str | None
-            bucket = (
-                "auto" if args.bucket_us == "auto"
-                else int(args.bucket_us) if args.bucket_us else None
-            )
-            df = asof_join(
-                _read(args.left, (args.ts,)),
-                _read(args.right, (args.ts,)),
-                key=args.key.split(","),
-                ts=args.ts,
-                right_attrs=tuple(
-                    a for a in (args.right_attrs or "").split(",") if a
-                ),
-                bucket_us=bucket,
-                direction=args.direction,
-                tolerance_us=args.tolerance_us,
-                allow_exact_matches=not args.no_exact_matches,
-            )
-        elif args.op == "interval":
-            from ds_jedai_spark.operators.temporal import interval_join
-
-            if not (args.left and args.right):
-                print("-op interval needs -left and -right parquet paths",
-                      file=sys.stderr)
-                return 2
-            if args.bucket_us is None:
-                print("-op interval requires a bucket width "
-                      "(-bucket-us N or the default 'auto', which derives "
-                      "it from the p95 interval length); 'none' only "
-                      "applies to asof", file=sys.stderr)
-                return 2
-            keys = [
-                tuple(p.split("=", 1)) for p in
-                (args.keys.split(",") if args.keys else [])
-            ]
-            ldf = _read(args.left, (args.ts,))
-            rdf = _read(args.right, (args.right_start, args.right_end))
-            # interval_join needs disjoint column names: prefix colliding
-            # right columns (r_<name>) and remap the right-side refs.
-            ren = {
-                c: f"r_{c}" for c in rdf.columns if c in ldf.columns
-            }
-            for old, new in ren.items():
-                rdf = rdf.withColumnRenamed(old, new)
-            keys = [(lk, ren.get(rk, rk)) for lk, rk in keys]
-            df = interval_join(
-                ldf,
-                rdf,
-                left_ts=args.ts,
-                right_start=ren.get(args.right_start, args.right_start),
-                right_end=ren.get(args.right_end, args.right_end),
-                bucket_us=(
-                    int(args.bucket_us)
-                    if args.bucket_us != "auto"
-                    else "auto"
-                ),
-                keys=keys or None,
-                how=args.how,
-            )
-        elif args.op == "dedup-build":
-            # Persist the standing corpus' shingle table BUCKETED by the
-            # join key (pin_shingles with a table) — the multi-job
-            # index a daily incremental dedup joins against with no
-            # Exchange on the index side. Search with
-            # `-op dedup -right corpus.parquet -index TBL`.
-            from ds_jedai_spark.operators.dedup import pin_shingles
-
-            if not (args.left and args.index):
-                print("-op dedup-build needs -left parquet and -index "
-                      "TABLE", file=sys.stderr)
-                return 2
-            docs = _docs_frame(_read(args.left, ()), args)
-            sh = pin_shingles(docs, table=args.index)
-            from pyspark.sql import functions as F
-
-            df = sh.agg(
-                F.count(F.lit(1)).alias("n_shingles"),
-                F.countDistinct("doc_id").alias("n_docs"),
-            ).withColumn("index_table", F.lit(args.index))
-        elif args.op == "dedup":
-            from ds_jedai_spark.operators.dedup import (
-                minhash_lsh_pairs,
-                minhash_lsh_pairs_cross,
-            )
-
-            if not args.left:
-                print("-op dedup needs -left parquet path", file=sys.stderr)
-                return 2
-            left = _docs_frame(_read(args.left, ()), args)
-            tau = args.tau if args.tau is not None else 0.8
-            if args.index:
-                # incremental vs the PERSISTED bucketed shingle table
-                # (dedup-build): the shingle index carries everything the
-                # cross path needs (band keys, verification sets, sizes),
-                # so only the batch side shingles per ingest and no
-                # -right re-read of the corpus is required
-                df = minhash_lsh_pairs_cross(
-                    left, None, tau=tau, sh_b=spark.table(args.index)
-                )
-            elif args.right:
-                # incremental: batch (left) vs standing corpus (right)
-                df = minhash_lsh_pairs_cross(
-                    left, _docs_frame(_read(args.right, ()), args), tau=tau
-                )
-            else:
-                df = minhash_lsh_pairs(left, tau=tau)
-        elif args.op == "dedup-apply":
-            # The full dedup pipeline in one command: MinHash-LSH pair
-            # discovery -> connected-component clustering (pointer
-            # doubling) -> materialize the SURVIVING corpus (one
-            # representative per cluster + all unclustered docs,
-            # cluster_id = -1 for the latter). The output is the
-            # deduplicated corpus itself, not pair diagnostics.
-            from ds_jedai_spark.operators.dedup import (
-                dedup_apply,
-                duplicate_clusters,
-                minhash_lsh_pairs,
-            )
-
-            if not args.left:
-                print("-op dedup-apply needs -left parquet path",
-                      file=sys.stderr)
-                return 2
-            docs = _docs_frame(_read(args.left, ()), args)
-            tau = args.tau if args.tau is not None else 0.8
-            # -index: reuse the persisted bucketed shingle table
-            # (dedup-build over the same corpus) instead of re-shingling
-            sh = spark.table(args.index) if args.index else None
-            pairs = minhash_lsh_pairs(docs, tau=tau, sh=sh)
-            clusters = duplicate_clusters(pairs)
-            df = dedup_apply(docs, clusters)
-        elif args.op == "emb-dedup":
-            from ds_jedai_spark.operators.similarity import (
-                lsh_neardup_pairs,
-                lsh_neardup_pairs_cross,
-            )
-
-            if not args.left:
-                print("-op emb-dedup needs -left parquet path",
-                      file=sys.stderr)
-                return 2
-            left = _emb_frame(_read(args.left, ()), args)
-            tau = args.tau if args.tau is not None else 0.9
-            if args.right:
-                # -index reuses the ann-build band table; its
-                # (lsh_bands, lsh_bits) stamp fixes the batch side's
-                # hyperplane parameters (n_bands='auto' reads it)
-                bands = (
-                    spark.table(f"{args.index}_bands")
-                    if args.index else None
-                )
-                df = lsh_neardup_pairs_cross(
-                    left, _emb_frame(_read(args.right, ()), args), tau,
-                    index_bands=bands, n_bands="auto",
-                )
-            elif args.index:
-                # self-dedup over the PERSISTED band table (-left must be
-                # the corpus the index was built from): collisions come
-                # from the pin, exact-cosine verification from -left
-                df = lsh_neardup_pairs(
-                    left, tau, bands=spark.table(f"{args.index}_bands")
-                )
-            else:
-                df = lsh_neardup_pairs(left, tau, n_bands="auto")
-        elif args.op == "ann-build":
-            # Build the FULL ANN index ONCE and persist every artifact
-            # as a table under -index PREFIX — the deployment shape the
-            # API's pin_* table modes support (train once, query many):
-            # IVF centroids + cell assignments, PQ codebooks + codes
-            # (auto-sized to the corpus), and the stamped LSH band
-            # table. `-op ann -index PREFIX` then searches without
-            # retraining.
-            from pyspark.sql import functions as F
-
-            from ds_jedai_spark.operators.similarity import (
-                auto_ivf_cells,
-                auto_lsh_params,
-                auto_pq_params,
-                pin_bands,
-                pin_cells,
-                pin_centroids,
-                pin_codebooks,
-                pin_codes,
-            )
-
-            if not (args.left and args.index):
-                print("-op ann-build needs -left parquet and -index PREFIX",
-                      file=sys.stderr)
-                return 2
-            corpus = _emb_frame(_read(args.left, ()), args)
-            n_corpus = corpus.count()
-            if n_corpus == 0:
-                raise SystemExit(
-                    "-op ann-build: input has no vectors; check -left/-id-col"
-                )
-            dim = len(corpus.select("embedding").first()["embedding"])
-            p = args.index
-            cells_n = auto_ivf_cells(n_corpus)
-            cent = pin_centroids(corpus, k=cells_n, table=f"{p}_cent")
-            pin_cells(corpus, cent, table=f"{p}_cells")
-            m, kk = auto_pq_params(n_corpus, dim)
-            books = pin_codebooks(corpus, k=kk, m=m, table=f"{p}_books")
-            pin_codes(corpus, books, table=f"{p}_codes")
-            bands, bits = auto_lsh_params(n_corpus, args.tau or 0.9)
-            pin_bands(corpus, table=f"{p}_bands", bands=bands, bits=bits)
-            df = spark.createDataFrame(
-                [(n_corpus, dim, cells_n, m, kk, bands, bits)],
-                "n_vectors long, dim int, ivf_cells int, pq_m int, "
-                "pq_k int, lsh_bands int, lsh_bits int",
-            ).withColumn("index_prefix", F.lit(p))
-        elif args.op == "ann":
-            from ds_jedai_spark.operators.similarity import (
-                auto_ivf_cells,
-                auto_pq_params,
-                brute_topk,
-                ivf_multiprobe_topk,
-                ivf_trained_topk,
-                kmeans_assignments,
-                pin_codebooks,
-                pin_codes,
-                pq_rerank_topk,
-                train_centroids,
-            )
-
-            if not args.left:
-                print("-op ann needs -left parquet path", file=sys.stderr)
-                return 2
-            corpus = _emb_frame(_read(args.left, ()), args)
-            k = args.k
-            # id-space-safe query set: the n smallest ids PRESENT (raises
-            # on an empty corpus instead of writing 0 rows) — all
-            # methods; the gate's literal vec_id < n is the dense-id
-            # testdata convention only.
-            pred = _ann_query_pred(corpus, args.n_queries)
-            if args.index and args.method == "brute":
-                print("-method brute does not use an index; drop -index",
-                      file=sys.stderr)
-                return 2
-            if args.method == "brute":
-                df = brute_topk(corpus, k=k, query_pred=pred)
-            elif args.method == "pq":
-                if args.index:
-                    from pyspark.sql import functions as F
-                    stacked = spark.table(f"{args.index}_books")
-                    n_m = stacked.agg(
-                        F.countDistinct("m").alias("m")
-                    ).first()["m"]
-                    books = [
-                        stacked.where(F.col("m") == mi).select("cid", "cv")
-                        for mi in range(n_m)
-                    ]
-                    codes = spark.table(f"{args.index}_codes")
-                else:
-                    n_corpus = corpus.count()
-                    dim = len(
-                        corpus.select("embedding").first()["embedding"]
-                    )
-                    m, kk = auto_pq_params(n_corpus, dim)
-                    books = pin_codebooks(corpus, k=kk, m=m)
-                    codes = pin_codes(corpus, books)
-                df = pq_rerank_topk(
-                    corpus, k=k, shortlist=max(20, 10 * k),
-                    books=books, codes=codes, query_pred=pred,
-                )
-            else:
-                if args.index:
-                    cent = spark.table(f"{args.index}_cent")
-                    cells = spark.table(f"{args.index}_cells")
-                else:
-                    n_corpus = corpus.count()
-                    cells_n = auto_ivf_cells(n_corpus)
-                    cent = train_centroids(
-                        corpus, k=cells_n
-                    ).localCheckpoint()
-                    if not cent.take(1):
-                        raise SystemExit(
-                            "-op ann: IVF centroid training produced no "
-                            f"seeds (corpus rows: {n_corpus}); check "
-                            "-left/-id-col"
-                        )
-                    cells = kmeans_assignments(corpus, cent=cent).select(
-                        "vec_id", "cid"
-                    ).localCheckpoint()
-                if args.nprobe > 1:
-                    # recall/latency knob: scan the nprobe nearest cells
-                    df = ivf_multiprobe_topk(
-                        corpus, k=k, nprobe=args.nprobe,
-                        cent=cent, cells=cells, query_pred=pred,
-                    )
-                else:
-                    df = ivf_trained_topk(
-                        corpus, k=k, cent=cent, cells=cells,
-                        query_pred=pred,
-                    )
-        elif args.op == "quantize":
-            # symmetric int8 quantization stats per vector — the 4x
-            # memory-reduction pre-pass of a vector corpus (exact
-            # integer error metric; see int8_quantize_stats)
-            from ds_jedai_spark.operators.similarity import (
-                int8_quantize_stats,
-            )
-
-            if not args.left:
-                print("-op quantize needs -left parquet path",
-                      file=sys.stderr)
-                return 2
-            df = int8_quantize_stats(_emb_frame(_read(args.left, ()), args))
-        elif args.op == "shuffle":
-            from ds_jedai_spark.operators.textops import (
-                SHUFFLE_SHARDS,
-                corpus_shuffle_positions,
-            )
-
-            if not args.left:
-                print("-op shuffle needs -left parquet path", file=sys.stderr)
-                return 2
-            d0 = _guard_rename(_read(args.left, ()), args.id_col, "doc_id")
-            df = corpus_shuffle_positions(
-                d0.select("doc_id"),
-                shards=args.shards or SHUFFLE_SHARDS,
-            )
-        elif args.op == "chunk":
-            from ds_jedai_spark.operators.textops import chunk_documents
-
-            if not args.left:
-                print("-op chunk needs -left parquet path", file=sys.stderr)
-                return 2
-            # _docs_frame: honor -id-col/-text-col and give the guided
-            # missing/colliding-column errors (chunk previously read the
-            # raw frame and ignored both flags)
-            df = chunk_documents(
-                _docs_frame(_read(args.left, ()), args),
-                chunk_tokens=args.chunk_tokens,
-                overlap=args.overlap,
-            )
-        elif args.op in ("dupspans", "scrub"):
-            from ds_jedai_spark.operators.textops import (
-                duplicated_spans,
-                scrubbed_corpus,
-            )
-
-            if not args.left:
-                print(f"-op {args.op} needs -left parquet path",
-                      file=sys.stderr)
-                return 2
-            d0 = _docs_frame(_read(args.left, ()), args)
-            if args.op == "dupspans":
-                df = duplicated_spans(d0, k=args.span_words)
-            else:
-                df = scrubbed_corpus(d0, k=args.span_words)
-        elif args.op == "er":
-            from ds_jedai_spark.operators import blocking
-
-            if not args.left:
-                print("-op er needs -left parquet path", file=sys.stderr)
-                return 2
-            if args.blocker == "snb":
-                w = (args.window if args.window is not None
-                     else blocking.SNB_WINDOW)
-                if args.right:
-                    df = blocking.sorted_neighborhood_cross(
-                        _docs_frame(_read(args.left, ()), args),
-                        _docs_frame(_read(args.right, ()), args),
-                        window=w,
-                    )
-                else:
-                    df = blocking.sorted_neighborhood(
-                        _docs_frame(_read(args.left, ()), args), window=w
-                    )
-            else:
-                fr = None
-                if args.filter_ratio:
-                    try:
-                        pn, qn = args.filter_ratio.split("/")
-                        fr = (int(pn), int(qn))
-                    except ValueError:
-                        print(f"-filter-ratio expects p/q (e.g. 4/5), "
-                              f"got {args.filter_ratio!r}", file=sys.stderr)
-                        return 2
-                mb = (args.max_block if args.max_block is not None
-                      else blocking.PURGE_MAX)
-                if args.right:
-                    # clean-clean: candidates only ACROSS -left/-right
-                    # (ids must be disjoint between the two datasets)
-                    df = blocking.er_pairs_cross(
-                        _docs_frame(_read(args.left, ()), args),
-                        _docs_frame(_read(args.right, ()), args),
-                        prune=args.prune, max_block=mb, k=args.er_k,
-                        filter_ratio=fr,
-                    )
-                else:
-                    df = blocking.er_pairs(
-                        _docs_frame(_read(args.left, ()), args),
-                        prune=args.prune, max_block=mb, k=args.er_k,
-                        filter_ratio=fr,
-                    )
-            if args.cluster:
-                # end-to-end ER output: candidate pairs -> connected
-                # components (star contraction) -> entity clusters
-                from pyspark.sql import functions as F
-
-                from ds_jedai_spark.operators.clustering import (
-                    connected_components_star,
-                )
-
-                df = connected_components_star(
-                    df.select("d1", "d2")
-                ).select(
-                    F.col("node").alias("doc_id"),
-                    F.col("label").alias("cluster_id"),
-                )
-        elif args.op == "zorder":
-            # Rewrite any reader-supported dataset as z-ordered parquet
-            # (Morton-key layout over the envelope centers) so later
-            # -bbox scans prune files/row groups instead of reading the
-            # corpus — io/layout.py.
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.io import layout
-            from pyspark.sql import functions as F
-
-            if not args.left or not args.out:
-                print("-op zorder needs -left (dataset) and -out "
-                      "(directory for the z-ordered parquet copy)",
-                      file=sys.stderr)
-                return 2
-            src = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=args.date_col,
-            ), bbox=args.bbox)
-            ext = src.agg(
-                F.min("minx"), F.min("miny"), F.max("maxx"), F.max("maxy")
-            ).first()
-            if ext[0] is None:
-                print("-op zorder: empty input", file=sys.stderr)
-                return 2
-            pad = 1e-9  # keep the max corner inside the half-open domain
-            zf = layout.zorder_frame(
-                src.withColumn("__cx", (F.col("minx") + F.col("maxx")) / 2)
-                .withColumn("__cy", (F.col("miny") + F.col("maxy")) / 2),
-                x_col="__cx", y_col="__cy",
-                bounds=(float(ext[0]), float(ext[1]),
-                        float(ext[2]) + pad, float(ext[3]) + pad),
-                files=args.files,
-            ).drop("__cx", "__cy")
-            zf.write.mode("overwrite").parquet(args.out)
-            n = spark.read.parquet(args.out).count()
-            print(f"z-ordered {n} rows -> {args.out}")
-            print(f"TOTAL TIME: {time.perf_counter() - t0:.2f}s")
-            return 0
-        elif args.op == "zonal":
-            # Zonal statistics: per-zone point count (+ -value-col sum)
-            # through tile join + exact relate + rollup.
-            from ds_jedai_spark import api
-            from ds_jedai_spark.config import DatasetSpec
-            from ds_jedai_spark.operators.spatial_agg import zonal_stats
-
-            if not args.left or not args.right:
-                print("-op zonal needs -left (zones) and -right (points)",
-                      file=sys.stderr)
-                return 2
-            zones = api.read_dataset(spark, DatasetSpec(
-                path=args.left, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=None,
-            ), bbox=args.bbox)
-            pts = api.read_dataset(spark, DatasetSpec(
-                path=args.right, id_field=args.id_col,
-                geom_field=args.geom_col, date_field=None,
-            ), bbox=args.bbox)
-            df = zonal_stats(
-                zones, pts, value_col=args.value_col
-            ).orderBy("zone_id")
-        elif args.op == "validate":
-            # Declarative expectation checks (operators/validate.py):
-            # one aggregate pass, exact violation counts per rule.
-            from ds_jedai_spark.operators.validate import validate
-
-            if not args.left or not args.rules:
-                print("-op validate needs -left parquet and -rules "
-                      "'name:predicate;name2:predicate2'",
-                      file=sys.stderr)
-                return 2
-            rules = {}
-            for part in args.rules.split(";"):
-                name, sep, pred = part.partition(":")
-                if not sep or not name.strip() or not pred.strip():
-                    print(f"bad -rules entry {part!r}; expected "
-                          f"name:predicate", file=sys.stderr)
-                    return 2
-                rules[name.strip()] = pred.strip()
-            df = validate(_read(args.left, ()), rules)
-        elif args.op == "profile":
-            # Per-column discovery profile (nulls / distinct / extrema)
-            # — operators/validate.profile; one aggregate pass.
-            from ds_jedai_spark.operators.validate import profile
-
-            if not args.left:
-                print("-op profile needs -left parquet path",
-                      file=sys.stderr)
-                return 2
-            src = _read(args.left, ())
-            cols = args.cols.split(",") if args.cols else None
-            df = profile(src, cols).orderBy("column")
-        elif args.op == "quantiles":
-            # Exact distributed quantiles (type-1 rank selection,
-            # integer rank arithmetic) — operators/ranking.py; -by
-            # switches to the per-group window variant.
-            from ds_jedai_spark.operators.ranking import (
-                exact_quantiles,
-                exact_quantiles_by,
-            )
-
-            if not args.left or not args.value_col:
-                print("-op quantiles needs -left parquet and -value-col",
-                      file=sys.stderr)
-                return 2
-            try:
-                ps = tuple(int(p) for p in args.permille.split(","))
-            except ValueError:
-                print(f"-permille expects comma-separated integers, got "
-                      f"{args.permille!r}", file=sys.stderr)
-                return 2
-            src = _read(args.left, ())
-            if args.by:
-                df = exact_quantiles_by(src, args.value_col, args.by, ps)
-                df = df.orderBy(args.by, "permille")
-            else:
-                df = exact_quantiles(src, args.value_col, ps)
-                df = df.orderBy("permille")
-        elif args.op == "editdist":
-            from ds_jedai_spark.operators import dedup as dd
-
-            if not args.left:
-                print("-op editdist needs -left parquet path",
-                      file=sys.stderr)
-                return 2
-            df = dd.edit_distance_pairs(
-                _docs_frame(_read(args.left, ()), args), d=args.edit_d
-            )
-        else:
-            print(f"unknown op {args.op!r}", file=sys.stderr)
-            return 2
-        return _print_or_write(df, args.out, args.limit, t0)
+        df = op.body(spark, args)
+        if df is not None:
+            _print_or_write(df, args.out, args.limit)
+        print(f"TOTAL TIME: {time.perf_counter() - t0:.2f}s")
+        return 0
+    except (_Usage, ConfigError) as e:
+        print(f"-op {args.op}: {e}", file=sys.stderr)
+        return 2
     finally:
         spark.stop()
 
 
-def main(argv: list[str] | None = None) -> int:
+def build_parser() -> argparse.ArgumentParser:
     ap = argparse.ArgumentParser(prog="ds_jedai_spark")
     ap.add_argument("-conf", default=None, help="YAML configuration file")
     ap.add_argument("-export", default=None, help="override exportPath")
@@ -1232,14 +1004,10 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument(
         "-op",
         default=None,
-        choices=["relate", "convert", "perturb", "reproject",
-                 "measures", "density", "dbscan", "geohash", "hull",
-                 "knn", "distance", "asof", "interval",
-                 "chunk", "dedup", "dedup-build", "dedup-apply", "emb-dedup",
-                 "ann", "ann-build", "quantize", "shuffle", "dupspans",
-                 "scrub", "er", "editdist", "zorder", "quantiles",
-                 "validate", "profile", "zonal"],
-        help="run a temporal/pipeline operator on user parquet",
+        choices=list(OPS),
+        help="run one operator on user data: the spatial ops "
+             f"({'/'.join(BBOX_OPS)}) read any supported geometry "
+             "dataset, the others read parquet",
     )
     ap.add_argument("-index", default=None,
                     help="persisted-index name: -op ann-build/-op ann use "
@@ -1249,10 +1017,10 @@ def main(argv: list[str] | None = None) -> int:
                          "<prefix>_bands")
     ap.add_argument("-bbox", default=None,
                     help="spatial subset 'minx,miny,maxx,maxy' applied "
-                         "to the inputs of relate/convert/perturb/"
-                         "reproject/knn/distance — pushed into the scan "
-                         "(FlatGeobuf R-tree skip, parquet row-group "
-                         "stats); envelope-intersection semantics")
+                         f"to the inputs of {'/'.join(BBOX_OPS)} — pushed "
+                         "into the scan (FlatGeobuf R-tree skip, parquet "
+                         "row-group stats); envelope-intersection "
+                         "semantics")
     ap.add_argument("-cell", type=float, default=1.0,
                     help="density: grid cell size in CRS units")
     ap.add_argument("-by", default=None,
@@ -1364,7 +1132,8 @@ def main(argv: list[str] | None = None) -> int:
                     help="ann (ivf): probe the N nearest cells per query "
                          "(recall/latency knob; 1 = single-cell)")
     ap.add_argument("-n-queries", dest="n_queries", type=int, default=10,
-                    help="ann (brute): query ids are vec_id < N")
+                    help="ann: query the N smallest vec_ids present in "
+                         "the corpus (every -method)")
     ap.add_argument("-method", default="ivf",
                     choices=["brute", "ivf", "pq"],
                     help="ann: exact brute force, auto-sized trained IVF, "
@@ -1412,8 +1181,8 @@ def main(argv: list[str] | None = None) -> int:
                          "reference's spatio-temporal qualifier "
                          "(|days between| < 2)")
     ap.add_argument("-id-col", dest="id_col", default=None,
-                    help="id column name in the input (default: doc_id "
-                         "for dedup/text ops, id for relate)")
+                    help="id column name in the input (default: id for "
+                         "the spatial ops, doc_id for the others)")
     ap.add_argument("-text-col", dest="text_col", default="text",
                     help="dedup: text column name in the input parquet")
     ap.add_argument("-left", default=None, help="left/input parquet path (-op)")
@@ -1447,10 +1216,19 @@ def main(argv: list[str] | None = None) -> int:
                     help="chunk: overlapping tokens between windows")
     ap.add_argument("-out", default=None,
                     help="write the result as parquet instead of printing")
+    return ap
+
+
+def main(argv: list[str] | None = None) -> int:
+    ap = build_parser()
     args = ap.parse_args(argv)
 
     if args.op is not None:
         if args.bbox is not None:
+            if not OPS[args.op].spatial:
+                print(f"-bbox applies only to -op {'/'.join(BBOX_OPS)}",
+                      file=sys.stderr)
+                return 2
             try:
                 vals = tuple(float(v) for v in args.bbox.split(","))
                 if len(vals) != 4 or vals[0] > vals[2] or vals[1] > vals[3]:
@@ -1461,14 +1239,7 @@ def main(argv: list[str] | None = None) -> int:
                 return 2
             args.bbox = vals
         if args.id_col is None:
-            args.id_col = ("id" if args.op in ("relate", "convert",
-                                               "perturb", "reproject",
-                                               "measures", "density",
-                                               "dbscan", "geohash",
-                                               "hull", "knn",
-                                               "distance", "zorder",
-                                               "zonal")
-                           else "doc_id")
+            args.id_col = "id" if OPS[args.op].spatial else "doc_id"
         if args.bucket_us == "none":
             args.bucket_us = None
         if args.chunk_tokens is None:
@@ -1487,7 +1258,11 @@ def main(argv: list[str] | None = None) -> int:
     from ds_jedai_spark.config import load_config
     from ds_jedai_spark.session import get_spark
 
-    cfg = load_config(args.conf)
+    try:
+        cfg = load_config(args.conf)
+    except ConfigError as e:
+        print(f"-conf {args.conf}: {e}", file=sys.stderr)
+        return 2
     if args.export:
         cfg.export_path = args.export
     if args.budget:

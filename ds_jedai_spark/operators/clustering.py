@@ -230,7 +230,7 @@ def dbscan(
 
     from pyspark.sql import Window
 
-    from ds_jedai_spark.pins import fresh_stats_checkpoint
+    from ds_jedai_spark.pins import fresh_stats_checkpoint, pin
 
     # symmetric eps-neighbor pairs, self-pairs included. The pin carries
     # each source's DEGREE (one window pass inside the pin job, r18):
@@ -243,12 +243,11 @@ def dbscan(
         nbr = geodesic_distance_join(points, points, eps, theta)
     else:
         nbr = distance_join(points, points, eps, theta)
-    nbr = (
+    nbr = pin(
         nbr.select("s_id", "t_id")
         .withColumn(
             "ns", F.count(F.lit(1)).over(Window.partitionBy("s_id"))
         )
-        .localCheckpoint()
     )
     core = F.col("ns") >= int(min_pts)
 

@@ -347,8 +347,7 @@ def duplicate_clusters(
     # and the singleton-preserving node set below read it, and the
     # upstream discovery plan (an LSH collision join, typically) must
     # not execute twice
-    e = pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b")) \
-        .localCheckpoint()
+    e = pin(pairs.select(F.col(id1).alias("a"), F.col(id2).alias("b")))
     # star_forest's (b -> a) map labels every LEAF; star centers and
     # nodes seen ONLY in self-pairs coalesce to their own id below —
     # the historical contract, minus the wrapper's redundant centers

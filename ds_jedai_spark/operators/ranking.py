@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ds_jedai_spark.pins import pin
+
 
 def shuffle_parts(df: DataFrame) -> int:
     """spark.sql.shuffle.partitions, tolerating non-numeric settings such
@@ -55,7 +57,7 @@ def global_rank(df: DataFrame, *, asc_cols: list[str]) -> DataFrame:
     """Append ``rank`` = row_number() OVER (ORDER BY asc_cols), computed
     distributedly. Requires the sort key to be unique per row (ties would
     otherwise rank nondeterministically across runs)."""
-    local = ranked_local(df, asc_cols).localCheckpoint()
+    local = pin(ranked_local(df, asc_cols))
     counts = sorted(
         (r["part"], r["cnt"])
         for r in local.groupBy("part").agg(F.count(F.lit(1)).alias("cnt")).collect()
@@ -107,7 +109,7 @@ def exact_quantiles(
     # built driver-side from it — the former count(*) aggregate (a
     # second full scan of ``df``) and its crossJoin broadcast subtree
     # fold away. Same integer type-1 rank arithmetic, identical rows.
-    local = ranked_local(df.select(*dict.fromkeys(asc)), asc).localCheckpoint()
+    local = pin(ranked_local(df.select(*dict.fromkeys(asc)), asc))
     counts = sorted(
         (r["part"], r["cnt"])
         for r in local.groupBy("part").agg(F.count(F.lit(1)).alias("cnt")).collect()

@@ -813,9 +813,9 @@ def pq_recall(
     # oracle-replayed setting; deployments scale it with k (measured at
     # sf0.1: 20 -> 0.56 rerank recall, 50 -> 0.78 — see the
     # pq_auto_recall soak in bench_scale.py).
-    short_scored = pq_adc_topk(
+    short_scored = pin(pq_adc_topk(
         emb, n_queries, shortlist, books=books, codes=codes
-    ).localCheckpoint()
+    ))
     w = Window.partitionBy("qid").orderBy(F.desc("cos"), "vid")
     adc = (
         short_scored.withColumn("rn", F.row_number().over(w))

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ds_jedai_spark.model.tiles import compute_theta, with_tiles
+from ds_jedai_spark.pins import pin
 
 
 def _prefix(df: DataFrame, p: str, extra: tuple[str, ...] = ()) -> DataFrame:
@@ -364,7 +365,7 @@ def knn_join_exact_geodesic(
         # round for two extra int columns in the checkpoint.
         w = Window.partitionBy("s_id").orderBy("dist_mm", "t_id")
         wc = Window.partitionBy("s_id")
-        ranked = (
+        ranked = pin(
             cand.withColumn("rn", F.row_number().over(w))
             .withColumn(
                 "nc",
@@ -373,7 +374,6 @@ def knn_join_exact_geodesic(
                     .otherwise(0)
                 ).over(wc),
             )
-            .localCheckpoint()
         )
         if r >= rmax_m:
             # terminal radius exceeds any possible great-circle
@@ -485,10 +485,9 @@ def knn_join_exact(
         # per round for two extra int columns in the checkpoint.
         w = Window.partitionBy("s_id").orderBy("dist2", "t_id")
         wc = Window.partitionBy("s_id")
-        ranked = (
+        ranked = pin(
             cand.withColumn("rn", F.row_number().over(w))
             .withColumn("nc", F.count(F.lit(1)).over(wc))
-            .localCheckpoint()
         )
         if r >= rmax:
             rounds.append(

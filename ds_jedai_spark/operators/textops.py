@@ -25,6 +25,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from ds_jedai_spark.pins import pin
+
 # Derived corpus with injected duplicates so dedup operators have signal:
 # originals + exact copies (doc_id%7==0, +1M ids) + 3/4-length truncated
 # near-copies (doc_id%11==0, +2M ids). Dialect-neutral SQL (runs verbatim
@@ -486,7 +488,7 @@ def contamination(
     # The train gram table feeds BOTH the totals and the hit branch;
     # pin it so the explode+distinct runs once (same cache-miss pitfall
     # as the LSH shingle table, pins.pin).
-    tg = shingles(train, n).localCheckpoint()
+    tg = pin(shingles(train, n))
     bg = shingles(bench, n).select("shingle").distinct()
     totals = tg.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_grams"))
     hits = (

@@ -27,6 +27,7 @@ from ds_jedai_spark.operators import progressive as prog
 from ds_jedai_spark.operators.relate import with_relations
 from ds_jedai_spark.operators.spatial_join import tile_join
 from ds_jedai_spark.operators.weights import weight_exprs
+from ds_jedai_spark.pins import pin
 from ds_jedai_spark.plans.giant import _pairs_cte
 
 THETA = (1.0, 1.0)
@@ -221,7 +222,7 @@ def progressive_eval_js_overlaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Eager localCheckpoint, not persist(): the totals aggregate and the
     # schedule both re-consume cand, and cache substitution misses
     # self-referential consumers (see pins.pin).
-    cand = with_relations(_cand(spark, sf_dir)).localCheckpoint()
+    cand = pin(with_relations(_cand(spark, sf_dir)))
     totals = cand.agg(
         F.sum(F.col("r_overlaps").cast("long")).alias("total_qp")
     )

@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from ds_jedai_spark.io.synthetic import load_sql, point_sql, source_box_sql
+from ds_jedai_spark.pins import pin
 from ds_jedai_spark.streaming import geostream as gs
 
 THETA = (1.0, 1.0)
@@ -183,7 +184,7 @@ def stream_idempotent_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     captured: dict[int, DataFrame] = {}
 
     def on_batch(df: DataFrame, bid: int) -> None:
-        df = df.localCheckpoint()
+        df = pin(df)
         captured[int(bid)] = df
         gs._batch_sink(df, bid, "stream_idem_tbl", idempotent=True)
 

@@ -133,3 +133,16 @@ def spark():
     s = get_spark("ds_jedai_spark_tests")
     yield s
     s.stop()
+
+
+@pytest.fixture
+def cli_main(spark, monkeypatch):
+    """``cli.main`` running on the session-wide test Spark: the CLI's
+    ``get_spark`` returns it and its ``stop`` is a no-op, so one session
+    serves every CLI call of the test."""
+    import ds_jedai_spark.session as session
+    from ds_jedai_spark import cli
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(spark, "stop", lambda: None)
+    return cli.main

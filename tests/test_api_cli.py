@@ -182,14 +182,9 @@ def test_cli_pipeline_list_and_unknown(capsys):
     assert cli.main(["-pipeline", "nope_such_query"]) == 2
 
 
-def test_cli_op_surface(spark, tmp_path, capsys, monkeypatch):
+def test_cli_op_surface(spark, tmp_path, capsys, cli_main):
     """-op asof/interval/chunk e2e: user parquet in, user-chosen knobs,
     parquet out — the temporal/pipeline operators from the shell."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     ev = str(tmp_path / "ev.parquet")
     from ds_jedai_spark.io.synthetic import register_views
@@ -199,7 +194,7 @@ def test_cli_op_surface(spark, tmp_path, capsys, monkeypatch):
 
     # as-of with a tolerance + nearest direction, written to parquet
     out = str(tmp_path / "asof_out.parquet")
-    rc = cli.main([
+    rc = cli_main([
         "-op", "asof", "-left", ev, "-right", ev,
         "-key", "user_id", "-ts", "ts",
         "-right-attrs", "event_type,value",
@@ -214,7 +209,7 @@ def test_cli_op_surface(spark, tmp_path, capsys, monkeypatch):
     assert back.where(F.col("asof_ts") == F.col("ts")).count() == back.count()
 
     # interval join with colliding right columns (CLI auto-prefixes)
-    rc = cli.main([
+    rc = cli_main([
         "-op", "interval", "-left", ev, "-right", ev,
         "-ts", "ts", "-right-start", "ts", "-right-end", "ts",
         "-keys", "user_id=user_id", "-how", "inner",
@@ -232,7 +227,7 @@ def test_cli_op_surface(spark, tmp_path, capsys, monkeypatch):
     spark.read.parquet("/root/testdata/sf0.001/documents.parquet").write.mode(
         "overwrite"
     ).parquet(docs)
-    rc = cli.main([
+    rc = cli_main([
         "-op", "chunk", "-left", docs,
         "-chunk-tokens", "16", "-overlap", "4", "-limit", "2",
     ])
@@ -245,27 +240,22 @@ def test_cli_op_surface(spark, tmp_path, capsys, monkeypatch):
     spark.read.parquet(docs).selectExpr(
         "doc_id AS my_id", "text AS body"
     ).write.mode("overwrite").parquet(docs2)
-    rc = cli.main([
+    rc = cli_main([
         "-op", "chunk", "-left", docs2, "-id-col", "my_id",
         "-text-col", "body", "-chunk-tokens", "16", "-limit", "2",
     ])
     assert rc == 0
     assert "doc_id\tchunk_id" in capsys.readouterr().out
     with pytest.raises(SystemExit, match="not found in input"):
-        cli.main(["-op", "chunk", "-left", docs2, "-limit", "1"])
+        cli_main(["-op", "chunk", "-left", docs2, "-limit", "1"])
 
     # bad usage: missing -right
-    assert cli.main(["-op", "asof", "-left", ev]) == 2
+    assert cli_main(["-op", "asof", "-left", ev]) == 2
 
 
-def test_cli_op_dedup_surface(spark, tmp_path, monkeypatch):
+def test_cli_op_dedup_surface(spark, tmp_path, cli_main):
     """-op dedup / emb-dedup on user parquet: self and incremental
     (batch-vs-corpus) forms, custom column names, threshold knob."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     renamed = str(tmp_path / "mydocs.parquet")
@@ -273,7 +263,7 @@ def test_cli_op_dedup_surface(spark, tmp_path, monkeypatch):
         F.col("doc_id").alias("id"), F.col("text").alias("body"), "source"
     ).write.mode("overwrite").parquet(renamed)
     out = str(tmp_path / "pairs.parquet")
-    rc = cli.main([
+    rc = cli_main([
         "-op", "dedup", "-left", renamed,
         "-id-col", "id", "-text-col", "body", "-tau", "0.8",
         "-out", out,
@@ -289,7 +279,7 @@ def test_cli_op_dedup_surface(spark, tmp_path, monkeypatch):
     docs.where("doc_id % 2 = 0").write.mode("overwrite").parquet(even)
     docs.where("doc_id % 2 = 1").write.mode("overwrite").parquet(odd)
     out2 = str(tmp_path / "cross.parquet")
-    rc = cli.main(["-op", "dedup", "-left", even, "-right", odd,
+    rc = cli_main(["-op", "dedup", "-left", even, "-right", odd,
                    "-out", out2])
     assert rc == 0
     cross = spark.read.parquet(out2)
@@ -302,7 +292,7 @@ def test_cli_op_dedup_surface(spark, tmp_path, monkeypatch):
         "/root/testdata/sf0.001/embeddings.parquet"
     ).write.mode("overwrite").parquet(emb)
     out3 = str(tmp_path / "embpairs.parquet")
-    rc = cli.main(["-op", "emb-dedup", "-left", emb, "-tau", "0.4",
+    rc = cli_main(["-op", "emb-dedup", "-left", emb, "-tau", "0.4",
                    "-out", out3])
     assert rc == 0
     ep = spark.read.parquet(out3)
@@ -311,20 +301,14 @@ def test_cli_op_dedup_surface(spark, tmp_path, monkeypatch):
     assert ep.where(F.col("cos") < 0.4).count() == 0
 
 
-def test_cli_op_ann(spark, tmp_path, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_ann(spark, tmp_path, cli_main):
     emb = str(tmp_path / "emb.parquet")
     spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).write.mode("overwrite").parquet(emb)
 
     out = str(tmp_path / "brute.parquet")
-    assert cli.main(["-op", "ann", "-left", emb, "-method", "brute",
+    assert cli_main(["-op", "ann", "-left", emb, "-method", "brute",
                      "-k", "4", "-n-queries", "6", "-out", out]) == 0
     res = spark.read.parquet(out)
     assert set(res.columns) == {"qid", "vid", "cos"}
@@ -333,23 +317,18 @@ def test_cli_op_ann(spark, tmp_path, monkeypatch):
     assert set(counts) == set(range(6)) and all(v == 4 for v in counts.values())
 
     out2 = str(tmp_path / "ivf.parquet")
-    assert cli.main(["-op", "ann", "-left", emb, "-method", "ivf",
+    assert cli_main(["-op", "ann", "-left", emb, "-method", "ivf",
                      "-k", "3", "-out", out2]) == 0
     res2 = spark.read.parquet(out2)
     assert res2.count() > 0
     assert res2.groupBy("qid").count().agg(F.max("count")).first()[0] <= 3
 
 
-def test_cli_op_ann_offset_ids(spark, tmp_path, monkeypatch):
+def test_cli_op_ann_offset_ids(spark, tmp_path, cli_main):
     """-op ann on user parquet whose vec_ids are OFFSET (no id < n
     exists): both methods must return the full top-k for the n smallest
     ids actually present — the silent 'wrote 0 rows' failure mode of the
     literal vec_id < n query predicate."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     base = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     emb = str(tmp_path / "emb_off.parquet")
@@ -361,7 +340,7 @@ def test_cli_op_ann_offset_ids(spark, tmp_path, monkeypatch):
                 .orderBy("vec_id").limit(6).collect()]
 
     out = str(tmp_path / "brute_off.parquet")
-    assert cli.main(["-op", "ann", "-left", emb, "-method", "brute",
+    assert cli_main(["-op", "ann", "-left", emb, "-method", "brute",
                      "-k", "4", "-n-queries", "6", "-out", out]) == 0
     res = spark.read.parquet(out)
     counts = {r["qid"]: r["n"] for r in
@@ -370,7 +349,7 @@ def test_cli_op_ann_offset_ids(spark, tmp_path, monkeypatch):
     assert all(v == 4 for v in counts.values())
 
     out2 = str(tmp_path / "ivf_off.parquet")
-    assert cli.main(["-op", "ann", "-left", emb, "-method", "ivf",
+    assert cli_main(["-op", "ann", "-left", emb, "-method", "ivf",
                      "-k", "3", "-n-queries", "6", "-out", out2]) == 0
     res2 = spark.read.parquet(out2)
     assert res2.count() > 0
@@ -379,7 +358,7 @@ def test_cli_op_ann_offset_ids(spark, tmp_path, monkeypatch):
     assert res2.groupBy("qid").count().agg(F.max("count")).first()[0] <= 3
 
     out3 = str(tmp_path / "pq_off.parquet")
-    assert cli.main(["-op", "ann", "-left", emb, "-method", "pq",
+    assert cli_main(["-op", "ann", "-left", emb, "-method", "pq",
                      "-k", "3", "-n-queries", "6", "-out", out3]) == 0
     res3 = spark.read.parquet(out3)
     assert res3.count() > 0
@@ -388,14 +367,9 @@ def test_cli_op_ann_offset_ids(spark, tmp_path, monkeypatch):
     assert res3.groupBy("qid").count().agg(F.max("count")).first()[0] <= 3
 
 
-def test_cli_op_ann_empty_corpus_raises(spark, tmp_path, monkeypatch):
+def test_cli_op_ann_empty_corpus_raises(spark, tmp_path, cli_main):
     """Pathological input (zero vectors) errors loudly instead of
     training fine and writing 0 rows."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     empty = str(tmp_path / "empty.parquet")
     spark.read.parquet(
@@ -403,23 +377,17 @@ def test_cli_op_ann_empty_corpus_raises(spark, tmp_path, monkeypatch):
     ).where("vec_id < 0").write.mode("overwrite").parquet(empty)
     for method in ("brute", "ivf"):
         with pytest.raises(SystemExit, match="no vectors"):
-            cli.main(["-op", "ann", "-left", empty, "-method", method,
+            cli_main(["-op", "ann", "-left", empty, "-method", method,
                       "-out", str(tmp_path / "nope.parquet")])
 
 
-def test_cli_op_shuffle(spark, tmp_path, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_shuffle(spark, tmp_path, cli_main):
     docs = str(tmp_path / "d.parquet")
     spark.range(100).select(F.col("id").alias("my_id")).write.mode(
         "overwrite"
     ).parquet(docs)
     out = str(tmp_path / "shuffled.parquet")
-    assert cli.main(["-op", "shuffle", "-left", docs, "-id-col", "my_id",
+    assert cli_main(["-op", "shuffle", "-left", docs, "-id-col", "my_id",
                      "-shards", "4", "-out", out]) == 0
     res = spark.read.parquet(out)
     assert res.count() == 100
@@ -435,23 +403,18 @@ def test_cli_op_shuffle(spark, tmp_path, monkeypatch):
         assert r["mn"] == 1 and r["mx"] == r["n"]
 
 
-def test_cli_op_shuffle_guard(spark, tmp_path, monkeypatch):
+def test_cli_op_shuffle_guard(spark, tmp_path, cli_main):
     """-op shuffle routes through _guard_rename: a pre-existing doc_id
     column alongside -id-col refuses with guidance (not a silent
     duplicate column), and a missing default doc_id gives the guided
     error instead of a raw AnalysisException."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     clash = str(tmp_path / "clash.parquet")
     spark.range(10).select(
         F.col("id").alias("my_id"), (F.col("id") * 2).alias("doc_id")
     ).write.mode("overwrite").parquet(clash)
     with pytest.raises(SystemExit, match="already has a 'doc_id'"):
-        cli.main(["-op", "shuffle", "-left", clash, "-id-col", "my_id",
+        cli_main(["-op", "shuffle", "-left", clash, "-id-col", "my_id",
                   "-out", str(tmp_path / "no1.parquet")])
 
     noid = str(tmp_path / "noid.parquet")
@@ -459,19 +422,14 @@ def test_cli_op_shuffle_guard(spark, tmp_path, monkeypatch):
         "overwrite"
     ).parquet(noid)
     with pytest.raises(SystemExit, match="not found in input"):
-        cli.main(["-op", "shuffle", "-left", noid,
+        cli_main(["-op", "shuffle", "-left", noid,
                   "-out", str(tmp_path / "no2.parquet")])
 
 
-def test_cli_op_dupspans_and_scrub(spark, tmp_path, monkeypatch):
+def test_cli_op_dupspans_and_scrub(spark, tmp_path, cli_main):
     """-op dupspans finds redundant duplicated runs on user parquet with
     custom column names; -op scrub emits the keep-first-scrubbed corpus
     (doc_id, text) with the redundant copies gone."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     boiler = "q w e r t y u i"
     docs = str(tmp_path / "docs.parquet")
@@ -482,14 +440,14 @@ def test_cli_op_dupspans_and_scrub(spark, tmp_path, monkeypatch):
     ).write.mode("overwrite").parquet(docs)
 
     out = str(tmp_path / "spans.parquet")
-    assert cli.main(["-op", "dupspans", "-left", docs,
+    assert cli_main(["-op", "dupspans", "-left", docs,
                      "-id-col", "id", "-text-col", "body",
                      "-out", out]) == 0
     spans = spark.read.parquet(out)
     assert [tuple(r) for r in spans.collect()] == [(2, 3, 10, 1)]
 
     out2 = str(tmp_path / "clean.parquet")
-    assert cli.main(["-op", "scrub", "-left", docs,
+    assert cli_main(["-op", "scrub", "-left", docs,
                      "-id-col", "id", "-text-col", "body",
                      "-out", out2]) == 0
     clean = {r["doc_id"]: r["text"]
@@ -500,23 +458,18 @@ def test_cli_op_dupspans_and_scrub(spark, tmp_path, monkeypatch):
 
     # shorter runs dedup'd once -span-words drops below the run length
     out3 = str(tmp_path / "spans5.parquet")
-    assert cli.main(["-op", "dupspans", "-left", docs,
+    assert cli_main(["-op", "dupspans", "-left", docs,
                      "-id-col", "id", "-text-col", "body",
                      "-span-words", "5", "-out", out3]) == 0
     s5 = spark.read.parquet(out3)
     assert s5.where("doc_id = 2").count() >= 1
 
 
-def test_cli_ann_build_then_search_index(spark, tmp_path, monkeypatch):
+def test_cli_ann_build_then_search_index(spark, tmp_path, cli_main):
     """-op ann-build persists the full index (IVF cent/cells, PQ
     books/codes, stamped LSH bands) as tables; -op ann -index searches
     against them WITHOUT retraining and matches the inline-training
     results bit for bit (training is deterministic)."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     emb = str(tmp_path / "emb.parquet")
     spark.read.parquet(
@@ -524,7 +477,7 @@ def test_cli_ann_build_then_search_index(spark, tmp_path, monkeypatch):
     ).write.mode("overwrite").parquet(emb)
 
     out_b = str(tmp_path / "build.parquet")
-    assert cli.main(["-op", "ann-build", "-left", emb,
+    assert cli_main(["-op", "ann-build", "-left", emb,
                      "-index", "t_cli_idx", "-out", out_b]) == 0
     summary = spark.read.parquet(out_b).first()
     assert summary["n_vectors"] > 0 and summary["dim"] > 0
@@ -537,31 +490,26 @@ def test_cli_ann_build_then_search_index(spark, tmp_path, monkeypatch):
     for method in ("ivf", "pq"):
         out_i = str(tmp_path / f"{method}_idx.parquet")
         out_n = str(tmp_path / f"{method}_noidx.parquet")
-        assert cli.main(["-op", "ann", "-left", emb, "-method", method,
+        assert cli_main(["-op", "ann", "-left", emb, "-method", method,
                          "-k", "3", "-n-queries", "5",
                          "-index", "t_cli_idx", "-out", out_i]) == 0
-        assert cli.main(["-op", "ann", "-left", emb, "-method", method,
+        assert cli_main(["-op", "ann", "-left", emb, "-method", method,
                          "-k", "3", "-n-queries", "5", "-out", out_n]) == 0
         got = sorted(map(tuple, spark.read.parquet(out_i).collect()))
         want = sorted(map(tuple, spark.read.parquet(out_n).collect()))
         assert got == want and got, method
 
     # brute rejects -index loudly (it has nothing to reuse)
-    assert cli.main(["-op", "ann", "-left", emb, "-method", "brute",
+    assert cli_main(["-op", "ann", "-left", emb, "-method", "brute",
                      "-index", "t_cli_idx",
                      "-out", str(tmp_path / "no.parquet")]) == 2
 
 
-def test_cli_dedup_build_then_incremental(spark, tmp_path, monkeypatch):
+def test_cli_dedup_build_then_incremental(spark, tmp_path, cli_main):
     """-op dedup-build persists the bucketed shingle index; -op dedup
     -index dedups an arriving batch against it without -right and
     matches the inline cross run; -op emb-dedup -index reuses the
     ann-build band table via its parameter stamp."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     even = str(tmp_path / "even.parquet")
@@ -577,16 +525,16 @@ def test_cli_dedup_build_then_incremental(spark, tmp_path, monkeypatch):
     ).write.mode("overwrite").parquet(odd)
 
     out_b = str(tmp_path / "shbuild.parquet")
-    assert cli.main(["-op", "dedup-build", "-left", odd,
+    assert cli_main(["-op", "dedup-build", "-left", odd,
                      "-index", "t_cli_sh", "-out", out_b]) == 0
     assert spark.read.parquet(out_b).first()["n_docs"] > 0
     assert spark.catalog.tableExists("t_cli_sh")
 
     out_i = str(tmp_path / "dd_idx.parquet")
     out_r = str(tmp_path / "dd_right.parquet")
-    assert cli.main(["-op", "dedup", "-left", even, "-index", "t_cli_sh",
+    assert cli_main(["-op", "dedup", "-left", even, "-index", "t_cli_sh",
                      "-tau", "0.5", "-out", out_i]) == 0
-    assert cli.main(["-op", "dedup", "-left", even, "-right", odd,
+    assert cli_main(["-op", "dedup", "-left", even, "-right", odd,
                      "-tau", "0.5", "-out", out_r]) == 0
     got = sorted(map(tuple, spark.read.parquet(out_i).collect()))
     want = sorted(map(tuple, spark.read.parquet(out_r).collect()))
@@ -598,25 +546,20 @@ def test_cli_dedup_build_then_incremental(spark, tmp_path, monkeypatch):
     spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).write.mode("overwrite").parquet(emb)
-    assert cli.main(["-op", "ann-build", "-left", emb,
+    assert cli_main(["-op", "ann-build", "-left", emb,
                      "-index", "t_cli_idx2", "-tau", "0.9",
                      "-out", str(tmp_path / "b2.parquet")]) == 0
     out_e = str(tmp_path / "emb_idx.parquet")
-    assert cli.main(["-op", "emb-dedup", "-left", emb, "-right", emb,
+    assert cli_main(["-op", "emb-dedup", "-left", emb, "-right", emb,
                      "-index", "t_cli_idx2", "-tau", "0.9",
                      "-out", out_e]) == 0
     res = spark.read.parquet(out_e)
     assert set(res.columns) == {"d1", "d2", "cos"}
 
 
-def test_cli_ann_nprobe(spark, tmp_path, monkeypatch):
+def test_cli_ann_nprobe(spark, tmp_path, cli_main):
     """-nprobe widens the IVF scan: every single-cell neighbor set is a
     subset of the nprobe=3 set, and offset ids keep working."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     emb = str(tmp_path / "emb_np.parquet")
     spark.read.parquet(
@@ -627,9 +570,9 @@ def test_cli_ann_nprobe(spark, tmp_path, monkeypatch):
 
     out1 = str(tmp_path / "np1.parquet")
     out3 = str(tmp_path / "np3.parquet")
-    assert cli.main(["-op", "ann", "-left", emb, "-method", "ivf",
+    assert cli_main(["-op", "ann", "-left", emb, "-method", "ivf",
                      "-k", "3", "-n-queries", "5", "-out", out1]) == 0
-    assert cli.main(["-op", "ann", "-left", emb, "-method", "ivf",
+    assert cli_main(["-op", "ann", "-left", emb, "-method", "ivf",
                      "-k", "3", "-n-queries", "5", "-nprobe", "3",
                      "-out", out3]) == 0
     r1 = spark.read.parquet(out1)
@@ -644,16 +587,11 @@ def test_cli_ann_nprobe(spark, tmp_path, monkeypatch):
         assert best3[qid] >= m1
 
 
-def test_cli_dedup_apply(spark, tmp_path, monkeypatch):
+def test_cli_dedup_apply(spark, tmp_path, cli_main):
     """-op dedup-apply writes the deduplicated corpus: near-dup copies
     collapse to one representative, unclustered docs pass through with
     cluster_id = -1, and every surviving clustered doc is its cluster's
     minimum id."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     base = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
@@ -667,7 +605,7 @@ def test_cli_dedup_apply(spark, tmp_path, monkeypatch):
     ).write.mode("overwrite").parquet(docs)
 
     out = str(tmp_path / "surv.parquet")
-    assert cli.main(["-op", "dedup-apply", "-left", docs,
+    assert cli_main(["-op", "dedup-apply", "-left", docs,
                      "-tau", "0.8", "-out", out]) == 0
     surv = spark.read.parquet(out)
     n_in = spark.read.parquet(docs).count()
@@ -682,46 +620,35 @@ def test_cli_dedup_apply(spark, tmp_path, monkeypatch):
     ).count() == 0
 
 
-def test_cli_emb_dedup_self_with_index(spark, tmp_path, monkeypatch):
+def test_cli_emb_dedup_self_with_index(spark, tmp_path, cli_main):
     """-op emb-dedup -index without -right runs the self-dedup over the
     persisted band table and matches the rebuild-bands run (the pin was
     built with auto params over the same corpus, so candidates agree
     whenever the parameters do — here we only pin schema + nonemptiness
     plus the exact-equality case of identical parameters)."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     emb = str(tmp_path / "emb_self.parquet")
     spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).write.mode("overwrite").parquet(emb)
-    assert cli.main(["-op", "ann-build", "-left", emb,
+    assert cli_main(["-op", "ann-build", "-left", emb,
                      "-index", "t_cli_idx3", "-tau", "0.9",
                      "-out", str(tmp_path / "b3.parquet")]) == 0
     out = str(tmp_path / "self_idx.parquet")
-    assert cli.main(["-op", "emb-dedup", "-left", emb,
+    assert cli_main(["-op", "emb-dedup", "-left", emb,
                      "-index", "t_cli_idx3", "-tau", "0.9",
                      "-out", out]) == 0
     res = spark.read.parquet(out)
     assert set(res.columns) == {"d1", "d2", "cos"}
 
 
-def test_cli_op_quantize(spark, tmp_path, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_quantize(spark, tmp_path, cli_main):
     emb = str(tmp_path / "emb_q.parquet")
     spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
     ).write.mode("overwrite").parquet(emb)
     out = str(tmp_path / "q.parquet")
-    assert cli.main(["-op", "quantize", "-left", emb, "-out", out]) == 0
+    assert cli_main(["-op", "quantize", "-left", emb, "-out", out]) == 0
     res = spark.read.parquet(out)
     assert set(res.columns) == {"vec_id", "maxabs", "sse"}
     assert res.count() == spark.read.parquet(emb).count()
@@ -778,15 +705,10 @@ def test_load_balancer_dispatch_routes_and_matches(spark, conf_path):
         assert api.run(spark, forced).first().asDict() == want, mode
 
 
-def test_cli_op_relate(spark, tmp_path, capsys, monkeypatch):
+def test_cli_op_relate(spark, tmp_path, capsys, cli_main):
     """-op relate e2e: the flagship tile join + exact relate on user WKT
     TSVs without a YAML — DE9IM counts row, single-predicate pairs
     (equal to the -conf path), guards, and parquet -out."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     d = tmp_path
     _write_tsv(d / "s.tsv", SOURCE)
@@ -801,7 +723,7 @@ def test_cli_op_relate(spark, tmp_path, capsys, monkeypatch):
         "relation": "DE9IM",
     })
     want = api.run(spark, cfg).first().asDict()
-    rc = cli.main(["-op", "relate", "-left", str(d / "s.tsv"),
+    rc = cli_main(["-op", "relate", "-left", str(d / "s.tsv"),
                    "-right", str(d / "t.tsv")])
     assert rc == 0
     out = capsys.readouterr().out
@@ -810,7 +732,7 @@ def test_cli_op_relate(spark, tmp_path, capsys, monkeypatch):
 
     # single predicate emits qualifying pairs, written to parquet
     pq = str(d / "relate_pairs.parquet")
-    rc = cli.main(["-op", "relate", "-left", str(d / "s.tsv"),
+    rc = cli_main(["-op", "relate", "-left", str(d / "s.tsv"),
                    "-right", str(d / "t.tsv"),
                    "-relation", "intersects", "-out", pq])
     assert rc == 0
@@ -821,21 +743,16 @@ def test_cli_op_relate(spark, tmp_path, capsys, monkeypatch):
     assert got == exp and got
 
     # guards: missing -right, unknown relation
-    assert cli.main(["-op", "relate", "-left", str(d / "s.tsv")]) == 2
-    assert cli.main(["-op", "relate", "-left", str(d / "s.tsv"),
+    assert cli_main(["-op", "relate", "-left", str(d / "s.tsv")]) == 2
+    assert cli_main(["-op", "relate", "-left", str(d / "s.tsv"),
                      "-right", str(d / "t.tsv"),
                      "-relation", "nope"]) == 2
 
 
-def test_cli_op_relate_progressive(spark, tmp_path, capsys, monkeypatch):
+def test_cli_op_relate_progressive(spark, tmp_path, capsys, cli_main):
     """-op relate -algorithm/-budget/-main-wf: the YAML-free path pins
     equal to the -conf route for a static and a stateful progressive
     algorithm, and unknown values are guided errors."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     d = tmp_path
     _write_tsv(d / "s.tsv", SOURCE)
@@ -853,7 +770,7 @@ def test_cli_op_relate_progressive(spark, tmp_path, capsys, monkeypatch):
                                "mainWF": wf},
         })
         want = api.run(spark, cfg).first().asDict()
-        rc = cli.main(["-op", "relate", "-left", str(d / "s.tsv"),
+        rc = cli_main(["-op", "relate", "-left", str(d / "s.tsv"),
                        "-right", str(d / "t.tsv"),
                        "-algorithm", alg.lower(), "-budget", "7",
                        "-main-wf", wf.lower()])
@@ -867,23 +784,18 @@ def test_cli_op_relate_progressive(spark, tmp_path, capsys, monkeypatch):
                                         else got["verifications"])
 
     # guards: unknown algorithm / weighting function
-    assert cli.main(["-op", "relate", "-left", str(d / "s.tsv"),
+    assert cli_main(["-op", "relate", "-left", str(d / "s.tsv"),
                      "-right", str(d / "t.tsv"),
                      "-algorithm", "nope"]) == 2
-    assert cli.main(["-op", "relate", "-left", str(d / "s.tsv"),
+    assert cli_main(["-op", "relate", "-left", str(d / "s.tsv"),
                      "-right", str(d / "t.tsv"),
                      "-main-wf", "nope"]) == 2
 
 
-def test_cli_op_relate_grid_and_entity(spark, tmp_path, capsys, monkeypatch):
+def test_cli_op_relate_grid_and_entity(spark, tmp_path, capsys, cli_main):
     """-grid-type/-partitions/-entity-type on the YAML-free path pin
     equal to the -conf route (KDBTREE partitioned join + decomposed
     fine-envelope pre-filter), and unknown values are guided errors."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     d = tmp_path
     _write_tsv(d / "s.tsv", SOURCE)
@@ -898,7 +810,7 @@ def test_cli_op_relate_grid_and_entity(spark, tmp_path, capsys, monkeypatch):
                            "entityType": "DECOMPOSED_ENTITY"},
     })
     want = api.run(spark, cfg).first().asDict()
-    rc = cli.main(["-op", "relate", "-left", str(d / "s.tsv"),
+    rc = cli_main(["-op", "relate", "-left", str(d / "s.tsv"),
                    "-right", str(d / "t.tsv"),
                    "-grid-type", "kdbtree", "-partitions", "16",
                    "-entity-type", "decomposed_entity"])
@@ -907,10 +819,10 @@ def test_cli_op_relate_grid_and_entity(spark, tmp_path, capsys, monkeypatch):
     hdr, row = out.splitlines()[0].split("\t"), out.splitlines()[1].split("\t")
     assert dict(zip(hdr, (int(v) for v in row))) == want
 
-    assert cli.main(["-op", "relate", "-left", str(d / "s.tsv"),
+    assert cli_main(["-op", "relate", "-left", str(d / "s.tsv"),
                      "-right", str(d / "t.tsv"),
                      "-grid-type", "nope"]) == 2
-    assert cli.main(["-op", "relate", "-left", str(d / "s.tsv"),
+    assert cli_main(["-op", "relate", "-left", str(d / "s.tsv"),
                      "-right", str(d / "t.tsv"),
                      "-entity-type", "nope"]) == 2
 
@@ -940,18 +852,13 @@ def _write_geoparquet(path, rows):
     pq.write_table(table, str(path))
 
 
-def test_cli_op_convert(spark, tmp_path, capsys, monkeypatch):
+def test_cli_op_convert(spark, tmp_path, capsys, cli_main):
     """-op convert: WKT TSV -> geoparquet -> rowparquet -> geojson, the
     row format identical at every hop; guards for missing -out and an
     unknown -to."""
     from pyspark.sql import functions as F
 
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
     from ds_jedai_spark.io.readers import read_geojson, read_wkt_delimited
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     d = tmp_path
     _write_tsv(d / "s.tsv", SOURCE)
@@ -963,36 +870,31 @@ def test_cli_op_convert(spark, tmp_path, capsys, monkeypatch):
     )
 
     geo = str(d / "s_geo.parquet")
-    assert cli.main(["-op", "convert", "-left", str(d / "s.tsv"),
+    assert cli_main(["-op", "convert", "-left", str(d / "s.tsv"),
                      "-to", "geoparquet", "-out", geo]) == 0
     assert "5 entities" in capsys.readouterr().out
     rowp = str(d / "s_row.parquet")
-    assert cli.main(["-op", "convert", "-left", geo,
+    assert cli_main(["-op", "convert", "-left", geo,
                      "-to", "rowparquet", "-out", rowp]) == 0
     got = spark.read.parquet(rowp).select(key).collect()
     assert sorted(tuple(r) for r in got) == want
     gj = str(d / "s.geojson_dir")
-    assert cli.main(["-op", "convert", "-left", rowp,
+    assert cli_main(["-op", "convert", "-left", rowp,
                      "-to", "geojson", "-out", gj]) == 0
     back = read_geojson(spark, gj).withColumn("id", F.col("id"))
     assert sorted(tuple(r) for r in back.select(key).collect()) == want
 
-    assert cli.main(["-op", "convert", "-left", str(d / "s.tsv")]) == 2
-    assert cli.main(["-op", "convert", "-left", str(d / "s.tsv"),
+    assert cli_main(["-op", "convert", "-left", str(d / "s.tsv")]) == 2
+    assert cli_main(["-op", "convert", "-left", str(d / "s.tsv"),
                      "-to", "nope", "-out", str(d / "x")]) == 2
 
 
-def test_cli_op_knn_distance(spark, tmp_path, monkeypatch):
+def test_cli_op_knn_distance(spark, tmp_path, cli_main):
     """-op knn / -op distance on user point TSVs: results equal a
     pure-Python brute force; non-point input and a missing -tau are
     guided errors."""
     import math
 
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     d = tmp_path
     rng_pts = [(i, (i * 7) % 13 / 2.0, (i * 5) % 11 / 2.0) for i in range(12)]
@@ -1010,7 +912,7 @@ def test_cli_op_knn_distance(spark, tmp_path, monkeypatch):
 
     # distance join vs brute force
     out = str(d / "dist.parquet")
-    assert cli.main(["-op", "distance", "-left", str(d / "a.tsv"),
+    assert cli_main(["-op", "distance", "-left", str(d / "a.tsv"),
                      "-right", str(d / "b.tsv"), "-tau", "2.0",
                      "-out", out]) == 0
     got = {(int(r.s_id), int(r.t_id))
@@ -1022,7 +924,7 @@ def test_cli_op_knn_distance(spark, tmp_path, monkeypatch):
     # exact kNN vs brute force (distance ties broken by engine rank —
     # compare the per-source kth-distance multiset instead of ids)
     out2 = str(d / "knn.parquet")
-    assert cli.main(["-op", "knn", "-left", str(d / "a.tsv"),
+    assert cli_main(["-op", "knn", "-left", str(d / "a.tsv"),
                      "-right", str(d / "b.tsv"), "-k", "3",
                      "-out", out2]) == 0
     rows = spark.read.parquet(out2).collect()
@@ -1043,25 +945,20 @@ def test_cli_op_knn_distance(spark, tmp_path, monkeypatch):
             assert math.hypot(x1 - x2, y1 - y2) <= kth + 1e-9, (i, j)
 
     # guards
-    assert cli.main(["-op", "distance", "-left", str(d / "a.tsv"),
+    assert cli_main(["-op", "distance", "-left", str(d / "a.tsv"),
                      "-right", str(d / "b.tsv")]) == 2
     with open(d / "poly.tsv", "w") as f:
         f.write("id\twkt\n1\tPOLYGON ((0 0, 1 0, 1 1, 0 1, 0 0))\n")
     with pytest.raises(SystemExit, match="non-point"):
-        cli.main(["-op", "knn", "-left", str(d / "poly.tsv"),
+        cli_main(["-op", "knn", "-left", str(d / "poly.tsv"),
                   "-right", str(d / "b.tsv"), "-k", "2"])
 
 
-def test_cli_op_relate_geoparquet(spark, tmp_path, capsys, monkeypatch):
+def test_cli_op_relate_geoparquet(spark, tmp_path, capsys, cli_main):
     """-op relate on GeoParquet/WKB inputs with ZERO extra flags (the
     geometry column auto-detected from the geo footer metadata) lands on
     the identical DE9IM counts row as the same entities through the WKT
     TSV path."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     d = tmp_path
     _write_tsv(d / "s.tsv", SOURCE)
@@ -1077,7 +974,7 @@ def test_cli_op_relate_geoparquet(spark, tmp_path, capsys, monkeypatch):
         "relation": "DE9IM",
     })
     want = api.run(spark, cfg).first().asDict()
-    rc = cli.main(["-op", "relate", "-left", str(d / "s_geo.parquet"),
+    rc = cli_main(["-op", "relate", "-left", str(d / "s_geo.parquet"),
                    "-right", str(d / "t_geo.parquet")])
     assert rc == 0
     out = capsys.readouterr().out
@@ -1090,7 +987,7 @@ def test_cli_op_relate_geoparquet(spark, tmp_path, capsys, monkeypatch):
     exp = {(int(r.s_id), int(r.t_id))
            for r in api.run(spark, pairs_cfg).collect()}
     pq_out = str(d / "geo_pairs.parquet")
-    rc = cli.main(["-op", "relate", "-left", str(d / "s_geo.parquet"),
+    rc = cli_main(["-op", "relate", "-left", str(d / "s_geo.parquet"),
                    "-right", str(d / "t_geo.parquet"),
                    "-relation", "contains", "-out", pq_out])
     assert rc == 0
@@ -1150,16 +1047,10 @@ def test_load_balancer_auto_plan_shapes(spark, tmp_path, conf_path):
     assert eng.first().asDict() == off.first().asDict()
 
 
-def test_cli_op_relate_parquet_and_dates(spark, tmp_path, capsys,
-                                         monkeypatch):
+def test_cli_op_relate_parquet_and_dates(spark, tmp_path, capsys, cli_main):
     """-op relate on engine row-format parquet inputs, and -date-col
     enabling the spatio-temporal qualifier (equal to the -conf
     dateField path)."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     d = tmp_path
     _write_tsv(d / "s.tsv", SOURCE)
@@ -1175,7 +1066,7 @@ def test_cli_op_relate_parquet_and_dates(spark, tmp_path, capsys,
     api.read_dataset(spark, cfg.source).write.parquet(str(d / "s.parquet"))
     api.read_dataset(spark, cfg.target).write.parquet(str(d / "t.parquet"))
     want = api.run(spark, cfg).first().asDict()
-    rc = cli.main(["-op", "relate", "-left", str(d / "s.parquet"),
+    rc = cli_main(["-op", "relate", "-left", str(d / "s.parquet"),
                    "-right", str(d / "t.parquet")])
     assert rc == 0
     out = capsys.readouterr().out
@@ -1205,7 +1096,7 @@ def test_cli_op_relate_parquet_and_dates(spark, tmp_path, capsys,
     exp = {(r.s_id, r.t_id)
            for r in api.run(spark, parse_config(doc)).collect()}
     pq = str(d / "st_pairs.parquet")
-    rc = cli.main(["-op", "relate", "-left", str(d / "sd.tsv"),
+    rc = cli_main(["-op", "relate", "-left", str(d / "sd.tsv"),
                    "-right", str(d / "td.tsv"), "-relation", "intersects",
                    "-date-col", "d", "-out", pq])
     assert rc == 0
@@ -1220,19 +1111,13 @@ def test_cli_op_relate_parquet_and_dates(spark, tmp_path, capsys,
     assert got == exp and got and got < allp
 
 
-def test_cli_op_relate_plain_wkt_parquet(spark, tmp_path, capsys,
-                                         monkeypatch):
+def test_cli_op_relate_plain_wkt_parquet(spark, tmp_path, capsys, cli_main):
     """-op relate on PLAIN user parquet (id + WKT string column, not the
     engine row format) parses via the geom_field fallback and matches
     the TSV path; a typed timestamp date column feeds the temporal
     qualifier without a string round-trip."""
     import datetime
 
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     d = tmp_path
     _write_tsv(d / "s.tsv", SOURCE)
@@ -1258,7 +1143,7 @@ def test_cli_op_relate_plain_wkt_parquet(spark, tmp_path, capsys,
 
     write_plain(d / "sp.parquet", SOURCE)
     write_plain(d / "tp.parquet", TARGET)
-    rc = cli.main(["-op", "relate", "-left", str(d / "sp.parquet"),
+    rc = cli_main(["-op", "relate", "-left", str(d / "sp.parquet"),
                    "-right", str(d / "tp.parquet")])
     assert rc == 0
     out = capsys.readouterr().out
@@ -1269,7 +1154,7 @@ def test_cli_op_relate_plain_wkt_parquet(spark, tmp_path, capsys,
     write_plain(d / "sd.parquet", SOURCE, ts=True)
     write_plain(d / "td.parquet", TARGET, ts=True)
     pq = str(d / "pairs.parquet")
-    rc = cli.main(["-op", "relate", "-left", str(d / "sd.parquet"),
+    rc = cli_main(["-op", "relate", "-left", str(d / "sd.parquet"),
                    "-right", str(d / "td.parquet"),
                    "-relation", "intersects", "-date-col", "dt",
                    "-out", pq])

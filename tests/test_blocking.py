@@ -207,19 +207,14 @@ def test_plan_has_no_cartesian_and_no_python(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_cli_op_er(spark, tmp_path, monkeypatch, capsys):
+def test_cli_op_er(spark, tmp_path, capsys, cli_main):
     """-op er end to end: parquet in -> pruned pair parquet out, equal
     to the library call; custom columns; scheme validation."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     docs = str(tmp_path / "er_docs.parquet")
     _df(spark).write.mode("overwrite").parquet(docs)
     out = str(tmp_path / "er_pairs.parquet")
-    rc = cli.main(["-op", "er", "-left", docs, "-prune", "wnp", "-out", out])
+    rc = cli_main(["-op", "er", "-left", docs, "-prune", "wnp", "-out", out])
     assert rc == 0
     back = spark.read.parquet(out)
     want = {
@@ -233,7 +228,7 @@ def test_cli_op_er(spark, tmp_path, monkeypatch, capsys):
     _df(spark).selectExpr("doc_id AS my_id", "text AS body").write.mode(
         "overwrite"
     ).parquet(docs2)
-    rc = cli.main([
+    rc = cli_main([
         "-op", "er", "-left", docs2, "-id-col", "my_id", "-text-col", "body",
         "-prune", "cep", "-er-k", "3", "-limit", "5",
     ])
@@ -241,19 +236,19 @@ def test_cli_op_er(spark, tmp_path, monkeypatch, capsys):
     assert "d1\td2" in capsys.readouterr().out
 
     # missing input path
-    assert cli.main(["-op", "er"]) == 2
+    assert cli_main(["-op", "er"]) == 2
 
     # block filtering via -filter-ratio, equal to the library call
-    rc = cli.main(["-op", "er", "-left", docs, "-prune", "wnp",
+    rc = cli_main(["-op", "er", "-left", docs, "-prune", "wnp",
                    "-filter-ratio", "4/5", "-limit", "3"])
     assert rc == 0
-    assert cli.main(["-op", "er", "-left", docs,
+    assert cli_main(["-op", "er", "-left", docs,
                      "-filter-ratio", "nope"]) == 2
 
     # -cluster: end-to-end ER — pairs resolved into components whose
     # label is the component-minimum id (python CC mirror)
     outc = str(tmp_path / "er_clusters.parquet")
-    rc = cli.main(["-op", "er", "-left", docs, "-prune", "wnp",
+    rc = cli_main(["-op", "er", "-left", docs, "-prune", "wnp",
                    "-cluster", "-out", outc])
     assert rc == 0
     got = {
@@ -421,13 +416,7 @@ def test_snb_cross_sql_twin_matches(spark):
     assert got == want
 
 
-def test_cli_op_er_cross(spark, tmp_path, monkeypatch, capsys):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_er_cross(spark, tmp_path, capsys, cli_main):
     lrows = [r for r in DOCS if r[0] % 2 == 0]
     rrows = [r for r in DOCS if r[0] % 2 == 1]
     lp = str(tmp_path / "er_l.parquet")
@@ -435,7 +424,7 @@ def test_cli_op_er_cross(spark, tmp_path, monkeypatch, capsys):
     _df(spark, lrows).write.parquet(lp)
     _df(spark, rrows).write.parquet(rp)
     out = str(tmp_path / "er_cc.parquet")
-    rc = cli.main(["-op", "er", "-left", lp, "-right", rp,
+    rc = cli_main(["-op", "er", "-left", lp, "-right", rp,
                    "-prune", "wnp", "-out", out])
     assert rc == 0
     got = {
@@ -681,6 +670,22 @@ def test_edit_distance_matches_bruteforce(spark):
         assert got == want, f"d={d}"
     with pytest.raises(ValueError, match="d must be"):
         dedup.edit_distance_pairs(_df(spark), d=-1)
+
+
+def test_cli_op_editdist_matches_library(spark, tmp_path, cli_main):
+    from ds_jedai_spark.operators import dedup
+
+    docs = spark.createDataFrame(EDIT_DOCS, "doc_id long, text string")
+    src = str(tmp_path / "edit_docs.parquet")
+    docs.write.parquet(src)
+    out = str(tmp_path / "edit_pairs.parquet")
+    assert cli_main(["-op", "editdist", "-left", src, "-edit-d", "3",
+                     "-out", out]) == 0
+    want = dedup.edit_distance_pairs(docs, d=3)
+    got = spark.read.parquet(out)
+    assert got.columns == want.columns
+    assert sorted(got.collect()) == sorted(want.collect())
+    assert want.count() > 0
 
 
 def test_edit_distance_band_straddlers_found_once(spark):

@@ -137,13 +137,7 @@ def test_dbscan_oracle_sql_equivalence(spark):
     assert got == want
 
 
-def test_cli_op_dbscan(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_dbscan(spark, tmp_path, capsys, cli_main):
     p = str(tmp_path / "pts.tsv")
     with open(p, "w") as f:
         f.write("id\twkt\n")
@@ -151,7 +145,7 @@ def test_cli_op_dbscan(spark, tmp_path, capsys, monkeypatch):
                                     (50.0, 50.0)]):
             f.write(f"{i}\tPOINT ({x} {y})\n")
     out = str(tmp_path / "cl.parquet")
-    rc = cli.main(["-op", "dbscan", "-left", p, "-tau", "1.2",
+    rc = cli_main(["-op", "dbscan", "-left", p, "-tau", "1.2",
                    "-minpts", "3", "-out", out])
     assert rc == 0
     # string ids -> string labels (cluster = lexicographic-min core id,

@@ -352,15 +352,13 @@ def test_fgb_directory_corpus(spark, tmp_path):
         read_flatgeobuf(spark, str(e))
 
 
-def test_export_flatgeobuf_sharded(spark, tmp_path, capsys, monkeypatch):
+def test_export_flatgeobuf_sharded(spark, tmp_path, capsys, cli_main):
     """The DISTRIBUTED sink writes one Hilbert-indexed .fgb per
     partition into a directory; the corpus reader reproduces every
     entity (with ts and CRS), empty partitions write no file, and the
     CLI routes -to flatgeobuf with a non-.fgb -out here."""
     from pyspark.sql import functions as F
 
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
     from ds_jedai_spark.io.flatgeobuf import export_flatgeobuf_sharded
     from ds_jedai_spark.io.readers import read_wkt_delimited
 
@@ -432,10 +430,8 @@ def test_export_flatgeobuf_sharded(spark, tmp_path, capsys, monkeypatch):
     assert len(sorted(Path(out).glob("*.fgb"))) == 1
 
     # CLI: non-.fgb -out routes to the sharded sink
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
     out2 = str(tmp_path / "cli_shards")
-    rc = cli.main(["-op", "convert", "-left", FIX, "-to", "flatgeobuf",
+    rc = cli_main(["-op", "convert", "-left", FIX, "-to", "flatgeobuf",
                    "-out", out2])
     assert rc == 0
     assert "wrote 406 entities" in capsys.readouterr().out
@@ -455,16 +451,11 @@ def test_export_flatgeobuf_empty(spark, tmp_path):
     assert read_flatgeobuf(spark, out).count() == 0
 
 
-def test_bbox_cli_and_parquet_pushdown(spark, tmp_path, capsys,
-                                       monkeypatch):
+def test_bbox_cli_and_parquet_pushdown(spark, tmp_path, capsys, cli_main):
     """-bbox subsets any -op input (here: convert on the .fgb fixture
     and on row-format parquet); on parquet the predicate lands in the
     scan's PushedFilters so row groups prune from min/max stats."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import api, cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
+    from ds_jedai_spark import api
 
     full = read_flatgeobuf(spark, FIX, id_field="id")
     box = (0.0, 0.0, 24.0, 24.0)
@@ -476,7 +467,7 @@ def test_bbox_cli_and_parquet_pushdown(spark, tmp_path, capsys,
     assert 0 < len(want) < full.count()
 
     out = str(tmp_path / "sub.parquet")
-    rc = cli.main(["-op", "convert", "-left", FIX, "-to", "rowparquet",
+    rc = cli_main(["-op", "convert", "-left", FIX, "-to", "rowparquet",
                    "-out", out, "-bbox", "0,0,24,24"])
     assert rc == 0
     assert f"wrote {len(want)} entities" in capsys.readouterr().out
@@ -493,32 +484,27 @@ def test_bbox_cli_and_parquet_pushdown(spark, tmp_path, capsys,
         assert c in pushed, pushed
 
     # the relate path honors extra.bbox end-to-end on both sides
-    rc = cli.main(["-op", "relate", "-left", FIX, "-right", FIX,
+    rc = cli_main(["-op", "relate", "-left", FIX, "-right", FIX,
                    "-relation", "intersects", "-bbox", "0,0,24,24",
                    "-limit", "2"])
     assert rc == 0
 
     # malformed -bbox errors with guidance
-    assert cli.main(["-op", "convert", "-left", FIX, "-to", "rowparquet",
+    assert cli_main(["-op", "convert", "-left", FIX, "-to", "rowparquet",
                      "-out", out, "-bbox", "9,9,1,1"]) == 2
 
 
-def test_cli_convert_to_flatgeobuf(spark, tmp_path, capsys, monkeypatch):
+def test_cli_convert_to_flatgeobuf(spark, tmp_path, capsys, cli_main):
     """-op convert -to flatgeobuf round-trips through the CLI, and .fgb
     files feed -op relate directly."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     out = str(tmp_path / "conv.fgb")
-    rc = cli.main(["-op", "convert", "-left", FIX, "-to", "flatgeobuf",
+    rc = cli_main(["-op", "convert", "-left", FIX, "-to", "flatgeobuf",
                    "-out", out])
     assert rc == 0
     assert "wrote 406 entities" in capsys.readouterr().out
     assert _rowmap(read_flatgeobuf(spark, out, id_field="id")) == \
         _rowmap(read_flatgeobuf(spark, FIX, id_field="id"))
-    rc = cli.main(["-op", "relate", "-left", out, "-right", out,
+    rc = cli_main(["-op", "relate", "-left", out, "-right", out,
                    "-relation", "equals", "-limit", "2"])
     assert rc == 0

@@ -88,13 +88,7 @@ def test_geodesic_distance_anchor_and_guard(spark):
         )
 
 
-def test_cli_distance_geodesic(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_distance_geodesic(spark, tmp_path, capsys, cli_main):
     p = str(tmp_path / "pts.tsv")
     with open(p, "w") as f:
         f.write("id\twkt\n")
@@ -102,7 +96,7 @@ def test_cli_distance_geodesic(spark, tmp_path, capsys, monkeypatch):
                                     (10.0, 0.5), (60.0, 60.0)]):
             f.write(f"{i}\tPOINT ({x} {y})\n")
     out = str(tmp_path / "gd.parquet")
-    rc = cli.main(["-op", "distance", "-geodesic", "-left", p,
+    rc = cli_main(["-op", "distance", "-geodesic", "-left", p,
                    "-right", p, "-tau", "60000", "-out", out])
     assert rc == 0
     back = spark.read.parquet(out)
@@ -286,13 +280,7 @@ def test_knn_geodesic_vs_bruteforce(spark):
     assert all(len(v) == k for v in got.values())
 
 
-def test_cli_knn_geodesic(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_knn_geodesic(spark, tmp_path, capsys, cli_main):
     p = str(tmp_path / "pts.tsv")
     with open(p, "w") as f:
         f.write("id\twkt\n")
@@ -301,7 +289,7 @@ def test_cli_knn_geodesic(spark, tmp_path, capsys, monkeypatch):
                                     (170.0, 0.0), (160.0, 0.0)]):
             f.write(f"{i}\tPOINT ({x} {y})\n")
     out = str(tmp_path / "gk.parquet")
-    rc = cli.main(["-op", "knn", "-geodesic", "-k", "1", "-left", p,
+    rc = cli_main(["-op", "knn", "-geodesic", "-k", "1", "-left", p,
                    "-right", p, "-out", out])
     assert rc == 0
     back = {r.s_id: r.t_id for r in spark.read.parquet(out).collect()}

@@ -170,20 +170,14 @@ def test_geohash_gate_row_matches_duckdb(spark):
     assert got == want and got
 
 
-def test_cli_op_geohash(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_geohash(spark, tmp_path, capsys, cli_main):
     p = str(tmp_path / "pts.tsv")
     with open(p, "w") as f:
         f.write("id\twkt\n")
         f.write("a\tPOINT (-5.603 42.605)\n")
         f.write("b\tPOINT (13.361389 38.115556)\n")
     out = str(tmp_path / "gh.parquet")
-    rc = cli.main(["-op", "geohash", "-left", p, "-precision", "5",
+    rc = cli_main(["-op", "geohash", "-left", p, "-precision", "5",
                    "-out", out])
     assert rc == 0
     back = {r.id: r.geohash for r in spark.read.parquet(out).collect()}
@@ -286,17 +280,11 @@ def test_geohash_cover_plan_and_oracle(spark):
     assert got == want
 
 
-def test_cli_op_geohash_cover(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_geohash_cover(tmp_path, capsys, cli_main):
     p = str(tmp_path / "pts.tsv")
     with open(p, "w") as f:
         f.write("id\twkt\n0\tPOINT (12.5 40.5)\n")
-    rc = cli.main(["-op", "geohash", "-left", p, "-precision", "4",
+    rc = cli_main(["-op", "geohash", "-left", p, "-precision", "4",
                    "-cover", "-limit", "5"])
     assert rc == 0
     assert "geohash" in capsys.readouterr().out

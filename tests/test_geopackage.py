@@ -234,15 +234,9 @@ def test_export_geopackage_roundtrip(spark, tmp_path):
     assert keyed(back) == keyed(src)
 
 
-def test_cli_convert_to_geopackage(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_convert_to_geopackage(spark, tmp_path, capsys, cli_main):
     out = str(tmp_path / "conv.gpkg")
-    rc = cli.main(["-op", "convert", "-left", FIX, "-to", "geopackage",
+    rc = cli_main(["-op", "convert", "-left", FIX, "-to", "geopackage",
                    "-out", out])
     assert rc == 0
     assert "wrote 406 entities" in capsys.readouterr().out
@@ -251,7 +245,7 @@ def test_cli_convert_to_geopackage(spark, tmp_path, capsys, monkeypatch):
     assert back.schema["gtype"].metadata.get("crs") == "EPSG:4326"
     assert back.count() == 406
     # and -op relate consumes .gpkg directly through the api dispatch
-    rc = cli.main(["-op", "relate", "-left", out, "-right", out,
+    rc = cli_main(["-op", "relate", "-left", out, "-right", out,
                    "-relation", "equals", "-limit", "3"])
     assert rc == 0
 
@@ -294,19 +288,14 @@ def test_fuzz_gpkg_roundtrip(spark):
 
 
 def test_cross_format_relate_with_crs_mismatch(spark, tmp_path, capsys,
-                                               monkeypatch):
+                                               cli_main):
     """A shapefile source (EPSG:4326 via .prj) against a GeoPackage
     target declaring EPSG:3857 runs -op relate end-to-end AND surfaces
     the CRS mismatch warning — the two new readers meet api.run's CRS
     comparison."""
     import warnings
 
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
     from ds_jedai_spark.io.readers import read_wkt_delimited
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     shp_dir = str(Path(FIX).parent / "shp_source")
     tsv = tmp_path / "t.tsv"
@@ -318,7 +307,7 @@ def test_cross_format_relate_with_crs_mismatch(spark, tmp_path, capsys,
 
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        rc = cli.main(["-op", "relate", "-left", shp_dir, "-right", gp,
+        rc = cli_main(["-op", "relate", "-left", shp_dir, "-right", gp,
                        "-relation", "intersects", "-limit", "2"])
     assert rc == 0
     assert any("different CRS" in str(w.message) for w in caught)
@@ -423,19 +412,13 @@ def test_gpkg_corpus_rowid_fallback_prefix_and_api(spark, tmp_path):
     assert got == want and 0 < len(want) < len(rows)
 
 
-def test_cli_convert_to_sharded_geopackage(spark, tmp_path, capsys,
-                                           monkeypatch):
+def test_cli_convert_to_sharded_geopackage(spark, tmp_path, capsys, cli_main):
     """-to geopackage with a non-.gpkg -out writes the sharded
     directory layout and reads back through the corpus reader."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
     from ds_jedai_spark.io.geopackage import gpkg_corpus_files
 
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
     out = str(tmp_path / "convdir")
-    rc = cli.main(["-op", "convert", "-left", FIX, "-to", "geopackage",
+    rc = cli_main(["-op", "convert", "-left", FIX, "-to", "geopackage",
                    "-out", out])
     assert rc == 0
     assert "wrote 406 entities" in capsys.readouterr().out

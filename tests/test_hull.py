@@ -104,13 +104,7 @@ def test_hull_gate_row_matches_duckdb(spark):
     assert got == want and len(got) >= 4
 
 
-def test_cli_op_hull(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_hull(spark, tmp_path, capsys, cli_main):
     p = str(tmp_path / "pts.tsv")
     with open(p, "w") as f:
         f.write("id\twkt\n")
@@ -119,7 +113,7 @@ def test_cli_op_hull(spark, tmp_path, capsys, monkeypatch):
         for i, (x, y) in enumerate(pts):
             f.write(f"{i}\tPOINT ({x} {y})\n")
     out = str(tmp_path / "hull.parquet")
-    rc = cli.main(["-op", "hull", "-left", p, "-out", out])
+    rc = cli_main(["-op", "hull", "-left", p, "-out", out])
     assert rc == 0
     got = sorted((r.x, r.y) for r in spark.read.parquet(out).collect())
     assert got == [(0.0, 0.0), (0.0, 4.0), (4.0, 0.0), (4.0, 4.0)]
@@ -211,13 +205,7 @@ def test_hull_by_gate_row_matches_duckdb(spark):
     assert got == want and len({t // 1000 for t, _ in got}) == 5
 
 
-def test_cli_op_hull_by(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_hull_by(spark, tmp_path, capsys, cli_main):
     p = str(tmp_path / "pts.tsv")
     with open(p, "w") as f:
         f.write("id\twkt\n")
@@ -225,7 +213,7 @@ def test_cli_op_hull_by(spark, tmp_path, capsys, monkeypatch):
                                     (1.0, 1.0)]):
             f.write(f"{i}\tPOINT ({x} {y})\n")
     out = str(tmp_path / "hb.parquet")
-    rc = cli.main(["-op", "hull", "-left", p, "-by", "id", "-out", out])
+    rc = cli_main(["-op", "hull", "-left", p, "-by", "id", "-out", out])
     assert rc == 0
     back = spark.read.parquet(out)
     assert set(back.columns) == {"id", "rank", "x", "y"}

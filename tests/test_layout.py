@@ -116,15 +116,10 @@ def test_validation_errors(spark):
         layout.zorder_frame(_points(spark, 10), bounds=BOUNDS, files=0)
 
 
-def test_cli_op_zorder(spark, tmp_path, monkeypatch, capsys):
+def test_cli_op_zorder(spark, tmp_path, capsys, cli_main):
     """-op zorder end to end: reader-format dataset in, z-ordered
     parquet copy out, lossless, with per-file spatial extents that
     cover disjoint z-runs."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     src = _points(spark, 2000).selectExpr(
         "id", "'POINT' AS gtype",
@@ -134,7 +129,7 @@ def test_cli_op_zorder(spark, tmp_path, monkeypatch, capsys):
     inp = str(tmp_path / "pts.parquet")
     src.write.parquet(inp)
     out = str(tmp_path / "z")
-    rc = cli.main(["-op", "zorder", "-left", inp, "-out", out,
+    rc = cli_main(["-op", "zorder", "-left", inp, "-out", out,
                    "-files", "4"])
     assert rc == 0
     assert "z-ordered 2000 rows" in capsys.readouterr().out
@@ -142,7 +137,7 @@ def test_cli_op_zorder(spark, tmp_path, monkeypatch, capsys):
     assert back.count() == 2000
     assert sorted(back.select("id").toPandas()["id"]) == list(range(2000))
     # missing args
-    assert cli.main(["-op", "zorder", "-left", inp]) == 2
+    assert cli_main(["-op", "zorder", "-left", inp]) == 2
 
 
 def test_zorder_frame_plan_no_python_no_global_sort(spark):

@@ -158,15 +158,9 @@ def test_measures_centroid_laws(spark):
     assert abs(mp.centroid_x - 6.0) <= 1e-9  # two equal squares
 
 
-def test_cli_op_measures(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_measures(spark, tmp_path, capsys, cli_main):
     out = str(tmp_path / "m.parquet")
-    rc = cli.main(["-op", "measures", "-left", WKT_FIX, "-out", out])
+    rc = cli_main(["-op", "measures", "-left", WKT_FIX, "-out", out])
     assert rc == 0
     assert "wrote 406 rows" in capsys.readouterr().out
     back = spark.read.parquet(out)
@@ -175,7 +169,7 @@ def test_cli_op_measures(spark, tmp_path, capsys, monkeypatch):
                                  "centroid_y", "unit"}
     assert back.where("npoints <= 0").count() == 0
     # bbox composes
-    rc = cli.main(["-op", "measures", "-left", WKT_FIX,
+    rc = cli_main(["-op", "measures", "-left", WKT_FIX,
                    "-bbox", "0,0,24,24", "-limit", "3"])
     assert rc == 0
 
@@ -396,20 +390,15 @@ def test_unit_column_and_geodesic_guard(spark):
         with_measures(_rowdf(spark, rows), geodesic=True)
 
 
-def test_cli_op_measures_geodesic(spark, tmp_path, capsys, monkeypatch):
+def test_cli_op_measures_geodesic(spark, tmp_path, capsys, cli_main):
     """-geodesic over a CRS-declared input (the .fgb fixture carries
     EPSG:4326) emits the meter columns; a CRS-less input raises the
     guard through the CLI."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     fgb = str(Path(__file__).resolve().parent.parent / "fixtures"
               / "geo_source.fgb")
     out = str(tmp_path / "gm.parquet")
-    rc = cli.main(["-op", "measures", "-geodesic", "-left", fgb,
+    rc = cli_main(["-op", "measures", "-geodesic", "-left", fgb,
                    "-out", out])
     assert rc == 0
     back = spark.read.parquet(out)
@@ -422,7 +411,7 @@ def test_cli_op_measures_geodesic(spark, tmp_path, capsys, monkeypatch):
     ).count() == 0
 
     with pytest.raises(ValueError, match="EPSG:4326"):
-        cli.main(["-op", "measures", "-geodesic", "-left", WKT_FIX,
+        cli_main(["-op", "measures", "-geodesic", "-left", WKT_FIX,
                   "-out", str(tmp_path / "bad.parquet")])
 
 

@@ -129,19 +129,14 @@ def test_perturb_string_ids(spark):
     assert again == {r.id: r.coords for r in rows}
 
 
-def test_cli_op_perturb(spark, tmp_path, capsys, monkeypatch):
+def test_cli_op_perturb(spark, tmp_path, capsys, cli_main):
     """-op perturb: any reader format in, perturbed row-format parquet
     out, deterministic per seed."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     out1 = str(tmp_path / "p1.parquet")
     out2 = str(tmp_path / "p2.parquet")
     for out in (out1, out2):
-        rc = cli.main(["-op", "perturb", "-left", WKT_FIX,
+        rc = cli_main(["-op", "perturb", "-left", WKT_FIX,
                        "-out", out, "-seed", "9"])
         assert rc == 0
         assert "wrote 406 perturbed entities" in capsys.readouterr().out
@@ -149,11 +144,11 @@ def test_cli_op_perturb(spark, tmp_path, capsys, monkeypatch):
     b = {r.id: r.coords for r in spark.read.parquet(out2).collect()}
     assert a == b
     out3 = str(tmp_path / "p3.parquet")
-    assert cli.main(["-op", "perturb", "-left", WKT_FIX,
+    assert cli_main(["-op", "perturb", "-left", WKT_FIX,
                      "-out", out3, "-seed", "10"]) == 0
     c = {r.id: r.coords for r in spark.read.parquet(out3).collect()}
     assert a != c
     # the output is engine row-format parquet: relate consumes it
-    rc = cli.main(["-op", "relate", "-left", out1, "-right", out1,
+    rc = cli_main(["-op", "relate", "-left", out1, "-right", out1,
                    "-relation", "equals", "-limit", "2"])
     assert rc == 0

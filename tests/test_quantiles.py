@@ -122,3 +122,28 @@ def test_gate_legs_shape(spark):
     for g, d in groups.items():
         ps = sorted(d)
         assert all(d[a] <= d[b] for a, b in zip(ps, ps[1:])), (g, d)
+
+
+def test_cli_op_quantiles_matches_library(spark, tmp_path, capsys, cli_main):
+    """-op quantiles, global and -by, gives the rows of the library
+    calls; a malformed -permille is a usage error."""
+    rows = [(i, i % 3, float((i * 7919) % 97)) for i in range(600)]
+    df = spark.createDataFrame(rows, "id long, g long, v double")
+    src = str(tmp_path / "q.parquet")
+    df.write.parquet(src)
+    ps = (10, 500, 990)
+    for by, want in (
+        (None, exact_quantiles(df, "v", ps)),
+        ("g", exact_quantiles_by(df, "v", "g", ps)),
+    ):
+        out = str(tmp_path / f"q_{by}.parquet")
+        argv = ["-op", "quantiles", "-left", src, "-value-col", "v",
+                "-permille", "10,500,990", "-out", out]
+        assert cli_main(argv + (["-by", by] if by else [])) == 0
+        got = spark.read.parquet(out)
+        assert got.columns == want.columns
+        assert sorted(got.collect()) == sorted(want.collect())
+    capsys.readouterr()
+    assert cli_main(["-op", "quantiles", "-left", src, "-value-col", "v",
+                     "-permille", "10,half"]) == 2
+    assert "-permille" in capsys.readouterr().err

@@ -251,21 +251,16 @@ def test_auto_reproject_in_api_run(spark, tmp_path):
     assert sub == full_box
 
 
-def test_cli_op_reproject(spark, tmp_path, capsys, monkeypatch):
+def test_cli_op_reproject(spark, tmp_path, capsys, cli_main):
     """-op reproject: any reader format in, row-format parquet out
     carrying the new CRS; feeding the result against a 3857 GeoPackage
     no longer warns (the mismatch remedy actually remedies)."""
     import warnings
 
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
     from ds_jedai_spark.io.geopackage import export_geopackage
 
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
     out = str(tmp_path / "merc.parquet")
-    rc = cli.main(["-op", "reproject", "-left", WKT_FIX, "-out", out,
+    rc = cli_main(["-op", "reproject", "-left", WKT_FIX, "-out", out,
                    "-from-crs", "EPSG:4326", "-to-crs", "EPSG:3857"])
     assert rc == 0
     assert "EPSG:4326 -> EPSG:3857" in capsys.readouterr().out
@@ -280,12 +275,12 @@ def test_cli_op_reproject(spark, tmp_path, capsys, monkeypatch):
     )
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        rc = cli.main(["-op", "relate", "-left", out, "-right", gp,
+        rc = cli_main(["-op", "relate", "-left", out, "-right", gp,
                        "-relation", "intersects", "-limit", "2"])
     assert rc == 0
     assert not any("different CRS" in str(w.message) for w in caught)
     # missing -to-crs errors with guidance
-    assert cli.main(["-op", "reproject", "-left", WKT_FIX,
+    assert cli_main(["-op", "reproject", "-left", WKT_FIX,
                      "-out", out]) == 2
 
 

@@ -273,17 +273,13 @@ def test_polygon_ring_grouping_from_orientation_free_input():
     assert (g, parts) == ("POLYGON", [shell])
 
 
-def test_api_dispatch_and_cli_ops(spark, tmp_path, capsys, monkeypatch):
+def test_api_dispatch_and_cli_ops(spark, tmp_path, capsys, cli_main):
     """.shp routes through api.read_dataset (file and directory forms),
     -op relate runs on shapefile inputs, and -op convert produces a
     GeoParquet twin whose re-read matches the shapefile read."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import api, cli
+    from ds_jedai_spark import api
     from ds_jedai_spark.config import DatasetSpec
     from ds_jedai_spark.io.readers import read_parquet_dataset
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     via_api = api.read_dataset(
         spark, DatasetSpec(path=FIX, id_field="id", geom_field=None)
@@ -291,14 +287,14 @@ def test_api_dispatch_and_cli_ops(spark, tmp_path, capsys, monkeypatch):
     assert via_api.count() == 406
 
     pts = str(Path(FIX) / "points.shp")
-    rc = cli.main(["-op", "relate", "-left", pts, "-right", pts,
+    rc = cli_main(["-op", "relate", "-left", pts, "-right", pts,
                    "-relation", "intersects", "-limit", "3"])
     assert rc == 0
     head = capsys.readouterr().out.splitlines()[0]
     assert head.split("\t") == ["s_id", "t_id"]
 
     out = str(tmp_path / "conv.parquet")
-    rc = cli.main(["-op", "convert", "-left", pts, "-to", "geoparquet",
+    rc = cli_main(["-op", "convert", "-left", pts, "-to", "geoparquet",
                    "-out", out])
     assert rc == 0
     back = _rowmap(read_parquet_dataset(spark, out))
@@ -371,14 +367,9 @@ def test_export_shapefile_chunking(spark, tmp_path):
     assert sorted(int(r.id) for r in back.collect()) == list(range(50))
 
 
-def test_cli_convert_to_shapefile(spark, tmp_path, capsys, monkeypatch):
+def test_cli_convert_to_shapefile(spark, tmp_path, capsys, cli_main):
     """-op convert -to shapefile writes a directory the reader (and the
     relate op) consume directly."""
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
 
     tsv = tmp_path / "src.tsv"
     tsv.write_text(
@@ -388,13 +379,13 @@ def test_cli_convert_to_shapefile(spark, tmp_path, capsys, monkeypatch):
         "((5 5, 6 5, 6 6, 5 6, 5 5)))\n"
     )
     out = str(tmp_path / "as_shp")
-    rc = cli.main(["-op", "convert", "-left", str(tsv), "-to", "shapefile",
+    rc = cli_main(["-op", "convert", "-left", str(tsv), "-to", "shapefile",
                    "-out", out])
     assert rc == 0
     assert "wrote 3 entities" in capsys.readouterr().out
     got = {r.id: r.gtype for r in read_shapefile(spark, out).collect()}
     assert got == {"1": "POINT", "2": "POLYGON", "3": "MULTIPOLYGON"}
-    rc = cli.main(["-op", "relate", "-left", out, "-right", out,
+    rc = cli_main(["-op", "relate", "-left", out, "-right", out,
                    "-relation", "equals", "-limit", "5"])
     assert rc == 0
 

@@ -51,15 +51,9 @@ def test_grid_density_counts_every_entity_once(spark):
     assert "partial_count" in plan or "HashAggregate" in plan
 
 
-def test_cli_op_density(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_density(spark, tmp_path, capsys, cli_main):
     out = str(tmp_path / "d.parquet")
-    rc = cli.main(["-op", "density", "-left", WKT_FIX, "-cell", "8",
+    rc = cli_main(["-op", "density", "-left", WKT_FIX, "-cell", "8",
                    "-out", out])
     assert rc == 0
     back = spark.read.parquet(out)
@@ -68,7 +62,7 @@ def test_cli_op_density(spark, tmp_path, capsys, monkeypatch):
                              geom_field="wkt")
     assert back.agg(F.sum("n")).first()[0] == src.count()
     # bbox composes: counts only envelope-intersecting entities
-    rc = cli.main(["-op", "density", "-left", WKT_FIX, "-cell", "8",
+    rc = cli_main(["-op", "density", "-left", WKT_FIX, "-cell", "8",
                    "-bbox", "0,0,24,24", "-limit", "5"])
     assert rc == 0
 
@@ -134,18 +128,12 @@ def test_grid_density_coverage_plan_stays_jvm(spark):
     assert d.agg(F.sum("n")).first()[0] >= src.count()
 
 
-def test_cli_op_density_modes(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
-    rc = cli.main(["-op", "density", "-left", WKT_FIX, "-cell", "8",
+def test_cli_op_density_modes(spark, tmp_path, capsys, cli_main):
+    rc = cli_main(["-op", "density", "-left", WKT_FIX, "-cell", "8",
                    "-coverage", "-limit", "3"])
     assert rc == 0
     out = str(tmp_path / "dw.parquet")
-    rc = cli.main(["-op", "density", "-left", WKT_FIX, "-cell", "8",
+    rc = cli_main(["-op", "density", "-left", WKT_FIX, "-cell", "8",
                    "-weight-col", "id", "-out", out])
     # id is a string column in the WKT fixture: sum() of strings fails
     # in ANSI mode, so use a real run over a numeric weight instead
@@ -217,13 +205,7 @@ def test_zonal_plan_no_cartesian_no_python(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_cli_op_zonal(spark, tmp_path, capsys, monkeypatch):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_zonal(spark, tmp_path, capsys, cli_main):
     def _rowfmt(df, gtype):
         return df.selectExpr(
             "CAST(id AS STRING) AS id", f"'{gtype}' AS gtype",
@@ -235,11 +217,11 @@ def test_cli_op_zonal(spark, tmp_path, capsys, monkeypatch):
     pp_ = str(tmp_path / "pts.parquet")
     _rowfmt(_zones(spark), "POLYGON").write.parquet(zp)
     _rowfmt(_zpts(spark), "POINT").write.parquet(pp_)
-    rc = cli.main(["-op", "zonal", "-left", zp, "-right", pp_])
+    rc = cli_main(["-op", "zonal", "-left", zp, "-right", pp_])
     assert rc == 0
     out = capsys.readouterr().out
     assert "zone_id" in out
-    assert cli.main(["-op", "zonal", "-left", zp]) == 2
+    assert cli_main(["-op", "zonal", "-left", zp]) == 2
 
     # -value-col rides through the row-format parquet fast path
     from pyspark.sql import functions as F
@@ -248,7 +230,7 @@ def test_cli_op_zonal(spark, tmp_path, capsys, monkeypatch):
     _rowfmt(_zpts(spark), "POINT").withColumn(
         "w", F.col("minx") * 2
     ).write.parquet(pw)
-    rc = cli.main(["-op", "zonal", "-left", zp, "-right", pw,
+    rc = cli_main(["-op", "zonal", "-left", zp, "-right", pw,
                    "-value-col", "w"])
     assert rc == 0
     assert "sum_val" in capsys.readouterr().out

@@ -109,35 +109,23 @@ def test_profile_duckdb_twin(spark):
                 r["max_str"]) == tuple(want), c
 
 
-def test_cli_op_profile(spark, tmp_path, monkeypatch, capsys):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_profile(spark, tmp_path, capsys, cli_main):
     p = str(tmp_path / "pf.parquet")
     _df(spark).write.parquet(p)
-    rc = cli.main(["-op", "profile", "-left", p, "-cols", "lang,n"])
+    rc = cli_main(["-op", "profile", "-left", p, "-cols", "lang,n"])
     assert rc == 0
     out = capsys.readouterr().out
     assert "lang" in out and "n_distinct" in out
-    assert cli.main(["-op", "profile"]) == 2
+    assert cli_main(["-op", "profile"]) == 2
 
 
-def test_cli_op_validate(spark, tmp_path, monkeypatch, capsys):
-    import ds_jedai_spark.session as session
-    from ds_jedai_spark import cli
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
-    monkeypatch.setattr(spark, "stop", lambda: None)
-
+def test_cli_op_validate(spark, tmp_path, capsys, cli_main):
     p = str(tmp_path / "v.parquet")
     _df(spark).write.parquet(p)
-    rc = cli.main(["-op", "validate", "-left", p,
+    rc = cli_main(["-op", "validate", "-left", p,
                    "-rules", "nn_text:text IS NOT NULL; n_range:n >= 0"])
     assert rc == 0
     out = capsys.readouterr().out
     assert "nn_text" in out and "n_range" in out
-    assert cli.main(["-op", "validate", "-left", p]) == 2
-    assert cli.main(["-op", "validate", "-left", p, "-rules", "nope"]) == 2
+    assert cli_main(["-op", "validate", "-left", p]) == 2
+    assert cli_main(["-op", "validate", "-left", p, "-rules", "nope"]) == 2
