@@ -87,6 +87,15 @@ noise is small relative to the run):
   onto ~73 bucket rows) vs bucket_us="auto" (p95-derived width, ~2
   rows) — regresses the derived-width policy's win on long intervals
   (interval_fixed_over_auto).
+- reader_scale {shp,fgb,gpkg} [n] (run on its own, not part of the
+  scale_total run): ONE large file of n points written by the format's
+  sink, read back through the shared binary scan (io/scan.py) at three
+  split sizes — one task for the whole file, and two finer splits. The
+  row count must be identical at every split size (asserted); the wall
+  ratio is the payoff of split planning. shp adds a bbox leg over 13-
+  vertex polygons (record-header short-circuit), fgb a ~1% bbox read
+  (R-tree skip), fgb and gpkg a sharded-sink write plus corpus read.
+  `python bench_scale.py reader_scale shp 8000000` prints one JSON line.
 """
 
 from __future__ import annotations
@@ -893,6 +902,130 @@ def asof_x16(hot: bool, bucket: object = "explicit"):
     return q
 
 
+# reader_scale: per format, the keyword that sizes a split and the three
+# legs (None = the whole file in one split); the speedup field divides
+# the one-split wall by the named leg's.
+READER_SCALE = {
+    "shp": dict(records=8_000_000, split="split_bytes",
+                legs=(("one_task", None), ("default_64mb", 64 << 20),
+                      ("split_8mb", 8 << 20)),
+                speedup=("speedup_8mb_vs_one_task", "split_8mb")),
+    "fgb": dict(records=2_000_000, split="split_bytes",
+                legs=(("one_task", None), ("default_8mb", 8 << 20),
+                      ("split_2mb", 2 << 20)),
+                speedup=("speedup_8mb_vs_one_task", "default_8mb")),
+    "gpkg": dict(records=2_000_000, split="split_rows",
+                 legs=(("one_split", None), ("default_250k", 250_000),
+                       ("rows_50k", 50_000)),
+                 speedup=("speedup_250k_vs_one_split", "default_250k")),
+}
+
+
+def reader_scale(spark, fmt: str, n: int, cpus: int) -> dict:
+    """One binary reader at size: write ONE file of ``n`` points with
+    the format's single-file sink, read it back at each split size of
+    READER_SCALE (same rows every time, asserted), plus the format's
+    bbox and sharded-corpus legs. Returns the JSON fields."""
+    import shutil
+    import tempfile
+
+    from ds_jedai_spark.io import flatgeobuf, geopackage, shapefile
+
+    read = {"shp": shapefile.read_shapefile,
+            "fgb": flatgeobuf.read_flatgeobuf,
+            "gpkg": geopackage.read_geopackage}[fmt]
+    spec = READER_SCALE[fmt]
+    d = tempfile.mkdtemp(prefix=f"{fmt}_scale_")
+    x = (F.col("id") % 4096).cast("double") / 16.0
+    y = ((F.col("id") * 31) % 4096).cast("double") / 16.0
+    pts = spark.range(n).select(
+        F.col("id").cast("string").alias("id"),
+        F.lit("POINT").alias("gtype"),
+        F.array(F.array(F.array(x, y))).alias("coords"),
+        x.alias("minx"), y.alias("miny"), x.alias("maxx"), y.alias("maxy"),
+    )
+    if fmt == "shp":
+        out = os.path.join(d, "big")
+        w_write, _ = _timed(lambda: shapefile.export_shapefile(
+            pts.coalesce(1), out))
+        path = next(str(p) for p in Path(out).glob("*.shp"))
+    else:
+        path = os.path.join(d, f"big.{fmt}")
+        sink = (flatgeobuf.export_flatgeobuf if fmt == "fgb"
+                else geopackage.export_geopackage)
+        w_write, _ = _timed(lambda: sink(pts, path))
+    size = os.path.getsize(path)
+    whole = size + 100 if spec["split"] == "split_bytes" else n + 1
+
+    # untimed: the session's first scan pays the Python-worker start,
+    # which would otherwise land on the one-split leg's wall
+    read(spark, path, id_field=None).count()
+    walls, counts = {}, {}
+    for name, split in spec["legs"]:
+        walls[name], counts[name] = _timed(lambda: read(
+            spark, path, id_field=None,
+            **{spec["split"]: split or whole}).count())
+    assert set(counts.values()) == {n}, counts
+    speedup, leg = spec["speedup"]
+    res = {"records": n, f"{fmt}_bytes": size, "write_sec": w_write,
+           "read_sec": walls,
+           speedup: round(walls[spec["legs"][0][0]] / walls[leg], 2)}
+
+    if fmt in ("fgb", "gpkg"):
+        # the distributed sink: one shard per partition, written by the
+        # executors in parallel, read back as one corpus scan
+        shards = os.path.join(d, "shards")
+        sharded = (flatgeobuf.export_flatgeobuf_sharded if fmt == "fgb"
+                   else geopackage.export_geopackage_sharded)
+        w_sharded, _ = _timed(lambda: sharded(pts.repartition(cpus),
+                                              shards))
+        r_corpus, n_corpus = _timed(lambda: read(
+            spark, shards, id_field=None).count())
+        assert n_corpus == n, (n_corpus, n)
+        res.update(sharded_write_sec=w_sharded,
+                   sharded_write_speedup=round(
+                       w_sharded and w_write / w_sharded, 2),
+                   corpus_read_sec=r_corpus)
+    if fmt == "fgb":
+        # ~1% of the 256x256 extent: the R-tree skips the rest
+        box = (100.0, 100.0, 125.6, 125.6)
+        res["bbox_sec"], res["bbox_rows"] = _timed(lambda: read(
+            spark, path, id_field=None, bbox=box).count())
+    if fmt == "shp":
+        # 13-vertex polygons, then a ~1% window read: the record-header
+        # box check skips vertex decode for non-matching records.
+        # The closing vertex is appended EXACTLY (i=12 trig would land
+        # a few ulp off the i=0 vertex and fail the ring-closure check).
+        npoly = max(100_000, n // 8)
+        polys = spark.range(npoly).select(
+            F.col("id").cast("string").alias("id"),
+            F.lit("POLYGON").alias("gtype"),
+            F.expr(
+                "array(concat(transform(sequence(0, 11), i -> array("
+                "cast(id % 4096 as double) / 16.0 + 0.5 * cos(i * pi() / 6.0),"
+                "cast((id * 31) % 4096 as double) / 16.0"
+                " + 0.5 * sin(i * pi() / 6.0))), "
+                "array(array(cast(id % 4096 as double) / 16.0 + 0.5, "
+                "cast((id * 31) % 4096 as double) / 16.0))))"
+            ).alias("coords"),
+        ).coalesce(1)
+        outp = os.path.join(d, "bigpoly")
+        shapefile.export_shapefile(polys, outp)
+        shpp = next(str(p) for p in Path(outp).glob("*.shp"))
+        box = (0.0, 0.0, 25.6, 25.6)
+        full_sec, n_full = _timed(lambda: read(
+            spark, shpp, id_field=None).count())
+        bbox_sec, n_box = _timed(lambda: read(
+            spark, shpp, id_field=None, bbox=box).count())
+        assert n_full == npoly and 0 < n_box < n_full, (n_full, n_box)
+        res.update(poly_records=npoly, poly_full_sec=full_sec,
+                   poly_bbox_sec=bbox_sec, poly_bbox_rows=n_box,
+                   speedup_bbox_vs_full=round(full_sec / bbox_sec, 2))
+    res["cpus"] = cpus
+    shutil.rmtree(d, ignore_errors=True)
+    return res
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or "0.1")
@@ -1115,4 +1248,13 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if sys.argv[1:2] == ["reader_scale"]:
+        fmt = sys.argv[2]
+        n = (int(sys.argv[3]) if len(sys.argv) > 3
+             else READER_SCALE[fmt]["records"])
+        spark = get_spark(f"{fmt}_reader_scale")
+        print(json.dumps(reader_scale(
+            spark, fmt, n, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))))
+        spark.stop()
+    else:
+        main()

@@ -15,12 +15,17 @@ general-path DE-9IM verifier (Arrow-batched) for arbitrary WKT geometry.
 
 from __future__ import annotations
 
+import glob as _glob
 import os
+from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ds_jedai_spark.config import JedaiConfig
-from ds_jedai_spark.io import readers, writers
+from ds_jedai_spark.io import flatgeobuf, geopackage, readers, shapefile, writers
+from ds_jedai_spark.io.fsutil import has_scheme
+from ds_jedai_spark.io.scan import apply_bbox
 from ds_jedai_spark.model.tiles import (  # noqa: F401 (compute_theta: api surface)
     compute_theta,
     grid_blocks,
@@ -32,123 +37,75 @@ from ds_jedai_spark.operators.relate_general import with_general_relations
 from ds_jedai_spark.operators.spatial_join import tile_join
 from ds_jedai_spark.operators.weights import weight_exprs
 
-_EXT_DELIMS = {".tsv": "\t", ".csv": ","}
+
+@dataclass(frozen=True)
+class Format:
+    """One dataset format of ``FORMATS``: ``read(spark, path, **kw)``
+    with ``kw`` the ``fields`` of the DatasetSpec plus ``options``. A
+    reader that ``prunes`` takes ``bbox=`` and applies it itself.
+    ``corpus`` is the file extension a directory of this format holds
+    (None: no directory corpus)."""
+
+    read: Callable
+    fields: tuple[str, ...] = ("id_field", "date_field", "date_pattern")
+    options: dict = field(default_factory=dict)
+    corpus: str | None = None
+    prunes: bool = False
 
 
-def apply_bbox(df: DataFrame, bbox) -> DataFrame:
-    """Envelope-intersection predicate on the row format. Expressed as
-    four scalar comparisons so Catalyst pushes them into the scan —
-    on row-format parquet they land in PushedFilters and prune row
-    groups from the min/max statistics; elsewhere they run JVM-side
-    before any join."""
-    from pyspark.sql import functions as F
+_PARSED = ("id_field", "geom_field", "date_field", "date_pattern")
 
-    bx0, by0, bx1, by1 = (float(v) for v in bbox)
-    return df.where(
-        (F.col("minx") <= bx1) & (F.col("maxx") >= bx0)
-        & (F.col("miny") <= by1) & (F.col("maxy") >= by0)
+# The one format decision (the reference's Reader.read dispatch,
+# utils/readers/Reader.scala:38-71), keyed by extension and tried in
+# this order: a directory holding a binary corpus reads as the first of
+# shp, gpkg, fgb that it holds.
+FORMATS: dict[str, Format] = {
+    ".tsv": Format(readers.read_wkt_delimited, _PARSED, {"delimiter": "\t"}),
+    ".csv": Format(readers.read_wkt_delimited, _PARSED, {"delimiter": ","}),
+    ".json": Format(readers.read_geojson),
+    ".geojson": Format(readers.read_geojson),
+    ".nt": Format(readers.read_ntriples, ()),
+    ".shp": Format(shapefile.read_shapefile, corpus=".shp", prunes=True),
+    ".gpkg": Format(geopackage.read_geopackage, corpus=".gpkg", prunes=True),
+    ".fgb": Format(flatgeobuf.read_flatgeobuf, corpus=".fgb", prunes=True),
+    # Engine row-format parquet: zero-parse fast path; plain user
+    # parquet with a WKT column parses via the geom_field fallback.
+    ".parquet": Format(readers.read_parquet_dataset, _PARSED),
+}
+
+
+def dataset_format(path: str) -> Format:
+    """The ``FORMATS`` entry that reads ``path``: the first whose key is
+    the path's extension or whose corpus a local directory at ``path``
+    holds. The directory is listed once, recursively."""
+    ext = os.path.splitext(path)[1].lower()
+    held: set[str] = set()
+    if not has_scheme(path) and os.path.isdir(path):
+        held = {os.path.splitext(f)[1] for f in _glob.glob(
+            os.path.join(path, "**", "*"), recursive=True)}
+    for key, fmt in FORMATS.items():
+        if ext == key or fmt.corpus in held:
+            return fmt
+    raise ValueError(
+        f"unsupported dataset extension: {path} "
+        "(tsv/csv/json/geojson/nt/shp/gpkg/fgb/parquet, or a directory "
+        "of .shp)"
     )
 
 
 def read_dataset(spark: SparkSession, spec, bbox=None) -> DataFrame:
-    """Pick the reader by extension (the reference's Reader.read dispatch,
-    utils/readers/Reader.scala:38-71). ``bbox`` = (minx,miny,maxx,maxy)
-    restricts the scan to envelope-intersecting entities: FlatGeobuf
-    skips non-matching file regions via its R-tree index, GeoPackage
-    prunes candidate rows through its gpkg_rtree_index extension (both
-    apply the exact filter themselves); every other format gets the
-    pushed-down filter of apply_bbox."""
-    df = _read_dataset(spark, spec, bbox)
-    ext = os.path.splitext(spec.path)[1].lower()
-    from ds_jedai_spark.io.flatgeobuf import fgb_corpus_files
-    from ds_jedai_spark.io.geopackage import gpkg_corpus_files
-    from ds_jedai_spark.io.shapefile import shp_corpus_files
-
-    # shp joined the native set in r15: record-header bbox short-circuit
-    # + exact post-filter inside read_shapefile
-    bbox_native = ext in (".fgb", ".gpkg", ".shp") or (
-        ext not in _EXT_DELIMS and os.path.isdir(spec.path)
-        and bool(
-            shp_corpus_files(spec.path)
-            or fgb_corpus_files(spec.path)
-            or gpkg_corpus_files(spec.path)
-        )
-    )
-    if bbox is not None and not bbox_native:
-        df = apply_bbox(df, bbox)
-    return df
-
-
-def _read_dataset(spark: SparkSession, spec, bbox=None) -> DataFrame:
-    ext = os.path.splitext(spec.path)[1].lower()
-    if ext in _EXT_DELIMS:
-        return readers.read_wkt_delimited(
-            spark,
-            spec.path,
-            id_field=spec.id_field,
-            geom_field=spec.geom_field,
-            delimiter=_EXT_DELIMS[ext],
-            date_field=spec.date_field,
-            date_pattern=spec.date_pattern,
-        )
-    if ext in (".json", ".geojson"):
-        return readers.read_geojson(
-            spark, spec.path, id_field=spec.id_field,
-            date_field=spec.date_field, date_pattern=spec.date_pattern,
-        )
-    if ext == ".nt":
-        return readers.read_ntriples(spark, spec.path)
-    from ds_jedai_spark.io.shapefile import shp_corpus_files
-
-    if ext == ".shp" or (
-        os.path.isdir(spec.path) and shp_corpus_files(spec.path)
-    ):
-        from ds_jedai_spark.io.shapefile import read_shapefile
-
-        return read_shapefile(
-            spark, spec.path, id_field=spec.id_field,
-            date_field=spec.date_field, date_pattern=spec.date_pattern,
-            bbox=bbox,
-        )
-    from ds_jedai_spark.io.geopackage import gpkg_corpus_files
-
-    # (a directory with .shp files was already claimed by the shp
-    # branch above, so no exclusion guard is needed here)
-    if ext == ".gpkg" or (
-        os.path.isdir(spec.path) and gpkg_corpus_files(spec.path)
-    ):
-        from ds_jedai_spark.io.geopackage import read_geopackage
-
-        return read_geopackage(
-            spark, spec.path, id_field=spec.id_field,
-            date_field=spec.date_field, date_pattern=spec.date_pattern,
-            bbox=bbox,
-        )
-    from ds_jedai_spark.io.flatgeobuf import fgb_corpus_files
-
-    if ext == ".fgb" or (
-        os.path.isdir(spec.path) and fgb_corpus_files(spec.path)
-    ):
-        from ds_jedai_spark.io.flatgeobuf import read_flatgeobuf
-
-        return read_flatgeobuf(
-            spark, spec.path, id_field=spec.id_field,
-            date_field=spec.date_field, date_pattern=spec.date_pattern,
-            bbox=bbox,
-        )
-    if ext == ".parquet":
-        # Engine row-format parquet: zero-parse fast path; plain user
-        # parquet with a WKT column parses via the geom_field fallback.
-        return readers.read_parquet_dataset(
-            spark, spec.path, id_field=spec.id_field,
-            geom_field=spec.geom_field, date_field=spec.date_field,
-            date_pattern=spec.date_pattern,
-        )
-    raise ValueError(
-        f"unsupported dataset extension: {spec.path} "
-        "(tsv/csv/json/geojson/nt/shp/gpkg/fgb/parquet, or a directory "
-        "of .shp)"
-    )
+    """Read ``spec`` with the reader ``dataset_format`` picks. ``bbox`` =
+    (minx,miny,maxx,maxy) restricts the scan to envelope-intersecting
+    entities: the binary readers prune with it themselves (shapefile
+    record headers, the FlatGeobuf R-tree, the GeoPackage R*Tree) and
+    apply the exact filter; every other format gets the pushed-down
+    filter of apply_bbox."""
+    fmt = dataset_format(spec.path)
+    kw = {f: getattr(spec, f) for f in fmt.fields} | fmt.options
+    if fmt.prunes:
+        return fmt.read(spark, spec.path, bbox=bbox, **kw)
+    df = fmt.read(spark, spec.path, **kw)
+    return df if bbox is None else apply_bbox(df, bbox)
 
 
 # Known-equivalent identifiers compare equal: GeoParquet's spec

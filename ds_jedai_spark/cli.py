@@ -24,6 +24,10 @@ writes them as parquet with -out:
   emb-dedup), ANN (ann, ann-build, quantize), entity resolution (er) and
   table statistics (quantiles, validate, profile).
 
+Bad input exits 2 before Spark starts: a missing needed flag, a spatial
+op's input that does not exist or that no ``api.FORMATS`` entry reads,
+and the flag values an op's ``check`` can judge without data.
+
 The flagship without a YAML: `-op relate` runs the full tile join +
 exact DE-9IM verification (api.run — theta sampling, ref-point dedup,
 the auto skew dispatcher) on two datasets; its flags build the document
@@ -49,7 +53,7 @@ import time
 from dataclasses import dataclass
 from typing import Callable
 
-from ds_jedai_spark.config import ConfigError
+from ds_jedai_spark.config import ConfigError, check_budget, parse_config
 
 
 class _Usage(Exception):
@@ -245,16 +249,13 @@ def _crs_id(src) -> tuple[str, int] | None:
     return (org, int(code)) if code.isdigit() else None
 
 
-def _op_relate(spark, args):
+def _relate_config(args):
     # Flagship convenience: tile join + exact relate on arbitrary user
     # WKT (tsv/csv/geojson/nt/shapefile) or engine parquet, no YAML —
     # `-op relate -left s.tsv -right t.tsv -relation intersects`. The
     # flags fill the document a YAML would give, so parse_config is the
     # one validation path, as the reference's ConfigurationParser reads
     # flags and YAML alike (ConfigurationParser.scala:107-160).
-    from ds_jedai_spark import api
-    from ds_jedai_spark.config import parse_config
-
     def given(**kw):
         return {k: v for k, v in kw.items() if v is not None}
 
@@ -262,7 +263,7 @@ def _op_relate(spark, args):
         return given(path=path, realIdField=args.id_col,
                      geometryField=args.geom_col, dateField=args.date_col)
 
-    return api.run(spark, parse_config({
+    return parse_config({
         "source": side(args.left),
         "target": side(args.right),
         "relation": args.relation,
@@ -279,11 +280,23 @@ def _op_relate(spark, args):
             bbox=args.bbox,
             autoReproject=args.auto_reproject or None,
         ),
-    }))
+    })
+
+
+def _op_relate(spark, args):
+    from ds_jedai_spark import api
+
+    return api.run(spark, _relate_config(args))
 
 
 _CONVERT_TO = ("rowparquet", "geoparquet", "geojson", "shapefile",
                "geopackage", "flatgeobuf")
+
+
+def _check_convert(args) -> None:
+    if args.to not in _CONVERT_TO:
+        raise _Usage(f"unknown -to {args.to!r}; choose from "
+                     f"{'/'.join(_CONVERT_TO)}")
 
 
 def _op_convert(spark, args):
@@ -295,9 +308,6 @@ def _op_convert(spark, args):
     # fast path.
     from ds_jedai_spark.io import writers
 
-    if args.to not in _CONVERT_TO:
-        raise _Usage(f"unknown -to {args.to!r}; choose from "
-                     f"{'/'.join(_CONVERT_TO)}")
     src, out = _dataset(spark, args, args.left), args.out
     if args.to == "rowparquet":
         src.write.mode("overwrite").parquet(out)
@@ -535,13 +545,16 @@ def _op_asof(spark, args):
     )
 
 
-def _op_interval(spark, args):
-    from ds_jedai_spark.operators.temporal import interval_join
-
+def _check_interval(args) -> None:
     if args.bucket_us is None:
         raise _Usage("needs a bucket width (-bucket-us N or the default "
                      "'auto', which derives it from the p95 interval "
                      "length); 'none' only applies to asof")
+
+
+def _op_interval(spark, args):
+    from ds_jedai_spark.operators.temporal import interval_join
+
     keys = [tuple(p.split("=", 1))
             for p in (args.keys.split(",") if args.keys else [])]
     ldf = _read(spark, args.left, (args.ts,))
@@ -691,14 +704,17 @@ def _op_ann_build(spark, args):
     ).withColumn("index_prefix", F.lit(p))
 
 
+def _check_ann(args) -> None:
+    if args.index and args.method == "brute":
+        raise _Usage("-method brute does not use an index; drop -index")
+
+
 def _op_ann(spark, args):
     from pyspark.sql import functions as F
 
     from ds_jedai_spark.operators import similarity as sim
     from ds_jedai_spark.pins import pin
 
-    if args.index and args.method == "brute":
-        raise _Usage("-method brute does not use an index; drop -index")
     corpus = _vectors(spark, args, args.left)
     k = args.k
     # id-space-safe query set: the n smallest ids PRESENT (raises on an
@@ -780,17 +796,22 @@ def _op_scrub(spark, args):
     return scrubbed_corpus(_docs(spark, args, args.left), k=args.span_words)
 
 
+def _filter_ratio(args) -> tuple[int, int] | None:
+    """-filter-ratio p/q of the meta blocker, or None."""
+    if args.blocker != "meta" or not args.filter_ratio:
+        return None
+    try:
+        pn, qn = args.filter_ratio.split("/")
+        return int(pn), int(qn)
+    except ValueError:
+        raise _Usage(f"-filter-ratio expects p/q (e.g. 4/5), got "
+                     f"{args.filter_ratio!r}") from None
+
+
 def _op_er(spark, args):
     from ds_jedai_spark.operators import blocking
 
-    fr = None
-    if args.blocker == "meta" and args.filter_ratio:
-        try:
-            pn, qn = args.filter_ratio.split("/")
-            fr = (int(pn), int(qn))
-        except ValueError:
-            raise _Usage(f"-filter-ratio expects p/q (e.g. 4/5), got "
-                         f"{args.filter_ratio!r}") from None
+    fr = _filter_ratio(args)
     left = _docs(spark, args, args.left)
     right = _docs(spark, args, args.right) if args.right else None
     if args.blocker == "snb":
@@ -860,11 +881,8 @@ def _op_zonal(spark, args):
     return zonal_stats(zones, pts, value_col=args.value_col).orderBy("zone_id")
 
 
-def _op_validate(spark, args):
-    # Declarative expectation checks (operators/validate.py): one
-    # aggregate pass, exact violation counts per rule.
-    from ds_jedai_spark.operators.validate import validate
-
+def _rules(args) -> dict[str, str]:
+    """-rules as {name: SQL predicate}."""
     rules = {}
     for part in args.rules.split(";"):
         name, sep, pred = part.partition(":")
@@ -872,7 +890,15 @@ def _op_validate(spark, args):
             raise _Usage(f"bad -rules entry {part!r}; expected "
                          "name:predicate")
         rules[name.strip()] = pred.strip()
-    return validate(_read(spark, args.left), rules)
+    return rules
+
+
+def _op_validate(spark, args):
+    # Declarative expectation checks (operators/validate.py): one
+    # aggregate pass, exact violation counts per rule.
+    from ds_jedai_spark.operators.validate import validate
+
+    return validate(_read(spark, args.left), _rules(args))
 
 
 def _op_profile(spark, args):
@@ -884,6 +910,14 @@ def _op_profile(spark, args):
     return profile(_read(spark, args.left), cols).orderBy("column")
 
 
+def _permille(args) -> tuple[int, ...]:
+    try:
+        return tuple(int(p) for p in args.permille.split(","))
+    except ValueError:
+        raise _Usage(f"-permille expects comma-separated integers, got "
+                     f"{args.permille!r}") from None
+
+
 def _op_quantiles(spark, args):
     # Exact distributed quantiles (type-1 rank selection, integer rank
     # arithmetic) — operators/ranking.py; -by switches to the per-group
@@ -893,11 +927,7 @@ def _op_quantiles(spark, args):
         exact_quantiles_by,
     )
 
-    try:
-        ps = tuple(int(p) for p in args.permille.split(","))
-    except ValueError:
-        raise _Usage(f"-permille expects comma-separated integers, got "
-                     f"{args.permille!r}") from None
+    ps = _permille(args)
     src = _read(spark, args.left)
     if args.by:
         return exact_quantiles_by(src, args.value_col, args.by, ps).orderBy(
@@ -911,16 +941,21 @@ class Op:
     write, or None when it wrote and reported its own output. ``needs``
     names the argparse dests that must be set. ``spatial`` ops read
     datasets through api.read_dataset, default -id-col to ``id`` and
-    accept -bbox; the others read user parquet with -id-col ``doc_id``."""
+    accept -bbox; the others read user parquet with -id-col ``doc_id``.
+    ``check(args)`` validates flag values that need no data; it raises
+    _Usage (or ConfigError) before Spark starts."""
 
     body: Callable
     needs: tuple[str, ...] = ("left",)
     spatial: bool = False
+    check: Callable | None = None
 
 
 OPS: dict[str, Op] = {
-    "relate": Op(_op_relate, ("left", "right"), spatial=True),
-    "convert": Op(_op_convert, ("left", "out"), spatial=True),
+    "relate": Op(_op_relate, ("left", "right"), spatial=True,
+                 check=_relate_config),
+    "convert": Op(_op_convert, ("left", "out"), spatial=True,
+                  check=_check_convert),
     "perturb": Op(_op_perturb, ("left", "out"), spatial=True),
     "reproject": Op(_op_reproject, ("left", "out", "to_crs"), spatial=True),
     "measures": Op(_op_measures, spatial=True),
@@ -931,23 +966,23 @@ OPS: dict[str, Op] = {
     "knn": Op(_op_knn, ("left", "right"), spatial=True),
     "distance": Op(_op_distance, ("left", "right", "tau"), spatial=True),
     "asof": Op(_op_asof, ("left", "right")),
-    "interval": Op(_op_interval, ("left", "right")),
+    "interval": Op(_op_interval, ("left", "right"), check=_check_interval),
     "chunk": Op(_op_chunk),
     "dedup": Op(_op_dedup),
     "dedup-build": Op(_op_dedup_build, ("left", "index")),
     "dedup-apply": Op(_op_dedup_apply),
     "emb-dedup": Op(_op_emb_dedup),
-    "ann": Op(_op_ann),
+    "ann": Op(_op_ann, check=_check_ann),
     "ann-build": Op(_op_ann_build, ("left", "index")),
     "quantize": Op(_op_quantize),
     "shuffle": Op(_op_shuffle),
     "dupspans": Op(_op_dupspans),
     "scrub": Op(_op_scrub),
-    "er": Op(_op_er),
+    "er": Op(_op_er, check=_filter_ratio),
     "editdist": Op(_op_editdist),
     "zorder": Op(_op_zorder, ("left", "out"), spatial=True),
-    "quantiles": Op(_op_quantiles, ("left", "value_col")),
-    "validate": Op(_op_validate, ("left", "rules")),
+    "quantiles": Op(_op_quantiles, ("left", "value_col"), check=_permille),
+    "validate": Op(_op_validate, ("left", "rules"), check=_rules),
     "profile": Op(_op_profile),
     "zonal": Op(_op_zonal, ("left", "right"), spatial=True),
 }
@@ -958,14 +993,41 @@ def _flag(dest: str) -> str:
     return "-" + dest.replace("_", "-")
 
 
+def _check_dataset(path: str) -> None:
+    """A spatial op's input, refused before Spark starts when it names
+    no local file, directory or glob, or when no api.FORMATS entry
+    reads it. Filesystem URIs are left to the reader."""
+    from ds_jedai_spark import api
+    from ds_jedai_spark.io.fsutil import has_scheme
+
+    if not (has_scheme(path) or os.path.exists(path)
+            or any(ch in path for ch in "*?[")):
+        raise _Usage(f"no such dataset: {path}")
+    try:
+        api.dataset_format(path)
+    except ValueError as e:
+        raise _Usage(str(e)) from None
+
+
 def _run_op(args) -> int:
     """Run one ``OPS`` entry: refuse before Spark starts if a needed
-    flag is missing, run the body, print or write what it returns."""
+    flag is missing, a spatial input cannot be read or the op's check
+    fails; then run the body, print or write what it returns."""
     op = OPS[args.op]
     missing = [_flag(d) for d in op.needs if getattr(args, d) in (None, "")]
     if missing:
         print(f"-op {args.op} needs {' and '.join(map(_flag, op.needs))}; "
               f"missing {' and '.join(missing)}", file=sys.stderr)
+        return 2
+    try:
+        if op.spatial:
+            for dest in ("left", "right"):
+                if dest in op.needs:
+                    _check_dataset(getattr(args, dest))
+        if op.check is not None:
+            op.check(args)
+    except (_Usage, ConfigError) as e:
+        print(f"-op {args.op}: {e}", file=sys.stderr)
         return 2
 
     from ds_jedai_spark.session import get_spark
@@ -1260,13 +1322,13 @@ def main(argv: list[str] | None = None) -> int:
 
     try:
         cfg = load_config(args.conf)
+        if args.budget is not None:
+            cfg.budget = check_budget(args.budget)
     except ConfigError as e:
         print(f"-conf {args.conf}: {e}", file=sys.stderr)
         return 2
     if args.export:
         cfg.export_path = args.export
-    if args.budget:
-        cfg.budget = args.budget
 
     spark = get_spark("ds_jedai_spark_cli")
     t0 = time.perf_counter()

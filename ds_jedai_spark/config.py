@@ -72,6 +72,15 @@ def _theta_mode(v) -> str:
     return mode
 
 
+def check_budget(v) -> int:
+    """A progressive budget: a whole number of verifications, at least
+    one (the rule for the YAML field and the -budget flag alike)."""
+    b = int(v)
+    if b < 1:
+        raise ConfigError(f"budget: {b} is below 1")
+    return b
+
+
 def _dataset(d: dict, name: str) -> DatasetSpec:
     if not isinstance(d, dict) or "path" not in d:
         raise ConfigError(f"{name}: needs at least 'path'")
@@ -124,7 +133,7 @@ def parse_config(doc: dict) -> JedaiConfig:
         secondary_wf=enum("secondaryWF", WEIGHT_FUNCS, None),
         ws=enum("ws", SCHEMES, "SIMPLE"),
         progressive_algorithm=enum("progressiveAlgorithm", PROGRESSIVE_ALGS, None),
-        budget=int(budget) if budget is not None else None,
+        budget=check_budget(budget) if budget is not None else None,
         entity_type=enum("entityType", ENTITY_TYPES, "SPATIAL_ENTITY"),
         export_path=conf.get("exportPath"),
         extra=extra,

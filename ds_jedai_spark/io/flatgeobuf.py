@@ -18,9 +18,12 @@ implemented from the published wire format:
   Split planning mirrors the shapefile reader: the DRIVER reads only
   the header and the index's LEAF level (the last ``features_count``
   40-byte nodes, whose u64 payload is each feature's byte offset),
-  strides the offsets into byte-range splits, and each EXECUTOR does
-  one ranged read and parses its features into the engine row format
-  through GeometryAccumulator (Arrow-native, no per-row Python rows).
+  strides the offsets into byte-range splits (only the leaves whose
+  envelopes meet a bbox), and each EXECUTOR does one ranged read and
+  decodes its features into a GeometryAccumulator. The shared binary
+  scan (io/scan.py) runs the splits of every file of a corpus as one
+  mapInArrow and owns the listing, the absent-field rule, the Arrow
+  batch, the exact bbox filter, the date parse and the one-CRS rule.
   An unindexed file (index_node_size = 0) has no offset sidecar to
   plan from and falls back to a single sequential split — documented,
   exactly like a .shp with no .shx.
@@ -44,15 +47,20 @@ counted out by the validity filter.
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import struct
 
 import numpy as np
-
-from ds_jedai_spark.io.fsutil import fs_open, fs_size, has_scheme
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from ds_jedai_spark.config import DEFAULT_DATE_PATTERN
+from ds_jedai_spark.io.fsutil import fs_open, fs_size
+from ds_jedai_spark.io.scan import (
+    clear_corpus,
+    list_files,
+    resolve_fields,
+    scan,
+)
 
 MAGIC = b"fgb\x03fgb\x00"
 NODE_BYTES = 40  # 4 doubles (envelope) + u64 (offset / child index)
@@ -307,8 +315,6 @@ def _plan_file(
     """Plan one file's byte-range splits; each split carries its full
     file context (path, stem, resolved property columns, header type)
     so a multi-file corpus maps through one executor closure."""
-    import json
-
     envs = None
     if bbox is not None:
         header, feat_start, size, offsets, envs = _read_header(
@@ -337,28 +343,10 @@ def _plan_file(
             else:
                 runs.append((i, i + 1))
     stem = os.path.splitext(os.path.basename(path))[0]
-    low = {c.lower(): c for c, _ in header["cols"] if c}
-    use_id = None
-    if id_field is not None:
-        if id_field.lower() in low:
-            use_id = low[id_field.lower()]
-        elif id_field != "id":
-            raise ValueError(
-                f"column {id_field!r} not in {path!r} "
-                f"(columns: {sorted(low.values())})"
-            )
-    use_date = None
-    if date_field is not None:
-        if date_field.lower() not in low:
-            raise ValueError(
-                f"date column {date_field!r} not in {path!r} "
-                f"(columns: {sorted(low.values())})"
-            )
-        use_date = low[date_field.lower()]
-
+    use_id, use_date = resolve_fields(
+        [c for c, _ in header["cols"]], id_field, date_field, repr(path))
     ctx = dict(path=path, stem=stem, use_id=use_id, use_date=use_date,
-               gtype=header["geom_type"],
-               cols=json.dumps(header["cols"]))
+               gtype=header["geom_type"], cols=header["cols"])
 
     # ---- split planning: stride leaf offsets into byte ranges,
     # independently within each ordinal run (searchsorted, not a
@@ -395,24 +383,65 @@ def _plan_file(
     return splits, header["crs"]
 
 
-_PLAN_SCHEMA = (
-    "path string, stem string, use_id string, use_date string, "
-    "gtype int, cols string, start long, end long, rec0 long, "
-    "stride long, offs array<long>, n_recs long"
-)
+def _decode(s: dict):
+    """Executor-side: one ranged read of the split's feature bytes,
+    each feature's geometry into the accumulator and its id/date
+    properties into lists; returns (ids, date cells, accumulator)."""
+    from ds_jedai_spark.model.geometry import GeometryAccumulator
 
-
-def fgb_corpus_files(path: str) -> list[str]:
-    """Canonical listing of a directory corpus: top-level ``*.fgb``,
-    falling back to a recursive glob for nested (e.g. date-partitioned)
-    layouts. ONE definition shared by the reader, the sharded sink's
-    overwrite pass, and ``api.read_dataset``'s dispatch/bbox_native
-    checks, so all of them agree on what constitutes the corpus (a
-    stale nested shard can't be visible to one and invisible to
-    another — ADVICE r14)."""
-    return sorted(_glob.glob(os.path.join(path, "*.fgb"))) or sorted(
-        _glob.glob(os.path.join(path, "**", "*.fgb"), recursive=True)
-    )
+    cols = [tuple(c) for c in s["cols"]]
+    use_id, use_date = s["use_id"], s["use_date"]
+    geom_type, stem = s["gtype"], s["stem"]
+    with fs_open(s["path"]) as f:
+        f.seek(s["start"])
+        buf = f.read(s["end"] - s["start"])
+    feats = []  # (recno, feature bytes)
+    anchors = ([a - s["start"] for a in s["offs"]]
+               if s["offs"] else [0])
+    for ai, a in enumerate(anchors):
+        stop = (anchors[ai + 1] if ai + 1 < len(anchors)
+                else len(buf))
+        # ordinal from the anchor, NOT a running counter: a broken
+        # frame loses at most its own stride's tail and never
+        # misnumbers stem:N ids past the next anchor
+        recno = s["rec0"] + ai * s["stride"]
+        at = a
+        while at + 4 <= stop:
+            ln = struct.unpack_from("<I", buf, at)[0]
+            if ln == 0 or at + 4 + ln > len(buf):
+                break  # corrupt tail: damage bounded to anchor
+            feats.append((recno, buf[at + 4:at + 4 + ln]))
+            recno += 1
+            at += 4 + ln
+    acc = GeometryAccumulator(len(feats))
+    ids, dates = [], []
+    for rn, fbuf in feats:
+        gtype = parts = None
+        props = {}
+        try:
+            feat = _fb.root(bytes(fbuf))
+            if use_id or use_date:
+                props = _parse_properties(feat.bytes_vector(1), cols)
+            g = feat.table(0)
+            dec = (_decode_geometry(g, geom_type)
+                   if g is not None else None)
+            if dec:
+                gtype, parts = dec
+        except Exception:
+            pass
+        if gtype is None:
+            acc.add_invalid()
+        else:
+            acc.add(gtype, parts)
+        if use_id:
+            rid = props.get(use_id)
+            ids.append(None if rid is None else str(rid))
+        else:
+            ids.append(f"{stem}:{rn + 1}")
+        if use_date:
+            d = props.get(use_date)
+            dates.append(None if d is None else str(d))
+    return ids, dates, acc
 
 
 def read_flatgeobuf(
@@ -420,17 +449,19 @@ def read_flatgeobuf(
     path: str,
     id_field: str | None = "id",
     date_field: str | None = None,
-    date_pattern: str = "yyyy-MM-dd HH:mm:ss",
+    date_pattern: str = DEFAULT_DATE_PATTERN,
     split_bytes: int = DEFAULT_SPLIT_BYTES,
     bbox: tuple[float, float, float, float] | None = None,
 ) -> DataFrame:
-    """FlatGeobuf scan landing in the engine row format.
+    """FlatGeobuf scan landing in the engine row format, through the
+    shared binary scan (io/scan.py).
 
-    ``path``: one .fgb file, a local directory (recursive *.fgb glob —
-    a tiled corpus reads as one DataFrame), or a filesystem URI
-    (``file://``, ``s3://``, ``hdfs://`` — io/fsutil routes single-file
-    URIs through pyarrow.fs for driver planning and executor ranged
-    reads alike; directory listing stays local-path only).
+    ``path``: one .fgb file, a local directory (top-level *.fgb, else
+    recursive — a tiled corpus reads as one DataFrame), a local glob
+    pattern, or a filesystem URI (``file://``, ``s3://``, ``hdfs://`` —
+    io/fsutil routes single-file URIs through pyarrow.fs for driver
+    planning and executor ranged reads alike; directory listing stays
+    local-path only). A missing file raises ``no such FlatGeobuf``.
 
     ``id_field`` names a property column; None — or the 'id' default
     when a file has no such column — falls back to '<stem>:N'
@@ -446,141 +477,20 @@ def read_flatgeobuf(
     the surviving offset runs, so non-matching file regions (or whole
     files) are never read or parsed (Hilbert order makes the survivors
     contiguous). Small gaps of non-matching features swallowed into a
-    range for fewer seeks are corrected by a JVM-side envelope filter
-    on the output (also applied on unindexed files, where only the
-    filter, not the skip, is available)."""
-    from ds_jedai_spark.model.geometry import (
-        GEOM_FIELDS,
-        GeometryAccumulator,
-        valid_geometries,
-    )
-
-    if not has_scheme(path) and os.path.isdir(path):
-        files = fgb_corpus_files(path)
-        if not files:
-            raise ValueError(f"no .fgb files under {path!r}")
-    else:
-        if fs_size(path) is None:
-            raise ValueError(f"no such FlatGeobuf: {path!r}")
-        files = [path]
-
+    range for fewer seeks are corrected by the scan's exact envelope
+    filter on the output (also applied on unindexed files, where only
+    the filter, not the skip, is available)."""
+    files = list_files(path, ".fgb", "FlatGeobuf")
     splits: list[dict] = []
-    crss: set[str] = set()
+    crss: list[str | None] = []
     for f in files:
         s, crs = _plan_file(f, id_field, date_field, split_bytes, bbox)
         splits.extend(s)
-        if crs is not None:
-            crss.add(crs)
-    if len(crss) > 1:
-        raise ValueError(
-            f"mixed CRS across .fgb corpus {path!r}: {sorted(crss)}; "
-            "reproject to one frame first (-op reproject)"
-        )
-
-    want_ts = date_field is not None
-    out_fields = "id string, " + (
-        "ts_raw string, " if want_ts else "") + GEOM_FIELDS
-
-    def parse_splits(batches):
-        import json
-
-        import pyarrow as pa
-
-        for batch in batches:
-            for s in batch.to_pylist():
-                cols = [tuple(c) for c in json.loads(s["cols"])]
-                use_id, use_date = s["use_id"], s["use_date"]
-                geom_type, stem = s["gtype"], s["stem"]
-                with fs_open(s["path"]) as f:
-                    f.seek(s["start"])
-                    buf = f.read(s["end"] - s["start"])
-                feats = []  # (recno, feature bytes)
-                anchors = ([a - s["start"] for a in s["offs"]]
-                           if s["offs"] else [0])
-                for ai, a in enumerate(anchors):
-                    stop = (anchors[ai + 1] if ai + 1 < len(anchors)
-                            else len(buf))
-                    # ordinal from the anchor, NOT a running counter: a
-                    # broken frame loses at most its own stride's tail
-                    # and never misnumbers stem:N ids past the next
-                    # anchor
-                    recno = s["rec0"] + ai * s["stride"]
-                    at = a
-                    while at + 4 <= stop:
-                        ln = struct.unpack_from("<I", buf, at)[0]
-                        if ln == 0 or at + 4 + ln > len(buf):
-                            break  # corrupt tail: damage bounded to anchor
-                        feats.append((recno, buf[at + 4:at + 4 + ln]))
-                        recno += 1
-                        at += 4 + ln
-                acc = GeometryAccumulator(len(feats))
-                ids, dates = [], []
-                for rn, fbuf in feats:
-                    gtype = parts = None
-                    props = {}
-                    try:
-                        feat = _fb.root(bytes(fbuf))
-                        if use_id or want_ts:
-                            props = _parse_properties(
-                                feat.bytes_vector(1), cols)
-                        g = feat.table(0)
-                        dec = (_decode_geometry(g, geom_type)
-                               if g is not None else None)
-                        if dec:
-                            gtype, parts = dec
-                    except Exception:
-                        pass
-                    if gtype is None:
-                        acc.add_invalid()
-                    else:
-                        acc.add(gtype, parts)
-                    if use_id:
-                        rid = props.get(use_id)
-                        ids.append(None if rid is None else str(rid))
-                    else:
-                        ids.append(f"{stem}:{rn + 1}")
-                    if want_ts:
-                        d = props.get(use_date)
-                        dates.append(None if d is None else str(d))
-                out = [pa.array(ids, pa.string())]
-                names = ["id"]
-                if want_ts:
-                    out.append(pa.array(dates, pa.string()))
-                    names.append("ts_raw")
-                yield pa.RecordBatch.from_arrays(
-                    out + acc.arrays(),
-                    names=names + ["gtype", "coords",
-                                   "minx", "miny", "maxx", "maxy"],
-                )
-
-    if splits:
-        plan = spark.createDataFrame(
-            [(s["path"], s["stem"], s["use_id"], s["use_date"],
-              s["gtype"], s["cols"], s["start"], s["end"], s["rec0"],
-              s["stride"], s["offs"], s["n_recs"])
-             for s in splits],
-            _PLAN_SCHEMA,
-        ).repartition(len(splits))
-        out = valid_geometries(plan.mapInArrow(parse_splits, out_fields))
-    else:  # every file indexed, bbox matched no leaf anywhere
-        out = spark.createDataFrame([], out_fields)
-    if want_ts:
-        from ds_jedai_spark.io.readers import parse_ts_cell
-
-        out = out.withColumn(
-            "ts", parse_ts_cell("ts_raw", date_pattern)
-        ).drop("ts_raw")
-    if bbox is not None:
-        # exact envelope predicate: corrects gap stragglers on indexed
-        # files; the only pruning available on unindexed ones
-        bx0, by0, bx1, by1 = map(float, bbox)
-        out = out.where(
-            (F.col("minx") <= bx1) & (F.col("maxx") >= bx0)
-            & (F.col("miny") <= by1) & (F.col("maxy") >= by0)
-        )
-    if crss:
-        out = out.withMetadata("gtype", {"crs": crss.pop()})
-    return out
+        crss.append(crs)
+    return scan(
+        spark, splits, _decode, path=path, ext=".fgb", crss=crss,
+        dated=date_field is not None, date_pattern=date_pattern, bbox=bbox,
+    )
 
 
 # --------------------------------------------------------------------
@@ -942,16 +852,10 @@ def export_flatgeobuf_sharded(
     WHOLE FILES via their R-tree root envelopes — one range shuffle
     traded for file-level pruning forever after. Empty partitions
     write no file. Overwrite semantics like DataFrame.write:
-    pre-existing *.fgb shards in the directory are removed first — a
-    rerun with fewer partitions must not leave stale shards mixed into
-    the corpus. The removal is RECURSIVE (everything the reader's
-    fgb_corpus_files fallback could ever surface), so a stale nested
-    shard can't silently mix into a reread after the top level is
-    rewritten."""
-    os.makedirs(path, exist_ok=True)
-    for old in _glob.glob(os.path.join(path, "**", "*.fgb"),
-                          recursive=True):
-        os.remove(old)
+    pre-existing *.fgb shards in the directory, nested ones included,
+    are removed first (scan.clear_corpus) — a rerun with fewer
+    partitions must not leave stale shards mixed into the corpus."""
+    clear_corpus(path, ".fgb")
     if spatial_shards:
         entities = entities.repartitionByRange(
             int(spatial_shards), "minx", "miny")

@@ -14,9 +14,12 @@ by rowid, so the DRIVER reads only the catalog tables
 rows each) plus min/max rowid, and plans ROWID-RANGE splits; EXECUTORS
 open the file read-only (sqlite URI mode=ro) and each runs one
 `SELECT ... WHERE rowid BETWEEN a AND b` — index-backed, no scan
-overlap, arbitrarily many concurrent readers. Like the shapefile
-reader, paths must be executor-readable; convert once for object
-stores.
+overlap, arbitrarily many concurrent readers. A directory of .gpkg
+shards plans every file's splits into the same scan: the shared binary
+scan (io/scan.py) runs them as one mapInArrow and owns the listing, the
+absent-field rule, the Arrow batch, the exact bbox filter, the date
+parse and the one-CRS rule. Like the shapefile reader, paths must be
+executor-readable; convert once for object stores.
 
 Malformed geometry cells (bad GPB magic, truncated envelope, undecodable
 WKB) drop per-row exactly like unparseable WKT: None -> add_invalid ->
@@ -30,10 +33,18 @@ import os
 import sqlite3
 import struct
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
-DEFAULT_DATE_PATTERN = "yyyy-MM-dd HH:mm:ss"
-# Measured on a 2M-point table, 32 cores (scripts/gpkg_scale_probe.py):
+from ds_jedai_spark.config import DEFAULT_DATE_PATTERN
+from ds_jedai_spark.io.scan import (
+    clear_corpus,
+    list_files,
+    resolve_fields,
+    scan,
+)
+
+# Measured on a 2M-point table, 32 cores
+# (`python bench_scale.py reader_scale gpkg`):
 # whole-table 24.2 s, 250k-row splits 9.9 s (8 splits — starves the
 # cores), 50k-row splits 4.0 s (40 splits, 6.1×). Range selects are
 # index-backed so finer splits cost only a connection open each; big
@@ -70,9 +81,12 @@ def strip_gpb(blob) -> bytes | None:
         return None
 
 
-def _catalog(path: str, table: str | None):
-    """Driver-side: (table, geom_col, crs_id, columns, lo, hi, n_rows).
-    Reads only catalog rows plus one min/max/count aggregate."""
+def _catalog(path: str, table: str | None, bbox):
+    """Driver-side: (table, geom_col, crs_id, columns, lo, hi, n_rows,
+    rtree). Reads only catalog rows plus one min/max/count aggregate —
+    over the rows whose R*Tree envelope meets ``bbox`` when a bbox is
+    given and the file carries the spec's index (gpkg_rtree_index
+    extension; ``rtree`` names it, else None)."""
     con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
     try:
         try:
@@ -113,26 +127,105 @@ def _catalog(path: str, table: str | None):
         if srs_row and srs_row[0] and int(srs_row[1]) > 0:
             crs = f"{srs_row[0].upper()}:{srs_row[1]}"
         cols = [r[1] for r in con.execute(f'PRAGMA table_info("{table}")')]
-        lo, hi, n_rows = con.execute(
-            f'SELECT min(rowid), max(rowid), count(*) FROM "{table}"'
-        ).fetchone()
-        return table, geom_col, crs, cols, lo, hi, n_rows
+        rtree = f"rtree_{table}_{geom_col}"
+        if bbox is None or not con.execute(
+            "SELECT 1 FROM sqlite_master WHERE name = ?", (rtree,)
+        ).fetchone():
+            rtree = None
+            lo, hi, n_rows = con.execute(
+                f'SELECT min(rowid), max(rowid), count(*) FROM "{table}"'
+            ).fetchone()
+        else:
+            # narrow the planning range to the index's matching span;
+            # the per-split subquery does the fine-grained pruning
+            bx0, by0, bx1, by1 = (float(v) for v in bbox)
+            lo, hi, n_rows = con.execute(
+                f'SELECT min(id), max(id), count(*) FROM "{rtree}" '
+                "WHERE maxx >= ? AND minx <= ? "
+                "AND maxy >= ? AND miny <= ?",
+                (bx0, bx1, by0, by1),
+            ).fetchone()
+        return table, geom_col, crs, cols, lo, hi, n_rows, rtree
     finally:
         con.close()
 
 
-def _rtree_name(path: str, table: str, geom_col: str) -> str | None:
-    """Name of the spec's R*Tree index virtual table
-    (gpkg_rtree_index extension) when the file carries one."""
-    name = f"rtree_{table}_{geom_col}"
-    con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
+def _plan_file(
+    path: str,
+    table: str | None,
+    id_field: str | None,
+    date_field: str | None,
+    split_rows: int,
+    bbox,
+    prefix: str,
+) -> tuple[list[dict], str | None]:
+    """Plan one file's rowid-range splits (driver-side, catalog rows
+    only); each split carries the file's path and its range SELECT so a
+    corpus maps through one executor closure. Rowid-fallback ids get
+    ``prefix``."""
+    table, geom_col, crs, cols, lo, hi, n_rows, rtree = _catalog(
+        path, table, bbox)
+    use_id, use_date = resolve_fields(cols, id_field, date_field,
+                                      f"table {table!r}")
+
+    sel_id = f', "{use_id}"' if use_id else ""
+    sel_dt = f', "{use_date}"' if use_date else ""
+    sql = (f'SELECT rowid{sel_id}{sel_dt}, "{geom_col}" FROM "{table}" '
+           f"WHERE rowid BETWEEN ? AND ?")
+    if rtree is not None:
+        bx0, by0, bx1, by1 = (float(v) for v in bbox)
+        sql += (
+            f' AND rowid IN (SELECT id FROM "{rtree}" '
+            f"WHERE maxx >= {bx0!r} AND minx <= {bx1!r} "
+            f"AND maxy >= {by0!r} AND miny <= {by1!r})"
+        )
+    ctx = dict(path=path, sql=sql, use_id=bool(use_id),
+               use_date=bool(use_date), prefix=prefix)
+    splits: list[dict] = []
+    if lo is not None and n_rows > 0:
+        # Plan by ROW COUNT, not rowid span: sparse/large fids (after
+        # deletes, or externally assigned) would otherwise yield an
+        # enormous number of vacuous splits. Cap at ceil(n/split_rows)
+        # splits by widening the rowid stride to cover the span.
+        max_splits = -(-n_rows // split_rows)
+        stride = max(split_rows, -(-(hi - lo + 1) // max_splits))
+        a = lo
+        while a <= hi:
+            splits.append(dict(ctx, a=a, b=min(hi, a + stride - 1)))
+            a += stride
+    return splits, crs
+
+
+def _decode(s: dict):
+    """Executor-side: one read-only connection and one range SELECT per
+    split; returns (ids, date cells, accumulator)."""
+    from ds_jedai_spark.model.geometry import GeometryAccumulator, parse_wkb
+
+    con = sqlite3.connect(f"file:{s['path']}?mode=ro", uri=True)
     try:
-        hit = con.execute(
-            "SELECT 1 FROM sqlite_master WHERE name = ?", (name,)
-        ).fetchone()
-        return name if hit else None
+        rows = con.execute(s["sql"], (s["a"], s["b"])).fetchall()
     finally:
         con.close()
+    acc = GeometryAccumulator(len(rows))
+    ids, dates = [], []
+    for r in rows:
+        rowid, rest = r[0], list(r[1:])
+        blob = rest.pop()
+        if s["use_id"]:
+            rid = rest.pop(0)
+            ids.append(None if rid is None else str(rid))
+        else:
+            ids.append(f"{s['prefix']}{rowid}")
+        dates.append(
+            None if not s["use_date"] or rest[0] is None else str(rest[0])
+        )
+        wkb = strip_gpb(blob)
+        parsed = parse_wkb(wkb) if wkb is not None else None
+        if parsed is None:
+            acc.add_invalid()
+        else:
+            acc.add(*parsed)
+    return ids, dates, acc
 
 
 def read_geopackage(
@@ -145,15 +238,21 @@ def read_geopackage(
     split_rows: int = DEFAULT_SPLIT_ROWS,
     bbox: tuple[float, float, float, float] | None = None,
 ) -> DataFrame:
-    """GeoPackage feature scan landing in the engine row format.
+    """GeoPackage feature scan landing in the engine row format, through
+    the shared binary scan (io/scan.py).
 
-    ``table`` selects the feature table (required only when the file
-    has several). ``id_field`` names a column; None — or the 'id'
-    default when absent — falls back to the table's rowid (explicitly
-    named absent columns raise, the parquet-reader contract).
-    ``date_field`` names a column parsed with ``date_pattern``. The
-    declared SRS becomes CRS metadata on gtype (api.run compares
-    source/target).
+    ``path``: one .gpkg file, a directory of them (top-level *.gpkg,
+    else recursive — export_geopackage_sharded's layout) or a glob
+    pattern; a missing file raises ``no such GeoPackage``. Every file's
+    rowid-range splits run in ONE scan. ``table`` selects the feature
+    table (required only when a file has several). ``id_field`` names
+    a column; None — or the 'id' default when absent — falls back to
+    the table's rowid, prefixed '<stem>:' when ``path`` is a directory
+    or pattern so the ids stay unique across shards (explicitly named
+    absent columns raise, the parquet-reader contract). ``date_field``
+    names a column parsed with ``date_pattern``. The declared SRS becomes CRS
+    metadata on gtype (api.run compares source/target); files of one
+    corpus declaring DIFFERENT SRS raise.
 
     ``bbox`` = (minx, miny, maxx, maxy) pushes the envelope predicate
     INTO the container when the file carries the spec's R*Tree index
@@ -161,191 +260,23 @@ def read_geopackage(
     driver narrows the rowid planning range to the index's matching
     span and every split's range select adds an R*Tree subquery, so
     executors fetch only candidate rows (the index stores float32
-    envelopes rounded outward — a conservative superset); the exact
-    JVM envelope filter on the output finishes the job, and is the
+    envelopes rounded outward — a conservative superset); the scan's
+    exact envelope filter on the output finishes the job, and is the
     whole story on files without the index."""
-    from ds_jedai_spark.model.geometry import (
-        GEOM_FIELDS,
-        GeometryAccumulator,
-        parse_wkb,
-        valid_geometries,
-    )
-
-    if os.path.isdir(path):
-        return _read_gpkg_corpus(
-            spark, path, table, id_field, date_field, date_pattern,
-            split_rows, bbox,
-        )
-    if not os.path.isfile(path):
-        raise ValueError(f"no such GeoPackage: {path!r}")
-    table, geom_col, crs, cols, lo, hi, n_rows = _catalog(path, table)
-    rtree = _rtree_name(path, table, geom_col) if bbox is not None else None
-    if rtree is not None:
-        # narrow the planning range to the index's matching span; the
-        # per-split subquery below does the fine-grained pruning
-        bx0, by0, bx1, by1 = (float(v) for v in bbox)
-        con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-        try:
-            lo, hi, n_rows = con.execute(
-                f'SELECT min(id), max(id), count(*) FROM "{rtree}" '
-                "WHERE maxx >= ? AND minx <= ? "
-                "AND maxy >= ? AND miny <= ?",
-                (bx0, bx1, by0, by1),
-            ).fetchone()
-        finally:
-            con.close()
-        if lo is None:
-            n_rows = 0
-
-    low = {c.lower(): c for c in cols}
-    use_id = None
-    if id_field is not None:
-        if id_field.lower() in low:
-            use_id = low[id_field.lower()]
-        elif id_field != "id":
-            raise ValueError(
-                f"column {id_field!r} not in table {table!r} "
-                f"(columns: {cols})"
-            )
-    use_date = None
-    if date_field is not None:
-        if date_field.lower() not in low:
-            raise ValueError(
-                f"date column {date_field!r} not in table {table!r} "
-                f"(columns: {cols})"
-            )
-        use_date = low[date_field.lower()]
-
-    splits: list[tuple[int, int]] = []
-    if lo is not None and n_rows > 0:
-        # Plan by ROW COUNT, not rowid span: sparse/large fids (after
-        # deletes, or externally assigned) would otherwise yield an
-        # enormous number of vacuous splits. Cap at ceil(n/split_rows)
-        # splits by widening the rowid stride to cover the span.
-        max_splits = -(-n_rows // split_rows)
-        stride = max(split_rows, -(-(hi - lo + 1) // max_splits))
-        a = lo
-        while a <= hi:
-            splits.append((a, min(hi, a + stride - 1)))
-            a += stride
-    if not splits:
-        splits = [(0, -1)]  # empty table: one vacuous split
-
-    want_ts = date_field is not None
-    out_fields = "id string, " + (
-        "ts_raw string, " if want_ts else "") + GEOM_FIELDS
-    sel_id = f', "{use_id}"' if use_id else ""
-    sel_dt = f', "{use_date}"' if use_date else ""
-    sql = (f'SELECT rowid{sel_id}{sel_dt}, "{geom_col}" FROM "{table}" '
-           f"WHERE rowid BETWEEN ? AND ?")
-    if rtree is not None:
-        sql += (
-            f' AND rowid IN (SELECT id FROM "{rtree}" '
-            f"WHERE maxx >= {bx0!r} AND minx <= {bx1!r} "
-            f"AND maxy >= {by0!r} AND miny <= {by1!r})"
-        )
-
-    def parse_splits(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            for s in batch.to_pylist():
-                con = sqlite3.connect(f"file:{path}?mode=ro", uri=True)
-                try:
-                    rows = con.execute(sql, (s["a"], s["b"])).fetchall()
-                finally:
-                    con.close()
-                acc = GeometryAccumulator(len(rows))
-                ids, dates = [], []
-                for r in rows:
-                    rowid, rest = r[0], list(r[1:])
-                    blob = rest.pop()
-                    rid = rest.pop(0) if use_id else rowid
-                    ids.append(None if rid is None else str(rid))
-                    dates.append(
-                        None if not use_date or rest[0] is None
-                        else str(rest[0])
-                    )
-                    wkb = strip_gpb(blob)
-                    parsed = parse_wkb(wkb) if wkb is not None else None
-                    if parsed is None:
-                        acc.add_invalid()
-                    else:
-                        acc.add(*parsed)
-                cols_out = [pa.array(ids, pa.string())]
-                names = ["id"]
-                if want_ts:
-                    cols_out.append(pa.array(dates, pa.string()))
-                    names.append("ts_raw")
-                yield pa.RecordBatch.from_arrays(
-                    cols_out + acc.arrays(),
-                    names=names + ["gtype", "coords",
-                                   "minx", "miny", "maxx", "maxy"],
-                )
-
-    plan = spark.createDataFrame(splits, "a long, b long").repartition(
-        len(splits)
-    )
-    out = valid_geometries(plan.mapInArrow(parse_splits, out_fields))
-    if want_ts:
-        from ds_jedai_spark.io.readers import parse_ts_cell
-
-        out = out.withColumn(
-            "ts", parse_ts_cell("ts_raw", date_pattern)
-        ).drop("ts_raw")
-    if bbox is not None:
-        # exact envelope predicate: finishes the R*Tree's conservative
-        # float32 superset, and is the only pruning without the index
-        bx0, by0, bx1, by1 = (float(v) for v in bbox)
-        out = out.where(
-            (F.col("minx") <= bx1) & (F.col("maxx") >= bx0)
-            & (F.col("miny") <= by1) & (F.col("maxy") >= by0)
-        )
-    if crs is not None:
-        out = out.withMetadata("gtype", {"crs": crs})
-    return out
-
-
-def _read_gpkg_corpus(
-    spark, path, table, id_field, date_field, date_pattern, split_rows,
-    bbox,
-):
-    """Directory of .gpkg shards (export_geopackage_sharded's layout) as
-    ONE DataFrame: per-file split planning through the single-file
-    reader, union, one declared CRS enforced across the corpus (the
-    fgb-corpus contract). Rowid-fallback ids get a '<stem>:' prefix so
-    they stay unique across shards."""
-    files = gpkg_corpus_files(path)
-    if not files:
-        raise ValueError(f"no .gpkg files under {path!r}")
-    out = None
-    crss: set = set()
+    files = list_files(path, ".gpkg", "GeoPackage")
+    splits: list[dict] = []
+    crss: list[str | None] = []
     for f in files:
-        df = read_geopackage(
-            spark, f, table=table, id_field=id_field,
-            date_field=date_field, date_pattern=date_pattern,
-            split_rows=split_rows, bbox=bbox,
-        )
-        crs = (df.schema["gtype"].metadata or {}).get("crs")
-        if crs is not None:
-            crss.add(crs)
-        _, _, _, cols, _, _, _ = _catalog(f, table)
-        if id_field is None or id_field.lower() not in {
-            c.lower() for c in cols
-        }:
-            stem = os.path.splitext(os.path.basename(f))[0]
-            df = df.withColumn(
-                "id", F.concat(F.lit(stem + ":"), F.col("id"))
-            )
-        out = df if out is None else out.unionByName(df)
-    if len(crss) > 1:
-        raise ValueError(
-            f"mixed CRS across .gpkg corpus {path!r}: {sorted(crss)}; "
-            "reproject to one frame first (-op reproject)"
-        )
-    if crss:
-        out = out.withMetadata("gtype", {"crs": crss.pop()})
-    return out
+        prefix = ("" if files == [path]
+                  else os.path.splitext(os.path.basename(f))[0] + ":")
+        s, crs = _plan_file(f, table, id_field, date_field, split_rows,
+                            bbox, prefix)
+        splits.extend(s)
+        crss.append(crs)
+    return scan(
+        spark, splits, _decode, path=path, ext=".gpkg", crss=crss,
+        dated=date_field is not None, date_pattern=date_pattern, bbox=bbox,
+    )
 
 
 def export_geopackage(
@@ -534,18 +465,13 @@ def export_geopackage_sharded(
     spec-conformant .gpkg — feature table, R*Tree index, catalog rows —
     via the same _assemble_gpkg the interop sink uses. ``spatial_shards
     = N`` first repartitionByRange's on (minx, miny) so each file gets a
-    coherent extent (its gpkg_contents envelope then lets a corpus bbox
-    read skip whole files). Overwrite semantics: pre-existing *.gpkg
-    under the directory are removed RECURSIVELY first (the reader's
-    corpus listing must never surface a stale shard). Executors write
+    coherent extent (a corpus bbox read then finds no R*Tree match in
+    most shards and plans no split for them). Overwrite semantics:
+    pre-existing *.gpkg under the directory, nested ones included, are
+    removed first (scan.clear_corpus). Executors write
     local filesystem paths — for object stores, write locally and
     upload, like the single-file sinks."""
-    os.makedirs(path, exist_ok=True)
-    import glob as _glob
-
-    for old in _glob.glob(os.path.join(path, "**", "*.gpkg"),
-                          recursive=True):
-        os.remove(old)
+    clear_corpus(path, ".gpkg")
     if spatial_shards:
         entities = entities.repartitionByRange(
             int(spatial_shards), "minx", "miny")
@@ -579,14 +505,3 @@ def export_geopackage_sharded(
         write_parts, "files long, rows long"
     ).groupBy().sum().collect()
 
-
-def gpkg_corpus_files(path: str) -> list[str]:
-    """Canonical listing of a directory corpus: top-level ``*.gpkg``,
-    falling back to a recursive glob — the same contract as
-    flatgeobuf.fgb_corpus_files, shared by the reader and
-    api.read_dataset's dispatch."""
-    import glob as _glob
-
-    return sorted(_glob.glob(os.path.join(path, "*.gpkg"))) or sorted(
-        _glob.glob(os.path.join(path, "**", "*.gpkg"), recursive=True)
-    )

@@ -16,33 +16,20 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from ds_jedai_spark.config import DEFAULT_DATE_PATTERN
+from ds_jedai_spark.io.scan import (
+    corpus_files,
+    parse_ts_cell,
+    record_batch,
+    row_schema,
+    with_ts,
+)
 from ds_jedai_spark.model.geometry import (
     flatten_collection_wkt,
     valid_geometries,
     with_parsed_geometry,
     with_parsed_geometry_wkb,
 )
-
-DEFAULT_DATE_PATTERN = "yyyy-MM-dd HH:mm:ss"
-
-
-def parse_ts_cell(col, date_pattern: str):
-    """Tolerant timestamp parse for reader date cells: the configured
-    pattern first, then — only when the pattern is the engine default —
-    the no-pattern ISO-8601 parser as an interop fallback (the
-    '2024-03-01T10:00:05Z' convention FlatGeobuf/GeoPackage files carry
-    in the wild). try_to_timestamp, never to_timestamp: under ANSI mode
-    (the Spark 4 default) a single malformed cell would otherwise fail
-    the WHOLE scan, while the readers' contract is cell-level tolerance
-    (null ts, row kept) — the same philosophy as invalid geometry
-    cells."""
-    c = F.col(col) if isinstance(col, str) else col
-    out = F.try_to_timestamp(c, F.lit(date_pattern))
-    if date_pattern == DEFAULT_DATE_PATTERN:
-        out = F.coalesce(out, F.try_to_timestamp(c))
-    return out
-
-
 
 def explode_collections(df: DataFrame, wkt_col: str = "wkt") -> DataFrame:
     """One row per GEOMETRYCOLLECTION member, other columns propagated
@@ -64,11 +51,7 @@ def explode_collections(df: DataFrame, wkt_col: str = "wkt") -> DataFrame:
 def _finish(df: DataFrame, date_field: str | None, date_pattern: str) -> DataFrame:
     out = with_parsed_geometry(df, "wkt")
     out = valid_geometries(out).drop("wkt")
-    if date_field is not None:
-        out = out.withColumn(
-            "ts", parse_ts_cell("ts_raw", date_pattern)
-        ).drop("ts_raw")
-    return out
+    return out if date_field is None else with_ts(out, date_pattern)
 
 
 def read_wkt_delimited(
@@ -176,11 +159,9 @@ def _geojson_from_lines(
     serialized every geometry to WKT text only to regex-parse it back)."""
     import json
 
-    from ds_jedai_spark.model.geometry import GEOM_FIELDS, GeometryAccumulator
+    from ds_jedai_spark.model.geometry import GeometryAccumulator
 
     def parse(batches):
-        import pyarrow as pa
-
         for batch in batches:
             rows = batch.column(0).to_pylist()
             feats = []
@@ -203,25 +184,12 @@ def _geojson_from_lines(
                     acc.add_invalid()
                 else:
                     acc.add(*parsed)
-            cols = [pa.array(ids, pa.string())]
-            names = ["id"]
-            if date_field is not None:
-                cols.append(pa.array(dates, pa.string()))
-                names.append("ts_raw")
-            yield pa.RecordBatch.from_arrays(
-                cols + acc.arrays(),
-                names=names + ["gtype", "coords", "minx", "miny", "maxx", "maxy"],
-            )
+            yield record_batch(
+                ids, dates if date_field is not None else None, acc)
 
-    fields = "id string, " + (
-        "ts_raw string, " if date_field is not None else ""
-    ) + GEOM_FIELDS
-    out = valid_geometries(lines.mapInArrow(parse, fields))
-    if date_field is not None:
-        out = out.withColumn(
-            "ts", parse_ts_cell("ts_raw", date_pattern)
-        ).drop("ts_raw")
-    return out
+    out = valid_geometries(
+        lines.mapInArrow(parse, row_schema(date_field is not None)))
+    return out if date_field is None else with_ts(out, date_pattern)
 
 
 GEOMETRY_PREDICATE = "<http://www.opengis.net/ont/geosparql#asWKT>"
@@ -325,7 +293,6 @@ def _geoparquet_geo_meta(path: str) -> tuple[str | None, dict | None]:
     one file's footer only (a directory reads its first part file) —
     auto-detection plus CRS awareness; an explicit geom_field never
     needs the column name."""
-    import glob
     import json
     import os
 
@@ -334,11 +301,7 @@ def _geoparquet_geo_meta(path: str) -> tuple[str | None, dict | None]:
 
         p = path
         if os.path.isdir(p):
-            hits = sorted(
-                glob.glob(os.path.join(p, "*.parquet"))
-            ) or sorted(
-                glob.glob(os.path.join(p, "**", "*.parquet"), recursive=True)
-            )
+            hits = corpus_files(p, ".parquet")
             if not hits:
                 return None, None
             p = hits[0]
@@ -464,9 +427,7 @@ def read_parquet_dataset(
                 with_parsed_geometry_wkb(sel, "wkb")
             ).drop("wkb")
             if date_field is not None and not typed_ts:
-                out = out.withColumn(
-                    "ts", parse_ts_cell("ts_raw", date_pattern)
-                ).drop("ts_raw")
+                out = with_ts(out, date_pattern)
             return _with_crs(out)
         return _with_crs(
             _finish(sel, None if typed_ts else date_field, date_pattern)

@@ -15,10 +15,12 @@ offset alone):
   (8 bytes/record) and the .dbf header (field layout), plus the 100-byte
   .shp header, and plans byte-range SPLITS of the .shp (default 8 MB,
   measured — see DEFAULT_SPLIT_BYTES).
-- EXECUTORS do one ranged read per split and Arrow-batch parsing
-  (GeometryAccumulator transport, like the WKT/WKB/GeoJSON readers), so
-  a single 2 GB file (the format's hard cap) parallelizes ~32-ways and
-  a many-file corpus gets one-or-more splits per file.
+- EXECUTORS do one ranged read per split and decode its records into a
+  GeometryAccumulator; the shared binary scan (io/scan.py) owns the
+  listing, the absent-field rule, the Arrow batch, the exact bbox
+  filter, the date parse and the one-CRS rule. A single 2 GB file (the
+  format's hard cap) parallelizes ~250 ways and a many-file corpus gets
+  one-or-more splits per file, all in one scan.
 - Record offsets come from .shx when present, so a corrupt record stays
   isolated (its neighbors still parse); without .shx the file is one
   sequential split and a corrupt record HEADER ends that file's chain.
@@ -39,20 +41,20 @@ cell: None -> add_invalid -> filtered by valid_geometries. A file whose
 
 from __future__ import annotations
 
-import glob as _glob
 import os
 import re
 import struct
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
+from ds_jedai_spark.config import DEFAULT_DATE_PATTERN
 from ds_jedai_spark.io.fsutil import fs_open, fs_size
+from ds_jedai_spark.io.scan import list_files, resolve_fields, scan
 
-DEFAULT_DATE_PATTERN = "yyyy-MM-dd HH:mm:ss"
 SHP_MAGIC = 9994
 # Measured on an 8M-record (224 MB) single file, 32 cores
-# (scripts/shp_scale_probe.py): whole-file 46.0 s, 64 MB splits 31.1 s,
+# (`python bench_scale.py reader_scale shp`): whole-file 46.0 s, 64 MB splits 31.1 s,
 # 16 MB 15.0 s, 8 MB 7.4 s — per-split Arrow-batch assembly favors
 # finer splits, and files below the split size still get one task each,
 # so small-file corpora are unaffected. A 2 GB file (the format cap)
@@ -269,13 +271,6 @@ def _prj_crs(path: str | None) -> str | None:
 
 # --- split planning + distributed parse --------------------------------
 
-_SPLIT_SCHEMA = (
-    "shp string, stem string, byte_start long, byte_end long, rec0 long, "
-    "offs array<long>, stride int, n_recs long, "
-    "dbf string, dbf_hdr int, dbf_rsz int, dbf_nrec long, "
-    "id_off int, id_len int, date_off int, date_len int"
-)
-
 # Offsets shipped per split are STRIDED to this cap: the executor seeks
 # to each anchor and chains records within the stride, so a corrupt
 # record damages at most one stride (stride 1 = exact per-record
@@ -291,50 +286,34 @@ def _plan_file(
     id_field: str | None,
     date_field: str | None,
     split_bytes: int,
+    bbox: list[float] | None,
 ) -> list[dict]:
     size = _shp_header(shp)
     stem = os.path.splitext(os.path.basename(shp))[0]
     dbf = _sibling(shp, ".dbf")
-    dbf_hdr = dbf_rsz = 0
-    dbf_nrec = 0
-    id_off = id_len = date_off = date_len = -1
-    date_type = "C"
-    if dbf is not None:
-        dbf_nrec, dbf_hdr, dbf_rsz, fields = _dbf_layout(dbf)
-        for want, silent in ((id_field, "id"), (date_field, None)):
-            if want is not None and want.lower() not in fields and (
-                want != silent
-            ):
-                raise ValueError(
-                    f"column {want!r} not in {dbf!r} "
-                    f"(fields: {sorted(fields)})"
-                )
-        if id_field is not None and id_field.lower() in fields:
-            id_off, id_len = fields[id_field.lower()][:2]
-        if date_field is not None and date_field.lower() in fields:
-            date_off, date_len, date_type = fields[date_field.lower()]
-    else:
-        # No .dbf sidecar: an EXPLICITLY named field cannot be honored.
-        # 'id' (the default) and None fall back to 'stem:N' ids; any
-        # other name raises — the documented absent-field contract.
-        if id_field not in (None, "id"):
-            raise ValueError(
-                f"column {id_field!r}: {shp!r} has no .dbf"
-            )
-        if date_field is not None:
-            raise ValueError(
-                f"date column {date_field!r}: {shp!r} has no .dbf"
-            )
+    dbf_nrec, dbf_hdr, dbf_rsz, fields = (
+        _dbf_layout(dbf) if dbf is not None else (0, 0, 0, {}))
+    # without a .dbf sidecar only 'id' (the default) and None can be
+    # honored, both by 'stem:N' ids
+    use_id, use_date = resolve_fields(
+        fields, id_field, date_field,
+        repr(dbf) if dbf is not None else f"{shp!r} (no .dbf)",
+    )
+    id_off, id_len = fields[use_id][:2] if use_id else (-1, -1)
+    date_off, date_len, date_type = (
+        fields[use_date] if use_date else (-1, -1, "C"))
 
     base = dict(shp=shp, stem=stem, dbf=dbf, dbf_hdr=dbf_hdr,
                 date_type=date_type,
                 dbf_rsz=dbf_rsz, dbf_nrec=dbf_nrec, id_off=id_off,
-                id_len=id_len, date_off=date_off, date_len=date_len)
+                id_len=id_len, date_off=date_off, date_len=date_len,
+                bbox=bbox)
+    whole = dict(base, byte_start=100, byte_end=size, rec0=0,
+                 offs=None, stride=1, n_recs=-1)
     shx = _sibling(shp, ".shx")
     offsets = _read_shx(shx) if shx else None
     if offsets is None:
-        return [dict(base, byte_start=100, byte_end=size, rec0=0,
-                     offs=None, stride=1, n_recs=-1)]
+        return [whole]
     offsets = [o for o in offsets if 100 <= o < size]
     splits, i = [], 0
     while i < len(offsets):
@@ -349,19 +328,7 @@ def _plan_file(
                            rec0=i, offs=group[::stride], stride=stride,
                            n_recs=len(group)))
         i = j + 1
-    return splits or [dict(base, byte_start=100, byte_end=size, rec0=0,
-                           offs=None, stride=1, n_recs=-1)]
-
-
-def shp_corpus_files(path: str) -> list[str]:
-    """Canonical listing of a directory corpus: top-level ``*.shp``,
-    falling back to a recursive glob — the same contract as
-    flatgeobuf.fgb_corpus_files / geopackage.gpkg_corpus_files, shared
-    by the reader and api.read_dataset's dispatch so both agree on
-    what constitutes the corpus."""
-    return sorted(_glob.glob(os.path.join(path, "*.shp"))) or sorted(
-        _glob.glob(os.path.join(path, "**", "*.shp"), recursive=True)
-    )
+    return splits or [whole]
 
 
 def read_shapefile(
@@ -374,102 +341,50 @@ def read_shapefile(
     bbox: tuple[float, float, float, float] | None = None,
 ) -> DataFrame:
     """Shapefile scan landing in the engine row format (id, [ts,]
-    gtype, coords, minx..maxy).
+    gtype, coords, minx..maxy), through the shared binary scan
+    (io/scan.py).
 
-    ``path``: a .shp file, a directory (recursive *.shp glob), or a
-    glob pattern. ``id_field`` names a .dbf attribute; None — or the
-    default 'id' when the .dbf has no such field — falls back to
+    ``path``: a .shp file or filesystem URI, a directory (top-level
+    *.shp, else recursive), or a glob pattern; a missing file raises
+    ``no such Shapefile``. ``id_field`` names a .dbf attribute; None —
+    or the default 'id' when the .dbf has no such field — falls back to
     '<filename-stem>:<record-number>' ids (explicitly named fields that
     are absent raise, same contract as the parquet reader).
     ``date_field`` names a .dbf attribute parsed with ``date_pattern``.
     A .prj sidecar's AUTHORITY code is carried as CRS metadata on the
-    gtype column (api.run warns on source/target CRS mismatch).
+    gtype column (api.run warns on source/target CRS mismatch); files
+    of one corpus whose .prj name DIFFERENT CRS raise.
 
     ``bbox`` = (minx, miny, maxx, maxy) keeps only envelope-intersecting
     entities. The format has no spatial index to skip byte ranges with
     (unlike .fgb/.gpkg), but every LINE/POLY/MULTIPOINT record HEADER
     carries the shape's bounding box (shapefile spec, content bytes
     4-36), so non-matching records short-circuit BEFORE vertex decode —
-    the dominant parse cost — and never materialize a row. A JVM-side
-    envelope filter on the output then removes any record whose header
-    box OVER-covers its vertices, so for spec-correct (or conservative)
-    header boxes the result equals apply_bbox() of an unfiltered read.
-    A hostile header box that UNDER-covers its vertices is skipped
-    before decode and cannot be restored by the post-filter — that one
-    direction of header lying yields a false negative (pinned in
+    the dominant parse cost — and never materialize a row. The scan's
+    exact envelope filter on the output then removes any record whose
+    header box OVER-covers its vertices, so for spec-correct (or
+    conservative) header boxes the result equals apply_bbox() of an
+    unfiltered read. A hostile header box that UNDER-covers its
+    vertices is skipped before decode and cannot be restored by the
+    post-filter — that one direction of header lying yields a false
+    negative (pinned in
     tests/test_shapefile.py::test_bbox_short_circuit_and_subset_law);
     read without bbox if the file's headers cannot be trusted."""
-    from ds_jedai_spark.model.geometry import (
-        GEOM_FIELDS,
-        GeometryAccumulator,
-        valid_geometries,
-    )
-
-    if os.path.isdir(path):
-        files = shp_corpus_files(path)
-    elif any(ch in path for ch in "*?["):
-        files = sorted(_glob.glob(path))
-    else:
-        # bare path or filesystem URI (file://, s3://, hdfs:// — one
-        # .shp; directory/glob listing stays local-path only)
-        files = [path]
-    if not files:
-        raise ValueError(f"no .shp files under {path!r}")
-
-    splits: list[dict] = []
-    for f in files:
-        splits.extend(_plan_file(f, id_field, date_field, split_bytes))
+    files = list_files(path, ".shp", "Shapefile")
+    _bbox = [float(v) for v in bbox] if bbox is not None else None
+    splits = [s for f in files
+              for s in _plan_file(f, id_field, date_field, split_bytes,
+                                  _bbox)]
     if (date_field is not None and date_pattern == DEFAULT_DATE_PATTERN
             and any(s["date_type"] == "D" for s in splits)):
         # dBASE 'D' fields store raw YYYYMMDD — auto-select the matching
         # pattern unless the caller overrode it explicitly
         date_pattern = "yyyyMMdd"
-    crs = next(
-        (c for c in (_prj_crs(_sibling(f, ".prj")) for f in files) if c),
-        None,
+    return scan(
+        spark, splits, _decode, path=path, ext=".shp",
+        crss=[_prj_crs(_sibling(f, ".prj")) for f in files],
+        dated=date_field is not None, date_pattern=date_pattern, bbox=bbox,
     )
-
-    want_ts = date_field is not None
-    out_fields = "id string, " + (
-        "ts_raw string, " if want_ts else "") + GEOM_FIELDS
-
-    _bbox = tuple(float(v) for v in bbox) if bbox is not None else None
-
-    def parse_splits(batches):
-        import pyarrow as pa
-
-        for batch in batches:
-            for s in batch.to_pylist():
-                yield _parse_one_split(
-                    s, want_ts, GeometryAccumulator, pa, bbox=_bbox
-                )
-
-    plan = spark.createDataFrame(
-        [tuple(s[k] for k in (
-            "shp", "stem", "byte_start", "byte_end", "rec0", "offs",
-            "stride", "n_recs", "dbf",
-            "dbf_hdr", "dbf_rsz", "dbf_nrec", "id_off", "id_len",
-            "date_off", "date_len")) for s in splits],
-        _SPLIT_SCHEMA,
-    ).repartition(len(splits))
-    out = valid_geometries(plan.mapInArrow(parse_splits, out_fields))
-    if _bbox is not None:
-        # exact envelope-intersection filter over the decoded rows:
-        # removes false positives from header boxes that OVER-cover
-        # their vertices (under-covering headers were already skipped
-        # pre-decode and stay absent — see the function docstring)
-        from ds_jedai_spark.api import apply_bbox
-
-        out = apply_bbox(out, _bbox)
-    if want_ts:
-        from ds_jedai_spark.io.readers import parse_ts_cell
-
-        out = out.withColumn(
-            "ts", parse_ts_cell("ts_raw", date_pattern)
-        ).drop("ts_raw")
-    if crs is not None:
-        out = out.withMetadata("gtype", {"crs": crs})
-    return out
 
 
 def _header_bbox_misses(content: bytes, bbox) -> bool:
@@ -496,13 +411,16 @@ def _header_bbox_misses(content: bytes, bbox) -> bool:
         return False
 
 
-def _parse_one_split(s: dict, want_ts: bool, GeometryAccumulator, pa,
-                     bbox=None):
+def _decode(s: dict):
     """Executor-side: one ranged read of the split's .shp bytes (and
     its aligned .dbf record block), per-record parse into the shared
-    Arrow accumulator. ``bbox`` short-circuits non-intersecting records
-    before vertex decode (they take the add_invalid slot, keeping the
+    Arrow accumulator; returns (ids, date cells, accumulator). The
+    split's ``bbox`` short-circuits non-intersecting records before
+    vertex decode (they take the add_invalid slot, keeping the
     positional .dbf alignment, and are dropped by valid_geometries)."""
+    from ds_jedai_spark.model.geometry import GeometryAccumulator
+
+    bbox = s["bbox"]
     with fs_open(s["shp"]) as f:
         f.seek(s["byte_start"])
         buf = f.read(s["byte_end"] - s["byte_start"])
@@ -556,9 +474,7 @@ def _parse_one_split(s: dict, want_ts: bool, GeometryAccumulator, pa,
     ids: list[str | None]
     dates: list[str | None] = [None] * n
     rec0 = s["rec0"]
-    if s["dbf"] is not None and s["id_off"] >= 0 or (
-        s["dbf"] is not None and want_ts
-    ):
+    if s["dbf"] is not None and (s["id_off"] >= 0 or s["date_off"] >= 0):
         take = max(0, min(n, s["dbf_nrec"] - rec0))
         with fs_open(s["dbf"]) as f:
             f.seek(s["dbf_hdr"] + rec0 * s["dbf_rsz"])
@@ -574,21 +490,12 @@ def _parse_one_split(s: dict, want_ts: bool, GeometryAccumulator, pa,
                    for k in range(n)]
         else:
             ids = [f"{s['stem']}:{rec0 + k + 1}" for k in range(n)]
-        if want_ts and s["date_off"] >= 0:
+        if s["date_off"] >= 0:
             dates = [cell(k, s["date_off"], s["date_len"])
                      if k < take else None for k in range(n)]
     else:
         ids = [f"{s['stem']}:{rec0 + k + 1}" for k in range(n)]
-
-    cols = [pa.array(ids, pa.string())]
-    names = ["id"]
-    if want_ts:
-        cols.append(pa.array(dates, pa.string()))
-        names.append("ts_raw")
-    return pa.RecordBatch.from_arrays(
-        cols + acc.arrays(),
-        names=names + ["gtype", "coords", "minx", "miny", "maxx", "maxy"],
-    )
+    return ids, dates, acc
 
 
 # --- sink ---------------------------------------------------------------

@@ -193,11 +193,12 @@ def stamp_geo_footer(
     under ``path`` (or to ``path`` itself if it is a single file).
     Returns the number of files stamped. ``crs`` is a PROJJSON dict;
     omitted means the spec default (OGC:CRS84)."""
-    import glob
     import json
     import os
 
     import pyarrow.parquet as pq
+
+    from ds_jedai_spark.io.scan import corpus_files
 
     colmeta: dict = {"encoding": "WKB", "geometry_types": []}
     if crs is not None:
@@ -208,10 +209,8 @@ def stamp_geo_footer(
         "columns": {geom_col: colmeta},
     }).encode("utf-8")
 
-    files = (
-        [path] if os.path.isfile(path)
-        else sorted(glob.glob(os.path.join(path, "*.parquet")))
-    )
+    # the part files the reader's footer sniff (readers.py) lists too
+    files = [path] if os.path.isfile(path) else corpus_files(path, ".parquet")
     for p in files:
         table = pq.read_table(p)
         meta = dict(table.schema.metadata or {})

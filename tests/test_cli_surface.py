@@ -1,6 +1,7 @@
 """The CLI's surface without Spark: every flag and every op's needed
-flags against the snapshot in cli_surface.json, the -bbox and -conf
-usage errors, and the single pin write path."""
+flags against the snapshot in cli_surface.json, the usage errors that
+refuse bad input before Spark starts (-bbox, -conf, -budget, spatial
+inputs, flag values), and the single pin write path."""
 
 import json
 from pathlib import Path
@@ -15,6 +16,7 @@ SNAPSHOT = json.loads(
     (Path(__file__).resolve().parent / "cli_surface.json").read_text()
 )
 PACKAGE = Path(cli.__file__).resolve().parent
+TSV = str(PACKAGE.parent / "fixtures" / "wkt_source.tsv")
 
 
 @pytest.fixture
@@ -93,6 +95,46 @@ def test_conf_config_error_exits_2(conf, tmp_path, no_spark, capsys):
     p.write_text(yaml.safe_dump(doc))
     assert cli.main(["-conf", str(p)]) == 2
     assert "nope" in capsys.readouterr().err.lower()
+
+
+@pytest.mark.parametrize("argv, says", [
+    (["-op", "convert", "-left", "{missing}", "-out", "o"],
+     "no such dataset"),
+    (["-op", "convert", "-left", "{bad_ext}", "-out", "o"],
+     "unsupported dataset extension"),
+    (["-op", "knn", "-left", TSV, "-right", "{missing}"], "no such dataset"),
+    (["-op", "convert", "-left", TSV, "-out", "o", "-to", "nope"],
+     "unknown -to"),
+    (["-op", "quantiles", "-left", "d.parquet", "-value-col", "v",
+      "-permille", "10,x"], "-permille"),
+    (["-op", "er", "-left", "d.parquet", "-filter-ratio", "4-5"],
+     "-filter-ratio"),
+    (["-op", "validate", "-left", "d.parquet", "-rules", "no_colon"],
+     "-rules"),
+    (["-op", "interval", "-left", "a.parquet", "-right", "b.parquet",
+      "-bucket-us", "none"], "bucket width"),
+    (["-op", "ann", "-left", "v.parquet", "-method", "brute",
+      "-index", "idx"], "drop -index"),
+    (["-op", "relate", "-left", TSV, "-right", TSV, "-budget", "0"],
+     "budget"),
+])
+def test_bad_input_exits_2_before_spark(argv, says, tmp_path, no_spark,
+                                        capsys):
+    bad_ext = tmp_path / "data.xyz"
+    bad_ext.write_text("x")
+    argv = [a.format(missing=tmp_path / "absent.tsv", bad_ext=bad_ext)
+            for a in argv]
+    assert cli.main(argv) == 2
+    err = capsys.readouterr().err
+    assert err.startswith(f"-op {argv[1]}: ") and says in err, err
+
+
+def test_conf_budget_below_one_exits_2(tmp_path, no_spark, capsys):
+    p = tmp_path / "conf.yaml"
+    p.write_text(yaml.safe_dump(
+        {"source": {"path": "s.tsv"}, "target": {"path": "t.tsv"}}))
+    assert cli.main(["-conf", str(p), "-budget", "0"]) == 2
+    assert "budget" in capsys.readouterr().err
 
 
 def test_local_checkpoint_only_in_pins():

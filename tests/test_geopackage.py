@@ -23,6 +23,7 @@ from ds_jedai_spark.io.geopackage import (
     read_geopackage,
     strip_gpb,
 )
+from ds_jedai_spark.io.scan import corpus_files
 
 FIX = str(
     Path(__file__).resolve().parent.parent / "fixtures" / "geo_source.gpkg"
@@ -30,6 +31,10 @@ FIX = str(
 WKT_FIX = str(
     Path(__file__).resolve().parent.parent / "fixtures" / "wkt_source.tsv"
 )
+
+
+def gpkg_corpus_files(path):
+    return corpus_files(path, ".gpkg")
 
 
 def _rowmap(df):
@@ -317,10 +322,7 @@ def test_export_geopackage_sharded_roundtrip(spark, tmp_path):
     """Distributed sink: one spec-conformant .gpkg per partition, read
     back as ONE DataFrame identical to the source; every shard carries
     its own R*Tree; overwrite removes stale shards recursively."""
-    from ds_jedai_spark.io.geopackage import (
-        export_geopackage_sharded,
-        gpkg_corpus_files,
-    )
+    from ds_jedai_spark.io.geopackage import export_geopackage_sharded
     from ds_jedai_spark.io.readers import read_wkt_delimited
 
     src = read_wkt_delimited(
@@ -415,8 +417,6 @@ def test_gpkg_corpus_rowid_fallback_prefix_and_api(spark, tmp_path):
 def test_cli_convert_to_sharded_geopackage(spark, tmp_path, capsys, cli_main):
     """-to geopackage with a non-.gpkg -out writes the sharded
     directory layout and reads back through the corpus reader."""
-    from ds_jedai_spark.io.geopackage import gpkg_corpus_files
-
     out = str(tmp_path / "convdir")
     rc = cli_main(["-op", "convert", "-left", FIX, "-to", "geopackage",
                    "-out", out])
@@ -433,10 +433,7 @@ def test_gpkg_sharded_spatial_layout(spark, tmp_path):
     a corpus bbox read returns the exact subset while most shards'
     R*Tree narrowing yields zero candidate rows (whole-shard misses are
     nearly free)."""
-    from ds_jedai_spark.io.geopackage import (
-        export_geopackage_sharded,
-        gpkg_corpus_files,
-    )
+    from ds_jedai_spark.io.geopackage import export_geopackage_sharded
     from ds_jedai_spark.io.readers import read_wkt_delimited
 
     src = read_wkt_delimited(
