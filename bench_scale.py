@@ -907,7 +907,7 @@ def asof_x16(hot: bool, bucket: object = "explicit"):
 # the one-split wall by the named leg's.
 READER_SCALE = {
     "shp": dict(records=8_000_000, split="split_bytes",
-                legs=(("one_task", None), ("default_64mb", 64 << 20),
+                legs=(("one_task", None), ("split_64mb", 64 << 20),
                       ("split_8mb", 8 << 20)),
                 speedup=("speedup_8mb_vs_one_task", "split_8mb")),
     "fgb": dict(records=2_000_000, split="split_bytes",
@@ -915,9 +915,9 @@ READER_SCALE = {
                       ("split_2mb", 2 << 20)),
                 speedup=("speedup_8mb_vs_one_task", "default_8mb")),
     "gpkg": dict(records=2_000_000, split="split_rows",
-                 legs=(("one_split", None), ("default_250k", 250_000),
+                 legs=(("one_split", None), ("rows_250k", 250_000),
                        ("rows_50k", 50_000)),
-                 speedup=("speedup_250k_vs_one_split", "default_250k")),
+                 speedup=("speedup_250k_vs_one_split", "rows_250k")),
 }
 
 

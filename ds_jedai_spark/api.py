@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import glob as _glob
 import os
+import re
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -29,13 +30,14 @@ from ds_jedai_spark.io.scan import apply_bbox
 from ds_jedai_spark.model.tiles import (  # noqa: F401 (compute_theta: api surface)
     compute_theta,
     grid_blocks,
-    theta_and_extent,
+    prologue,
 )
 from ds_jedai_spark.operators import progressive as prog
 from ds_jedai_spark.operators.relate import RELATIONS as REL_ORDER
 from ds_jedai_spark.operators.relate_general import with_general_relations
 from ds_jedai_spark.operators.spatial_join import tile_join
 from ds_jedai_spark.operators.weights import weight_exprs
+from ds_jedai_spark.pins import pin
 
 
 @dataclass(frozen=True)
@@ -170,14 +172,9 @@ def _check_crs(source: DataFrame, target: DataFrame, strict: bool) -> None:
 
 
 def _total_blocks(df: DataFrame, theta: tuple[float, float]) -> int:
-    """Grid-cell count of df's extent under theta, from its own min/max
-    aggregate (``run`` takes the source extent from the theta aggregate
-    instead, ``tiles.theta_and_extent``)."""
-    r = df.agg(
-        F.min("minx").alias("a"), F.max("maxx").alias("b"),
-        F.min("miny").alias("c"), F.max("maxy").alias("d"),
-    ).first()
-    return grid_blocks(None if r.a is None else (r.a, r.c, r.b, r.d), theta)
+    """Grid-cell count of df's extent under theta, from its own aggregate
+    (``run`` takes the source extent from its prologue instead)."""
+    return grid_blocks(prologue(df).extent, theta)
 
 
 # Above this budget, TakeOrderedAndProject's driver-side merge of `budget`
@@ -251,17 +248,30 @@ def _schedule(
     return sched.select(*keep)
 
 
-def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
-    """Execute the configuration; returns the GiantExp-style counts row for
-    DE9IM or the qualifying (s_id, t_id) pairs for a single relation.
-    ``extra.bbox`` = (minx,miny,maxx,maxy) restricts BOTH sides to
-    envelope-intersecting entities before the join (read_dataset pushes
-    it into the scan). ``extra.autoReproject`` converts a target that
-    declares the one closed-form CRS pair (EPSG:4326 <-> EPSG:3857)
-    into the source's frame in-plan instead of warning; with a bbox the
-    target's filter applies AFTER reprojection (same frame as the box —
-    the format-level index skip is traded for correctness on that
-    side)."""
+# Plan nodes that run Python on the executors: every non-parquet
+# reader's Arrow batches, the WKT/WKB parquet fallback, decompose's fine
+# envelopes and the pyproj reprojection tier.
+_PYTHON_NODE = re.compile(r"\b(MapInArrow|MapInPandas)\b")
+
+
+def _runs_python(df: DataFrame) -> bool:
+    return bool(_PYTHON_NODE.search(
+        df._jdf.queryExecution().analyzed().treeString()))
+
+
+_DECOMPOSED = ("DECOMPOSED_ENTITY", "INDEXED_DECOMPOSED_ENTITY")
+
+
+def _sides(spark: SparkSession, cfg: JedaiConfig) -> tuple[DataFrame, DataFrame]:
+    """The source and target frames ``run`` joins: read, [reprojected,]
+    bbox-filtered, [with fine envelopes]. A side whose reading runs
+    Python is pinned here, once (the reference persists its parsed RDDs,
+    GiantExp.scala:77): the prologue aggregate and the final query then
+    read the parsed rows instead of parsing the input twice. Engine
+    row-format parquet is left as a scan (nothing to parse). A pin is a
+    localCheckpoint (``pins.pin``): its blocks live as long as the
+    returned query references them, and cannot be recomputed if an
+    executor holding them is lost."""
     bbox = cfg.extra.get("bbox")
     auto = bool(cfg.extra.get("autoReproject"))
     source = read_dataset(spark, cfg.source, bbox=bbox)
@@ -272,25 +282,38 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
         if bbox is not None:
             target = apply_bbox(target, bbox)
     _check_crs(source, target, strict=bool(cfg.extra.get("strictCrs")))
-
-    decomposed = cfg.entity_type in (
-        "DECOMPOSED_ENTITY", "INDEXED_DECOMPOSED_ENTITY"
-    )
-    if decomposed:
+    if cfg.entity_type in _DECOMPOSED:
         from ds_jedai_spark.operators.decompose import with_fine_envelopes
 
         source = with_fine_envelopes(source)
         target = with_fine_envelopes(target)
+    return tuple(pin(df) if _runs_python(df) else df for df in (source, target))
 
-    # Target-side degenerate-theta guard (model/tiles.floor_theta): a
-    # source whose domain collapses to a point cannot produce a sane
-    # granularity for targets spanning a real domain.
-    from ds_jedai_spark.model.tiles import floor_theta
 
-    source_theta, source_extent = theta_and_extent(
-        source, cfg.theta_granularity
-    )
-    theta = floor_theta(source_theta, target)
+def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
+    """Execute the configuration; returns the GiantExp-style counts row for
+    DE9IM or the qualifying (s_id, t_id) pairs for a single relation.
+
+    Before the returned query, ``run`` starts one job per side whose
+    reading runs Python (the pin of ``_sides``) and ONE aggregate,
+    ``tiles.prologue``: theta floored at both domains, the source extent
+    and, when the load balancer is AUTO on the full-verification path,
+    both mean vertex counts.
+
+    ``extra.bbox`` = (minx,miny,maxx,maxy) restricts BOTH sides to
+    envelope-intersecting entities before the join (read_dataset pushes
+    it into the scan). ``extra.autoReproject`` converts a target that
+    declares the one closed-form CRS pair (EPSG:4326 <-> EPSG:3857)
+    into the source's frame in-plan instead of warning; with a bbox the
+    target's filter applies AFTER reprojection (same frame as the box —
+    the format-level index skip is traded for correctness on that
+    side)."""
+    source, target = _sides(spark, cfg)
+    decomposed = cfg.entity_type in _DECOMPOSED
+    balancer = str(cfg.extra.get("loadBalancer", "AUTO")).upper()
+    verts = cfg.progressive_algorithm is None and balancer == "AUTO"
+    pro = prologue(source, target, cfg.theta_granularity, verts=verts)
+    theta = pro.theta
     fine = ("fine_envs",) if decomposed else ()
     extras = ("gtype", "coords") + fine + (("ts",) if cfg.source.date_field else ())
     textras = ("gtype", "coords") + fine + (("ts",) if cfg.target.date_field else ())
@@ -321,7 +344,7 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
 
     if cfg.progressive_algorithm:
         wexpr = weight_exprs(
-            "s_", "t_", theta[0], theta[1], grid_blocks(source_extent, theta)
+            "s_", "t_", theta[0], theta[1], grid_blocks(pro.extent, theta)
         )
     if cfg.progressive_algorithm in (
         "DYNAMIC_PROGRESSIVE_GIANT", "EARLY_STOPPING"
@@ -359,8 +382,8 @@ def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
         from ds_jedai_spark.operators.loadbalance import auto_balance
 
         cand, _ = auto_balance(
-            cand, source, target,
-            mode=str(cfg.extra.get("loadBalancer", "AUTO")),
+            cand, source, target, mode=balancer,
+            cost=pro.pair_cost if verts else None,
         )
         verified = with_general_relations(cand)
 

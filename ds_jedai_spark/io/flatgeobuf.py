@@ -302,6 +302,9 @@ def _parse_properties(raw: bytes, cols: list[tuple[str, int]]) -> dict:
 
 
 MAX_SPLIT_OFFS = 4096  # same transport bound as the shapefile reader
+# 8 MB, as the shapefile reader: PLANS.md's round-14 probe, timed
+# without a warm-up scan and unverified until `reader_scale fgb` is
+# rerun at size.
 DEFAULT_SPLIT_BYTES = 8 << 20
 
 

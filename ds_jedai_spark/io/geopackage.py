@@ -49,6 +49,9 @@ from ds_jedai_spark.io.scan import (
 # cores), 50k-row splits 4.0 s (40 splits, 6.1×). Range selects are
 # index-backed so finer splits cost only a connection open each; big
 # tables get proportionally more splits, small ones still one task.
+# Those walls were timed without a warm-up scan (the whole-table leg
+# also paid the Python-worker start), so they are unverified until
+# `reader_scale gpkg` is rerun at that size.
 DEFAULT_SPLIT_ROWS = 50_000
 
 # envelope indicator (flags bits 1-3) -> number of doubles

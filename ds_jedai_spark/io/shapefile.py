@@ -58,7 +58,9 @@ SHP_MAGIC = 9994
 # 16 MB 15.0 s, 8 MB 7.4 s — per-split Arrow-batch assembly favors
 # finer splits, and files below the split size still get one task each,
 # so small-file corpora are unaffected. A 2 GB file (the format cap)
-# yields ~250 tasks.
+# yields ~250 tasks. Those walls were timed without a warm-up scan
+# (the whole-file leg also paid the Python-worker start), so they are
+# unverified until `reader_scale shp` is rerun at that size.
 DEFAULT_SPLIT_BYTES = 8 << 20
 
 # base xy layout per shape type: Z (+10) and M (+20) variants append

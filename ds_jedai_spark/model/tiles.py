@@ -4,9 +4,13 @@ Re-expresses the reference's TileGranularities / SpatialIndex pair
 (reference: src/main/scala/model/TileGranularities.scala:21-47,
 src/main/scala/model/structures/SpatialIndex.scala:33-47) the Spark way:
 
-- theta = one cheap aggregate over the SOURCE envelopes (avg extent),
-  collected as two driver scalars and folded into the plan as literals —
-  the only driver action besides final results, same as the reference.
+- theta = an aggregate over the SOURCE envelopes (avg extent), collected
+  as two driver scalars and folded into the plan as literals. ``api.run``
+  gets it from :func:`prologue`, ONE aggregate over both sides that also
+  returns the source extent, the target-domain floor and, when the load
+  balancer asks, each side's mean vertex count: the only driver action
+  before the final query, as in the reference (TileGranularities.scala:
+  33-36 is one pass over the source).
 - tile coverage = ``explode(sequence(floor(min/θ), floor(max/θ)))`` per
   axis. The per-partition hash-grid index of the reference is not needed:
   the exploded equi-join on (tx, ty) IS the index, and Catalyst picks
@@ -16,15 +20,20 @@ src/main/scala/model/structures/SpatialIndex.scala:33-47) the Spark way:
 Scale notes (100 TB): the explode multiplies rows by the mean tile count
 per geometry (~4 with avg-extent theta), but each exploded row carries only
 (id, 4 doubles, tx, ty) — the wide payload stays behind until after the
-join. Theta is an extra source pass; at scale, persist the envelope
-projection or reuse a stored stats row instead.
+join. The prologue is one extra pass over the envelope columns of both
+sides; ``api.run`` pins a side whose reading runs Python first, so that
+pass and the final query read the parsed rows instead of parsing twice
+(the reference persists its parsed RDDs the same way, GiantExp.scala:77).
 """
 
 from __future__ import annotations
 
 import math
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
+
+from ds_jedai_spark.operators.measures import npoints_expr
 
 MIN_THETA = 1e-9
 
@@ -42,43 +51,103 @@ MIN_THETA = 1e-9
 GRID_CAP = 512
 
 
-def compute_theta(source: DataFrame, mode: str = "avg") -> tuple[float, float]:
-    """Tile granularity from the source envelope extents. Modes mirror the
-    reference ThetaOption enum (TileGranularities.scala:21-47):
-    avg (recommended), min, max, avg2 (avg x 0.5) — floored at
-    domain_extent/GRID_CAP (see the guard note above; one pass, the
-    domain min/max ride in the same aggregate)."""
-    return theta_and_extent(source, mode)[0]
+ENVELOPE = ("minx", "miny", "maxx", "maxy")
+# Envelope-only input (no ``coords``) is all boxes: 5 vertices a row.
+BOX_VERTS = 5.0
 
 
-def theta_and_extent(
-    source: DataFrame, mode: str = "avg"
-) -> tuple[tuple[float, float], tuple[float, float, float, float] | None]:
-    """``compute_theta``'s theta plus the source's (minx, miny, maxx,
-    maxy) extent, both from ONE aggregate; the extent is None on an empty
-    source. Callers that also need the grid-cell count (``grid_blocks``)
-    take both here instead of aggregating the source twice."""
+@dataclass(frozen=True)
+class Prologue:
+    """What ``api.run`` needs before its final query, from one aggregate.
+
+    ``theta`` is floored at both domains over ``GRID_CAP``; ``extent`` is
+    the SOURCE (minx, miny, maxx, maxy), None on an empty source;
+    ``mean_verts`` is (source, target) mean vertex count per geometry,
+    None unless asked for (0.0 on an empty side)."""
+
+    theta: tuple[float, float]
+    extent: tuple[float, float, float, float] | None
+    mean_verts: tuple[float, float] | None = None
+
+    @property
+    def pair_cost(self) -> float:
+        """The load balancer's per-pair verification cost proxy: the
+        product of the two sides' mean vertex counts."""
+        return self.mean_verts[0] * self.mean_verts[1]
+
+
+def _floor(theta: tuple[float, float], extent) -> tuple[float, float]:
+    """theta floored at extent's domain / GRID_CAP per axis."""
+    if extent is None:
+        return theta
+    x0, y0, x1, y1 = extent
+    return max(theta[0], (x1 - x0) / GRID_CAP), max(theta[1], (y1 - y0) / GRID_CAP)
+
+
+def prologue(
+    source: DataFrame,
+    target: DataFrame | None = None,
+    mode: str = "avg",
+    verts: bool = False,
+) -> Prologue:
+    """Theta, the source extent and (``verts``) both mean vertex counts
+    from ONE aggregate: the two sides' envelope columns (plus a vertex
+    count) are unioned and grouped by side, so the whole answer is one
+    Exchange and one ``collect``.
+
+    Theta modes mirror the reference ThetaOption enum
+    (TileGranularities.scala:21-47): avg (recommended), min, max, avg2
+    (avg x 0.5) of the SOURCE extents, floored at domain/GRID_CAP of the
+    source and, when given, of the target (see the guard note above).
+
+    The vertex mean is a full scan, so it is exactly deterministic. On a
+    row-format parquet side it is one more columnar read of ``coords``,
+    which the final query reads anyway."""
     w, h = F.col("maxx") - F.col("minx"), F.col("maxy") - F.col("miny")
     agg = {"avg": F.avg, "avg2": F.avg, "min": F.min, "max": F.max}[mode]
-    row = source.agg(
-        agg(w).alias("tx"), agg(h).alias("ty"),
-        F.min("minx").alias("x0"), F.min("miny").alias("y0"),
-        F.max("maxx").alias("x1"), F.max("maxy").alias("y1"),
-    ).collect()[0]
-    extent = None if row["x0"] is None else (
-        row["x0"], row["y0"], row["x1"], row["y1"])
-    dw, dh = (0.0, 0.0) if extent is None else (
-        extent[2] - extent[0], extent[3] - extent[1])
+
+    def side(df: DataFrame, tag: int) -> DataFrame:
+        cols = [F.lit(tag).alias("side"), *ENVELOPE]
+        if verts:
+            v = npoints_expr() if "coords" in df.columns else F.lit(BOX_VERTS)
+            cols.append(v.cast("double").alias("v"))
+        return df.select(*cols)
+
+    both = side(source, 0)
+    if target is not None:
+        both = both.unionByName(side(target, 1))
+    aggs = [agg(w).alias("tx"), agg(h).alias("ty"),
+            F.min("minx").alias("x0"), F.min("miny").alias("y0"),
+            F.max("maxx").alias("x1"), F.max("maxy").alias("y1")]
+    if verts:
+        aggs.append(F.avg("v").alias("m"))
+    rows = {r["side"]: r.asDict()
+            for r in both.groupBy("side").agg(*aggs).collect()}
+
+    def extent(tag: int):
+        r = rows.get(tag, {})
+        return None if r.get("x0") is None else (
+            r["x0"], r["y0"], r["x1"], r["y1"])
+
+    src = rows.get(0, {})
     scale = 0.5 if mode == "avg2" else 1.0
-    theta = (
-        max((row["tx"] or MIN_THETA) * scale, dw / GRID_CAP, MIN_THETA),
-        max((row["ty"] or MIN_THETA) * scale, dh / GRID_CAP, MIN_THETA),
-    )
-    return theta, extent
+    raw = tuple(max((src.get(k) or MIN_THETA) * scale, MIN_THETA)
+                for k in ("tx", "ty"))
+    theta = _floor(_floor(raw, extent(0)), extent(1))
+    means = None
+    if verts:
+        means = tuple(float(rows.get(t, {}).get("m") or 0.0) for t in (0, 1))
+    return Prologue(theta, extent(0), means)
+
+
+def compute_theta(source: DataFrame, mode: str = "avg") -> tuple[float, float]:
+    """Tile granularity from the source envelope extents alone (the
+    source half of :func:`prologue`)."""
+    return prologue(source, mode=mode).theta
 
 
 def grid_blocks(extent, theta: tuple[float, float]) -> int:
-    """Grid-cell count of an extent (``theta_and_extent``) under theta
+    """Grid-cell count of an extent (``Prologue.extent``) under theta
     (reference GridPartitioner.computeTotalBlocks, utils/readers/
     GridPartitioner.scala:85-93); an empty input (extent None) has one
     vacuous block."""
@@ -92,19 +161,12 @@ def grid_blocks(extent, theta: tuple[float, float]) -> int:
 
 def floor_theta(theta: tuple[float, float], other: DataFrame) -> tuple[float, float]:
     """Floor an already-computed theta by ANOTHER dataset's domain
-    extents (one pruned min/max pass): the cross-dataset degenerate —
-    a zero-extent source domain (all geometries stacked at one spot)
-    joined against targets spanning a real domain — slips past the
-    source-side floor, and the target side would still explode. Called
-    by api.run on the target frame; a coarser theta is always correct."""
-    row = other.agg(
-        (F.max("maxx") - F.min("minx")).alias("dw"),
-        (F.max("maxy") - F.min("miny")).alias("dh"),
-    ).collect()[0]
-    return (
-        max(theta[0], (row["dw"] or 0.0) / GRID_CAP),
-        max(theta[1], (row["dh"] or 0.0) / GRID_CAP),
-    )
+    extents: the cross-dataset degenerate — a zero-extent source domain
+    (all geometries stacked at one spot) joined against targets spanning
+    a real domain — slips past the source-side floor, and the target side
+    would still explode. :func:`prologue` applies the same floor to its
+    target; a coarser theta is always correct."""
+    return _floor(theta, prologue(other).extent)
 
 
 def with_tiles(df: DataFrame, theta: tuple[float, float]) -> DataFrame:

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from ds_jedai_spark.model.tiles import ENVELOPE, prologue
 from ds_jedai_spark.pins import pin
 
 Z_SCORE = 3.0
@@ -108,45 +109,23 @@ def segment_group_units(seg_cand: DataFrame) -> DataFrame:
 VERTEX_COST_THRESHOLD = 64.0
 
 
-def sample_mean_verts(df: DataFrame, sample: int = 50_000) -> DataFrame:
-    """One-row DataFrame ``(m)``: the mean vertex count per geometry of
-    ``df``, over a bounded LIMIT sample (reads a handful of files at
-    100 TB — never a full scan). Envelope-only input (no ``coords``) is
-    all boxes, so ``m`` is 5.
-
-    Determinism: the averaged rows are the ``sample/10`` SMALLEST
-    xxhash64(id) rows within the LIMIT-bounded superset (the same
-    rank-based convention as the ANN seeding). The superset itself is
-    stable whenever the scan's partition order is (true for all the
-    engine's readers on a fixed file listing), and when it does shift
-    the smallest-hash subset overlaps heavily — so the AUTO dispatch
-    does not flip plan shape run-to-run on corpora near the threshold,
-    without paying a full scan for an exact deterministic sample."""
-    if "coords" not in df.columns:
-        return df.sparkSession.range(1).select(F.lit(5.0).alias("m"))
-    sub = df.select(
-        F.xxhash64(F.col("id").cast("string")).alias("h"),
-        F.expr("aggregate(coords, 0, (a, p) -> a + size(p))").alias("v"),
-    ).limit(sample)
-    return (
-        sub.orderBy("h")
-        .limit(max(1, sample // 10))
-        .agg(F.avg("v").alias("m"))
-    )
-
-
-def estimate_pair_cost(source: DataFrame, target: DataFrame,
-                       sample: int = 50_000) -> float:
+def estimate_pair_cost(source: DataFrame, target: DataFrame) -> float:
     """Average per-pair verification cost proxy: the product of the two
-    inputs' sample mean vertex counts (``sample_mean_verts``), never an
-    action over the exploded candidate set. The two one-row samples are
-    cross-joined, so the estimate is one driver action, not two."""
-    row = (
-        sample_mean_verts(source, sample)
-        .crossJoin(sample_mean_verts(target, sample).withColumnRenamed("m", "mt"))
-        .first()
-    )
-    return float(row["m"] or 0.0) * float(row["mt"] or 0.0)
+    inputs' mean vertex counts per geometry, never an action over the
+    exploded candidate set. A thin wrapper over ``tiles.prologue`` (one
+    aggregate over both inputs; ``api.run`` reads the cost from its own
+    prologue instead). The means are full scans, so the AUTO choice is
+    exactly deterministic; on a row-format parquet input that is one
+    columnar read of ``coords``, which the verifying query reads anyway.
+    An input without envelope columns contributes its vertex count only;
+    one without ``coords`` is all boxes (5 vertices)."""
+    def enveloped(df: DataFrame) -> DataFrame:
+        if "minx" in df.columns:
+            return df
+        return df.select("*", *(F.lit(None).cast("double").alias(c)
+                                for c in ENVELOPE))
+
+    return prologue(enveloped(source), enveloped(target), verts=True).pair_cost
 
 
 def auto_balance(
@@ -157,12 +136,16 @@ def auto_balance(
     z: float = Z_SCORE,
     skew_parts: int | None = None,
     threshold: float = VERTEX_COST_THRESHOLD,
+    cost: float | None = None,
 ) -> tuple[DataFrame, bool]:
     """Route candidates through the skew-split join only when per-pair
     verification is expensive enough to pay for it.
 
     ``mode``: ``AUTO`` (estimate, engage above ``threshold``), ``ON``
     (always split), ``OFF`` (never). Returns (candidates, engaged).
+    ``cost`` is the per-pair cost estimate when the caller already has
+    it (``api.run`` takes it from ``tiles.prologue``); without it the
+    estimate is ``estimate_pair_cost``, one aggregate over both inputs.
     The estimate never touches ``cand`` — the cheap route keeps the
     single-pass streaming plan (no materialization is introduced).
     Reference: WellBalancedDistributedInterlinking.scala:33-92 applies
@@ -176,8 +159,11 @@ def auto_balance(
         raise ValueError(f"loadBalancer mode {mode!r} not in AUTO/ON/OFF")
     if mode == "OFF":
         return cand, False
-    if mode != "ON" and estimate_pair_cost(source, target) < threshold:
-        return cand, False
+    if mode == "AUTO":
+        if cost is None:
+            cost = estimate_pair_cost(source, target)
+        if cost < threshold:
+            return cand, False
     return well_balanced_candidates(cand, z=z, skew_parts=skew_parts), True
 
 

@@ -671,9 +671,14 @@ def test_load_balancer_dispatch_routes_and_matches(spark, conf_path):
     tgt = api.read_dataset(spark, cfg.target)
     est = lb.estimate_pair_cost(src, tgt)
     assert 0 < est < lb.VERTEX_COST_THRESHOLD
-    # One cross-joined action, same value as the two per-side means.
-    assert est == (lb.sample_mean_verts(src).first()["m"]
-                   * lb.sample_mean_verts(tgt).first()["m"])
+    # One aggregate, same value as the product of the two per-side
+    # full-scan means.
+    from ds_jedai_spark.operators.measures import npoints_expr
+
+    def mean(df):
+        return df.select(F.avg(npoints_expr())).first()[0]
+
+    assert est == mean(src) * mean(tgt)
     # A 16-gon-ish corpus must estimate above threshold.
     many = spark.createDataFrame(
         [(1, [[[float(i), float(i % 3)] for i in range(17)]])],

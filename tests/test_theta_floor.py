@@ -75,19 +75,20 @@ def test_tile_explosion_is_grid_bounded(spark):
 
 
 def test_one_aggregate_gives_the_grid_block_count(spark):
-    # api.run takes theta and the source extent from one aggregate; the
-    # block count must equal api._total_blocks' own min/max pass, and an
-    # empty source keeps its one vacuous block (boxes: avg extent 1.5 x 1
-    # over 0..6 x 0..4 -> 5 x 5 cells)
+    # api.run takes theta and the source extent from one aggregate
+    # (tiles.prologue); the block count must equal api._total_blocks' own
+    # pass, and an empty source keeps its one vacuous block (boxes: avg
+    # extent 1.5 x 1 over 0..6 x 0..4 -> 5 x 5 cells)
     from ds_jedai_spark import api
-    from ds_jedai_spark.model.tiles import grid_blocks, theta_and_extent
+    from ds_jedai_spark.model.tiles import grid_blocks, prologue
 
     boxes = _df(spark, [(0.0, 0.0, 2.0, 1.0), (5.0, 3.0, 6.0, 4.0)])
     stacked = _df(spark, [(0.25, 0.25, 0.25, 0.25)] * 4)
     empty = _df(spark, [])
     for df, want in ((boxes, 5 * 5), (stacked, 1), (empty, 1)):
         for mode in ("avg", "min", "max", "avg2"):
-            theta, extent = theta_and_extent(df, mode)
+            p = prologue(df, mode=mode)
+            theta, extent = p.theta, p.extent
             assert theta == compute_theta(df, mode)
             blocks = grid_blocks(extent, theta)
             assert blocks == api._total_blocks(df, theta)
