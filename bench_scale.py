@@ -96,6 +96,14 @@ noise is small relative to the run):
   vertex polygons (record-header short-circuit), fgb a ~1% bbox read
   (R-tree skip), fgb and gpkg a sharded-sink write plus corpus read.
   `python bench_scale.py reader_scale shp 8000000` prints one JSON line.
+- python_task_latency [reps] (run on its own, like reader_scale): the
+  fixed cost of one Python task. Runs ``reps`` one-row ``mapInArrow``
+  jobs on a warm session and reports the median gap from the task's
+  launch (Spark's status store) to its first row arriving in Python
+  (the task's clock; same host), and the median time of the
+  ``importlib.invalidate_caches()`` every task runs at start-up (see
+  ds_jedai_spark/worker_daemon.py).
+  `python bench_scale.py python_task_latency` prints one JSON line.
 """
 
 from __future__ import annotations
@@ -1026,6 +1034,53 @@ def reader_scale(spark, fmt: str, n: int, cpus: int) -> dict:
     return res
 
 
+def python_task_latency(spark, reps: int = 15) -> dict:
+    """Median launch-to-first-row latency of a one-row ``mapInArrow``
+    task and median in-task ``importlib.invalidate_caches()`` time over
+    ``reps`` jobs, after one untimed job starts the worker."""
+    import statistics
+    import uuid
+
+    import pyarrow as pa
+
+    def first_row(batches):
+        import importlib
+
+        for _ in batches:
+            arrived = time.time()
+            t = time.perf_counter()
+            importlib.invalidate_caches()
+            yield pa.RecordBatch.from_pydict({
+                "arrived": [arrived],
+                "invalidate_s": [time.perf_counter() - t]})
+
+    sc = spark.sparkContext
+    store = sc._jsc.sc().statusStore()
+    one = spark.range(1, numPartitions=1).mapInArrow(
+        first_row, "arrived double, invalidate_s double")
+    one.collect()
+    latency, invalidate = [], []
+    for _ in range(reps):
+        group = uuid.uuid4().hex
+        sc.setJobGroup(group, group)
+        try:
+            row = one.collect()[0]
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        (job,) = st.getJobIdsForGroup(group)
+        (stage,) = st.getJobInfo(job).stageIds
+        launched = store.taskList(stage, 0, 1).head().launchTime().getTime()
+        latency.append(row.arrived - launched / 1000.0)
+        invalidate.append(row.invalidate_s)
+    return {"entry": "python_task_latency", "reps": reps,
+            "launch_to_first_row_s": round(statistics.median(latency), 4),
+            "invalidate_caches_s": round(statistics.median(invalidate), 5),
+            "python": ".".join(map(str, sys.version_info[:3])),
+            "daemon": sc.getConf().get("spark.python.daemon.module",
+                                       "pyspark.daemon")}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or "0.1")
@@ -1255,6 +1310,13 @@ if __name__ == "__main__":
         spark = get_spark(f"{fmt}_reader_scale")
         print(json.dumps(reader_scale(
             spark, fmt, n, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))))
+        spark.stop()
+    elif sys.argv[1:2] == ["python_task_latency"]:
+        spark = get_spark("python_task_latency")
+        res = python_task_latency(
+            spark, *(int(a) for a in sys.argv[2:3]))
+        res["cpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        print(json.dumps(res))
         spark.stop()
     else:
         main()

@@ -267,11 +267,13 @@ def _sides(spark: SparkSession, cfg: JedaiConfig) -> tuple[DataFrame, DataFrame]
     bbox-filtered, [with fine envelopes]. A side whose reading runs
     Python is pinned here, once (the reference persists its parsed RDDs,
     GiantExp.scala:77): the prologue aggregate and the final query then
-    read the parsed rows instead of parsing the input twice. Engine
-    row-format parquet is left as a scan (nothing to parse). A pin is a
-    localCheckpoint (``pins.pin``): its blocks live as long as the
-    returned query references them, and cannot be recomputed if an
-    executor holding them is lost."""
+    read the parsed rows instead of parsing the input twice. The pin is
+    lazy, so no job runs here: the prologue aggregate is the job that
+    parses both sides, in parallel tasks of its one scan stage, and
+    caches their blocks. Engine row-format parquet is left as a scan
+    (nothing to parse). A pin is a localCheckpoint (``pins.pin``): its
+    blocks live as long as the returned query references them, and
+    cannot be recomputed if an executor holding them is lost."""
     bbox = cfg.extra.get("bbox")
     auto = bool(cfg.extra.get("autoReproject"))
     source = read_dataset(spark, cfg.source, bbox=bbox)
@@ -287,18 +289,21 @@ def _sides(spark: SparkSession, cfg: JedaiConfig) -> tuple[DataFrame, DataFrame]
 
         source = with_fine_envelopes(source)
         target = with_fine_envelopes(target)
-    return tuple(pin(df) if _runs_python(df) else df for df in (source, target))
+    return tuple(pin(df, eager=False) if _runs_python(df) else df
+                 for df in (source, target))
 
 
 def run(spark: SparkSession, cfg: JedaiConfig) -> DataFrame:
     """Execute the configuration; returns the GiantExp-style counts row for
     DE9IM or the qualifying (s_id, t_id) pairs for a single relation.
 
-    Before the returned query, ``run`` starts one job per side whose
-    reading runs Python (the pin of ``_sides``) and ONE aggregate,
-    ``tiles.prologue``: theta floored at both domains, the source extent
-    and, when the load balancer is AUTO on the full-verification path,
-    both mean vertex counts.
+    Before the returned query, ``run`` starts ONE aggregate (two jobs:
+    its shuffle-map stage and its result), ``tiles.prologue``: theta
+    floored at both domains, the source extent and, when the load
+    balancer is AUTO on the full-verification path, both mean vertex
+    counts. Its scan stage also parses every side that ``_sides``
+    pinned, so the returned query reads those sides' cached blocks. The
+    reads' own CSV-header and parquet-footer jobs come on top.
 
     ``extra.bbox`` = (minx,miny,maxx,maxy) restricts BOTH sides to
     envelope-intersecting entities before the join (read_dataset pushes

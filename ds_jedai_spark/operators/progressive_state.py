@@ -47,6 +47,17 @@ proportional to its candidate count (reference localBudget,
 ProgressiveGIAnt.scala:26). The group total needed for that share is a
 broadcast one-row aggregate joined onto the candidates — no driver-side
 ``count()`` action, so the candidate set is scanned exactly once.
+
+The scan input is repartitioned explicitly by ``pid`` into
+``min(num_parts, spark.sql.shuffle.partitions)`` partitions, after the
+group totals are taken (so their aggregate stays a map-side count). Left to
+``groupBy``, the ``hashpartitioning(pid)`` exchange is one AQE may
+coalesce, and on a small candidate set it coalesced into ONE partition:
+the whole scan ran as one task with the other cores idle (the
+``progressive`` perfbench workload at ``local[2]``). A
+repartition-by-number exchange is never coalesced, and ``groupBy("pid")``
+reuses its partitioning (no second Exchange). The groups, and so the
+output, do not depend on the partition count.
 """
 
 from __future__ import annotations
@@ -226,6 +237,13 @@ def _scan_input(cand, weight_sql, qualifies_col, relation, num_parts):
     return base, schema
 
 
+def _by_pid(base: DataFrame, num_parts: int):
+    """``base`` grouped by pid over an explicit pid repartition (see the
+    module docstring: AQE would coalesce groupBy's own exchange)."""
+    shuffle_parts = int(base.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    return base.repartition(min(num_parts, shuffle_parts), "pid").groupBy("pid")
+
+
 def dynamic_progressive(
     cand: DataFrame,
     weight_sql: str,
@@ -251,7 +269,7 @@ def dynamic_progressive(
         return _scan(table, partial(_dynamic_order, budget=local_budget),
                      relation)
 
-    return base.groupBy("pid").applyInArrow(scan, schema)
+    return _by_pid(base, num_parts).applyInArrow(scan, schema)
 
 
 def early_stopping(
@@ -274,6 +292,6 @@ def early_stopping(
         _early_stopping_order, batch_size=batch_size,
         max_violations=max_violations, precision_level=precision_level,
     )
-    return base.groupBy("pid").applyInArrow(
+    return _by_pid(base, num_parts).applyInArrow(
         lambda table: _scan(table, pick, relation), schema
     )

@@ -4,8 +4,9 @@ The reference persists each intermediate it reuses once and reads it
 back (experiments/GiantExp.scala:77). This module is the engine's one
 form of that decision:
 
-- :func:`pin` materialises a frame, either as an eager localCheckpoint
-  (the single-job form) or as a managed table that outlives the job.
+- :func:`pin` materialises a frame, either as a localCheckpoint (the
+  single-job form; eager, or by the first job that reads it) or as a
+  managed table that outlives the job.
 - :func:`fresh_stats_checkpoint` is the pin for iterative self-joining
   loops, whose rounds would otherwise compound Catalyst's estimates.
 - :func:`cached` holds the cross-query artifacts (pinned shingles, the
@@ -27,10 +28,15 @@ def pin(
     table: str | None = None,
     bucket_by: tuple[str, ...] = (),
     buckets: int = 32,
+    eager: bool = True,
 ) -> DataFrame:
     """Materialise a multi-use intermediate and return a frame over it.
 
-    ``table=None`` is the single-job form: an eager localCheckpoint.
+    ``table=None`` is the single-job form: a localCheckpoint. Eager, it
+    runs its own job now; with ``eager=False`` no job runs here, and the
+    first job that reads the frame computes it and caches its blocks as
+    a side effect, so later jobs read the blocks (``api._sides`` lets
+    the prologue aggregate parse both inputs this way, in one job).
     Every self-join or fan-out would otherwise recompute its full
     upstream per branch — the LSH plan references the shingle table
     four times and the candidate set twice (measured ~3x end-to-end).
@@ -40,8 +46,9 @@ def pin(
     the checkpoint's lineage truncation is what guarantees reuse.
     Local-checkpoint blocks live on the executors and CANNOT be
     recomputed from lineage: losing an executor that holds one fails
-    every query that reads the pin. This is weaker than the reference's
-    persisted RDDs, which recompute lost partitions.
+    every query that reads the pin; the lazy form has the same caveat
+    from the moment its first job completes. This is weaker than the
+    reference's persisted RDDs, which recompute lost partitions.
 
     A ``table`` name is the multi-job form: the table is dropped
     (orphaned warehouse location included, see
@@ -49,9 +56,10 @@ def pin(
     With ``bucket_by`` it is bucketed and sorted by those columns, so
     later joins on them plan with no Exchange on the bucketed side
     (Catalyst proves co-partitioning from the bucket spec).
-    ``bucket_by`` and ``buckets`` apply to tables only."""
+    ``bucket_by`` and ``buckets`` apply to tables only, ``eager`` to
+    the localCheckpoint only."""
     if table is None:
-        return df.localCheckpoint()
+        return df.localCheckpoint(eager=eager)
     from ds_jedai_spark.io.bucketed import drop_table_and_location
 
     spark = df.sparkSession

@@ -146,3 +146,53 @@ def cli_main(spark, monkeypatch):
     monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
     monkeypatch.setattr(spark, "stop", lambda: None)
     return cli.main
+
+
+def group_jobs(spark, call) -> list[int]:
+    """Run ``call()`` under a fresh job group; the ids of the jobs it
+    started, in order."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = uuid.uuid4().hex
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sorted(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.fixture
+def ran_stages(spark):
+    """``ran_stages(call)``: ``(name, tasks, operators)`` of every stage
+    that ran tasks while ``call()`` ran, in stage order. ``operators``
+    are the plan operator scopes of the stage's RDD graph (e.g.
+    "MapInArrow", "Scan csv ", "FlatMapGroupsInArrow"); a stage that was
+    skipped (its shuffle output reused) is left out."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+
+    def scopes(cluster) -> list[str]:
+        out = []
+        for child in jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+                cluster.childClusters()):
+            out.append(child.name())
+            out.extend(scopes(child))
+        return out
+
+    def run(call):
+        jobs = group_jobs(spark, call)
+        st, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+        sids = sorted({s for j in jobs for s in st.getJobInfo(j).stageIds})
+        stages = []
+        for sid in sids:
+            info = st.getStageInfo(sid)
+            if info is None or info.numCompletedTasks == 0:
+                continue
+            graph = store.operationGraphForStage(sid)
+            stages.append((info.name, info.numCompletedTasks,
+                           scopes(graph.rootCluster())))
+        return stages
+
+    return run

@@ -256,10 +256,13 @@ def test_wkb_scan_prunes_to_id_and_geometry(spark):
 
 
 @pytest.mark.parametrize("alg", ["DYNAMIC_PROGRESSIVE_GIANT", "EARLY_STOPPING"])
-def test_stateful_progressive_plan_verifies_inside_one_scan(spark, tmp_path, alg):
+def test_stateful_progressive_plan_verifies_inside_one_scan(
+        spark, tmp_path, ran_stages, alg):
     """api.run's stateful progressive jobs verify inside their Arrow scan:
     exactly one FlatMapGroupsInArrow, no semi-join of the schedule back
-    onto the candidates and no second (MapInArrow) verification pass."""
+    onto the candidates and no second (MapInArrow) verification pass.
+    The scan runs on every core even on one candidate pair: AQE would
+    coalesce a groupBy's own exchange into one task."""
     import re
 
     from ds_jedai_spark import api
@@ -285,7 +288,14 @@ def test_stateful_progressive_plan_verifies_inside_one_scan(spark, tmp_path, alg
         "source": side["s"], "target": side["t"], "relation": "DE9IM",
         "configurations": {"progressiveAlgorithm": alg, "budget": 10},
     })
-    plan = plan_of(api.run(spark, cfg))
+    query = api.run(spark, cfg)
+    plan = plan_of(query)
     assert "LeftSemi" not in plan
     assert "MapInArrow" not in plan
     assert len(re.findall(r"\bFlatMapGroupsInArrow\b", plan)) == 1
+    scans = [s for s in ran_stages(query.collect)
+             if "FlatMapGroupsInArrow" in s[2]]
+    # progressive_state._scan_input spreads the pids over
+    # min(num_parts, shuffle partitions) tasks; api.run uses 32 pids.
+    cores = min(32, int(spark.conf.get("spark.sql.shuffle.partitions")))
+    assert len(scans) == 1 and scans[0][1] == cores, scans

@@ -1,6 +1,8 @@
-"""What api.run does before the query it returns: one pin per side whose
-reading runs Python, then ONE aggregate (tiles.prologue) for theta, the
-source extent and the load balancer's cost estimate.
+"""What api.run does before the query it returns: a lazy pin per side
+whose reading runs Python, then ONE aggregate (tiles.prologue) for theta,
+the source extent and the load balancer's cost estimate. The aggregate's
+scan stage parses the pinned sides; the returned query reads their
+cached blocks.
 
 The job counts are read from ``statusTracker`` under a job group; the
 reads themselves (CSV header inference, parquet footers) start jobs of
@@ -9,12 +11,12 @@ prologue."""
 
 from __future__ import annotations
 
-import uuid
 from pathlib import Path
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
+from conftest import group_jobs
 
 from ds_jedai_spark import api
 from ds_jedai_spark.config import parse_config
@@ -90,16 +92,9 @@ def _row_parquet(tmp_path) -> dict[str, str]:
 
 def _jobs(spark, call) -> list[str]:
     """The first stage name of every job ``call()`` starts."""
-    sc = spark.sparkContext
-    group = uuid.uuid4().hex
-    sc.setJobGroup(group, group)
-    try:
-        call()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    st = sc.statusTracker()
+    st = spark.sparkContext.statusTracker()
     names = []
-    for job in sorted(st.getJobIdsForGroup(group)):
+    for job in group_jobs(spark, call):
         stage = st.getStageInfo(min(st.getJobInfo(job).stageIds))
         names.append(stage.name if stage else "")
     return names
@@ -116,16 +111,15 @@ def _prologue_jobs(spark, cfg) -> list[str]:
 
 
 def test_driver_jobs_before_run_returns(spark, tmp_path):
-    # WKT TSV, full verification with the AUTO balancer: two pins and
-    # one aggregate (a shuffle-map job and its result job). Separate
-    # actions made 8: theta (2), the target floor (2) and the cost
-    # sample (4), each re-parsing the text.
+    # WKT TSV, full verification with the AUTO balancer: the aggregate
+    # alone (a shuffle-map job and its result job), which also parses
+    # both lazily pinned sides. Eager pins added one localCheckpoint job
+    # per side (4); separate actions made 8: theta (2), the target floor
+    # (2) and the cost sample (4), each re-parsing the text.
     tsv = FIXTURES / "wkt_source.tsv"
     jobs = _prologue_jobs(spark, _cfg(tsv, tsv))
-    assert len(jobs) == 4, jobs
-    assert sum(j.startswith("localCheckpoint") for j in jobs) == 2, jobs
-    collects = {j for j in jobs if j.startswith("collect")}
-    assert len(collects) == 1 and "tiles.py" in collects.pop(), jobs
+    assert len(jobs) == 2, jobs
+    assert all(j.startswith("collect") and "tiles.py" in j for j in jobs), jobs
 
     # Row-format parquet, progressive: nothing to pin, the aggregate
     # alone. Separate actions made 4: theta (2) and the target floor (2).
@@ -133,6 +127,23 @@ def test_driver_jobs_before_run_returns(spark, tmp_path):
     jobs = _prologue_jobs(spark, _cfg(
         p["s"], p["t"], progressiveAlgorithm="PROGRESSIVE_GIANT", budget=10))
     assert len(jobs) == 2 and all(j.startswith("collect") for j in jobs), jobs
+
+
+def test_each_side_is_parsed_once_per_run(spark, ran_stages):
+    # Both WKT TSV sides are parsed (Scan csv -> MapInArrow) in one stage
+    # of the prologue aggregate, as parallel tasks; the returned query
+    # reads the cached blocks and scans no CSV at all.
+    src, tgt = FIXTURES / "wkt_source.tsv", FIXTURES / "wkt_holes_target.tsv"
+    cfg = _cfg(src, tgt)
+    query = []
+    before = ran_stages(lambda: query.append(api.run(spark, cfg)))
+    parses = [s for s in before if "Scan csv " in s[2]]
+    assert len(parses) == 1, before
+    name, tasks, ops = parses[0]
+    assert "tiles.py" in name and tasks == 2, parses
+    assert ops.count("Scan csv ") == ops.count("MapInArrow") == 2, ops
+    after = ran_stages(lambda: query[0].collect())
+    assert after and not any("Scan csv " in s[2] for s in after), after
 
 
 def _pinned(df) -> bool:
