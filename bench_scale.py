@@ -104,6 +104,17 @@ noise is small relative to the run):
   ``importlib.invalidate_caches()`` every task runs at start-up (see
   ds_jedai_spark/worker_daemon.py).
   `python bench_scale.py python_task_latency` prints one JSON line.
+- dbscan_scale [eps] [min_pts] (on its own): DBSCAN over 15k, 150k
+  and 600k hash-lattice points at constant density; per size the
+  eps-graph edges and build wall, the DBSCAN wall, clusters and
+  labeled points (the PLANS.md DBSCAN scale table).
+- zorder_pruning <sf_dir> (on its own): natural vs z-ordered parquet
+  layout of the source-box centers; footer-level row-group and row
+  fractions a ~3.5%-area bbox touches, and the filtered-scan wall (the
+  PLANS.md / README z-order table).
+- measures_vectorize [n] (on its own): with_measures over n polygons,
+  vectorized pass against the per-row path, aggregates asserted equal
+  (the PLANS.md measures speedup).
 """
 
 from __future__ import annotations
@@ -1081,6 +1092,149 @@ def python_task_latency(spark, reps: int = 15) -> dict:
                                        "pyspark.daemon")}
 
 
+# dbscan_scale: size multipliers of the 15k-point base at constant density
+DBSCAN_SCALE = (1, 10, 40)
+
+
+def dbscan_scale(spark, eps: float = 1.0, min_pts: int = 3) -> dict:
+    """DBSCAN wall-clock and structure at 15k -> 150k -> 600k points,
+    keeping DENSITY constant (the domain grows with sqrt(n)): more area,
+    same sensor density. The eps-graph's average degree stays flat, so
+    edges grow linearly with n and the label-propagation round count
+    grows with the largest cluster's eps-graph diameter, the quantity
+    the operator docstring calls DBSCAN's real bound."""
+    from ds_jedai_spark.operators.clustering import dbscan
+    from ds_jedai_spark.operators.spatial_join import distance_join
+
+    spark.range(1_000_000).selectExpr("sum(id)").collect()
+    base_n, base_side = 15_000, 97.5625
+    sizes = []
+    for mult in DBSCAN_SCALE:
+        n, side = base_n * mult, base_side * (mult ** 0.5)
+        cells = int(side * 16)
+        # n pseudo-random lattice points over [0, side)^2
+        pts = spark.range(n).select(
+            F.col("id"),
+            F.expr(f"CAST((id * 2654435761) % {cells} AS DOUBLE) / 16.0"
+                   ).alias("minx"),
+            F.expr(f"CAST((id * 3267000013) % {cells} AS DOUBLE) / 16.0"
+                   ).alias("miny"),
+        ).selectExpr("id", "minx", "miny", "minx AS maxx", "miny AS maxy"
+                     ).localCheckpoint()
+        graph_s, edges = _timed(lambda: distance_join(pts, pts, eps).count())
+        out = dbscan(pts, eps=eps, min_pts=min_pts, max_iter=400)
+        labeled = out.where(F.col("cluster") >= 0)
+        dbscan_s, n_labeled = _timed(labeled.count)
+        sizes.append({"n": n, "side": round(side, 1), "edges": edges,
+                      "graph_s": graph_s, "dbscan_s": dbscan_s,
+                      "labeled": n_labeled,
+                      "clusters": labeled.select("cluster").distinct().count()})
+    return {"entry": "dbscan_scale", "eps": eps, "min_pts": min_pts,
+            "sizes": sizes}
+
+
+def zorder_pruning(spark, sf_dir: str) -> dict:
+    """How much of a ~3.5%-area bbox query parquet pruning skips, natural
+    vs z-ordered layout, over the source-box centers of ``sf_dir``: the
+    footer-level fraction of row groups and rows touched, and the best of
+    three filtered-scan walls. At scale the rows fraction is the I/O
+    bill; the 256-file z-order leg shows it nearing the bbox's area
+    fraction as files shrink toward real row-group sizes."""
+    import shutil
+    import tempfile
+
+    from ds_jedai_spark.io import layout
+    from ds_jedai_spark.io.synthetic import load_sql, source_box_sql
+
+    bbox = (20.0, 30.0, 44.0, 54.0)
+    where = ("cx >= 20.0e0 AND cx <= 44.0e0 AND cy >= 30.0e0 "
+             "AND cy <= 54.0e0")
+    src = load_sql(spark, sf_dir, source_box_sql()).selectExpr(
+        "id", "(minx + maxx) / 2.0e0 AS cx", "(miny + maxy) / 2.0e0 AS cy"
+    )
+    base = tempfile.mkdtemp(prefix="zorder_pruning_")
+    nat, zed, fine = (os.path.join(base, d)
+                      for d in ("natural", "zordered", "zordered_fine"))
+    src.repartition(32).write.parquet(nat)
+    for path, files in ((zed, 32), (fine, 256)):
+        layout.write_zordered(src, path, x_col="cx", y_col="cy",
+                              bounds=(0.0, 0.0, 128.0, 128.0), files=files)
+    out = {"entry": "zorder_pruning"}
+    for name, path in (("natural", nat), ("zorder", zed)):
+        frac = layout.pruned_fraction(layout.scan_stats(path, "cx", "cy"), bbox)
+        walls = [_timed(spark.read.parquet(path).where(where).count)
+                 for _ in range(3)]
+        out[name] = {**frac, "rows_match": walls[0][1],
+                     "scan_best_s": min(w for w, _ in walls)}
+    out["io_ratio"] = round(
+        out["natural"]["rows_fraction"]
+        / max(out["zorder"]["rows_fraction"], 1e-9), 1
+    )
+    out["zorder_256files"] = layout.pruned_fraction(
+        layout.scan_stats(fine, "cx", "cy"), bbox)
+    shutil.rmtree(base, ignore_errors=True)
+    return out
+
+
+def measures_vectorize(spark, n: int = 2_000_000) -> dict:
+    """with_measures over ``n`` synthetic polygons, the vectorized
+    Arrow-buffer pass against the exact per-row path
+    (``vectorize=False``), with equal aggregates asserted. The polygons
+    are single-ring 12-gons (building-footprint vertex counts); every
+    50th is a two-ring holed box, so the per-row fallback branch stays
+    exercised inside the vectorized run."""
+    from ds_jedai_spark.operators.measures import with_measures
+
+    base = spark.range(n).selectExpr(
+        "id",
+        "CAST((id * 2654435761) % 102400 AS DOUBLE) / 16.0 AS x",
+        "CAST((id * 3267000013) % 102400 AS DOUBLE) / 16.0 AS y",
+        "1.0 + CAST(id % 64 AS DOUBLE) / 16.0 AS w",
+        "1.0 + CAST((id * 7) % 64 AS DOUBLE) / 16.0 AS h",
+    )
+    # closed 12-gon around (x, y): 13 points, radius w
+    ring = (
+        "transform(sequence(0, 12), i -> array("
+        "x + w * cos(2.0 * pi() * (i % 12) / 12.0), "
+        "y + w * sin(2.0 * pi() * (i % 12) / 12.0)))"
+    )
+    gons = base.where("id % 50 != 0").selectExpr(
+        "id", "'POLYGON' AS gtype", f"array({ring}) AS coords",
+        "x - w AS minx", "y - w AS miny", "x + w AS maxx", "y + w AS maxy",
+    )
+    holed = base.where("id % 50 = 0").selectExpr(
+        "id", "'POLYGON' AS gtype",
+        "array("
+        "array(array(x, y), array(x + w, y), array(x + w, y + h),"
+        " array(x, y + h), array(x, y)), "
+        "array(array(x + w / 4.0, y + h / 4.0),"
+        " array(x + w / 2.0, y + h / 4.0),"
+        " array(x + w / 2.0, y + h / 2.0),"
+        " array(x + w / 4.0, y + h / 2.0),"
+        " array(x + w / 4.0, y + h / 4.0))"
+        ") AS coords",
+        "x AS minx", "y AS miny", "x + w AS maxx", "y + h AS maxy",
+    )
+    polys = gons.unionByName(holed).localCheckpoint()
+
+    def agg(df):
+        return _timed(lambda: tuple(df.agg(
+            F.count(F.lit(1)),
+            F.sum(F.round(F.col("area") * 4096)).cast("long"),
+            F.sum(F.round(F.col("centroid_x") * 1e6)).cast("long"),
+        ).collect()[0]))
+
+    # warm both paths once (JVM/Arrow init), then measure
+    agg(with_measures(polys.limit(10000)))
+    agg(with_measures(polys.limit(10000), vectorize=False))
+    t_fast, r_fast = agg(with_measures(polys))
+    t_slow, r_slow = agg(with_measures(polys, vectorize=False))
+    assert r_fast == r_slow, (r_fast, r_slow)
+    return {"entry": "measures_vectorize", "n": n,
+            "vectorized_sec": t_fast, "per_row_sec": t_slow,
+            "speedup": round(t_slow / t_fast, 2), "agg_equal": True}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = float(Path(sf_dir).name.replace("sf", "") or "0.1")
@@ -1302,21 +1456,33 @@ def main() -> None:
     spark.stop()
 
 
+def _cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+
+# The entries that run on their own: `python bench_scale.py <name> [args]`
+# prints the entry's one JSON line. With no name, main() runs the
+# scale_total suite.
+ENTRIES = {
+    "reader_scale": lambda spark, fmt, n=None: reader_scale(
+        spark, fmt, int(n) if n else READER_SCALE[fmt]["records"], _cpus()),
+    "python_task_latency": lambda spark, reps=15: {
+        **python_task_latency(spark, int(reps)), "cpus": _cpus()},
+    "dbscan_scale": lambda spark, eps=1.0, min_pts=3: dbscan_scale(
+        spark, float(eps), int(min_pts)),
+    "zorder_pruning": zorder_pruning,
+    "measures_vectorize": lambda spark, n=2_000_000: measures_vectorize(
+        spark, int(n)),
+}
+
+
 if __name__ == "__main__":
-    if sys.argv[1:2] == ["reader_scale"]:
-        fmt = sys.argv[2]
-        n = (int(sys.argv[3]) if len(sys.argv) > 3
-             else READER_SCALE[fmt]["records"])
-        spark = get_spark(f"{fmt}_reader_scale")
-        print(json.dumps(reader_scale(
-            spark, fmt, n, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))))
-        spark.stop()
-    elif sys.argv[1:2] == ["python_task_latency"]:
-        spark = get_spark("python_task_latency")
-        res = python_task_latency(
-            spark, *(int(a) for a in sys.argv[2:3]))
-        res["cpus"] = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        print(json.dumps(res))
-        spark.stop()
-    else:
+    if len(sys.argv) < 2:
         main()
+    else:
+        name, *args = sys.argv[1:]
+        if name not in ENTRIES:
+            sys.exit(f"unknown entry {name!r}; one of {sorted(ENTRIES)}")
+        spark = get_spark(f"bench_scale_{name}")
+        print(json.dumps(ENTRIES[name](spark, *args)))
+        spark.stop()

@@ -21,8 +21,8 @@ spherical formulas (EPSG guidance note 7-2, method 1024):
 
 with R = 6378137.0 (the WGS84 semi-major axis). Anything else (ellipsoid
 datum shifts, conic projections) needs a real projection library:
-when ``pyproj`` is importable (feature-checked like the shapely relate
-tier, operators/relate_shapely.py), ``reproject`` dispatches arbitrary
+when ``pyproj`` is importable (feature-checked like
+``multimodal.have_image_decoder``), ``reproject`` dispatches arbitrary
 CRS pairs to a vectorized pyproj Transformer over the Arrow batch path
 — one C-level transform call per batch, envelopes re-aggregated from
 the transformed vertices (general projections are not monotone per
@@ -83,7 +83,7 @@ PROJJSON_BY_CRS = {
 
 def have_projection_lib() -> bool:
     """True when pyproj (PROJ bindings) is importable — the env-gated
-    general-CRS tier, feature-checked like relate_shapely/multimodal.
+    general-CRS tier, feature-checked like multimodal.have_image_decoder.
 
     This checks the DRIVER's environment only. The pyproj transform
     itself runs inside mapInArrow on the executors, so a cluster whose

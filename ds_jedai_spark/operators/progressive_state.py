@@ -26,14 +26,14 @@ function, emit them with their rank.
 
 With ``relation=...`` the scan is also the verifier, as in the reference
 (ProgressiveLinkerT.scala:47-63, each dequeued pair is related once and
-its intersection matrix emitted). The group's geometry is checked and
-flattened once (``relate_general._checked_flat``: a null gtype/coords or a
-non-[x, y] coords leaf raises ValueError naming the column) and
-``relate_fast.preclassify`` codes the whole group in one vectorised call
-— the strict-sign tier the batch verifier runs on every row. The
-qualifier reads ``CODE_FLAGS`` for decided rows; only UNDECIDED rows the
-scan dequeues call ``relate_pair`` (memoised), so exact calls never
-exceed the pairs dequeued, which the budget bounds. The output carries
+its intersection matrix emitted). The group's verdict is
+``relate_general.Verdict``, the batch verifier's own: it checks the group's
+geometry once (a null gtype/coords or a non-[x, y] coords leaf raises
+ValueError naming the column) and ``relate_fast.preclassify`` codes the
+whole group in one vectorised call. The qualifier reads ``CODE_FLAGS``
+for decided rows; only UNDECIDED rows the scan dequeues call
+``relate_pair`` (memoised), so exact calls never exceed the pairs
+dequeued, which the budget bounds. The output carries
 the ten ``r_<relation>`` flags of every pair it verified, the same
 columns ``with_general_relations`` appends; ``api.run`` reads them as the
 verification result. With a precomputed ``qualifies_col`` the same body
@@ -86,45 +86,21 @@ def _verifier(table: pa.Table, order: np.ndarray, relation: str):
     """(qual_of, flags_of) over the sorted positions of one group.
     ``qual_of(k)`` answers ``relation`` for sorted row k; ``flags_of(ks)``
     returns the r_* columns of rows ks, all of which qual_of has seen."""
-    from ds_jedai_spark.operators import relate_general as rg
-    from ds_jedai_spark.operators.relate_fast import (
-        CODE_FLAGS,
-        UNDECIDED,
-        preclassify,
-    )
+    from ds_jedai_spark.operators.relate_fast import CODE_FLAGS, UNDECIDED
+    from ds_jedai_spark.operators.relate_general import Verdict
 
-    batch = pa.RecordBatch.from_arrays(
+    v = Verdict(pa.RecordBatch.from_arrays(
         [table.column(c).combine_chunks() for c in GEOM_COLS], list(GEOM_COLS)
-    )
-    fs = rg._checked_flat(batch, 0, 1, GEOM_COLS)
-    ft = rg._checked_flat(batch, 2, 3, GEOM_COLS)
-    sg, tg = batch.column(0), batch.column(2)
-    codes = preclassify(sg, fs, tg, ft)[order]
-    qual = CODE_FLAGS[relation]
-    exact: dict[int, dict[str, bool]] = {}
+    ))
+    codes, qual = v.codes[order], CODE_FLAGS[relation]
 
     def qual_of(k: int) -> bool:
         code = codes[k]
         if code != UNDECIDED:
             return bool(qual[code])
-        d = exact.get(k)
-        if d is None:
-            i = int(order[k])
-            d = exact[k] = rg.relate_pair(
-                sg[i].as_py(), rg._row_parts(fs, i),
-                tg[i].as_py(), rg._row_parts(ft, i),
-            )
-        return d[relation]
+        return v.exact(int(order[k]))[relation]
 
-    def flags_of(ks: np.ndarray) -> dict[str, np.ndarray]:
-        out = {f"r_{r}": CODE_FLAGS[r][codes[ks]] for r in RELATIONS}
-        for j, k in enumerate(ks.tolist()):
-            if k in exact:
-                for r in RELATIONS:
-                    out[f"r_{r}"][j] = exact[k][r]
-        return out
-
-    return qual_of, flags_of
+    return qual_of, lambda ks: v.flags(order[ks])
 
 
 def _scan(table: pa.Table, pick, relation: str | None) -> pa.Table:

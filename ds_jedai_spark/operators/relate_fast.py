@@ -1,6 +1,7 @@
 """Vectorized exact pre-classifier for the general DE-9IM verifier.
 
-The general verifier (`relate_general.with_general_relations`) calls
+The general verifier (`relate_general.Verdict`, behind both
+`with_general_relations` and the progressive scan) would otherwise call
 `relate_pair` once per candidate row: exact, but ~100-300 us of
 interpreter work per pair. Most candidate pairs of a tile join are either
 cleanly separated or cleanly nested, overlapping or crossing, with no

@@ -1,14 +1,14 @@
-"""General-path DE-9IM verification for parsed geometries (pandas UDF).
+"""General-path DE-9IM verification for parsed geometries (Arrow ``mapInArrow``).
 
 The closed-form column algebra (operators/relate.py, relate_lines.py)
 covers boxes, points and segments — the hot path. WKT-ingested data can
 carry arbitrary points / polylines / polygons; this module verifies those
-pairs exactly, tiered by how much of the work can stay vectorized
-(mirroring the reference's JTS ``geometry.relate`` step,
-linkers/GIAnt.scala:32-37):
+pairs exactly, mirroring the reference's JTS ``geometry.relate`` step
+(linkers/GIAnt.scala:32-37). ``Verdict`` is the one verification rule;
+the batch verifier (``with_general_relations``) and the progressive scan
+(operators/progressive_state.py) both read their flags from it:
 
-1. Arrow-native batch entry (``with_general_relations`` -> ``mapInArrow``):
-   each batch is checked (no null gtype/coords, every coords leaf an
+1. each batch is checked (no null gtype/coords, every coords leaf an
    [x, y] pair, else ValueError), its coords are read zero-copy from the
    list-array buffers, and one pre-classifier (relate_fast.preclassify)
    buckets the rows by (kind, arity) into dense numpy tensors, each run
@@ -16,10 +16,9 @@ linkers/GIAnt.scala:32-37):
    a side; a point set or polyline of up to 64 vertices against a convex
    3-64-gon, decided as inside, disjoint or crossing; point-set
    algebra; proven-disjoint line tests;
-2. per-pair exact predicates below for whatever the tensors leave
-   UNDECIDED (boundary contact, non-convex, holes, off-lattice);
-3. optional shapely 2.x vectorized dispatch when the library exists
-   (relate_shapely.py, feature-checked on the executor).
+2. per-pair exact predicates below (``relate_pair``) for whatever the
+   tensors leave UNDECIDED (boundary contact, non-convex, holes,
+   off-lattice).
 
 Exactness scope:
 - POINT vs POINT / LINESTRING / POLYGON (with holes): exact (orientation
@@ -492,25 +491,81 @@ def _row_parts(f, i):
     ]
 
 
-def _checked_flat(batch, i_g, i_c, names):
+def _checked_flat(g_col, c_col, g_name, c_name):
     """``_flatten3`` of one side's coords column, after checking the
     verifier's input contract: no null gtype or coords value, and every
     coords leaf an [x, y] pair. Raises ValueError naming the column."""
     import numpy as np
 
-    for j in (i_g, i_c):
-        if batch.column(j).null_count:
+    for col, name in ((g_col, g_name), (c_col, c_name)):
+        if col.null_count:
             raise ValueError(
-                f"general verifier: column {names[j]!r} holds nulls; every "
+                f"general verifier: column {name!r} holds nulls; every "
                 "row needs a gtype and coords of [x, y] leaves"
             )
-    f = _flatten3(batch.column(i_c))
+    f = _flatten3(c_col)
     if not bool(np.all(np.diff(f[2]) == 2)):
         raise ValueError(
-            f"general verifier: column {names[i_c]!r} has coords leaves "
+            f"general verifier: column {c_name!r} has coords leaves "
             "that are not [x, y] pairs; only 2-D coordinates are supported"
         )
     return f
+
+
+class Verdict:
+    """The DE-9IM verdict on the rows of one batch of candidate pairs
+    (``{s}gtype``/``{s}coords`` against ``{t}gtype``/``{t}coords``).
+
+    The constructor checks and flattens each side (``_checked_flat``)
+    and pre-classifies every row (``relate_fast.preclassify``) into
+    ``codes``. ``exact(i)`` is ``relate_pair`` on row i, memoised and run
+    only when asked. ``flags(rows)`` gives the ten ``r_<relation>``
+    arrays of ``rows``: ``CODE_FLAGS`` where the pre-classifier decided,
+    ``exact`` where it left the row UNDECIDED."""
+
+    def __init__(self, batch, s: str = "s_", t: str = "t_"):
+        from ds_jedai_spark.operators.relate_fast import preclassify
+
+        sg, sc, tg, tc = (f"{p}{c}" for p in (s, t) for c in ("gtype", "coords"))
+        self._sg, self._tg = batch.column(sg), batch.column(tg)
+        self._fs = _checked_flat(self._sg, batch.column(sc), sg, sc)
+        self._ft = _checked_flat(self._tg, batch.column(tc), tg, tc)
+        self.codes = preclassify(self._sg, self._fs, self._tg, self._ft)
+        self._exact: dict[int, dict[str, bool]] = {}
+
+    def _relate(self, i: int, ga: str, gb: str) -> dict[str, bool]:
+        d = self._exact[i] = relate_pair(
+            ga, _row_parts(self._fs, i), gb, _row_parts(self._ft, i)
+        )
+        return d
+
+    def exact(self, i: int) -> dict[str, bool]:
+        d = self._exact.get(i)
+        if d is None:
+            d = self._relate(i, self._sg[i].as_py(), self._tg[i].as_py())
+        return d
+
+    def flags(self, rows) -> dict:
+        import numpy as np
+        import pyarrow as pa
+
+        from ds_jedai_spark.operators.relate_fast import CODE_FLAGS, UNDECIDED
+
+        codes = self.codes[rows]
+        out = {f"r_{r}": CODE_FLAGS[r][codes] for r in RELATIONS}
+        js = np.nonzero(codes == UNDECIDED)[0]
+        und = rows[js].tolist()
+        # gtypes of the rows not yet related, in one read per side
+        new = [i for i in und if i not in self._exact]
+        idx = pa.array(new, pa.int64())
+        for i, ga, gb in zip(new, self._sg.take(idx).to_pylist(),
+                             self._tg.take(idx).to_pylist()):
+            self._relate(i, ga, gb)
+        for j, i in zip(js.tolist(), und):
+            d = self._exact[i]
+            for r in RELATIONS:
+                out[f"r_{r}"][j] = d[r]
+        return out
 
 
 def with_general_relations(
@@ -542,66 +597,33 @@ def with_general_relations(
     magnitude; pass spread=False only when the input is already
     well-partitioned (e.g. straight after a shuffling equi-join).
 
-    Caller audit: every production call site — the five tile-join
-    composites in plans/giant.py, api.run's full-verification path and
-    its top-budget progressive paths — feeds from BroadcastHashJoin (the
-    tile join, and on the top-budget paths the budget semi-join, which
-    also broadcasts), which preserves the scan's single input partition,
-    so each one needs the spread. DYNAMIC_PROGRESSIVE_GIANT and
-    EARLY_STOPPING do not call it: their Arrow scan verifies in place
-    (operators/progressive_state.py). No caller's input comes out of an
-    exchange today. Do NOT gate this on a static
+    Caller audit: the four tile-join composites in plans/giant.py,
+    reader_plans.wkt_hole_relate_counts, api.run's full-verification path
+    and its top-budget progressive paths all feed from BroadcastHashJoin
+    (the tile join, and on the top-budget paths the budget semi-join,
+    which also broadcasts), which preserves the scan's single input
+    partition, so each one needs the spread. The one caller whose input
+    comes out of an exchange is relate_convex.with_relations_convex_fast:
+    it passes ``spread=False`` on the output of with_convex_code's own
+    round-robin exchange. DYNAMIC_PROGRESSIVE_GIANT and EARLY_STOPPING
+    do not call it: their Arrow scan reads the same ``Verdict`` in place
+    (operators/progressive_state.py). Do NOT gate this on a static
     ``rdd.getNumPartitions()`` probe: under AQE the static count can
     read spark.sql.shuffle.partitions while the runtime-coalesced
     exchange hands the verifier far fewer partitions, silently
     single-threading it again."""
     names = [f.name for f in pairs.schema]
-    i_sg, i_sc = names.index(f"{s}gtype"), names.index(f"{s}coords")
-    i_tg, i_tc = names.index(f"{t}gtype"), names.index(f"{t}coords")
 
     def run(batches):
         import numpy as np
         import pyarrow as pa
 
-        from ds_jedai_spark.operators.relate_fast import (
-            CODE_FLAGS,
-            UNDECIDED,
-            preclassify,
-        )
-        from ds_jedai_spark.operators.relate_shapely import (
-            have_geometry_lib,
-            relate_batch,
-        )
-
-        # Feature check runs on the executor (workers may differ from
-        # the driver) — when shapely 2.x is present the whole batch goes
-        # through GEOS's vectorized predicates (the reference's JTS-speed
-        # relate, model/entities/EntityT.scala:42-45); otherwise the
-        # no-dependency exact path below stays the verifier of record.
-        use_lib = have_geometry_lib()
         for batch in batches:
-            sg_col, tg_col = batch.column(i_sg), batch.column(i_tg)
-            fs = _checked_flat(batch, i_sg, i_sc, names)
-            ft = _checked_flat(batch, i_tg, i_tc, names)
-            if use_lib:
-                res = relate_batch(
-                    sg_col.to_pylist(), batch.column(i_sc).to_pylist(),
-                    tg_col.to_pylist(), batch.column(i_tc).to_pylist(),
-                )
-            else:
-                codes = preclassify(sg_col, fs, tg_col, ft)
-                res = {r: CODE_FLAGS[r][codes] for r in RELATIONS}
-                und = np.nonzero(codes == UNDECIDED)[0]
-                ga_u = sg_col.take(und).to_pylist()
-                gb_u = tg_col.take(und).to_pylist()
-                for i, ga, gb in zip(und, ga_u, gb_u):
-                    d = relate_pair(ga, _row_parts(fs, i), gb, _row_parts(ft, i))
-                    for r in RELATIONS:
-                        res[r][i] = d[r]
+            res = Verdict(batch, s, t).flags(np.arange(batch.num_rows))
             yield pa.RecordBatch.from_arrays(
                 [batch.column(j) for j in range(batch.num_columns)]
-                + [pa.array(np.ascontiguousarray(res[r])) for r in RELATIONS],
-                names=names + [f"r_{r}" for r in RELATIONS],
+                + [pa.array(v) for v in res.values()],
+                names=names + list(res),
             )
 
     in_fields = ", ".join(

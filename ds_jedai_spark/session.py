@@ -11,13 +11,16 @@ verification and the stateful scans all run as Python tasks, and on
 CPython < 3.12 each task re-read the directories of Spark's zip
 archives before its first row: 0.12 s per task, more than a whole
 JVM-only job (0.08 s). The daemon removes that re-read in the workers
-only (see its docstring). The workers must be able to import this
-package anyway: every engine UDF is pickled by module reference.
+only (see its docstring). Every engine UDF is pickled by module
+reference, so the workers must import this package from whatever
+directory the driver runs in: ``spark.executorEnv.PYTHONPATH`` names the
+directory that holds it.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
 
@@ -42,6 +45,7 @@ def get_spark(app_name: str = "ds_jedai_spark", shuffle_partitions: int | None =
         .config("spark.ui.enabled", "false")
         .config("spark.driver.host", "127.0.0.1")
         .config("spark.python.daemon.module", "ds_jedai_spark.worker_daemon")
+        .config("spark.executorEnv.PYTHONPATH", str(Path(__file__).resolve().parents[1]))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

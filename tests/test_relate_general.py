@@ -2,7 +2,7 @@
 
 1. Golden DE-9IM cases (hand-derived JTS semantics) per type combo.
 2. Equivalence (the reference IntersectionMatrixTest pattern,
-   src/test/scala/IntersectionMatrixTest.scala:29-38): the pandas-UDF
+   src/test/scala/IntersectionMatrixTest.scala:29-38): the Arrow
    general path must agree with the closed-form column algebra on the
    derived segment×box workload.
 """
@@ -191,6 +191,11 @@ def test_ragged_arity_buckets_match_exact_path(spark):
         else:              # line vs line
             rows.append(("LINESTRING", [[[cx, cy], [cx + 2, cy + 1]]],
                          "LINESTRING", [[[cx + dx, cy - 1], [cx + dx, cy + 2]]]))
+    # Two overlapping triangles, pinned to their JTS flags below.
+    tri_a = [[[0.0, 0.0], [4.0, 0.0], [0.0, 4.0], [0.0, 0.0]]]
+    tri_b = [[[1.0, 1.0], [5.0, 1.0], [1.0, 5.0], [1.0, 1.0]]]
+    rows.append(("POLYGON", tri_a, "POLYGON", tri_b))
+    triangles = []
     df = spark.createDataFrame(
         rows,
         "s_gtype string, s_coords array<array<array<double>>>, "
@@ -202,6 +207,11 @@ def test_ragged_arity_buckets_match_exact_path(spark):
         )
         got = {rel: r[f"r_{rel}"] for rel in RELATIONS}
         assert got == exact, (r["s_gtype"], r["t_gtype"], got, exact)
+        if r["s_coords"] == tri_a and r["t_coords"] == tri_b:
+            triangles.append(got)
+    assert len(triangles) == 1
+    assert triangles[0]["intersects"] and triangles[0]["overlaps"]
+    assert not triangles[0]["touches"]
 
 
 def test_point_in_any_multipolygon_part_even_odd():

@@ -1,7 +1,8 @@
 """The Python workers of ``get_spark``'s session start from
 ``ds_jedai_spark.worker_daemon``: each task's ``importlib.invalidate_caches()``
 no longer re-reads Spark's zip archives, and modules still import from
-them."""
+them. The workers import the engine whatever the driver's working
+directory."""
 
 from __future__ import annotations
 
@@ -47,3 +48,31 @@ def test_driver_is_not_patched(spark):
     from ds_jedai_spark import worker_daemon
 
     assert zipimport.zipimporter.invalidate_caches is not worker_daemon.keep_directory
+
+
+def test_workers_import_engine_from_any_cwd(tmp_path):
+    """A driver that runs outside the repo root, with the package on its
+    own sys.path only (not installed, not on PYTHONPATH), still gets
+    Python workers that import the engine: the daemon module and every
+    UDF pickled by module reference."""
+    import os
+    import subprocess
+    from pathlib import Path
+
+    root = str(Path(__file__).resolve().parents[1])
+    code = (
+        f"import sys; sys.path.insert(0, {root!r})\n"
+        "from ds_jedai_spark.io.readers import read_wkt_delimited\n"
+        "from ds_jedai_spark.session import get_spark\n"
+        "spark = get_spark('cwd_probe')\n"
+        f"df = read_wkt_delimited(spark, {root + '/fixtures/wkt_source.tsv'!r}, "
+        "id_field='id', geom_field='wkt')\n"
+        "print('rows', df.count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_CPUS="1", SPARK_DRIVER_MEMORY="1g")
+    run = subprocess.run([sys.executable, "-c", code], cwd=tmp_path, env=env,
+                         capture_output=True, text=True, timeout=600)
+    assert run.returncode == 0, run.stderr[-3000:]
+    assert "rows 406" in run.stdout
